@@ -470,7 +470,8 @@ object Bench {
     // with build.sbt's StdoutOutput strategy + showSuccess/showTiming off
     // this is now the bare last line of the whole sbt invocation. The
     // timed region is untouched (every query completed long before).
-    spark.stop()
+    // stop() is best-effort: a shutdown failure must not cost the line.
+    try spark.stop() catch { case _: Throwable => () }
     emit(line)
   }
 }

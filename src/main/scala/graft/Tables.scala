@@ -20,8 +20,8 @@ object Tables {
       // Spark 4 rejects by default. Read nanos as long and convert to a µs
       // TimestampType with integer division (values are µs-resolution, so
       // this is lossless and matches DuckDB's ns→µs parquet read). Derived
-      // fixtures (e.g. the replicate_fixture 10× copies, which DuckDB can
-      // only write at µs) may already carry a timestamp ts — pass through.
+      // fixtures (e.g. copies rewritten by DuckDB, which can only write
+      // µs) may already carry a timestamp ts — pass through.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)

@@ -34,11 +34,12 @@ import graft.functions.TextOps
   *    shuffle serves both). A hot gram's occurrences land on one reducer;
   *    the per-row work there is a single long comparison and nothing is
   *    sorted per group, so the reducer is linear in the hot gram's
-  *    occurrence count (measured flat at 10× in ScaleExperiment's
-  *    every-doc-hot-gram regime). NOTE: AQE's skew-join split does NOT
-  *    apply to this shape — its pattern needs the join children to be
-  *    bare shuffle reads, and the fused aggregate is between — so for a
-  *    corpus where one gram's occurrences alone exceed an executor,
+  *    occurrence count (measured at 10× in the every-doc-hot-gram
+  *    regime: SCALE.md, the round-6 span-dedup hot-gram bullet). NOTE:
+  *    AQE's skew-join split does NOT apply to this shape — its pattern
+  *    needs the join children to be bare shuffle reads, and the fused
+  *    aggregate is between — so for a corpus where one gram's
+  *    occurrences alone exceed an executor,
   *    pass `numSalts > 1`: the marking join becomes
   *    [[graft.operators.Relational.saltedJoin]], spreading each gram
   *    over `numSalts` reducers at the cost of replicating the

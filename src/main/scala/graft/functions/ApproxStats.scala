@@ -18,12 +18,13 @@ import org.apache.spark.sql.functions._
   *    `accuracy` trades memory for error bound 1/accuracy).
   *
   * Error bounds are asserted against the exact forms in ApproxStatsSpec;
-  * the 10× exact-vs-sketch cost gap is measured in ScaleExperiment
-  * (`sketch` case, SCALE.md). The HLL/GK forms are not oracle-checked by
-  * design: sketch implementations differ across engines, so cross-engine
-  * equality is the wrong contract — bounded error vs exact is the right
-  * one. The exception is [[heavyHitters]], whose sketch only ROUTES (the
-  * output is exact), so it carries a DuckDB oracle (q88).
+  * the 10× exact-vs-sketch cost gap is measured in SCALE.md (the
+  * late-round-3 `sketch` case and the 100× replication table). The
+  * HLL/GK forms are not oracle-checked by design: sketch implementations
+  * differ across engines, so cross-engine equality is the wrong contract
+  * — bounded error vs exact is the right one. The exception is
+  * [[heavyHitters]], whose sketch only ROUTES (the output is exact), so
+  * it carries a DuckDB oracle (q88).
   */
 object ApproxStats {
 

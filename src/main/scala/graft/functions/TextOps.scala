@@ -72,9 +72,10 @@ object TextOps {
     //   transform(sequence(1, size-n+1), i -> concat_ws(" ", slice(toks, i, n)))
     // is CodegenFallback — per position it paid an interpreted lambda
     // dispatch, a slice sub-array allocation and a concat_ws evaluation;
-    // r16setsim attributed q175's prepared stage to exactly this chain,
-    // and it sits on every shingle consumer (MinHash/LSH, span dedup,
-    // incremental dedup, decontaminate, repetition, streaming ingests).
+    // the round-16 q175 attribution (OPTIMIZATION_r16.md §4) put its
+    // prepared stage on exactly this chain, and it sits on every shingle
+    // consumer (MinHash/LSH, span dedup, incremental dedup, decontaminate,
+    // repetition, streaming ingests).
     // WordShinglesF walks the array once inside whole-stage codegen;
     // value-identical incl. null-element skipping (WordShinglesFSpec).
     // The coalesce replays the old null-input → empty-array branch
@@ -84,16 +85,6 @@ object TextOps {
         graft.sql.WordShinglesF(
           org.apache.spark.sql.graft.ColumnBridge.expression(toks), n)),
       array().cast(ArrayType(StringType)))
-
-  /** The pre-round-16 HOF form of [[wordShingles]] — kept for the
-    * equivalence spec (WordShinglesFSpec pins kernel ≡ chain on edge
-    * fixtures) and as the readable documentation of the semantics the
-    * kernel replicates. Not used on any query path. */
-  private[graft] def wordShinglesHof(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(array().cast(ArrayType(StringType)))
 
   /** Sum of token lengths (for mean-token-length quality scoring). */
   def totalTokenLength(toks: Column): Column =

@@ -90,33 +90,6 @@ object Multimodal {
       }
     }
 
-  /** Deterministic HEAVY stub encoder: same contract as [[stubEncoder]]
-    * but burning a fixed FLOP budget per payload (`flops` fused
-    * multiply-adds over a payload-seeded recurrence), approximating what a
-    * real ONNX/TF forward pass costs at the seam — so batching, memory,
-    * and throughput behavior of batchEmbed can be validated at scale
-    * without the actual model libs (not in this container). Output depends
-    * only on the payload, never on the batch split, so any batchSize
-    * produces identical embeddings. */
-  def heavyStubEncoder(dim: Int, flops: Long): Seq[Array[Byte]] => Seq[Array[Float]] = {
-    require(dim > 0 && flops > 0, "dim and flops must be positive")
-    batch => batch.map { bytes =>
-      var seed = 0x9e3779b97f4a7c15L
-      var i = 0
-      while (i < bytes.length) { seed = seed * 31 + bytes(i); i += 1 }
-      val acc = new Array[Float](dim)
-      var x = java.lang.Double.longBitsToDouble(
-        0x3ff0000000000000L | (seed >>> 12)) - 1.0 // [0,1) from the seed
-      var f = 0L
-      while (f < flops) {
-        x = x * 1664525.0 % 1.0 + 2.3283064365386963e-10 // LCG-ish fma step
-        acc((f % dim).toInt) += x.toFloat
-        f += 1
-      }
-      acc
-    }
-  }
-
   /** Pure-Column fake feature extraction (the SQL-expressible stand-in used
     * by the oracle-checked query): component j = the j-th 4-hex-digit chunk
     * of md5(payload), scaled to [0,1]. */

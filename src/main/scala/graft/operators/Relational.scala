@@ -185,12 +185,12 @@ object Relational {
     * [[topKPerGroupAgg]]: its map-side per-key heaps absorb a viral key
     * structurally (each task combines the hot key's candidates before
     * the exchange) — measured 2.6 s vs salted 4.2 s vs plain 6.9 s on
-    * the 20M-row viral-key fixture (ScaleExperiment `skew`). A
-    * plain per-key window puts each key's whole partition on ONE task — with
-    * 5 distinct keys (or one viral user holding 1% of a 100 TB fact table)
-    * the job runs at the speed of its hottest key, and AQE cannot split a
-    * window partition. Two phases instead: a deterministic row-hash salt
-    * splits every key into `numSalts` sub-partitions, each sub-partition
+    * the 20M-row viral-key fixture (SCALE.md, the round-10 skew head-to-head
+    * bullet). A plain per-key window puts each key's whole partition on ONE
+    * task — with 5 distinct keys (or one viral user holding 1% of a 100 TB
+    * fact table) the job runs at the speed of its hottest key, and AQE cannot
+    * split a window partition. Two phases instead: a deterministic row-hash
+    * salt splits every key into `numSalts` sub-partitions, each sub-partition
     * keeps its local top-k (so at most numSalts*k candidate rows per key
     * survive), then the tiny candidate set is re-ranked per key. The global
     * top-k of a key is contained in the union of its per-salt top-k's, so

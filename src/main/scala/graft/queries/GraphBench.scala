@@ -4,16 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Graph-kernel bench forms (round 15, verdict task 6): the
-  * fused-vs-join PageRank crossover was measured only in builder
-  * ScaleExperiment runs (SCALE.md r12graph/r14graph) — the official
-  * driver artifact never carried a row for it, so a regression in either
-  * route between rounds would be invisible to the claims lint. These two
-  * bench-only rows track both routes on the SAME materialized edge
-  * fixture (the sf-scaled co-purchase graph, ~2.4M edges at sf0.1 —
-  * comfortably inside the default session's resource guards on the
-  * driver box), with the graph-build self-join paid ONCE in untimed
-  * benchSetup: the r13graph lesson that a shared ~15 s build term inside
-  * both rows biases every ratio toward 1.
+  * fused-vs-join PageRank crossover was measured only in one-off 10×
+  * runs (SCALE.md, the round-12 second-half and round-14 graph-decade
+  * bullets) — the official driver artifact never carried a row for it,
+  * so a regression in either route between rounds would be invisible
+  * to the claims lint. These two bench-only rows track both routes on the
+  * SAME materialized edge fixture (the sf-scaled co-purchase graph, ~2.4M
+  * edges at sf0.1 — comfortably inside the default session's resource guards
+  * on the driver box), with the graph-build self-join paid ONCE in untimed
+  * benchSetup: the r13graph lesson that a shared ~15 s build term inside both
+  * rows biases every ratio toward 1.
   *
   * Correctness of both routes is oracle-adjudicated elsewhere (q134
   * copurchase rank rides PageRank; the fused/join bit-identity is

@@ -402,6 +402,10 @@ object Cooccur {
       val topS = new Array[Long](k)
       it.flatMap { r =>
         val u = r.getLong(0)
+        // toLongArray reads a null element as item 0, so it relies on
+        // arrays with no null elements: both are built above by
+        // collect_set (__seen) and collect_list (__hist), which skip null
+        // ids and never return a null array.
         val hist = r.getArray(1).toLongArray()
         val seen = r.getArray(2).toLongArray()
         if (epoch == Int.MaxValue) { java.util.Arrays.fill(stamp, 0); epoch = 0 }

@@ -30,17 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object ScalarQuant {
 
-  /** The interpreted HOF forms of the two kernels — kept as the
-    * cross-implementation reference (Int8QuantSpec pins kernel ≡ HOF
-    * bit-parity; the q149 oracle replays the same semantics in DuckDB). */
-  private[graft] def maxAbsHof(vec: Column): Column =
-    array_max(transform(vec, x => abs(x.cast("double"))))
-
-  private[graft] def codesHof(vec: Column, maxabs: Column): Column =
-    transform(vec, x =>
-      when(maxabs === 0.0d, lit(0))
-        .otherwise(floor(x.cast("double") * 127.0d / maxabs + 0.5d).cast("int")))
-
   /** Encode a float-vector column: (idCol, maxabs double, codes
     * array<int>). Dequantize as code_i · maxabs / 127. Both columns ride
     * the codegen kernels (MaxAbsF32 / Int8CodesF32) — the HOF form was

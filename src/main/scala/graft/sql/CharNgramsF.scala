@@ -84,9 +84,8 @@ case class CharNgramsF(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object CharNgramsF {
-  /** Registry-style builder: n must be a literal int. */
-  def fromExprs(text: Expression, nExpr: Expression): CharNgramsF = {
-    require(nExpr.foldable, "graft_char_ngrams n must be a literal")
-    CharNgramsF(text, nExpr.eval().asInstanceOf[Int])
-  }
+  /** Registry-style builder: n must be an integral literal. */
+  def fromExprs(text: Expression, nExpr: Expression): CharNgramsF =
+    CharNgramsF(text,
+      GraftFunctions.intLiteral(GraftFunctions.CharNgramsName, "n", nExpr))
 }

@@ -1,6 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.call_function
 
 /** Registration surface for graft's custom Catalyst expressions.
@@ -68,6 +69,23 @@ object GraftFunctions {
       org.apache.logging.log4j.LogManager.getLogger(getClass)
         .info(s"graft: raised $FallbackKey to 1M for this session " +
           "(k-bounded object-aggregate path; set it explicitly to opt out)")
+    }
+  }
+
+  /** The value of integral literal argument `arg` of SQL function `fn`:
+    * an INT, or a BIGINT within INT range, so `4` and `4L` build the same
+    * expression. A non-literal, NULL, non-integral or out-of-range value
+    * fails with an IllegalArgumentException naming `fn` and `arg` (the
+    * type-checked expressions turn it into a TypeCheckFailure). */
+  def intLiteral(fn: String, arg: String, e: Expression): Int = {
+    def fail() = throw new IllegalArgumentException(
+      s"$fn: $arg must be an INT literal (or a BIGINT literal within INT " +
+        s"range), got ${e.sql}")
+    if (!e.foldable) fail()
+    e.eval() match {
+      case i: Int => i
+      case l: Long if l.isValidInt => l.toInt
+      case _ => fail()
     }
   }
 

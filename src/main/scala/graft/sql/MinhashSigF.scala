@@ -131,9 +131,8 @@ object MinhashSigF {
   def coeffA(k: Int): Array[Long] = flat(k)._1
   def coeffB(k: Int): Array[Long] = flat(k)._2
 
-  /** Registry-style builder: k must be a literal int. */
-  def fromExprs(shingles: Expression, kExpr: Expression): MinhashSigF = {
-    require(kExpr.foldable, "graft_minhash_sig numHashes must be a literal")
-    MinhashSigF(shingles, kExpr.eval().asInstanceOf[Int])
-  }
+  /** Registry-style builder: k must be an integral literal. */
+  def fromExprs(shingles: Expression, kExpr: Expression): MinhashSigF =
+    MinhashSigF(shingles, GraftFunctions.intLiteral(
+      GraftFunctions.MinhashSigName, "numHashes", kExpr))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Rabin–Karp rolling hash over a string: the hash of EVERY k-codepoint
@@ -63,19 +63,18 @@ case class RollingHashF(left: Expression, right: Expression)
 
   private def kExpr: Expression = right
 
-  private lazy val k: Int = kExpr.eval().asInstanceOf[Int]
+  private lazy val k: Int = GraftFunctions.intLiteral(prettyName, "k", kExpr)
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, kExpr.foldable, kExpr.dataType) match {
-      case (StringType, true, IntegerType) =>
-        kExpr.eval() match {
-          case i: Int if i >= 1 => TypeCheckResult.TypeCheckSuccess
-          case other => TypeCheckResult.TypeCheckFailure(
-            s"$prettyName requires k to be an int literal >= 1, got $other")
-        }
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, int literal >= 1), got " +
-          s"(${left.dataType.simpleString}, ${kExpr.sql})")
+    if (left.dataType != StringType) TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a string input, got ${left.dataType.simpleString}")
+    else try {
+      if (k >= 1) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires k >= 1, got $k")
+    } catch {
+      case e: IllegalArgumentException =>
+        TypeCheckResult.TypeCheckFailure(e.getMessage)
     }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

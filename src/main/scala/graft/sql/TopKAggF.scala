@@ -251,12 +251,7 @@ case class TopKAggF(
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TopKState] with TernaryLike[Expression] {
 
-  private lazy val k: Int = {
-    require(kExpr.foldable, "graft_topk k must be a literal")
-    val v = kExpr.eval().asInstanceOf[Number].intValue()
-    require(v >= 0, s"graft_topk k must be >= 0, got $v")
-    v
-  }
+  private lazy val k: Int = GraftFunctions.intLiteral(prettyName, "k", kExpr)
 
   override def createAggregationBuffer(): TopKState = new TopKState(k)
 
@@ -304,9 +299,12 @@ case class TopKAggF(
       TypeCheckFailure(s"graft_topk score must be double, got ${score.dataType}")
     else if (id.dataType != LongType)
       TypeCheckFailure(s"graft_topk id must be bigint, got ${id.dataType}")
-    else if (kExpr.dataType != IntegerType || !kExpr.foldable)
-      TypeCheckFailure("graft_topk k must be an int literal")
-    else TypeCheckSuccess
+    else try {
+      if (k >= 0) TypeCheckSuccess
+      else TypeCheckFailure(s"$prettyName k must be >= 0, got $k")
+    } catch {
+      case e: IllegalArgumentException => TypeCheckFailure(e.getMessage)
+    }
   }
 
   override protected def withNewChildrenInternal(
@@ -331,12 +329,7 @@ case class TopKStrAggF(
     override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TopKStrState] with TernaryLike[Expression] {
 
-  private lazy val k: Int = {
-    require(kExpr.foldable, "graft_topk_str k must be a literal")
-    val v = kExpr.eval().asInstanceOf[Number].intValue()
-    require(v >= 0, s"graft_topk_str k must be >= 0, got $v")
-    v
-  }
+  private lazy val k: Int = GraftFunctions.intLiteral(prettyName, "k", kExpr)
 
   override def createAggregationBuffer(): TopKStrState = new TopKStrState(k)
 
@@ -386,9 +379,12 @@ case class TopKStrAggF(
       TypeCheckFailure(s"graft_topk_str score must be double, got ${score.dataType}")
     else if (id.dataType != StringType)
       TypeCheckFailure(s"graft_topk_str id must be string, got ${id.dataType}")
-    else if (kExpr.dataType != IntegerType || !kExpr.foldable)
-      TypeCheckFailure("graft_topk_str k must be an int literal")
-    else TypeCheckSuccess
+    else try {
+      if (k >= 0) TypeCheckSuccess
+      else TypeCheckFailure(s"$prettyName k must be >= 0, got $k")
+    } catch {
+      case e: IllegalArgumentException => TypeCheckFailure(e.getMessage)
+    }
   }
 
   override protected def withNewChildrenInternal(

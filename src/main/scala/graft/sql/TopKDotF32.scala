@@ -242,13 +242,15 @@ object TopKDotF32 {
     * discarded after this resolution-time eval. */
   def fromExprs(vec: Expression, seen: Expression, idsExpr: Expression,
       itemsExpr: Expression, kExpr: Expression): TopKDotF32 = {
-    require(idsExpr.foldable && itemsExpr.foldable && kExpr.foldable,
-      "graft_topk_dot_f32 catalog and k must be literals")
+    require(idsExpr.foldable && itemsExpr.foldable,
+      "graft_topk_dot_f32 catalog ids and vectors must be literals")
+    // checked before the broadcast so a bad k leaks no catalog copy
+    val k = GraftFunctions.intLiteral(GraftFunctions.TopKDotName, "k", kExpr)
     val ids = idsExpr.eval().asInstanceOf[ArrayData].toLongArray()
     val rows = itemsExpr.eval().asInstanceOf[ArrayData]
     val m = (0 until rows.numElements()).map(i => rows.getArray(i).toFloatArray()).toArray
     val bc = org.apache.spark.sql.SparkSession.active.sparkContext
       .broadcast(flatten(ids, m, cosine = false))
-    TopKDotF32(vec, seen, bc, kExpr.eval().asInstanceOf[Int], cosine = false)
+    TopKDotF32(vec, seen, bc, k, cosine = false)
   }
 }

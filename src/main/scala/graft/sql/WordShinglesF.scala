@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`transform(sequence(1, size-n+1), i -> concat_ws(" ", slice(toks, i, n)))`),
   * which is CodegenFallback: every position pays an interpreted lambda
   * dispatch, a `slice` sub-array allocation, and a fresh concat_ws
-  * evaluation. Round-16 attribution (ScaleExperiment r16setsim): the
+  * evaluation. Round-16 attribution (OPTIMIZATION_r16.md §4): the
   * shingle projection dominated q175's `prepared` stage, and the same
   * chain sits on q31–q38 (MinHash/LSH), q72/q131 (decontaminate), q74
   * (repetition), q80 (incremental dedup), q94 (span dedup) and the
@@ -83,9 +83,8 @@ case class WordShinglesF(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object WordShinglesF {
-  /** Registry-style builder: n must be a literal int. */
-  def fromExprs(toks: Expression, nExpr: Expression): WordShinglesF = {
-    require(nExpr.foldable, "graft_word_shingles n must be a literal")
-    WordShinglesF(toks, nExpr.eval().asInstanceOf[Int])
-  }
+  /** Registry-style builder: n must be an integral literal. */
+  def fromExprs(toks: Expression, nExpr: Expression): WordShinglesF =
+    WordShinglesF(toks,
+      GraftFunctions.intLiteral(GraftFunctions.WordShinglesName, "n", nExpr))
 }

@@ -94,7 +94,7 @@ class MultimodalSpec extends SparkSpecBase {
     val docs = spark.range(200).select($"id".as("asset_id"),
       // binary payload derived per-row on the executors (no driver arrays)
       repeat(md5($"id".cast("string")), 64).cast("binary").as("asset"))
-    val enc = Multimodal.heavyStubEncoder(dim = 16, flops = 1000000L)
+    val enc = MultimodalSpec.heavyStubEncoder(dim = 16, flops = 1000000L)
     def run(batchSize: Int) =
       Multimodal.batchEmbed(docs, "asset_id", "asset", batchSize)(enc)
         .orderBy($"asset_id").as[(Long, Seq[Float])].collect().toSeq
@@ -105,5 +105,35 @@ class MultimodalSpec extends SparkSpecBase {
     // the per-batch working set is batchSize payloads, not the partition:
     // a 1-row batch size must also work (degenerate-memory case)
     assert(run(1) == a)
+  }
+}
+
+object MultimodalSpec {
+
+  /** Deterministic HEAVY stub encoder: same contract as
+    * [[Multimodal.stubEncoder]] but burning a fixed FLOP budget per payload
+    * (`flops` fused multiply-adds over a payload-seeded recurrence),
+    * approximating what a real ONNX/TF forward pass costs at the seam — so
+    * batching, memory, and throughput behavior of batchEmbed can be
+    * validated without the actual model libs. Output depends only on the
+    * payload, never on the batch split, so any batchSize produces identical
+    * embeddings. */
+  def heavyStubEncoder(dim: Int, flops: Long): Seq[Array[Byte]] => Seq[Array[Float]] = {
+    require(dim > 0 && flops > 0, "dim and flops must be positive")
+    batch => batch.map { bytes =>
+      var seed = 0x9e3779b97f4a7c15L
+      var i = 0
+      while (i < bytes.length) { seed = seed * 31 + bytes(i); i += 1 }
+      val acc = new Array[Float](dim)
+      var x = java.lang.Double.longBitsToDouble(
+        0x3ff0000000000000L | (seed >>> 12)) - 1.0 // [0,1) from the seed
+      var f = 0L
+      while (f < flops) {
+        x = x * 1664525.0 % 1.0 + 2.3283064365386963e-10 // LCG-ish fma step
+        acc((f % dim).toInt) += x.toFloat
+        f += 1
+      }
+      acc
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.sql
 
 import graft.SparkSpecBase
 import graft.sim.ScalarQuant
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class Int8QuantFSpec extends SparkSpecBase {
@@ -10,11 +11,11 @@ class Int8QuantFSpec extends SparkSpecBase {
   test("kernels are bit-identical to the HOF forms on the real embeddings") {
     GraftFunctions.register(spark)
     val emb = tbl("embeddings")
-    val hofM = ScalarQuant.maxAbsHof(col("embedding"))
+    val hofM = Int8QuantFSpec.maxAbsHof(col("embedding"))
     val both = emb.select(col("vec_id"),
       GraftFunctions.maxAbsF32(col("embedding")).as("km"), hofM.as("hm"),
       GraftFunctions.int8Codes(col("embedding")).as("kc"),
-      ScalarQuant.codesHof(col("embedding"), hofM).as("hc"))
+      Int8QuantFSpec.codesHof(col("embedding"), hofM).as("hc"))
     val bad = both.filter(col("km") =!= col("hm") ||
       to_json(col("kc")) =!= to_json(col("hc"))).count()
     assert(bad == 0L)
@@ -66,7 +67,7 @@ class Int8QuantFSpec extends SparkSpecBase {
     assert(got.getDouble(0) == 8.0)
     assert(got.getSeq[Int](1) == Seq(0, 32, -127))
     // and the HOF form indeed diverges here — the carve-out is real
-    val hofM = df.select(ScalarQuant.maxAbsHof(col("v"))).collect()(0).getDouble(0)
+    val hofM = df.select(Int8QuantFSpec.maxAbsHof(col("v"))).collect()(0).getDouble(0)
     assert(hofM.isNaN)
   }
 
@@ -77,4 +78,18 @@ class Int8QuantFSpec extends SparkSpecBase {
     // the *(n) star marks whole-stage-codegen residency in the toString plan
     assert(p.contains("*(1) Project"), s"encode must codegen:\n$p")
   }
+}
+
+object Int8QuantFSpec {
+
+  /** The interpreted HOF forms of the two kernels — the
+    * cross-implementation reference (kernel ≡ HOF bit-parity above; the
+    * q149 oracle replays the same semantics in DuckDB). */
+  def maxAbsHof(vec: Column): Column =
+    array_max(transform(vec, x => abs(x.cast("double"))))
+
+  def codesHof(vec: Column, maxabs: Column): Column =
+    transform(vec, x =>
+      when(maxabs === 0.0d, lit(0))
+        .otherwise(floor(x.cast("double") * 127.0d / maxabs + 0.5d).cast("int")))
 }

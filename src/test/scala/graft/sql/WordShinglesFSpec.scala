@@ -2,12 +2,14 @@ package graft.sql
 
 import graft.SparkSpecBase
 import graft.functions.TextOps
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** WordShinglesF (via TextOps.wordShingles) ≡ the HOF chain it replaced
-  * (TextOps.wordShinglesHof) — the exactness gate for the round-16 fused
-  * shingle kernel that every shingle consumer (q31–q38, q72/q74/q80/q94,
-  * q100/q131, q175, streaming ingests) now rides. */
+  * ([[WordShinglesFSpec.wordShinglesHof]]) — the exactness gate for the
+  * round-16 fused shingle kernel that every shingle consumer (q31–q38,
+  * q72/q74/q80/q94, q100/q131, q175, streaming ingests) now rides. */
 class WordShinglesFSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -16,7 +18,7 @@ class WordShinglesFSpec extends SparkSpecBase {
       .select($"doc_id", TextOps.tokens($"text").as("__toks"))
     for (n <- Seq(4, 8)) {
       val fused = docs.select($"doc_id", TextOps.wordShingles($"__toks", n).as("g"))
-      val hof = docs.select($"doc_id", TextOps.wordShinglesHof($"__toks", n).as("g"))
+      val hof = docs.select($"doc_id", WordShinglesFSpec.wordShinglesHof($"__toks", n).as("g"))
       assert(fused.exceptAll(hof).isEmpty && hof.exceptAll(fused).isEmpty,
         s"kernel must reproduce the HOF chain exactly at n=$n")
     }
@@ -33,7 +35,7 @@ class WordShinglesFSpec extends SparkSpecBase {
       (7L, Seq("é 你", "😀", "", "x"))           // unicode + empty token
     ).toDF("id", "toks")
     val fused = df.select($"id", TextOps.wordShingles($"toks", 3).as("g"))
-    val hof = df.select($"id", TextOps.wordShinglesHof($"toks", 3).as("g"))
+    val hof = df.select($"id", WordShinglesFSpec.wordShinglesHof($"toks", 3).as("g"))
     val j = fused.as("f").join(hof.as("h"), Seq("id"))
       .select($"id", $"f.g".as("fg"), $"h.g".as("hg"))
     assert(j.filter(!($"fg" <=> $"hg")).isEmpty,
@@ -53,4 +55,16 @@ class WordShinglesFSpec extends SparkSpecBase {
     assert(kernelLine.trim.startsWith("*("),
       s"expected the kernel's Project inside whole-stage codegen, got:\n$plan")
   }
+}
+
+object WordShinglesFSpec {
+
+  /** The pre-round-16 HOF form of TextOps.wordShingles — the reference
+    * the kernel must reproduce, and the readable statement of its
+    * semantics. */
+  def wordShinglesHof(toks: Column, n: Int): Column =
+    when(size(toks) >= n,
+      transform(sequence(lit(1), size(toks) - (n - 1)),
+        i => concat_ws(" ", slice(toks, i, lit(n)))))
+      .otherwise(array().cast(ArrayType(StringType)))
 }

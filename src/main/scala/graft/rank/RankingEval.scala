@@ -1,6 +1,6 @@
 package graft.rank
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Ranking evaluation: per-user recall@k and NDCG@k (reference:
@@ -33,11 +33,7 @@ object RankingEval {
       userCol: String = "user_id", itemCol: String = "item_id",
       rankCol: String = "rk"): DataFrame = {
     val disc = lit(discountsScaled(k))
-    val ideal = lit(idcgScaled(k))
-    // one exchange for the truth side: user-keyed repartition feeds the
-    // full-tuple distinct (subset clustering) and the per-user count
-    val t = truth.select(col(userCol), col(itemCol))
-      .repartition(col(userCol)).distinct()
+    val t = truthPairs(truth, userCol, itemCol)
     val tsize = t.groupBy(col(userCol)).agg(count(lit(1)).as("n_test"))
     val hits = recs.filter(col(rankCol) <= k)
       .join(t, Seq(userCol, itemCol))
@@ -45,12 +41,51 @@ object RankingEval {
       .agg(
         count(lit(1)).as("hits"),
         sum(element_at(disc, col(rankCol))).as("dcg_s"))
+    val h = coalesce(col("hits"), lit(0L))
+    val (recall, ndcg) = recallNdcg(col("n_test"), h, coalesce(col("dcg_s"), lit(0L)), k)
     tsize.join(hits, Seq(userCol), "left")
-      .select(col(userCol), col("n_test"),
-        coalesce(col("hits"), lit(0L)).as("hits"),
-        (coalesce(col("hits"), lit(0L)).cast("double") / col("n_test")).as("recall"),
-        (coalesce(col("dcg_s"), lit(0L)).cast("double") /
-          element_at(ideal, least(col("n_test"), lit(k)).cast("int")).cast("double")).as("ndcg"))
+      .select(col(userCol), col("n_test"), h.as("hits"), recall.as("recall"),
+        ndcg.as("ndcg"))
+  }
+
+  /** The truth side of [[perUser]]: distinct (user, item) pairs. One
+    * exchange: the user-keyed repartition feeds the full-tuple distinct
+    * (subset clustering) and the per-user count. */
+  private def truthPairs(truth: DataFrame, userCol: String,
+      itemCol: String): DataFrame =
+    truth.select(col(userCol), col(itemCol)).repartition(col(userCol)).distinct()
+
+  /** recall and NDCG of one user from its truth size, hit count and
+    * scaled DCG: the one metric definition [[perUser]] and
+    * [[rankedMetrics]] share. */
+  private def recallNdcg(nTest: Column, hits: Column, dcgS: Column,
+      k: Int): (Column, Column) =
+    (hits.cast("double") / nTest,
+      dcgS.cast("double") /
+        element_at(lit(idcgScaled(k)), least(nTest, lit(k)).cast("int")).cast("double"))
+
+  /** [[perUser]]'s truth side as one row per user, for scoring a ranked
+    * list inside its own row: (user, n_test, truth_ids array<bigint>).
+    * Integral item ids only (they are carried as LONG). */
+  private[rank] def truthSets(truth: DataFrame, userCol: String = "user_id",
+      itemCol: String = "item_id"): DataFrame =
+    truthPairs(truth, userCol, itemCol).groupBy(col(userCol))
+      .agg(count(lit(1)).as("n_test"),
+        collect_set(col(itemCol).cast("long")).as("truth_ids"))
+
+  /** Row-local (recall, ndcg) of a ranked id array (array<bigint>, rank
+    * order; null = no recommendations) against a [[truthSets]] row —
+    * the values [[perUser]] gives the same list as (user, rk, item) rows. */
+  private[rank] def rankedMetrics(ranked: Column, truthIds: Column, nTest: Column,
+      k: Int): (Column, Column) = {
+    val disc = lit(discountsScaled(k))
+    val top = slice(coalesce(ranked, typedLit(Seq.empty[Long])), 1, k)
+    val hits = size(filter(top, id => array_contains(truthIds, id)))
+    val dcgS = aggregate(
+      transform(top, (id, i) =>
+        when(array_contains(truthIds, id), element_at(disc, i + 1)).otherwise(lit(0L))),
+      lit(0L), (acc, g) => acc + g)
+    recallNdcg(nTest, hits.cast("long"), dcgS, k)
   }
 
   /** Driver-side mean (recall, ndcg) — model selection and spec assertions,

@@ -520,20 +520,123 @@ object TwoTower {
     fitWithLoss(inter, cfg)._1
 
   /** fit + the per-step mean in-batch softmax loss (convergence
-    * telemetry; the spec asserts it decreases). */
+    * telemetry; the spec asserts it decreases). One [[prepare]], one
+    * batch layout, one [[train]]; the layout and the encoded pairs are
+    * freed once training stops, the dictionaries live on in the model. */
   def fitWithLoss(inter: DataFrame, cfg: Config = Config()): (Model, Seq[Double]) = {
-    val spark = inter.sparkSession
+    val p = prepare(inter)
+    var built: Batches = null
+    try {
+      val t = train(p, cfg, g => { built = layout(p, g); built })
+      (t.model, t.losses)
+    } finally {
+      if (built != null) built.unpersist(blocking = false)
+      graft.operators.Checkpoints.free(p.enc)
+    }
+  }
+
+  /** The config-independent half of a fit: both Categorify dictionaries
+    * with their sizes, and the encoded distinct pairs with their count.
+    * `gridSearch` builds it once for the whole grid. */
+  private final class Prepared(val uDict: DataFrame, val iDict: DataFrame,
+      val nU: Int, val nI: Int, val enc: DataFrame, val nPairs: Long)
+
+  /** `fork` runs the item dictionary's fit while this thread fits the
+    * user dictionary; the default runs it inline, after. */
+  private def prepare(inter: DataFrame,
+      fork: (() => (DataFrame, Int)) => (() => (DataFrame, Int)) = f => f): Prepared = {
     import graft.features.Categorify
     // ONE materialization of the (possibly expensive) input lineage: the
-    // two dictionary fits, the distinct, and the batch partitioning below
-    // all read this checkpoint instead of re-running the caller's
-    // upstream plan per pass (q63t's input is a window over events —
-    // unmaterialized, fit re-executed it four times).
+    // two dictionary fits and the distinct below read this checkpoint
+    // instead of re-running the caller's upstream plan per pass (q63t's
+    // input is a window over events — unmaterialized, fit re-executed it
+    // four times).
     val src = inter.select(col("user_id"), col("item_id")).localCheckpoint()
-    val uDict = Categorify.fitDictionary(src, "user_id").localCheckpoint()
-    val iDict = Categorify.fitDictionary(src, "item_id").localCheckpoint()
-    val nU = uDict.count().toInt
-    val nI = iDict.count().toInt
+    def dictionary(c: String): (DataFrame, Int) = {
+      val d = Categorify.fitDictionary(src, c).localCheckpoint()
+      (d, d.count().toInt)
+    }
+    val items = fork(() => dictionary("item_id"))
+    val (uDict, nU) = dictionary("user_id")
+    val (iDict, nI) = items()
+    // encoded distinct pairs; every batch layout is keyed from these
+    val enc = Categorify.encode(
+        Categorify.encode(src.distinct(), "user_id", uDict, "__u"), "item_id", iDict, "__i")
+      .select((col("__u") - 1).cast("int").as("u"), (col("__i") - 1).cast("int").as("i"))
+      .localCheckpoint()
+    graft.operators.Checkpoints.free(src) // superseded by enc
+    // enc's checkpoint stays alive until training COMPLETES (the caller
+    // frees it next to the layouts): a layout's MEMORY_AND_DISK blocks
+    // recompute through enc's blocks after a mid-training executor loss,
+    // so freeing enc earlier would turn one lost executor into a failed
+    // fit on a real cluster (round-9 advice).
+    new Prepared(uDict, iDict, nU, nI, enc, enc.count())
+  }
+
+  /** Everything a persisted batch layout depends on: configs that agree
+    * on it (the reference grid's two learning rates per batch size) can
+    * train from one layout. */
+  private final case class Geometry(seed: String, nBatches: Int, groupSize: Int,
+      shards: Int)
+
+  private def geometry(p: Prepared, cfg: Config): Geometry = {
+    val shards = math.max(1, cfg.shards)
+    val nBatches = math.max(1L, p.nPairs / cfg.batchRows).toInt
+    // stepsPerJob folds k consecutive batches into one partition/job —
+    // single-task form only (the sharded form's per-step driver merge
+    // cannot fold; see Config doc)
+    val groupSize =
+      if (shards == 1) math.min(math.max(1, cfg.stepsPerJob), nBatches) else 1
+    Geometry(cfg.seed, nBatches, groupSize, shards)
+  }
+
+  /** Persisted (batch, u, i, __o) rows, partitioned for partition-targeted
+    * training jobs (see [[layout]]). */
+  private type Batches = org.apache.spark.rdd.RDD[(Int, Int, Int, String)]
+
+  /** Batch layout, built ONCE per geometry: partition p = batch*shards +
+    * shard (shards > 1) or batch/groupSize (single-task — a partition
+    * holds its group's k consecutive md5-batches, tagged by __b so the
+    * task can walk them in order) holds batch (md5-bucket) rows, with the
+    * deterministic shuffle-order key __o precomputed. Shard assignment is
+    * pmod(murmur3(__o), shards) — the exact partition function
+    * `repartition(shards, col("__o"))` uses, so the sharded form's
+    * accumulation order is unchanged from the round-8 per-step
+    * repartition. Each training job then runs on exactly its own
+    * partition(s): no per-step plan, no codegen, no full scan. */
+  private def layout(p: Prepared, g: Geometry): Batches = {
+    val keyed = p.enc
+      .withColumn("__b",
+        (conv(substring(md5(concat(lit(g.seed + "|b|"), col("u"),
+          lit("|"), col("i"))), 1, 12), 16, 10).cast("long") % g.nBatches).cast("int"))
+      .withColumn("__o",
+        md5(concat(lit(g.seed + "|s|"), col("u"), lit("|"), col("i"))))
+      .withColumn("__p", (
+        if (g.shards > 1) col("__b") * g.shards + pmod(hash(col("__o")), lit(g.shards))
+        else col("__b") / g.groupSize).cast("int"))
+    val nGroups = (g.nBatches + g.groupSize - 1) / g.groupSize
+    val nParts = if (g.shards > 1) g.nBatches * g.shards else nGroups
+    val batchRdd = keyed.select(col("__p"), col("__b"), col("u"), col("i"), col("__o")).rdd
+      .map(r => (r.getInt(0), (r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4))))
+      .partitionBy(new IdPartitioner(nParts))
+      .map(_._2)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    batchRdd.count() // materialize every batch partition in one pass
+    batchRdd
+  }
+
+  /** A trained model with its per-step losses and, in the driver-held
+    * mode, the serving vectors still on the driver (row ix = dictionary
+    * id ix + 1), which [[gridSearch]] scores from without a collect. */
+  private final case class Trained(model: Model, losses: Seq[Double],
+      userVecs: Option[Array[Array[Float]]], itemVecs: Option[Array[Array[Float]]])
+
+  /** The per-config half of a fit: the driver-budget check, then training
+    * on the layout `batches` returns for this config's geometry, then the
+    * serving vectors. Reads `p`, never frees it. */
+  private def train(p: Prepared, cfg: Config, batches: Geometry => Batches): Trained = {
+    val spark = p.enc.sparkSession
+    val (uDict, iDict, nU, nI) = (p.uDict, p.iDict, p.nU, p.nI)
     val clusterEmb = cfg.embedParts > 0
     if (!clusterEmb)
       require(nU.toLong * cfg.embDim < cfg.driverEmbedBudget &&
@@ -541,53 +644,9 @@ object TwoTower {
         s"embedding tables must fit the driver ($nU users / $nI items at dim " +
           s"${cfg.embDim}, budget ${cfg.driverEmbedBudget} floats); set " +
           "Config.embedParts > 0 for the cluster-held layout (bit-identical model)")
-    val shards = math.max(1, cfg.shards)
-    // encoded distinct pairs with a deterministic batch bucket
-    val pairs = src.distinct()
-    val enc = Categorify.encode(
-        Categorify.encode(pairs, "user_id", uDict, "__u"), "item_id", iDict, "__i")
-      .select((col("__u") - 1).cast("int").as("u"), (col("__i") - 1).cast("int").as("i"))
-      .localCheckpoint()
-    graft.operators.Checkpoints.free(src) // superseded by enc
-    // enc's checkpoint stays alive until training COMPLETES (freed next
-    // to batchRdd.unpersist below): batchRdd's MEMORY_AND_DISK blocks
-    // recompute through enc's blocks after a mid-training executor loss,
-    // so freeing enc here would turn one lost executor into a failed fit
-    // on a real cluster (round-9 advice).
-    val nPairs = enc.count()
-    val nBatches = math.max(1L, nPairs / cfg.batchRows).toInt
-    // stepsPerJob folds k consecutive batches into one partition/job —
-    // single-task form only (the sharded form's per-step driver merge
-    // cannot fold; see Config doc)
-    val groupSize =
-      if (shards == 1) math.min(math.max(1, cfg.stepsPerJob), nBatches) else 1
-    val nGroups = (nBatches + groupSize - 1) / groupSize
-    // Batch layout, built ONCE: partition p = batch*shards + shard
-    // (shards > 1) or batch/groupSize (single-task — a partition holds
-    // its group's k consecutive md5-batches, tagged by __b so the task
-    // can walk them in order) holds batch (md5-bucket) rows, with the
-    // deterministic shuffle-order key __o precomputed. Shard assignment
-    // is pmod(murmur3(__o), shards) — the exact partition function
-    // `repartition(shards, col("__o"))` uses, so the sharded form's
-    // accumulation order is unchanged from the round-8 per-step
-    // repartition. Each training job then runs on exactly its own
-    // partition(s): no per-step plan, no codegen, no full scan.
-    val keyed = enc
-      .withColumn("__b",
-        (conv(substring(md5(concat(lit(cfg.seed + "|b|"), col("u"),
-          lit("|"), col("i"))), 1, 12), 16, 10).cast("long") % nBatches).cast("int"))
-      .withColumn("__o",
-        md5(concat(lit(cfg.seed + "|s|"), col("u"), lit("|"), col("i"))))
-      .withColumn("__p", (
-        if (shards > 1) col("__b") * shards + pmod(hash(col("__o")), lit(shards))
-        else col("__b") / groupSize).cast("int"))
-    val nParts = if (shards > 1) nBatches * shards else nGroups
-    val batchRdd = keyed.select(col("__p"), col("__b"), col("u"), col("i"), col("__o")).rdd
-      .map(r => (r.getInt(0), (r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4))))
-      .partitionBy(new IdPartitioner(nParts))
-      .map(_._2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    batchRdd.count() // materialize every batch partition in one pass
+    val g = geometry(p, cfg)
+    val (shards, nBatches, groupSize) = (g.shards, g.nBatches, g.groupSize)
+    val batchRdd = batches(g)
 
     val uStore = if (clusterEmb)
       new EmbStore(spark.sparkContext, nU, cfg, "ue", 0.5f, cfg.embedParts) else null
@@ -788,21 +847,20 @@ object TwoTower {
       lr *= cfg.lrDecay
       step += 1
     }
-    batchRdd.unpersist(blocking = false)
-    graft.operators.Checkpoints.free(enc) // nothing recomputes through it now
 
     // precompute serving vectors and decode back to natural keys
-    val (uvec, ivec) =
-      if (clusterEmb) {
-        val uv = uStore.toVecs(spark, w.wU, w.bU, uDict, "user_id")
-        val iv = iStore.toVecs(spark, w.wI, w.bI, iDict, "item_id")
-        uStore.free()
-        iStore.free()
-        (uv, iv)
-      } else
-        (vecsFrame(spark, w.uEmb, w.wU, w.bU, uDict, "user_id"),
-          vecsFrame(spark, w.iEmb, w.wI, w.bI, iDict, "item_id"))
-    (Model(uvec, ivec, cfg), losses.toSeq)
+    if (clusterEmb) {
+      val uv = uStore.toVecs(spark, w.wU, w.bU, uDict, "user_id")
+      val iv = iStore.toVecs(spark, w.wI, w.bI, iDict, "item_id")
+      uStore.free()
+      iStore.free()
+      Trained(Model(uv, iv, cfg), losses.toSeq, None, None)
+    } else {
+      val uv = towerOut(w.uEmb, w.wU, w.bU)
+      val iv = towerOut(w.iEmb, w.wI, w.bI)
+      Trained(Model(vecsFrame(spark, uv, uDict, "user_id"),
+        vecsFrame(spark, iv, iDict, "item_id"), cfg), losses.toSeq, Some(uv), Some(iv))
+    }
   }
 
   /** Adagrad step (Duchi et al. 2011): per-parameter adaptive rates make
@@ -845,19 +903,23 @@ object TwoTower {
     }
   }
 
-  /** (natural id, vec) frame: every dictionary id pushed through its tower
-    * ON THE DRIVER (tables are driver-held during training in this mode
-    * anyway; the cluster-held mode uses EmbStore.toVecs instead), then
-    * parallelized — the serving artifact. */
-  private def vecsFrame(spark: SparkSession, emb: Array[Array[Float]],
-      wT: Array[Array[Float]], b: Array[Float], dict: DataFrame,
-      idName: String): DataFrame = {
+  /** Every embedding row pushed through its tower ON THE DRIVER (tables
+    * are driver-held during training in this mode anyway; the
+    * cluster-held mode uses EmbStore.toVecs instead). Row ix is the
+    * dictionary id ix + 1. */
+  private def towerOut(emb: Array[Array[Float]], wT: Array[Array[Float]],
+      b: Array[Float]): Array[Array[Float]] = emb.map(tower(wT, b, _))
+
+  /** (natural id, vec) frame of driver-held tower outputs, parallelized —
+    * the serving artifact. */
+  private def vecsFrame(spark: SparkSession, vecs: Array[Array[Float]],
+      dict: DataFrame, idName: String): DataFrame = {
     import spark.implicits._
-    val rows = emb.indices.map(ix => (ix + 1L, tower(wT, b, emb(ix)).toSeq))
-    val vecs = rows.toDF("id", "vec")
+    val rows = vecs.indices.map(ix => (ix + 1L, vecs(ix).toSeq))
+    val frame = rows.toDF("id", "vec")
       .select(col("id"), col("vec").cast("array<float>").as("vec"))
     dict.select(col("value").as(idName), col("id"))
-      .join(vecs, Seq("id")).drop("id")
+      .join(frame, Seq("id")).drop("id")
   }
 
   /** Top-k retrieval in the q158k kernel shape: users' tower vectors ⨝
@@ -897,12 +959,8 @@ object TwoTower {
       fusedCatalogFloatLimit: Long = 64000000L): DataFrame = {
     graft.sql.GraftFunctions.register(model.userVecs.sparkSession)
     val uIds = users.select(col("user_id")).distinct()
-    val iType0 = model.itemVecs.schema("item_id").dataType
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val integralId0 = iType0 match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
+    val iType = model.itemVecs.schema("item_id").dataType
+    val integralId = integral(iType)
     // FUSED serving path (round 11): integral-id catalogs inside the float
     // budget are collected once (bounded: limit probes the budget in one
     // job) and scored through sql.TopKDotF32 — candidates never materialize
@@ -910,7 +968,7 @@ object TwoTower {
     // and the plan's only exchange is the small per-user history
     // aggregation. Row-identical to the unfused plan below (spec-pinned);
     // catalogs past the budget (or non-integral ids) fall through to it.
-    if (integralId0 && fusedCatalogFloatLimit > 0) {
+    if (integralId && fusedCatalogFloatLimit > 0) {
       val u = uIds.join(model.userVecs, Seq("user_id"))
       graft.sim.Retrieval.topKDot(u, "user_id", "vec",
           model.itemVecs, "item_id", "vec", k,
@@ -918,7 +976,7 @@ object TwoTower {
           catalogFloatLimit = fusedCatalogFloatLimit) match {
         case Some(recs) =>
           return recs.select(col("user_id"), col("rk"),
-            col("item_id").cast(iType0).as("item_id"),
+            col("item_id").cast(iType).as("item_id"),
             col("score").cast("float").as("score"))
         case None => () // catalog past the budget — unfused plan below
       }
@@ -944,12 +1002,6 @@ object TwoTower {
           Seq("user_id", "item_id"), "left_anti")
       case None => scored0
     }
-    val iType = model.itemVecs.schema("item_id").dataType
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val integralId = iType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
     if (integralId)
       graft.operators.Relational.topKPerGroupAgg(scored, Seq("user_id"),
           col("score"), col("item_id"), k,
@@ -962,6 +1014,15 @@ object TwoTower {
           Seq(col("score").desc, col("item_id").asc), k)
         .select(col("user_id"), col("rk").cast("int").as("rk"),
           col("item_id"), col("score"))
+  }
+
+  /** Ids the fused kernel and TopKAggF carry as LONG without loss. */
+  private def integral(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
   }
 
   /** MIPS→L2 reduction of the item catalog (Bachrach et al., RecSys 2014;
@@ -1081,50 +1142,192 @@ object TwoTower {
       yield base.copy(batchRows = bs, lr = lr)
 
   /** Grid-search fan-out + model selection for the neural path (F10/F11
-    * parity with AlsRecommender.gridSearch, matching the reference's
-    * CONCURRENT foreach-over-hypers train step — Metaflow `foreach` with
-    * --max-workers 4, my_merlin_flow.py:263): configs fit in parallel on
-    * a driver thread pool of `maxWorkers` (Spark schedules concurrent
-    * jobs from multiple driver threads natively; each fit's jobs
-    * interleave on the executor cores the sequential form left idle
-    * between its small partition-targeted steps). Determinism is
-    * untouched: each fit is a pure function of (data, config) regardless
-    * of scheduling, results are collected in GRID order, and the argmax
-    * (metric desc, config key asc) never sees thread timing. */
+    * parity with AlsRecommender.gridSearch). It follows the reference's
+    * flow: prepare the data once (NVTabular Categorify,
+    * my_merlin_flow.py:216-263), then a CONCURRENT foreach over the hyper
+    * sets (Metaflow `foreach` with --max-workers 4, :263-331). The
+    * config-independent work runs once per grid:
+    *  - one [[prepare]]: the input checkpoint, both dictionaries and the
+    *    encoded distinct pairs;
+    *  - one persisted batch layout per [[Geometry]], built by the first
+    *    config that needs it (the reference grid's two learning rates per
+    *    batch size share one);
+    *  - one evaluation context: each validation user's `excludeSeen` id
+    *    set and [[RankingEval.truthSets]] row, built on the pool while the
+    *    calling thread prepares.
+    * Each config then only trains, publishes its item catalog, scores
+    * the context through the fused TopKDotF32 kernel and sums its hits
+    * in-row ([[RankingEval.rankedMetrics]]). Non-integral ids, or a
+    * catalog past the fused kernel's float budget, evaluate through
+    * [[recommend]] + [[RankingEval.perUser]] instead.
+    *
+    * Configs fit in parallel on a driver thread pool of `maxWorkers`
+    * (Spark schedules concurrent jobs from multiple driver threads
+    * natively; each fit's jobs interleave on the executor cores the
+    * sequential form left idle between its small partition-targeted
+    * steps). Determinism is untouched: the shared pieces are the same
+    * pure functions of the data a standalone fit computes, so each model
+    * equals `fit(trainDf, cfg)` exactly, and each metric equals
+    * `meanMetrics(perUser(recommend(...)))`'s recall up to the summation
+    * order of the mean (both spec-pinned). Results are collected in GRID
+    * order, and the argmax of (metric, config key) never sees thread
+    * timing.
+    *
+    * A failing config surfaces its OWN exception (e.g. the
+    * IllegalArgumentException of a bad config's require), not the pool's
+    * ExecutionException wrapper. Its siblings are interrupted and their
+    * jobs cancelled (every pool job carries the grid's tag), and the
+    * shared checkpoints and layouts are freed only after every pool
+    * thread has stopped, so no sibling reads freed blocks. */
   def gridSearch(trainDf: DataFrame, valid: DataFrame, configs: Seq[Config],
       k: Int = 10, excludeSeen: Option[DataFrame] = None,
       maxWorkers: Int = 4): (Config, Model, Map[String, Double]) = {
     require(configs.nonEmpty, "empty grid")
     require(maxWorkers > 0, s"maxWorkers must be positive, got $maxWorkers")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(maxWorkers, configs.size))
-    val fitted =
-      try {
-        val futures = configs.map { cfg =>
-          pool.submit(new java.util.concurrent.Callable[(Config, Model, Double)] {
-            override def call(): (Config, Model, Double) = {
-              val model = fit(trainDf, cfg)
-              val recs = recommend(model, valid.select("user_id"), k, excludeSeen)
-              val (recall, _) =
-                RankingEval.meanMetrics(RankingEval.perUser(recs, valid, k))
-              (cfg, model, recall)
-            }
-          })
+    import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
+    val sc = trainDf.sparkSession.sparkContext
+    val tag = s"graft-twotower-grid-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(math.min(maxWorkers, configs.size))
+    def submit[T](body: => T): Future[T] = pool.submit(new Callable[T] {
+      override def call(): T = { sc.addJobTag(tag); body }
+    })
+    var ctx: Option[Future[DataFrame]] = None
+    var prep: Option[Prepared] = None
+    var layouts = Map.empty[Geometry, SharedLayout]
+    var failed = true
+    try {
+      if (integral(trainDf.schema("item_id").dataType) &&
+          integral(valid.schema("item_id").dataType))
+        ctx = Some(submit(evalContext(valid, excludeSeen)))
+      val p = prepare(trainDf, f => { val item = submit(f()); () => item.get() })
+      prep = Some(p)
+      val shared = configs.map(geometry(p, _)).distinct
+        .map(g => g -> new SharedLayout(p, g)).toMap
+      layouts = shared
+      val evalCtx = ctx
+      val ids = new DictIds(p)
+      val futures = configs.map { cfg =>
+        submit {
+          val t = train(p, cfg, g => shared(g).get())
+          val recall = evalCtx.flatMap(c => fusedRecall(t, ids, c.get(), k))
+            .getOrElse(RankingEval.meanMetrics(RankingEval.perUser(
+              recommend(t.model, valid.select("user_id"), k, excludeSeen), valid, k))._1)
+          (cfg, t.model, recall)
         }
-        try futures.map(_.get()) // grid order, independent of completion order
-        catch {
-          // round-10 advice: surface the fit's OWN exception (e.g. the
-          // IllegalArgumentException from a bad config's require), not
-          // the pool's ExecutionException wrapper, and stop the sibling
-          // fits — a failed grid must not keep leaked pool threads
-          // submitting Spark jobs
-          case e: java.util.concurrent.ExecutionException =>
-            futures.foreach(_.cancel(true))
-            pool.shutdownNow()
-            throw Option(e.getCause).getOrElse(e)
-        }
-      } finally pool.shutdown()
-    val best = fitted.maxBy { case (cfg, _, r) => (r, cfg.key) }
-    (best._1, best._2, fitted.map { case (cfg, _, r) => cfg.key -> r }.toMap)
+      }
+      // on this otherwise idle thread, while the configs train
+      if (evalCtx.isDefined && configs.exists(_.embedParts <= 0)) ids.load()
+      val fitted = futures.map(_.get()) // grid order, independent of completion order
+      failed = false
+      val best = fitted.maxBy { case (cfg, _, r) => (r, cfg.key) }
+      (best._1, best._2, fitted.map { case (cfg, _, r) => cfg.key -> r }.toMap)
+    } catch {
+      case e: ExecutionException => throw rootCause(e)
+    } finally {
+      if (failed) {
+        pool.shutdownNow()
+        sc.cancelJobsWithTag(tag)
+      } else pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      // a job submitted between the interrupt and the thread's exit
+      if (failed) sc.cancelJobsWithTag(tag)
+      layouts.values.foreach(_.free())
+      prep.foreach(p => graft.operators.Checkpoints.free(p.enc))
+      ctx.filter(_.isDone).flatMap(c => scala.util.Try(c.get()).toOption)
+        .foreach(graft.operators.Checkpoints.free)
+    }
+  }
+
+  @scala.annotation.tailrec
+  private def rootCause(e: Throwable): Throwable = e match {
+    case x: java.util.concurrent.ExecutionException if x.getCause != null =>
+      rootCause(x.getCause)
+    case x => x
+  }
+
+  /** One grid geometry's batch layout: the first config that needs it
+    * builds it while the others of its geometry wait on the lock. */
+  private final class SharedLayout(p: Prepared, g: Geometry) {
+    private var rdd: Batches = null
+    def get(): Batches = synchronized {
+      if (rdd == null) rdd = layout(p, g)
+      rdd
+    }
+    def free(): Unit = synchronized {
+      if (rdd != null) rdd.unpersist(blocking = false)
+    }
+  }
+
+  /** The validation side every grid config scores against: one row per
+    * validation user with its truth set and size and its `excludeSeen`
+    * id set (`__seen`, the fused kernel's per-query seen array). */
+  private def evalContext(valid: DataFrame, excludeSeen: Option[DataFrame]): DataFrame =
+    graft.sim.Retrieval.withSeen(RankingEval.truthSets(valid), "user_id",
+      excludeSeen, "item_id").localCheckpoint()
+
+  /** The dictionaries' natural ids by row (row ix = id ix + 1; item ids
+    * as LONG), collected once per grid on first use. With a config's
+    * driver-held vectors they give its user frame and item catalog with
+    * no per-config collect. */
+  private final class DictIds(p: Prepared) {
+    lazy val users: Array[Any] = {
+      val out = new Array[Any](p.nU)
+      p.uDict.select(col("value"), col("id")).collect()
+        .foreach(r => out(r.getLong(1).toInt - 1) = r.get(0))
+      out
+    }
+    lazy val items: Array[Long] = {
+      val out = new Array[Long](p.nI)
+      p.iDict.select(col("value").cast("long"), col("id")).collect()
+        .foreach(r => out(r.getLong(1).toInt - 1) = r.getLong(0))
+      out
+    }
+
+    def load(): Unit = { users; items; () }
+
+    /** (user_id, vec) as a local frame: the rows of `Model.userVecs`. */
+    def userFrame(vecs: Array[Array[Float]]): DataFrame = {
+      import org.apache.spark.sql.types.{ArrayType, FloatType, StructField, StructType}
+      val rows = new java.util.ArrayList[org.apache.spark.sql.Row](vecs.length)
+      vecs.indices.foreach(ix => rows.add(org.apache.spark.sql.Row(users(ix), vecs(ix).toSeq)))
+      p.uDict.sparkSession.createDataFrame(rows, StructType(Seq(
+        p.uDict.schema("value").copy(name = "user_id"),
+        StructField("vec", ArrayType(FloatType, containsNull = false), nullable = false))))
+    }
+  }
+
+  /** Mean recall@k of a trained config over an [[evalContext]]: the fused
+    * kernel ranks each user's catalog in-row (seen ids skipped) and
+    * [[RankingEval.rankedMetrics]] scores that list against the user's
+    * truth set in the same row, so no candidate or recs rows exist. A
+    * user without a vector ranks nothing and scores 0, as in
+    * [[RankingEval.perUser]]. Driver-held vectors publish straight from
+    * the driver; cluster-held ones collect like [[recommend]]. None =
+    * catalog past the fused float budget (the [[recommend]] default). */
+  private def fusedRecall(t: Trained, ids: DictIds, ctx: DataFrame,
+      k: Int): Option[Double] = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val sc = ctx.sparkSession.sparkContext
+    val (users, catalog) = (t.userVecs, t.itemVecs) match {
+      case (Some(uv), Some(iv)) =>
+        (ids.userFrame(uv), graft.sim.Retrieval.publishLocal(sc, ids.items, iv))
+      case _ => (t.model.userVecs,
+        graft.sim.Retrieval.publishCatalog(t.model.itemVecs, "item_id", "vec"))
+    }
+    catalog.map { bc =>
+      val top = graft.sql.TopKDotF32.fused(col("vec").cast("array<float>"),
+        coalesce(col("__seen"), typedLit(Seq.empty[Long])), bc, k)
+      val (recall, _) = RankingEval.rankedMetrics(col("__ranked"), col("truth_ids"),
+        col("n_test"), k)
+      // same AQE hazard as recommend: a user row is ~dim bytes but
+      // catalog × dim work, so spread the rows before scoring
+      val r = ctx.join(users, Seq("user_id"), "left")
+        .repartition(sc.defaultParallelism)
+        .select(transform(top, x => x.getField("item_id")).as("__ranked"),
+          col("truth_ids"), col("n_test"))
+        .agg(avg(recall)).head().getDouble(0)
+      bc.unpersist(blocking = false)
+      r
+    }
   }
 }

@@ -26,9 +26,6 @@ object RecsTable {
     assemble(recs, targets, fallbackRow)
   }
 
-  /** As above, with the fallback supplied as a one-row DataFrame
-    * (user_id, recs, target) — lets the fallback be computed inside the
-    * same job (see popularFallback) instead of a driver-side collect. */
   /** (user_id, recs: Array[String]) from per-user ranked rows — the one
     * place the serving list shape is defined (batch assemble and the
     * streaming refresh both go through it). */
@@ -39,6 +36,9 @@ object RecsTable {
         col("item_id").cast("string").as("item")))),
       x => x.getField("item")).as("recs"))
 
+  /** As the `fallback: Seq[String]` form above, with the fallback supplied
+    * as a one-row DataFrame (user_id, recs, target) — lets the fallback be computed inside the
+    * same job (see popularFallback) instead of a driver-side collect. */
   def assemble(recs: DataFrame, targets: DataFrame, fallbackRow: DataFrame): DataFrame = {
     val lists = recLists(recs)
     val tgt = targets
@@ -93,26 +93,6 @@ object RecsTable {
         put(it.map(r => (r.getString(0), r.getString(1))))
       }
 
-  /** Streaming serving refresh — the S9 sink driven by a live interaction
-    * stream instead of a nightly batch. Per micro-batch (`foreachBatch`):
-    * recompute recommendations ONLY for users with new activity (left-semi
-    * prune of the history down to the active-user sliver), and batch-put
-    * the refreshed lists through the same kvSink seam. The co-occurrence
-    * model stays a static artifact (refit on its own cadence —
-    * RetrievalPipeline); what streams is the per-user state.
-    *
-    * Each batch is first APPENDED to `streamLogDir` (parquet), and history
-    * = static snapshot ∪ the accumulated log — so an item seen in batch 1
-    * is still excluded when the same user reappears in batch 5 (without
-    * the log, per-batch recompute would forget earlier stream activity and
-    * regress the KV state). A retried micro-batch appends duplicate rows,
-    * which is harmless: recommend() dedups (user, item) — the log is
-    * at-least-once, the derived state exactly-once. At 100 TB the
-    * recompute cost per batch stays O(active users × their history), never
-    * O(all users), the KV write is idempotent per user (last write wins),
-    * and the log compacts on the same cadence as the model refit
-    * (fold it into the history snapshot and truncate — Layout.compact).
-    */
   /** Streaming top-k serving END-TO-END (round-10 verdict task 7): a live
     * recs table maintained by the native bounded top-k aggregate's state
     * — `graft_topk`'s serialize/deserialize pair IS the state-store
@@ -163,6 +143,27 @@ object RecsTable {
       .start()
   }
 
+  /** Streaming serving refresh — the S9 sink driven by a live interaction
+    * stream instead of a nightly batch. Per micro-batch (`foreachBatch`):
+    * recompute recommendations ONLY for users with new activity (left-semi
+    * prune of the history down to the active-user sliver), and batch-put
+    * the refreshed lists through the same kvSink seam. The co-occurrence
+    * model stays a static artifact (refit on its own cadence —
+    * RetrievalPipeline); what streams is the per-user state.
+    *
+    * Each batch is first APPENDED to `streamLogDir` (parquet; read back
+    * with the batch's own schema, so no per-batch schema-inference job),
+    * and history = static snapshot ∪ the accumulated log — so an item seen in batch 1
+    * is still excluded when the same user reappears in batch 5 (without
+    * the log, per-batch recompute would forget earlier stream activity and
+    * regress the KV state). A retried micro-batch appends duplicate rows,
+    * which is harmless: recommend() dedups (user, item) — the log is
+    * at-least-once, the derived state exactly-once. At 100 TB the
+    * recompute cost per batch stays O(active users × their history), never
+    * O(all users), the KV write is idempotent per user (last write wins),
+    * and the log compacts on the same cadence as the model refit
+    * (fold it into the history snapshot and truncate — Layout.compact).
+    */
   def streamRefresh(stream: DataFrame, history: DataFrame, neighbors: DataFrame,
       k: Int, put: Iterator[(String, String)] => Unit, streamLogDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -172,7 +173,7 @@ object RecsTable {
         val b = batch.select(col("user_id"), col("item_id"))
         b.write.mode("append").parquet(streamLogDir)
         val active = b.select(col("user_id")).distinct()
-        val streamed = spark.read.parquet(streamLogDir)
+        val streamed = spark.read.schema(b.schema).parquet(streamLogDir)
         val hist = history.select(col("user_id"), col("item_id"))
           .unionByName(streamed)
           .join(active, Seq("user_id"), "left_semi")
@@ -226,7 +227,7 @@ object RecsTable {
         val b = batch.select(col("user_id"), col("item_id"))
         b.write.mode("append").parquet(streamLogDir)
         val active = b.select(col("user_id")).distinct()
-        val seen = activeSeen(history, spark.read.parquet(streamLogDir), active)
+        val seen = activeSeen(history, spark.read.schema(b.schema).parquet(streamLogDir), active)
         val q = active.join(userVecs(), Seq("user_id"))
         val bc = itemCatalog.get().getOrElse(throw new IllegalStateException(
           "item catalog exceeds the fused-kernel budget; refresh through " +
@@ -288,7 +289,7 @@ object RecsTable {
         val b = batch.select(col("user_id"), col("item_id"))
         b.write.mode("append").parquet(streamLogDir)
         val active = b.select(col("user_id")).distinct()
-        val seen = activeSeen(history, spark.read.parquet(streamLogDir), active)
+        val seen = activeSeen(history, spark.read.schema(b.schema).parquet(streamLogDir), active)
         val q = active.join(userVecs(), Seq("user_id"))
         val recs = cache.get() match {
           case Some(bc) => graft.sim.Retrieval.topKAnnWith(q, "user_id",

@@ -150,6 +150,59 @@ class TwoTowerSpec extends SparkSpecBase {
     assert(best2.key == best.key && metrics2 == metrics)
   }
 
+  test("gridSearch equals the standalone fit + recommend + perUser path per config") {
+    // the grid shares one prepare, one layout per geometry and one eval
+    // context; two configs here share a batch size (one layout), one does
+    // not, one holds its tables on the cluster (its catalog is collected,
+    // not published from the driver), and user 999 has a truth item but
+    // no vector (scores 0)
+    val tr = trainRows.toDF("user_id", "item_id")
+    val te = (testRows :+ ((999L, 101L))).toDF("user_id", "item_id")
+    val grid = Seq(cfg.copy(steps = 30), cfg.copy(steps = 30, lr = 0.05),
+      cfg.copy(steps = 30, batchRows = 128), cfg.copy(steps = 20, embedParts = 2))
+    val (best, model, metrics) = TwoTower.gridSearch(tr, te, grid, k = 10,
+      excludeSeen = Some(tr))
+    for (c <- grid) {
+      val alone = RankingEval.meanMetrics(RankingEval.perUser(
+        TwoTower.recommend(TwoTower.fit(tr, c), te, 10, Some(tr)), te, 10))._1
+      assert(math.abs(metrics(c.key) - alone) <= 1e-12,
+        s"${c.key}: grid recall ${metrics(c.key)} != standalone $alone")
+    }
+    def dump(m: TwoTower.Model) =
+      m.userVecs.orderBy("user_id").collect().map(_.toString).toSeq ++
+        m.itemVecs.orderBy("item_id").collect().map(_.toString).toSeq
+    assert(dump(model) == dump(TwoTower.fit(tr, best)))
+  }
+
+  test("gridSearch over string item ids evaluates through recommend + perUser") {
+    val tr = trainRows.map { case (u, i) => (u, s"i$i") }.toDF("user_id", "item_id")
+    val te = testRows.map { case (u, i) => (u, s"i$i") }.toDF("user_id", "item_id")
+    val grid = Seq(cfg.copy(steps = 30), cfg.copy(steps = 30, lr = 0.05))
+    val (_, _, metrics) = TwoTower.gridSearch(tr, te, grid, k = 10, excludeSeen = Some(tr))
+    for (c <- grid) {
+      val alone = RankingEval.meanMetrics(RankingEval.perUser(
+        TwoTower.recommend(TwoTower.fit(tr, c), te, 10, Some(tr)), te, 10))._1
+      assert(math.abs(metrics(c.key) - alone) <= 1e-12, s"${c.key}: ${metrics(c.key)} != $alone")
+    }
+  }
+
+  test("a failing grid config surfaces its own exception; the next grid succeeds") {
+    // 80 users x dim 16 floats exceed a 100-float driver budget
+    val tr = trainRows.toDF("user_id", "item_id")
+    val te = testRows.toDF("user_id", "item_id")
+    val ok = Seq(cfg.copy(steps = 30), cfg.copy(steps = 30, batchRows = 128))
+    val bad = cfg.copy(steps = 30, lr = 0.05, driverEmbedBudget = 100L)
+    val e = intercept[IllegalArgumentException] {
+      TwoTower.gridSearch(tr, te, Seq(ok(0), bad, ok(1)), k = 10,
+        excludeSeen = Some(tr))
+    }
+    assert(e.getMessage.contains("embedParts"), e.getMessage)
+    val (_, model, metrics) = TwoTower.gridSearch(tr, te, ok, k = 10,
+      excludeSeen = Some(tr))
+    assert(metrics.keySet == ok.map(_.key).toSet)
+    assert(model.userVecs.count() == 80)
+  }
+
   test("cluster-held embeddings train BIT-IDENTICALLY to the driver-held form") {
     // embedParts moves the tables off the driver; gather/scatter change
     // WHERE rows live, never one float of arithmetic — so the two

@@ -26,9 +26,11 @@ object RecsTable {
     assemble(recs, targets, fallbackRow)
   }
 
-  /** (user_id, recs: Array[String]) from per-user ranked rows — the one
-    * place the serving list shape is defined (batch assemble and the
-    * streaming refresh both go through it). */
+  /** (user_id, recs: Array[String]) from per-user ranked rows — the
+    * serving list shape for every path that ranks in rows (batch
+    * assemble, the co-occurrence refresh, the ANN serve's past-budget
+    * plan); the fused serves read the kernel's ranked array instead
+    * ([[kernelLists]]). */
   private def recLists(recs: DataFrame): DataFrame = recs
     .groupBy(col("user_id"))
     .agg(transform(
@@ -185,31 +187,141 @@ object RecsTable {
       }
       .start()
 
-  /** The per-batch seen set, PRUNED BEFORE THE UNION (round-11 verdict
-    * task 7): both legs — the static history snapshot and the accumulated
-    * stream log — are left-semi-joined down to the batch's active users
-    * FIRST, so the per-batch scan is O(active × their history) in I/O
-    * and shuffle alike; a union of the full tables would re-read the
-    * whole log every batch as it grows (the semi-join inside the kernel's
-    * seen aggregation prunes rows, not input scans). Plan shape pinned in
-    * RecsTableSpec: the semi-joins sit BELOW the union. */
-  private[serve] def activeSeen(history: DataFrame, streamed: DataFrame,
-      active: DataFrame): DataFrame =
-    history.select(col("user_id"), col("item_id"))
-      .join(active, Seq("user_id"), "left_semi")
-      .unionByName(streamed.select(col("user_id"), col("item_id"))
-        .join(active, Seq("user_id"), "left_semi"))
+  /** The dense and ANN serves' shared query shape. The history is read
+    * ONCE, when the query starts: its per-user seen-id arrays are built
+    * and persisted (recomputable — a long-running query survives an
+    * executor loss) before `start()`, and released when the query stops
+    * or fails. After that, new interactions arrive only through the
+    * stream; a later change to `history`'s source is not seen.
+    *
+    * Per micro-batch the batch is first APPENDED to `streamLogDir`
+    * (parquet, read back with the batch's own schema — no per-batch
+    * schema-inference job), so an item seen in batch 1 is still excluded
+    * when the same user reappears in batch 5. A retried micro-batch
+    * appends duplicate rows, which is harmless: the seen sets are sets —
+    * the log is at-least-once, the derived state exactly-once. Then
+    * [[batchLists]] ranks the active users through `serve`, and every
+    * non-empty list is put through the same kvSink seam as the batch table (a user
+    * with nothing left to recommend gets no put). Per-batch cost is the
+    * log scan plus O(active × their history); the history is never
+    * rescanned. The log compacts on the model-refit cadence (fold it into
+    * the history snapshot, restart the query). */
+  private def streamSeenServe(stream: DataFrame, history: DataFrame,
+      userVecs: () => DataFrame, put: Iterator[(String, String)] => Unit,
+      streamLogDir: String, serve: DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val histSeen = historySeen(history)
+    try {
+      histSeen.count()
+      val q = stream.writeStream.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
+          val b = batch.select(col("user_id"), col("item_id"))
+          b.write.mode("append").parquet(streamLogDir)
+          val log = batch.sparkSession.read.schema(b.schema).parquet(streamLogDir)
+          kvSink(batchLists(b, log, histSeen, userVecs(), serve), put)
+          ()
+        }
+        .start()
+      val release = new ReleaseOnTermination(q, histSeen)
+      q.sparkSession.streams.addListener(release)
+      // terminated before the listener was added: its event is gone
+      if (!q.isActive) release.release()
+      q
+    } catch {
+      case e: Throwable =>
+        histSeen.unpersist()
+        throw e
+    }
+  }
+
+  /** The history's per-user seen-id arrays (user_id, __hseen), persisted
+    * — a streaming serve's only read of its history. */
+  private[serve] def historySeen(history: DataFrame): DataFrame =
+    graft.sim.Retrieval.seenSets(history, "user_id", "item_id", "__hseen").persist()
+
+  /** One micro-batch's non-empty (user_id, recs) lists. The queries are
+    * the batch's distinct users that have a vector, each with `__seen` =
+    * its [[historySeen]] array ++ its seen array over the log; `serve`
+    * ranks them. The log is left-semi-pruned to the batch's users BEFORE
+    * its one seen aggregation, and the history relation is not read at
+    * all. Plan shape pinned in RecsTableSpec. */
+  private[serve] def batchLists(batch: DataFrame, log: DataFrame,
+      histSeen: DataFrame, userVecs: DataFrame,
+      serve: DataFrame => DataFrame): DataFrame = {
+    val active = batch.select(col("user_id")).distinct()
+    val logSeen = graft.sim.Retrieval.seenSets(
+      log.join(active, Seq("user_id"), "left_semi"), "user_id", "item_id", "__lseen")
+    val none = typedLit(Seq.empty[Long])
+    val queries = active.join(userVecs, Seq("user_id"))
+      .join(histSeen, Seq("user_id"), "left")
+      .join(logSeen, Seq("user_id"), "left")
+      .select(col("user_id"), col("vec"),
+        concat(coalesce(col("__hseen"), none), coalesce(col("__lseen"), none)).as("__seen"))
+    serve(queries).filter(size(col("recs")) > 0)
+  }
+
+  /** (user_id, recs) straight from a kernel's ranked arrays. */
+  private def kernelLists(ranked: DataFrame): DataFrame =
+    ranked.select(col("user_id").cast("string").as("user_id"),
+      transform(col("__top"), x => x.getField("item_id").cast("string")).as("recs"))
+
+  /** [[streamDenseRefresh]]'s ranking of one batch's queries. */
+  private[serve] def denseServe(itemCatalog: graft.sim.Retrieval.CatalogCache,
+      k: Int): DataFrame => DataFrame = queries => {
+    val bc = itemCatalog.get().getOrElse(throw new IllegalStateException(
+      "item catalog exceeds the fused-kernel budget; refresh through " +
+        "streamAnnRefresh (the ANN index path) instead"))
+    kernelLists(graft.sim.Retrieval.rankedArrays(queries, "user_id",
+      graft.sim.Retrieval.dotKernel("vec", bc, k)))
+  }
+
+  /** [[streamAnnRefresh]]'s ranking of one batch's queries: one published
+    * cell catalog per index generation (the task-5 treatment applied to
+    * the ANN leg); an in-budget index fuses through the cached broadcast,
+    * a past-budget generation (cache returns None) serves through the
+    * cid-join plan instead. */
+  private[serve] def annServe(itemIndex: () => DataFrame,
+      centroids: () => Array[Array[Float]], k: Int, nprobe: Int,
+      fusedIndexFloatLimit: Long): DataFrame => DataFrame = {
+    val cache = new graft.sim.Retrieval.CellCatalogCache(
+      itemIndex, "item_id", "vec", centroids, fusedIndexFloatLimit)
+    queries => cache.get() match {
+      case Some(bc) => kernelLists(graft.sim.Retrieval.rankedArrays(queries, "user_id",
+        graft.sim.Retrieval.annKernel("vec", bc, k, nprobe)))
+      case None => recLists(graft.sim.Retrieval.topKAnnJoin(queries, "user_id", "vec",
+        itemIndex(), "item_id", "vec", centroids(), k, nprobe))
+        .select(col("user_id").cast("string").as("user_id"), col("recs"))
+    }
+  }
+
+  /** Unpersists `frame` once `q` terminates — stopped or failed — and
+    * then removes itself; keyed on the query id. */
+  private[serve] final class ReleaseOnTermination(
+      q: org.apache.spark.sql.streaming.StreamingQuery, frame: DataFrame)
+      extends org.apache.spark.sql.streaming.StreamingQueryListener {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def release(): Unit = if (released.compareAndSet(false, true)) {
+      frame.unpersist()
+      q.sparkSession.streams.removeListener(this)
+    }
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      if (e.id == q.id) release()
+  }
 
   /** Dense-model counterpart of [[streamRefresh]] (round 11): per
     * micro-batch, re-serve ONLY the users with new activity by scoring
     * their tower/factor vectors against the item catalog through the
-    * fused retrieval kernel (`sim.Retrieval.topKDotWith`) — base history
-    * plus the accumulated stream log (both pruned to the active users
-    * BEFORE their union) is excluded ROW-LOCALLY inside the kernel, so a
-    * refresh costs |active| × catalog fused dots with zero candidate
-    * materialization and no history rescans outside the seen
-    * aggregation. The model is DATA: `userVecs` is a supplier re-read
-    * per batch, and the item catalog rides a
+    * fused retrieval kernel (`sim.Retrieval.dotKernel`). The seen ids —
+    * history (aggregated once per query) plus the accumulated stream log
+    * (aggregated per batch, active users only) — are excluded ROW-LOCALLY
+    * inside the kernel, and the kernel's ranked array IS the rec list, so
+    * a refresh costs |active| × catalog fused dots with zero candidate
+    * materialization and no regrouping (query shape and lifecycle:
+    * [[streamSeenServe]]). The model is DATA: `userVecs` is a supplier
+    * re-read per batch, and the item catalog rides a
     * [[graft.sim.Retrieval.CatalogCache]] — collected, flattened and
     * broadcast ONCE PER MODEL GENERATION (round-11 verdict task 5), not
     * once per batch; a hot-swap (the supplier returning a NEW frame)
@@ -221,25 +333,8 @@ object RecsTable {
       userVecs: () => DataFrame, itemCatalog: graft.sim.Retrieval.CatalogCache,
       k: Int, put: Iterator[(String, String)] => Unit, streamLogDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("user_id"), col("item_id"))
-        b.write.mode("append").parquet(streamLogDir)
-        val active = b.select(col("user_id")).distinct()
-        val seen = activeSeen(history, spark.read.schema(b.schema).parquet(streamLogDir), active)
-        val q = active.join(userVecs(), Seq("user_id"))
-        val bc = itemCatalog.get().getOrElse(throw new IllegalStateException(
-          "item catalog exceeds the fused-kernel budget; refresh through " +
-            "streamAnnRefresh (the ANN index path) instead"))
-        val recs = graft.sim.Retrieval.topKDotWith(q, "user_id", "vec",
-          bc, k, seen = Some(seen))
-        val lists = recLists(recs)
-          .select(col("user_id").cast("string").as("user_id"), col("recs"))
-        kvSink(lists, put)
-        ()
-      }
-      .start()
+    streamSeenServe(stream, history, userVecs, put, streamLogDir,
+      denseServe(itemCatalog, k))
 
   /** Fixed-model convenience form of [[streamDenseRefresh]]: both model
     * frames constant for the stream's lifetime (one catalog collect
@@ -253,16 +348,18 @@ object RecsTable {
       k, put, streamLogDir)
 
   /** The ANN-served streaming leg (round-11 verdict task 2) — the same
-    * recs/KV contract as [[streamDenseRefresh]] at catalog sizes the
-    * dense kernel's float budget refuses: per micro-batch, the active
-    * users' vectors probe their `nprobe` nearest IVF cells and score only
-    * those cells' rows through `sim.Retrieval.topKAnn` (exact dot within
-    * probed cells, map-side k-bounded heap, seen ids — history ∪ log,
-    * pruned to active users before the union — excluded row-locally).
-    * The index is DATA: `itemIndex` supplies the (item_id, cid, vec)
-    * frame ([[graft.sim.Retrieval.annIndex]], typically parquet
-    * partitioned by cid so probes prune files), and a refreshed index +
-    * centroids take effect on the next batch. Recall vs the dense kernel
+    * recs/KV contract, query shape and lifecycle as
+    * [[streamDenseRefresh]] at catalog sizes the dense kernel's float
+    * budget refuses: per micro-batch, the active users' vectors probe
+    * their `nprobe` nearest IVF cells and score only those cells' rows
+    * (exact dot within probed cells, seen ids — history ∪ log —
+    * excluded row-locally). The index is DATA: `itemIndex` supplies the
+    * (item_id, cid, vec) frame ([[graft.sim.Retrieval.annIndex]],
+    * typically parquet partitioned by cid so probes prune files), and a
+    * refreshed index + centroids take effect on the next batch. An index
+    * inside `fusedIndexFloatLimit` serves through the fused cell kernel
+    * (`sim.Retrieval.annKernel`, its ranked array is the rec list); past
+    * it, through `topKAnn`'s cid-join plan. Recall vs the dense kernel
     * is governed by nprobe/nlist (spec-pinned floor in RetrievalSpec);
     * per-batch cost is O(active × nprobe/nlist × catalog) candidate rows,
     * never the full catalog per user. For an INNER-PRODUCT catalog
@@ -276,35 +373,9 @@ object RecsTable {
       centroids: () => Array[Array[Float]], k: Int, nprobe: Int,
       put: Iterator[(String, String)] => Unit, streamLogDir: String,
       fusedIndexFloatLimit: Long = 64000000L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // one published cell catalog per index generation (the task-5
-    // treatment applied to the ANN leg): in-budget indexes fuse through
-    // the cached broadcast; a past-budget generation (cache returns
-    // None) serves each batch through the cid-join plan instead
-    val cache = new graft.sim.Retrieval.CellCatalogCache(
-      itemIndex, "item_id", "vec", centroids, fusedIndexFloatLimit)
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.select(col("user_id"), col("item_id"))
-        b.write.mode("append").parquet(streamLogDir)
-        val active = b.select(col("user_id")).distinct()
-        val seen = activeSeen(history, spark.read.schema(b.schema).parquet(streamLogDir), active)
-        val q = active.join(userVecs(), Seq("user_id"))
-        val recs = cache.get() match {
-          case Some(bc) => graft.sim.Retrieval.topKAnnWith(q, "user_id",
-            "vec", bc, k, nprobe, seen = Some(seen), seenIdCol = "item_id")
-          case None => graft.sim.Retrieval.topKAnn(q, "user_id", "vec",
-            itemIndex(), "item_id", "vec", centroids(), k, nprobe,
-            seen = Some(seen), fusedIndexFloatLimit = 0L)
-        }
-        val lists = recLists(recs)
-          .select(col("user_id").cast("string").as("user_id"), col("recs"))
-        kvSink(lists, put)
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    streamSeenServe(stream, history, userVecs, put, streamLogDir,
+      annServe(itemIndex, centroids, k, nprobe, fusedIndexFloatLimit))
 
   /** Typed [[streamAnnRefresh]] for INNER-PRODUCT catalogs (two-tower
     * model vectors) — round-13 verdict task 6. The generic seam above

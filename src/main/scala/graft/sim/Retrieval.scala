@@ -112,24 +112,67 @@ object Retrieval {
     }
   }
 
-  /** Attach the per-query seen-id array (`__seen`): collect_set of the
+  /** (qId, `as`): each query's distinct seen ids as array<bigint> — the
+    * one seen aggregation (collect_set skips null ids, never returns a
+    * null element, so the kernels' primitive decode is safe). */
+  private[graft] def seenSets(pairs: DataFrame, qId: String, cId: String,
+      as: String = "__seen"): DataFrame =
+    pairs.select(col(qId), col(cId).cast("long").as("__sid"))
+      .groupBy(col(qId))
+      .agg(collect_set(col("__sid")).as(as))
+
+  /** Attach the per-query seen-id array (`__seen`): [[seenSets]] of the
     * seen pairs, semi-pruned to the query set first so the aggregation is
     * O(queries × their history), never O(all history). */
   private[graft] def withSeen(queries: DataFrame, qId: String,
       seen: Option[DataFrame], cId: String): DataFrame = seen match {
     case Some(sn) =>
-      val seenSets = sn
-        .select(col(qId), col(cId).cast("long").as("__sid"))
-        .join(queries.select(col(qId)), Seq(qId), "left_semi")
-        .groupBy(col(qId))
-        .agg(collect_set(col("__sid")).as("__seen"))
-      queries.join(seenSets, Seq(qId), "left")
+      queries.join(seenSets(sn.join(queries.select(col(qId)), Seq(qId), "left_semi"),
+        qId, cId), Seq(qId), "left")
     case None =>
       queries.withColumn("__seen", lit(null).cast("array<bigint>"))
   }
 
-  /** The fused plan against an already-published catalog (the form the
-    * streaming serve calls per micro-batch through [[CatalogCache]]).
+  /** The ranked-array form both fused kernels share: each row of `base`
+    * (which carries its `__seen` id array, null = nothing seen) becomes
+    * (qId, `__top`), where `kernel` maps the row's seen array to its
+    * rank-ordered array<struct<item_id, score>>. `base` is first
+    * repartitioned by ROW COUNT: each query row is ~dim bytes but catalog
+    * × dim WORK, so AQE's size-based coalescing would otherwise serialize
+    * the scoring loop on one core (SCALE.md, round 11). The streaming
+    * serves read `__top` as the rec list; the row forms explode it. */
+  private[graft] def rankedArrays(base: DataFrame, qId: String,
+      kernel: Column => Column): DataFrame = {
+    val slices = base.sparkSession.sparkContext.defaultParallelism
+    base.repartition(slices).select(col(qId),
+      kernel(coalesce(col("__seen"), typedLit(Seq.empty[Long]))).as("__top"))
+  }
+
+  /** The dense kernel over an already-published catalog, as a
+    * [[rankedArrays]] kernel. */
+  private[graft] def dotKernel(qVec: String, catalog: Broadcast[FlatCatalog],
+      k: Int, cosine: Boolean = false): Column => Column = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    seenArr => TopKDotF32.fused(col(qVec).cast("array<float>"), seenArr, catalog, k, cosine)
+  }
+
+  /** The fused IVF kernel over an already-published cell catalog, as a
+    * [[rankedArrays]] kernel. */
+  private[graft] def annKernel(qVec: String,
+      catalog: Broadcast[graft.sql.TopKDotIvfF32.CellCatalog], k: Int,
+      nprobe: Int): Column => Column = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    seenArr => graft.sql.TopKDotIvfF32.fused(col(qVec).cast("array<float>"), seenArr,
+      catalog, k, nprobe)
+  }
+
+  /** [[rankedArrays]] output as rows: (qId, rk int 1..k, idCol, score). */
+  private def rankedRows(ranked: DataFrame, qId: String, idCol: String): DataFrame =
+    ranked.select(col(qId), posexplode(col("__top")))
+      .select(col(qId), (col("pos") + 1).cast("int").as("rk"),
+        col("col.item_id").as(idCol), col("col.score").as("score"))
+
+  /** The fused plan against an already-published catalog.
     * `excludeSelf` additionally drops the candidate whose id equals the
     * query's own id — row-local, zero extra shuffle (the self-join
     * exclusion of Knn.bruteForceTopK). */
@@ -137,24 +180,17 @@ object Retrieval {
       catalog: Broadcast[FlatCatalog], k: Int,
       seen: Option[DataFrame] = None, seenIdCol: String = "item_id",
       cosine: Boolean = false, excludeSelf: Boolean = false): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val base = withSeen(queries, qId, seen, seenIdCol)
-    val seenArr0 = coalesce(col("__seen"), typedLit(Seq.empty[Long]))
+    val kernel = dotKernel(qVec, catalog, k, cosine)
     // a null (or non-castable) query id has no self to exclude — guard it
     // out rather than planting a null element in the primitive seen array
-    val seenArr =
-      if (excludeSelf)
+    val selfExcluded: Column => Column =
+      if (excludeSelf) seenArr => kernel(
         when(col(qId).cast("long").isNotNull,
-          concat(seenArr0, array(col(qId).cast("long"))))
-          .otherwise(seenArr0)
-      else seenArr0
-    val slices = base.sparkSession.sparkContext.defaultParallelism
-    base.repartition(slices)
-      .select(col(qId), posexplode(
-        TopKDotF32.fused(col(qVec).cast("array<float>"), seenArr, catalog, k,
-          cosine)))
-      .select(col(qId), (col("pos") + 1).cast("int").as("rk"),
-        col("col.item_id").as(seenIdCol), col("col.score").as("score"))
+          concat(seenArr, array(col(qId).cast("long"))))
+          .otherwise(seenArr))
+      else kernel
+    rankedRows(rankedArrays(withSeen(queries, qId, seen, seenIdCol), qId,
+      selfExcluded), qId, seenIdCol)
   }
 
   def topKDot(queries: DataFrame, qId: String, qVec: String,
@@ -233,16 +269,9 @@ object Retrieval {
       catalog: Broadcast[graft.sql.TopKDotIvfF32.CellCatalog], k: Int,
       nprobe: Int, seen: Option[DataFrame] = None,
       seenIdCol: String = "item_id"): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val base = withSeen(queries, qId, seen, seenIdCol)
-    val slices = base.sparkSession.sparkContext.defaultParallelism
-    base.repartition(slices)
-      .select(col(qId), posexplode(
-        graft.sql.TopKDotIvfF32.fused(col(qVec).cast("array<float>"),
-          coalesce(col("__seen"), typedLit(Seq.empty[Long])), catalog, k,
-          nprobe)))
-      .select(col(qId), (col("pos") + 1).cast("int").as("rk"),
-        col("col.item_id").as(seenIdCol), col("col.score").as("score"))
+    val kernel = annKernel(qVec, catalog, k, nprobe)
+    rankedRows(rankedArrays(withSeen(queries, qId, seen, seenIdCol), qId, kernel),
+      qId, seenIdCol)
   }
 
   /** IVF-probed top-k with EXACT in-cell scoring: the mid-scale ANN form
@@ -276,11 +305,20 @@ object Retrieval {
     require(k >= 1, s"k must be >= 1, got $k")
     graft.sql.GraftFunctions.register(queries.sparkSession)
     publishCellCatalog(index, cId, cVec, centroids, fusedIndexFloatLimit) match {
-      case Some(bc) =>
-        return topKAnnWith(queries, qId, qVec, bc, k, nprobe, seen, cId)
-      case None => () // index past the budget — join plan below
+      case Some(bc) => topKAnnWith(queries, qId, qVec, bc, k, nprobe, seen, cId)
+      case None => topKAnnJoin(withSeen(queries, qId, seen, cId), qId, qVec,
+        index, cId, cVec, centroids, k, nprobe)
     }
-    val q = withSeen(queries, qId, seen, cId)
+  }
+
+  /** [[topKAnn]]'s past-budget join plan over queries that already carry
+    * their `__seen` arrays (null = nothing seen). */
+  private[graft] def topKAnnJoin(base: DataFrame, qId: String, qVec: String,
+      index: DataFrame, cId: String, cVec: String,
+      centroids: Array[Array[Float]], k: Int, nprobe: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    graft.sql.GraftFunctions.register(base.sparkSession)
+    val q = base
       .select(col(qId), col(qVec).cast("array<float>").as("__qv"),
         coalesce(col("__seen"), typedLit(Seq.empty[Long])).as("__sn"))
       .withColumn("cid",

@@ -3,6 +3,7 @@ package graft.serve
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
 /** In-memory KV store standing in for the DynamoDB batch writer — static so
   * local-mode executor threads and the test share it. */
@@ -10,6 +11,17 @@ object InMemoryKv {
   val store = new ConcurrentHashMap[String, String]()
   def putBatch(it: Iterator[(String, String)]): Unit =
     it.foreach { case (k, v) => store.put(k, v) }
+}
+
+/** Puts recorded per micro-batch, under the batch number set before it is
+  * added. */
+object BatchKv {
+  @volatile var batch: Int = -1
+  val puts = new ConcurrentHashMap[Int, ConcurrentHashMap[String, String]]()
+  def put(it: Iterator[(String, String)]): Unit = {
+    val m = puts.computeIfAbsent(batch, _ => new ConcurrentHashMap[String, String]())
+    it.foreach { case (k, v) => m.put(k, v) }
+  }
 }
 
 class RecsTableSpec extends SparkSpecBase {
@@ -160,26 +172,211 @@ class RecsTableSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("per-batch seen set semi-prunes BOTH legs below the union (round-12)") {
-    val history = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("user_id", "item_id")
-    val log = Seq((1L, 4L), (4L, 5L)).toDF("user_id", "item_id")
-    val active = Seq(Tuple1(1L)).toDF("user_id")
-    val seen = RecsTable.activeSeen(history, log, active)
-    // semantics: only the active user's rows survive, from both legs
-    assert(seen.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      Set((1L, 1L), (1L, 4L)))
-    // plan: the optimized plan's Union must sit ABOVE the two semi-joins
-    // (each leg pruned before the union reads it — O(active × history)
-    // I/O per batch, not O(log))
-    val plan = seen.queryExecution.optimizedPlan
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, Union}
-    val unions = plan.collect { case u: Union => u }
-    assert(unions.nonEmpty, s"no Union in:\n$plan")
-    val semisBelowUnion = unions.head.children.flatMap(_.collect {
-      case j: Join if j.joinType.sql == "LEFT SEMI" => j
-    })
-    assert(semisBelowUnion.size == 2,
-      s"expected a semi-join under EACH union leg, got ${semisBelowUnion.size} in:\n$plan")
+  test("micro-batch plan: no history scan, log semi-pruned before one seen agg") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectSet
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val base = java.nio.file.Files.createTempDirectory("graft_planshape")
+    val histDir = base.resolve("history").toString
+    val logDir = base.resolve("log").toString
+    Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("user_id", "item_id").write.parquet(histDir)
+    // the log as the query reads it: earlier batches, then this batch
+    Seq((1L, 4L), (4L, 2L), (1L, 3L), (4L, 1L)).toDF("user_id", "item_id")
+      .write.parquet(logDir)
+    val itemVecs = Seq(
+      (1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(0.5f, 0.5f)), (4L, Seq(0.2f, 0.9f)))
+      .toDF("item_id", "vec")
+    val userVecs = Seq((1L, Seq(1f, 0.1f)), (4L, Seq(0.1f, 1f))).toDF("user_id", "vec")
+    val cents = graft.sim.Ivf.fitCentroids(itemVecs, "item_id", "vec", nlist = 2, iters = 2)
+    val index = graft.sim.Retrieval.annIndex(itemVecs, "item_id", "vec", cents).localCheckpoint()
+    val batch = Seq((1L, 3L), (4L, 1L)).toDF("user_id", "item_id")
+    def paths(p: LogicalPlan): Seq[String] = p.collectLeaves().flatMap {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
+        case _ => Nil
+      }
+      case _ => Nil
+    }
+    val histSeen = RecsTable.historySeen(spark.read.parquet(histDir))
+    try {
+      val serves = Seq(
+        "dense" -> RecsTable.denseServe(
+          new graft.sim.Retrieval.CatalogCache(() => itemVecs, "item_id", "vec"), 2),
+        "ann fused" -> RecsTable.annServe(() => index, () => cents, 2, 2, 64000000L),
+        "ann join" -> RecsTable.annServe(() => index, () => cents, 2, 2, 10L))
+      for ((name, serve) <- serves) {
+        val lists = RecsTable.batchLists(batch, spark.read.parquet(logDir), histSeen,
+          userVecs, serve)
+        // u1 saw {1 (history), 4 (log), 3 (batch)}, u4 saw {2 (log), 1 (batch)}
+        assert(lists.collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap ==
+          Map("1" -> Seq("2"), "4" -> Seq("4", "3")), name)
+        val plan = lists.queryExecution.optimizedPlan
+        // (1) the history relation is never scanned: its seen arrays come
+        // from the one per-query cached relation
+        assert(!paths(plan).exists(_.contains(histDir)), s"$name scans history:\n$plan")
+        assert(plan.collectLeaves().count(_.isInstanceOf[InMemoryRelation]) == 1,
+          s"$name: expected the one cached history seen relation:\n$plan")
+        // (2) exactly one seen aggregation, over the log semi-pruned to
+        // the batch's users below it
+        val seenAggs = plan.collect {
+          case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[CollectSet])) => a
+        }
+        assert(seenAggs.size == 1, s"$name: ${seenAggs.size} seen aggregations:\n$plan")
+        val semis = plan.collect { case j: Join if j.joinType == LeftSemi => j }
+        // (3) no second semi-join against the query set
+        assert(semis.size == 1, s"$name: ${semis.size} semi-joins:\n$plan")
+        assert(seenAggs.head.find(_ eq semis.head).isDefined,
+          s"$name: the semi-join is not below the seen aggregation:\n$plan")
+        assert(paths(semis.head.left).exists(_.contains(logDir)) &&
+          paths(semis.head.right).isEmpty,
+          s"$name: the semi-join does not prune the log to the batch:\n$plan")
+      }
+    } finally histSeen.unpersist()
+  }
+
+  test("streaming serves put what the batch forms give on history plus log") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val rng = new scala.util.Random(11)
+    val itemVecs = (1L to 12L).map(i => (i, Seq.fill(4)(rng.nextFloat() - 0.5f)))
+      .toDF("item_id", "vec")
+    // user 99 streams but has no vector
+    val userVecs = (1L to 6L).map(u => (u, Seq.fill(4)(rng.nextFloat() - 0.5f)))
+      .toDF("user_id", "vec")
+    // user 5 has already seen the whole catalog
+    val history = (Seq((1L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (3L, 5L), (6L, 7L)) ++
+      (1L to 12L).map(i => (5L, i))).toDF("user_id", "item_id")
+    val batches = Seq(
+      Seq((1L, 3L), (1L, 3L), (2L, 4L), (99L, 1L), (5L, 2L), (4L, 8L)),
+      Seq((1L, 3L), (3L, 9L), (2L, 5L), (6L, 1L)),
+      Seq((1L, 10L), (4L, 8L), (5L, 1L), (2L, 11L), (99L, 2L)),
+      Seq((1L, 11L), (1L, 12L), (3L, 1L), (6L, 7L)))
+    val k = 4
+    val model = graft.rank.TwoTower.Model(userVecs, itemVecs,
+      graft.rank.TwoTower.Config(embDim = 4))
+    val cents = graft.sim.Ivf.fitCentroids(itemVecs, "item_id", "vec", nlist = 3, iters = 3)
+    val index = graft.sim.Retrieval.annIndex(itemVecs, "item_id", "vec", cents)
+      .localCheckpoint()
+    def lists(recs: org.apache.spark.sql.DataFrame): Map[String, String] = recs
+      .groupBy($"user_id")
+      .agg(to_json(transform(sort_array(collect_list(struct($"rk",
+        $"item_id".cast("string").as("i")))), x => x.getField("i"))).as("p"))
+      .collect().map(r => r.get(0).toString -> r.getString(1)).toMap
+    type Serve = (org.apache.spark.sql.DataFrame, String) =>
+      org.apache.spark.sql.streaming.StreamingQuery
+    type Batch = (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
+      org.apache.spark.sql.DataFrame
+    val forms: Seq[(String, Serve, Batch)] = Seq(
+      ("dense",
+        (s, dir) => RecsTable.streamDenseRefresh(s, history, userVecs, itemVecs, k,
+          BatchKv.put, dir),
+        (active, seen) => graft.rank.TwoTower.recommend(model, active, k,
+          excludeSeen = Some(seen))),
+      ("ann fused",
+        (s, dir) => RecsTable.streamAnnRefresh(s, history, () => userVecs, () => index,
+          () => cents, k, 2, BatchKv.put, dir),
+        (active, seen) => graft.sim.Retrieval.topKAnn(active.join(userVecs, Seq("user_id")),
+          "user_id", "vec", index, "item_id", "vec", cents, k, 2, seen = Some(seen))),
+      ("ann join",
+        (s, dir) => RecsTable.streamAnnRefresh(s, history, () => userVecs, () => index,
+          () => cents, k, 2, BatchKv.put, dir, fusedIndexFloatLimit = 10L),
+        (active, seen) => graft.sim.Retrieval.topKAnn(active.join(userVecs, Seq("user_id")),
+          "user_id", "vec", index, "item_id", "vec", cents, k, 2, seen = Some(seen),
+          fusedIndexFloatLimit = 10L)))
+    for ((name, serve, batchForm) <- forms) {
+      BatchKv.puts.clear()
+      val in = MemoryStream[(Long, Long)]
+      val dir = java.nio.file.Files.createTempDirectory("graft_equivlog").toString
+      val q = serve(in.toDF().toDF("user_id", "item_id"), s"$dir/log")
+      try {
+        for ((events, n) <- batches.zipWithIndex) {
+          BatchKv.batch = n
+          in.addData(events)
+          q.processAllAvailable()
+          val got = Option(BatchKv.puts.get(n)).map(_.asScala.toMap).getOrElse(Map.empty)
+          val seen = history.unionByName(batches.take(n + 1).flatten.toDF("user_id", "item_id"))
+          val expected = lists(batchForm(events.map(_._1).distinct.toDF("user_id"), seen))
+          assert(got == expected, s"$name batch $n: puts $got vs batch form $expected")
+          assert(!got.contains("99"), s"$name batch $n: a user with no vector was put")
+          assert(!got.contains("5"),
+            s"$name batch $n: a user who has seen the whole catalog was put")
+        }
+        // the cases the batches carry, each reached the serve
+        val p = (0 until batches.size).map(n => BatchKv.puts.get(n).asScala.toMap)
+        assert(p(0).contains("1") && !p(0)("1").contains("\"3\""),
+          s"$name: a duplicated pair within a batch is seen: ${p(0)}")
+        assert(p(1).contains("1") && !p(1)("1").contains("\"3\""),
+          s"$name: a repeat of an earlier batch's item is seen: ${p(1)}")
+        assert(p(3).contains("6") && !p(3)("6").contains("\"1\"") &&
+          !p(3)("6").contains("\"7\""), s"$name: history and log both seen: ${p(3)}")
+      } finally q.stop()
+    }
+  }
+
+  test("streaming serves read history once, release it on stop or failure") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    implicit val sqlCtx = spark.sqlContext
+    val itemVecs = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(0.5f, 0.5f)))
+      .toDF("item_id", "vec")
+    val userVecs = Seq((1L, Seq(1f, 0.1f))).toDF("user_id", "vec")
+    val history = Seq((1L, 1L)).toDF("user_id", "item_id")
+    val cents = graft.sim.Ivf.fitCentroids(itemVecs, "item_id", "vec", nlist = 2, iters = 2)
+    val index = graft.sim.Retrieval.annIndex(itemVecs, "item_id", "vec", cents)
+      .localCheckpoint()
+    // frames of earlier suites may be cleaned up meanwhile, so follow the
+    // ids a query adds rather than the count
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def releases = spark.streams.listListeners()
+      .count(_.isInstanceOf[RecsTable.ReleaseOnTermination])
+    // earlier queries' releases run on the listener bus: let them land
+    eventually(timeout(Span(30, Seconds))) { assert(releases == 0) }
+    val before = persisted
+    val refuse: Iterator[(String, String)] => Unit = _ => throw new RuntimeException("put refused")
+
+    // stopped: the dense serve, over a history whose files are deleted
+    // once the query has started
+    InMemoryKv.store.clear()
+    val in = MemoryStream[(Long, Long)]
+    val dir = java.nio.file.Files.createTempDirectory("graft_lifelog").toString
+    history.write.parquet(s"$dir/history")
+    val q = RecsTable.streamDenseRefresh(in.toDF().toDF("user_id", "item_id"),
+      spark.read.parquet(s"$dir/history"), userVecs, itemVecs, 2, InMemoryKv.putBatch,
+      s"$dir/log")
+    val added = persisted -- before
+    try {
+      assert(added.size == 1, s"the history seen sets are built when the query starts: $added")
+      assert(releases == 1)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/history"))
+      in.addData((1L, 2L)); q.processAllAvailable()
+      assert(InMemoryKv.store.get("1") == "[\"3\"]",
+        s"history item 1 must stay seen: ${InMemoryKv.store.get("1")}")
+      in.addData((1L, 3L)); q.processAllAvailable()
+      assert(persisted -- before == added, "batches add no persisted frame")
+    } finally q.stop()
+    eventually(timeout(Span(30, Seconds))) {
+      assert((persisted & added).isEmpty && releases == 0, "released after stop()")
+    }
+
+    // failed: the ANN serve, whose put throws
+    val before2 = persisted
+    val in2 = MemoryStream[(Long, Long)]
+    val dir2 = java.nio.file.Files.createTempDirectory("graft_lifelog2").toString
+    val q2 = RecsTable.streamAnnRefresh(in2.toDF().toDF("user_id", "item_id"), history,
+      () => userVecs, () => index, () => cents, 2, 2, refuse, s"$dir2/log")
+    val added2 = persisted -- before2
+    try {
+      assert(added2.size == 1 && releases == 1, s"$added2")
+      in2.addData((1L, 2L))
+      intercept[StreamingQueryException](q2.processAllAvailable())
+    } finally q2.stop()
+    eventually(timeout(Span(30, Seconds))) {
+      assert((persisted & added2).isEmpty && releases == 0, "released after the query failed")
+    }
   }
 
   test("streamAnnRefresh serves the recs contract through the IVF index (round-12)") {

@@ -28,6 +28,11 @@ Usage, from anywhere:
     # recompute the tables from a log, running nothing
     python3 tools/perfbench_ab.py --summarize ab.jsonl --claim pipeline_s@nightly
 
+    # traced runs (--trace 1): per-side medians of chosen per-layer counters,
+    # the counters that show where a change in the end-to-end metric comes from
+    python3 tools/perfbench_ab.py --a ../parent --b . --pairs 5 --trace \\
+        --workloads refresh --layers serve.refresh_batch --log ab_trace.jsonl
+
 Every run is appended to the --log file as one JSON line, so no run goes
 unreported and an interrupted comparison can be summarized as it stands.
 """
@@ -104,15 +109,16 @@ def load_benchmark(path):
         bench = json.load(fh)
     metrics = {m["name"]: m for m in bench["end_to_end"]}
     workloads = [w["name"] for w in bench["workloads"]]
-    return bench, metrics, workloads
+    directions = {m["name"]: m["better"] for m in bench.get("per_layer", [])}
+    return bench, metrics, workloads, directions
 
 
-def run_once(checkout, command, workload, seed, seconds, timeout):
-    """One untraced benchmark run; returns the parsed result line."""
+def run_once(checkout, command, workload, seed, seconds, timeout, trace=False):
+    """One benchmark run, traced or not; returns the parsed result line."""
     t0 = time.time()
     proc = subprocess.run(
         [*command, "--workload", workload, "--seed", str(seed),
-         "--seconds", str(seconds), "--trace", "0"],
+         "--seconds", str(seconds), "--trace", "1" if trace else "0"],
         cwd=checkout, stdin=subprocess.DEVNULL, capture_output=True, text=True,
         timeout=timeout)
     lines = [l for l in proc.stdout.splitlines() if l.strip()]
@@ -144,6 +150,47 @@ def paired(records, workload, metric):
     return [by_pair[p]["A"] for p in keys], [by_pair[p]["B"] for p in keys]
 
 
+def layer_names(names, layers):
+    """The per-layer metric names `layers` selects: a name is selected by a
+    layer it equals or that it extends by a '.'-separated suffix."""
+    return sorted(n for n in names
+                  if any(n == l or n.startswith(l + ".") for l in layers))
+
+
+def summarize_layers(records, layers, directions):
+    """One row per workload and selected per-layer counter of the traced
+    runs: each side's median over the complete pairs and, when the
+    counter's direction is known, the pairs B won."""
+    traced = [r for r in records if r.get("trace") and r.get("result")]
+    rows = []
+    for w in sorted({r["workload"] for r in traced}):
+        names = set()
+        for r in traced:
+            if r["workload"] == w:
+                names.update(r["result"]["metrics"])
+        for name in layer_names(names, layers):
+            a, b = paired(traced, w, name)
+            if not a:
+                continue
+            better = directions.get(name)
+            rows.append({"workload": w, "metric": name, "pairs": len(a),
+                         "a_median": statistics.median(a),
+                         "b_median": statistics.median(b),
+                         "b_wins": wins(a, b, better)[0] if better else None})
+    return rows
+
+
+def print_layers(rows):
+    for w in sorted({r["workload"] for r in rows}):
+        print(f"\n== {w}: per-layer medians of traced runs")
+        print(f"   {'metric':<40} {'A median':>12} {'B median':>12} {'B/A':>7} B wins")
+        for r in (r for r in rows if r["workload"] == w):
+            ratio = r["b_median"] / r["a_median"] if r["a_median"] else float("nan")
+            won = "-" if r["b_wins"] is None else f"{r['b_wins']}/{r['pairs']}"
+            print(f"   {r['metric']:<40} {r['a_median']:>12.4g} {r['b_median']:>12.4g} "
+                  f"{ratio:>7.3f} {won}")
+
+
 def summarize(records, metrics, claim):
     """Print the per-workload tables; returns False when a claim fails or a
     metric regresses."""
@@ -158,12 +205,12 @@ def summarize(records, metrics, claim):
                          or r["result"].get("failed", 1) or r.get("error_rate", 1))
             print(f"   {side}: {len(side_runs)} runs, {failed} with failures")
             ok &= failed == 0
-        print(f"   {'metric':<14} {'A q1/med/q3':<32} {'B q1/med/q3':<32} "
-              f"{'B wins':<8} verdict")
-        for name, m in metrics.items():
+        shown = [(name, m) for name, m in metrics.items() if paired(records, w, name)[0]]
+        if shown:
+            print(f"   {'metric':<14} {'A q1/med/q3':<32} {'B q1/med/q3':<32} "
+                  f"{'B wins':<8} verdict")
+        for name, m in shown:
             a, b = paired(records, w, name)
-            if not a:
-                continue
             aq, bq = quartiles(a), quartiles(b)
             won, pairs = wins(a, b, m["better"])
             verdict = regression_verdict(a, b, m["better"], m["bound"])
@@ -193,7 +240,15 @@ def main():
     ap.add_argument("--log", help="append every run here as a JSON line")
     ap.add_argument("--summarize", help="summarize this log instead of running")
     ap.add_argument("--timeout", type=float, default=1200.0, help="per run, seconds")
+    ap.add_argument("--trace", action="store_true",
+                    help="run with --trace 1 and report per-layer counters")
+    ap.add_argument("--layers", default="",
+                    help="comma-separated layers (or metric names) whose traced "
+                         "counters to print, e.g. serve.refresh_batch")
     args = ap.parse_args()
+    layers = [l for l in args.layers.split(",") if l]
+    if args.trace and args.claim:
+        ap.error("--claim needs untraced runs; traced runs carry per-layer metrics only")
 
     claim = None
     if args.claim:
@@ -209,7 +264,7 @@ def main():
             ap.error("--a and --b are required unless --summarize is given")
         bench_path = args.benchmark or os.path.join(args.b, "BENCHMARK.json")
         records = []
-    bench, metrics, all_workloads = load_benchmark(bench_path)
+    bench, metrics, all_workloads, directions = load_benchmark(bench_path)
     if claim and claim[0] not in metrics:
         ap.error(f"unknown claim metric {claim[0]}")
 
@@ -221,8 +276,8 @@ def main():
                 order = ("A", "B") if i % 2 == 0 else ("B", "A")
                 for side in order:
                     rec = run_once(sides[side], bench["command"], w, args.seed + i,
-                                   bench.get("run_seconds", 10), args.timeout)
-                    rec.update({"workload": w, "pair": i, "side": side,
+                                   bench.get("run_seconds", 10), args.timeout, args.trace)
+                    rec.update({"workload": w, "pair": i, "side": side, "trace": args.trace,
                                 "seed": args.seed + i, "checkout": sides[side],
                                 "benchmark": os.path.abspath(bench_path),
                                 "at": time.strftime("%Y-%m-%dT%H:%M:%S")})
@@ -232,9 +287,14 @@ def main():
                             fh.write(json.dumps(rec) + "\n")
                     vals = {k: round(v["value"], 4) for k, v in
                             (rec["result"] or {}).get("metrics", {}).items()}
+                    if layers:
+                        vals = {k: vals[k] for k in layer_names(vals, layers)}
                     print(f"[ab] {w} pair {i} {side} seed {args.seed + i}: {vals}",
                           file=sys.stderr, flush=True)
-    return 0 if summarize(records, metrics, claim) else 1
+    ok = summarize(records, metrics, claim)
+    if layers:
+        print_layers(summarize_layers(records, layers, directions))
+    return 0 if ok else 1
 
 
 if __name__ == "__main__":

@@ -103,5 +103,65 @@ class Quartiles(unittest.TestCase):
         self.assertEqual(ab.paired(records, "w", "m"), ([1.0, 4.0], [2.0, 5.0]))
 
 
+def traced(pair, side, metrics, workload="refresh", trace=True):
+    return {"workload": workload, "pair": pair, "side": side, "trace": trace,
+            "result": {"metrics": {k: {"value": v} for k, v in metrics.items()}}}
+
+
+class LayerSummary(unittest.TestCase):
+    DIRS = {"serve.refresh_batch.jobs": "lower", "serve.refresh_batch.wall_s": "lower"}
+
+    def test_layer_selects_its_counters_only(self):
+        names = ["serve.refresh_batch.jobs", "serve.refresh_batch.wall_s",
+                 "serve.refresh.jobs", "serve.recs_table.jobs", "trace.overhead_ratio"]
+        self.assertEqual(ab.layer_names(names, ["serve.refresh_batch"]),
+                         ["serve.refresh_batch.jobs", "serve.refresh_batch.wall_s"])
+        self.assertEqual(ab.layer_names(names, ["serve.refresh"]), ["serve.refresh.jobs"])
+        self.assertEqual(ab.layer_names(names, ["trace.overhead_ratio", "serve.recs_table"]),
+                         ["serve.recs_table.jobs", "trace.overhead_ratio"])
+
+    def test_medians_and_wins_per_side(self):
+        records = [traced(0, "A", {"serve.refresh_batch.jobs": 11.0}),
+                   traced(0, "B", {"serve.refresh_batch.jobs": 9.0}),
+                   traced(1, "B", {"serve.refresh_batch.jobs": 9.0}),
+                   traced(1, "A", {"serve.refresh_batch.jobs": 12.0}),
+                   traced(2, "A", {"serve.refresh_batch.jobs": 11.0}),
+                   traced(2, "B", {"serve.refresh_batch.jobs": 11.0})]
+        rows = ab.summarize_layers(records, ["serve.refresh_batch"], self.DIRS)
+        self.assertEqual(len(rows), 1)
+        r = rows[0]
+        self.assertEqual((r["workload"], r["metric"], r["pairs"]),
+                         ("refresh", "serve.refresh_batch.jobs", 3))
+        self.assertEqual((r["a_median"], r["b_median"]), (11.0, 9.0))
+        self.assertEqual(r["b_wins"], 2)  # the tie counts for neither side
+
+    def test_untraced_and_half_pairs_are_left_out(self):
+        records = [traced(0, "A", {"serve.refresh_batch.wall_s": 1.0}),
+                   traced(0, "B", {"serve.refresh_batch.wall_s": 0.5}),
+                   traced(1, "A", {"serve.refresh_batch.wall_s": 9.0}),
+                   traced(2, "A", {"serve.refresh_batch.wall_s": 7.0}, trace=False),
+                   traced(2, "B", {"serve.refresh_batch.wall_s": 7.0}, trace=False),
+                   {"workload": "refresh", "pair": 3, "side": "B", "trace": True,
+                    "result": None}]
+        rows = ab.summarize_layers(records, ["serve.refresh_batch"], self.DIRS)
+        self.assertEqual([(r["pairs"], r["a_median"], r["b_median"]) for r in rows],
+                         [(1, 1.0, 0.5)])
+
+    def test_unknown_direction_reports_no_wins(self):
+        records = [traced(0, "A", {"serve.refresh_batch.users_put": 250.0}),
+                   traced(0, "B", {"serve.refresh_batch.users_put": 251.0})]
+        rows = ab.summarize_layers(records, ["serve.refresh_batch"], self.DIRS)
+        self.assertIsNone(rows[0]["b_wins"])
+
+    def test_workloads_are_kept_apart(self):
+        records = [traced(0, "A", {"rank.eval.jobs": 12.0}, workload="nightly"),
+                   traced(0, "B", {"rank.eval.jobs": 12.0}, workload="nightly"),
+                   traced(0, "A", {"rank.eval.jobs": 0.0}),
+                   traced(0, "B", {"rank.eval.jobs": 0.0})]
+        rows = ab.summarize_layers(records, ["rank.eval"], {"rank.eval.jobs": "lower"})
+        self.assertEqual([(r["workload"], r["a_median"]) for r in rows],
+                         [("nightly", 12.0), ("refresh", 0.0)])
+
+
 if __name__ == "__main__":
     unittest.main()

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets.integral
 
 /** Distributed connected components over an undirected edge list — the
   * clustering step that turns PAIRWISE near-duplicate evidence into
@@ -107,17 +108,8 @@ object ConnectedComponents {
     df.join(drop, Seq(idCol), "left_anti")
   }
 
-  private def integral(t: org.apache.spark.sql.types.DataType): Boolean =
-    t match {
-      case org.apache.spark.sql.types.ByteType
-         | org.apache.spark.sql.types.ShortType
-         | org.apache.spark.sql.types.IntegerType
-         | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-
-  /** Budget-fused [[run]]: under `maxEdges` the pair graph is a BOUNDED
-    * ARTIFACT (one map-side-grouped shuffle, budget-probed
+  /** Budget-fused [[run]]: under `Budgets.componentEdges` the pair graph
+    * is a BOUNDED ARTIFACT (one map-side-grouped shuffle, budget-probed
     * distributed-first, collected once) and union–find with a final
     * min-per-root pass labels every node in O(m α(m)) — identical
     * (node, min reachable id) rows to the iterative hash-min plan, with
@@ -127,8 +119,8 @@ object ConnectedComponents {
     * x =!= y filter drops them. None past the budget or for non-integral
     * id types — web-scale pair graphs keep the O(log d) pointer-jumping
     * joins. */
-  def runFused(edges: DataFrame,
-      maxEdges: Long = 16000000L): Option[DataFrame] = {
+  def runFused(edges: DataFrame): Option[DataFrame] = {
+    val maxEdges = graft.operators.Budgets.get.componentEdges
     val aT = edges.schema("a").dataType
     val bT = edges.schema("b").dataType
     if (!integral(aT) || aT != bT || maxEdges <= 0) return None
@@ -178,8 +170,7 @@ object ConnectedComponents {
 
   /** Budget dispatcher for [[run]]. */
   def runAuto(edges: DataFrame, maxIter: Int = 20,
-      pointerJumping: Boolean = true,
-      maxEdges: Long = 16000000L): DataFrame =
-    runFused(edges, maxEdges)
+      pointerJumping: Boolean = true): DataFrame =
+    runFused(edges)
       .getOrElse(run(edges, maxIter, pointerJumping))
 }

@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.DataType
+import graft.operators.Budgets.integral
 
 /** Distributed PageRank over an edge list — the graph-centrality signal a
   * crawl pipeline uses for domain/page authority (CommonCrawl publishes
@@ -176,11 +177,6 @@ object PageRank {
     ranks
   }
 
-  private def integral(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
-  }
-
   /** Dense CSR image of a collected graph (round-13, verdict task 7): the
     * round-12 fused sweep iterated a boxed `HashMap[Long, Long]`
     * single-threaded, which measured 1.3-1.5× SLOWER than the join plan at
@@ -209,21 +205,11 @@ object PageRank {
     * shuffle happens at all (the round-12 form paid a groupBy exchange)
     * and the driver never sees a boxed Row — the 10× measurement showed
     * the boxed collect, not the sweep, dominating the fused wall.
-    * Returns (csr, nodeType) or None past the budget / for non-integral
-    * id types / null endpoints.
-    *
-    * Raising `maxEdges` needs TWO session knobs, not one: driver heap
-    * (the CSR image is ~44 B/edge transient, guarded below at ~64 B to
-    * cover the sort workspaces) AND `spark.driver.maxResultSize` — the
-    * packed chunks are ~16 B/edge of serialized task results, which
-    * crosses the 1g default near ~65M edges, long before the heap (the
-    * r14 120M measurement found this; it is a STATIC conf, set at
-    * session build). Both are GUARDED, not just documented: the kernel
-    * reads the session's actual maxResultSize and the JVM's max heap
-    * and refuses — falls back to the join plan — when the measured edge
-    * count would cross either, so a raised `maxEdges` on an
-    * under-provisioned session degrades to the scale plan instead of a
-    * mid-job SparkException / OOM. */
+    * Returns (csr, nodeType) or None past the budget, past what the
+    * session holds ([[graft.operators.Budgets.driverRows]]: the packed
+    * chunks are ~16 B/edge of task results, which cross the 1g
+    * maxResultSize default near ~65M edges — r14), for non-integral id
+    * types or null endpoints. */
   private def collectGraph(edges: DataFrame, maxEdges: Long):
       Option[(CsrGraph, DataType)] = {
     val srcT = edges.schema("src").dataType
@@ -244,17 +230,10 @@ object PageRank {
     // ~1.07B would wrap m.toInt into a negative allocation instead of
     // falling back to the join plan
     val csrCap = (Int.MaxValue / 2 - 8).toLong
-    // session-resource guards (round 14): the packed transfer is ~16
-    // B/edge of serialized task results and the CSR build peaks at ~64
-    // B/edge of driver arrays (image + sort workspaces) — refuse when
-    // the MEASURED m would cross 90% of the session's maxResultSize or
-    // 40% of the JVM's max heap, whatever maxEdges says
-    val maxResult = try edges.sparkSession.sparkContext.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    catch { case _: Throwable => 1L << 30 }
-    val resourceCap = math.min(
-      if (maxResult <= 0) Long.MaxValue else maxResult * 9L / 10L / 16L,
-      Runtime.getRuntime.maxMemory() * 2L / 5L / 64L)
+    // ~16 B/edge of task results; the CSR build peaks at ~64 B/edge of
+    // driver arrays (image + sort workspaces)
+    val resourceCap = graft.operators.Budgets.driverRows(
+      edges.sparkSession.sparkContext.getConf, 16L, 64L)
     if (m == 0L || m > math.min(math.min(maxEdges, csrCap), resourceCap)
         || probe.getLong(1) != 0L) {
       graft.operators.Checkpoints.free(e)
@@ -425,33 +404,24 @@ object PageRank {
     } finally pool.shutdown()
   }
 
-  /** Budget-fused [[run]]: when the multi-edge list fits `maxEdges`, the
-    * graph is a BOUNDED ARTIFACT (the IVF-index/codebook collect class) —
-    * the whole damped iteration is iters·O(m) exact long arithmetic, the
-    * same order of work as one collect of the graph, so the per-sweep
+  /** Budget-fused [[run]]: when the multi-edge list fits
+    * `Budgets.pageRankEdges`, the graph is a BOUNDED ARTIFACT (the
+    * IVF-index/codebook collect class) — the whole damped iteration is
+    * iters·O(m) exact long arithmetic, the same order of work as one
+    * collect of the graph, so the per-sweep
     * join+checkpoint scaffolding (which dominated the wall ~100×) is pure
     * overhead at this size. Probed distributed-first; bit-identical ranks
     * (spec-pinned); None past the budget or for non-integral ids — the
     * 100 TB plan stays [[run]]'s shuffled sweeps. Round 13: the sweep runs
     * over the primitive CSR image, range-parallel across
-    * defaultParallelism threads (see [[CsrGraph]]) — the round-12 boxed
-    * single-thread map lost to the join plan at 24M edges; the parallel
-    * form MEASURED 2.2× faster than the join plan there warm (SCALE.md
-    * r13graph) and **8.9× at 120M edges** (115 vs 1028 s warm, 24 GB
-    * driver — SCALE.md r14graph, after the InternalRow-RDD chunk
-    * transfer fix). The 100M default sits inside that measured win
-    * decade; what actually bounds a session is the RESOURCE GUARDS in
-    * collectGraph (maxResultSize at ~16 B/edge, heap at ~64 B/edge),
-    * which refuse to the join plan on under-provisioned sessions — a
-    * default 1g-maxResultSize session auto-falls-back near ~60M edges
-    * regardless of maxEdges. */
+    * defaultParallelism threads (see [[CsrGraph]]); measured 8.9× faster
+    * than the join plan at 120M edges (SCALE.md r14graph). */
   def runFused(edges: DataFrame, iters: Int, dampNum: Long = 85L,
-      dampDen: Long = 100L, scale: Long = Scale,
-      maxEdges: Long = 100000000L): Option[DataFrame] = {
+      dampDen: Long = 100L, scale: Long = Scale): Option[DataFrame] = {
     require(iters >= 0, s"iters must be >= 0: $iters")
     require(dampNum >= 0 && dampDen > 0 && dampNum <= dampDen,
       s"damping must be a fraction in [0,1]: $dampNum/$dampDen")
-    collectGraph(edges, maxEdges).map { case (g, nodeT) =>
+    collectGraph(edges, graft.operators.Budgets.get.pageRankEdges).map { case (g, nodeT) =>
       val spark = edges.sparkSession
       import spark.implicits._
       val n = g.n.toLong
@@ -490,16 +460,16 @@ object PageRank {
     * computed once by the same dense-aggregate machinery.
     *
     * Refusal seam mirrors the SSSP sweep: non-integral or mismatched id
-    * types, null endpoints, or a node count past `maxNodes` or the
-    * session-resource guards → None (caller falls back). Uniform
+    * types, null endpoints, or a node count past `Budgets.pageRankNodes`
+    * or the session-resource guard → None (caller falls back). Uniform
     * teleport only — the personalized form stays on
     * [[personalizedFused]]/[[personalized]]. */
   def runBroadcast(edges: DataFrame, iters: Int, dampNum: Long = 85L,
-      dampDen: Long = 100L, scale: Long = Scale,
-      maxNodes: Long = 16000000L): Option[DataFrame] = {
+      dampDen: Long = 100L, scale: Long = Scale): Option[DataFrame] = {
     require(iters >= 0, s"iters must be >= 0: $iters")
     require(dampNum >= 0 && dampDen > 0 && dampNum <= dampDen,
       s"damping must be a fraction in [0,1]: $dampNum/$dampDen")
+    val maxNodes = graft.operators.Budgets.get.pageRankNodes
     val srcT = edges.schema("src").dataType
     val dstT = edges.schema("dst").dataType
     if (!integral(srcT) || srcT != dstT || maxNodes <= 0) return None
@@ -523,12 +493,7 @@ object PageRank {
       .union(e.select(col("v").as("node"))).distinct().localCheckpoint()
     val nDistinct = nodesDf.count()
     val nodeCap = (Int.MaxValue / 2 - 8).toLong
-    val maxResult = try sc.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    catch { case _: Throwable => 1L << 30 }
-    val resourceCap = math.min(
-      if (maxResult <= 0) Long.MaxValue else maxResult * 9L / 10L / 24L,
-      Runtime.getRuntime.maxMemory() * 2L / 5L / 64L)
+    val resourceCap = graft.operators.Budgets.driverRows(sc.getConf, 24L, 64L)
     if (nDistinct > math.min(math.min(maxNodes, nodeCap), resourceCap)) {
       graft.operators.Checkpoints.free(nodesDf)
       e.unpersist(blocking = false)
@@ -634,15 +599,15 @@ object PageRank {
       .select(col("node").cast(srcT).as("node"), col("rank_fp")))
   }
 
-  /** Budget dispatcher for [[run]]: driver-CSR kernel under `maxEdges`,
-    * then the executor-side broadcast sweep under `maxNodes` (round 15 —
-    * O(nodes) driver bound, serving the m ≫ n decade past the CSR
-    * guards), then the shuffled join sweeps. All three bit-identical. */
+  /** Budget dispatcher for [[run]]: driver-CSR kernel under
+    * `Budgets.pageRankEdges`, then the executor-side broadcast sweep
+    * under `Budgets.pageRankNodes` (round 15 — O(nodes) driver bound,
+    * serving the m ≫ n decade past the CSR guards), then the shuffled
+    * join sweeps. All three bit-identical. */
   def runAuto(edges: DataFrame, iters: Int, dampNum: Long = 85L,
-      dampDen: Long = 100L, scale: Long = Scale,
-      maxEdges: Long = 100000000L, maxNodes: Long = 16000000L): DataFrame =
-    runFused(edges, iters, dampNum, dampDen, scale, maxEdges)
-      .orElse(runBroadcast(edges, iters, dampNum, dampDen, scale, maxNodes))
+      dampDen: Long = 100L, scale: Long = Scale): DataFrame =
+    runFused(edges, iters, dampNum, dampDen, scale)
+      .orElse(runBroadcast(edges, iters, dampNum, dampDen, scale))
       .getOrElse(run(edges, iters, dampNum, dampDen, scale))
 
   /** Budget-fused [[personalized]] — same seam, seed-concentrated
@@ -651,11 +616,12 @@ object PageRank {
     * falls back). Seeds absent from the graph still count toward |S|
     * (exactly [[personalized]]'s semantics). */
   def personalizedFused(edges: DataFrame, seeds: DataFrame, iters: Int,
-      dampNum: Long = 85L, dampDen: Long = 100L, scale: Long = Scale,
-      maxEdges: Long = 100000000L): Option[DataFrame] = {
+      dampNum: Long = 85L, dampDen: Long = 100L,
+      scale: Long = Scale): Option[DataFrame] = {
     require(iters >= 0, s"iters must be >= 0: $iters")
     require(dampNum >= 0 && dampDen > 0 && dampNum <= dampDen,
       s"damping must be a fraction in [0,1]: $dampNum/$dampDen")
+    val maxEdges = graft.operators.Budgets.get.pageRankEdges
     val seedT = seeds.schema("node").dataType
     if (!integral(seedT)) return None
     collectGraph(edges, maxEdges).flatMap { case (g, nodeT) =>
@@ -693,9 +659,8 @@ object PageRank {
 
   /** Budget dispatcher for [[personalized]]. */
   def personalizedAuto(edges: DataFrame, seeds: DataFrame, iters: Int,
-      dampNum: Long = 85L, dampDen: Long = 100L, scale: Long = Scale,
-      maxEdges: Long = 100000000L): DataFrame =
-    personalizedFused(edges, seeds, iters, dampNum, dampDen, scale, maxEdges)
+      dampNum: Long = 85L, dampDen: Long = 100L, scale: Long = Scale): DataFrame =
+    personalizedFused(edges, seeds, iters, dampNum, dampDen, scale)
       .getOrElse(personalized(edges, seeds, iters, dampNum, dampDen, scale))
 
   /** Total |rank−rank'| between two rank frames (fixed-point units) — the

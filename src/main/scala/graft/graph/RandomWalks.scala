@@ -3,7 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.DataType
+import graft.operators.Budgets.integral
 
 /** Deterministic random-walk corpus generation — the DeepWalk/node2vec
   * input stage (Perozzi et al. 2014): `numWalks` walks of `length` steps
@@ -88,11 +89,6 @@ object RandomWalks {
       ((d(3) & 0xffL) << 16) | ((d(4) & 0xffL) << 8) | (d(5) & 0xffL)
   }
 
-  private def integral(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
-  }
-
   /** Fused broadcast-adjacency walker — the whole `length`-step trace in
     * ONE distributed pass instead of `length` join+checkpoint jobs.
     *
@@ -118,8 +114,7 @@ object RandomWalks {
     * the md5 itself (a library call), so codegen buys nothing here.
     *
     * Returns None — callers fall back to [[walks]] — when the edge count
-    * exceeds `maxEdges` (default 16M oriented edges ≈ executor-safe
-    * hundreds of MB with per-node array overhead), or when the id columns
+    * exceeds `Budgets.walkEdges`, or when the id columns
     * are not integral types sharing one type (the broadcast map keys and
     * ranks by long; a string id's lexicographic rank would diverge from
     * the join plan's ORDER BY), or when any edge endpoint is null (the
@@ -128,9 +123,9 @@ object RandomWalks {
     * null-bearing graphs refuse and keep the join plan's behavior — the
     * PageRank collectGraph convention). */
   def walksFused(edges: DataFrame, srcCol: String, dstCol: String,
-      numWalks: Int, length: Int, salt: String,
-      maxEdges: Long = 16000000L): Option[DataFrame] = {
+      numWalks: Int, length: Int, salt: String): Option[DataFrame] = {
     require(numWalks >= 1 && length >= 1, s"numWalks/length >= 1")
+    val maxEdges = graft.operators.Budgets.get.walkEdges
     val srcT = edges.schema(srcCol).dataType
     val dstT = edges.schema(dstCol).dataType
     if (!integral(srcT) || srcT != dstT || maxEdges <= 0) return None
@@ -207,11 +202,11 @@ object RandomWalks {
   }
 
   /** Budget-gated dispatcher: the fused broadcast walker when the ranked
-    * adjacency fits `maxEdges`, the per-step join plan past it — identical
-    * traces either way (the md5 picks are a pure function of the graph). */
+    * adjacency fits `Budgets.walkEdges`, the per-step join plan past it —
+    * identical traces either way (the md5 picks are a pure function of
+    * the graph). */
   def walksAuto(edges: DataFrame, srcCol: String, dstCol: String,
-      numWalks: Int, length: Int, salt: String,
-      maxEdges: Long = 16000000L): DataFrame =
-    walksFused(edges, srcCol, dstCol, numWalks, length, salt, maxEdges)
+      numWalks: Int, length: Int, salt: String): DataFrame =
+    walksFused(edges, srcCol, dstCol, numWalks, length, salt)
       .getOrElse(walks(edges, srcCol, dstCol, numWalks, length, salt))
 }

@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.DataType
+import graft.operators.Budgets.integral
 
 /** Single-source shortest paths by fixed-round Bellman–Ford relaxation —
   * the BSP min-plus iteration every distributed graph engine ships
@@ -53,13 +54,8 @@ object ShortestPaths {
     dist
   }
 
-  private def integral(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
-  }
-
-  /** Budget-fused [[run]]: under `maxEdges` the weighted multi-edge list
-    * is a BOUNDED ARTIFACT (one map-side-grouped shuffle, budget-probed
+  /** Budget-fused [[run]]: under `Budgets.ssspEdges` the weighted
+    * multi-edge list is a BOUNDED ARTIFACT (budget-probed
     * distributed-first, collected once) and the whole R-round min-plus
     * relaxation is rounds·O(m) exact long arithmetic — the same order of
     * work as one collect of the graph, so the per-round join+checkpoint
@@ -73,20 +69,12 @@ object ShortestPaths {
     * (u,w) of cur(u)+w) — so disjoint node ranges parallelize across
     * defaultParallelism threads with zero synchronization (each thread
     * owns its v slots; min is order-free, so bit-identity to the BSP
-    * join plan is preserved by construction). The round-12 form iterated
-    * a boxed map single-threaded and LOST to the join plan at 24M edges;
-    * the parallel CSR form measured 1.6× FASTER there warm and ~par cold
-    * (SCALE.md r13graph), so the 16M default is a driver-heap
-    * conservatism bound inside the win decade (the walksFused
-    * convention) — raise it with driver memory AND
-    * `spark.driver.maxResultSize`: the packed chunks are ~24 B/edge of
-    * serialized task results, which crosses the 1g default near ~45M
-    * edges, long before the heap (a STATIC conf, set at session build;
-    * the r14 120M measurement found this). */
+    * join plan is preserved by construction); measured 1.6× faster than
+    * the join plan at 24M edges warm (SCALE.md r13graph). */
   def runFused(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, source: Long, rounds: Int,
-      maxEdges: Long = 16000000L): Option[DataFrame] = {
+      weightCol: String, source: Long, rounds: Int): Option[DataFrame] = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
+    val maxEdges = graft.operators.Budgets.get.ssspEdges
     val srcT = edges.schema(srcCol).dataType
     val dstT = edges.schema(dstCol).dataType
     if (!integral(srcT) || srcT != dstT || maxEdges <= 0) return None
@@ -112,23 +100,12 @@ object ShortestPaths {
     // a budget raised past ~1.07B edges would wrap m.toInt into a negative
     // allocation instead of falling back to the join plan
     val csrCap = (Int.MaxValue / 2 - 8).toLong
-    // session-resource guards (round 14, mirrors PageRank.collectGraph):
-    // ~24 B/edge of serialized chunk results; the heap divisor is set
-    // from MEASURED FAILURE, not an array-size estimate — the r14 120M
-    // attempts died on BOTH a 24 GB driver (OOM in the id-image build)
-    // and a 48 GB driver (executor heartbeat suicide during the full-GC
-    // pauses the build's multi-GB sorts provoke), so the guard demands
-    // ~480 B of heap per edge (0.4 × heap / 192): a 48 GB session
-    // refuses 120M and falls back to the join sweeps — this kernel's
-    // weighted triples cost ~1.5× PageRank's image and its next decade
-    // belongs to [[runBroadcast]] (executor-side, O(nodes) driver bound
-    // — measured at 120M edges in SCALE.md r15graph) via runAuto
-    val maxResult = try edges.sparkSession.sparkContext.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    catch { case _: Throwable => 1L << 30 }
-    val resourceCap = math.min(
-      if (maxResult <= 0) Long.MaxValue else maxResult * 9L / 10L / 24L,
-      Runtime.getRuntime.maxMemory() * 2L / 5L / 192L)
+    // ~24 B/edge of task results; the heap divisor is set from MEASURED
+    // FAILURE (r14: 120M edges died on a 24 GB driver's id-image build
+    // and a 48 GB driver's full-GC pauses), so the guard demands ~480 B
+    // of heap per edge and the next decade belongs to [[runBroadcast]]
+    val resourceCap = graft.operators.Budgets.driverRows(
+      spark.sparkContext.getConf, 24L, 192L)
     if (m == 0L || m > math.min(math.min(maxEdges, csrCap), resourceCap)
         || probe.getLong(1) != 0L) {
       graft.operators.Checkpoints.free(e)
@@ -304,24 +281,16 @@ object ShortestPaths {
     * Returns None (→ caller falls back to the join plan) for
     * non-integral or mismatched id types, null endpoints/weights,
     * negative weights, a rounds·maxW sum that could reach the
-    * Long.MaxValue unreached sentinel, or a node count past `maxNodes`
-    * or the session-resource guards (node-dictionary collect ~24 B/node
-    * against maxResultSize; driver arrays + per-round broadcast ~64
-    * B/node against heap).
-    *
-    * Measured (SCALE.md r15graph, 120M edges / 8M nodes, DEFAULT 8g
-    * heap): 178 s cold (dictionary + dense-index + executor cache
-    * build) / 94 s warm vs 212 s for the join plan — 2.3× warm on a
-    * session where the driver-CSR kernel's 120M attempts died at 24g
-    * AND 48g. The 16M-node default gate is 2× the measured 8M-node
-    * point (the walksFused convention: a conservatism bound inside the
-    * measured win regime) — raise it only with a measurement at the
-    * target node count; the resource guards independently refuse
-    * under-provisioned sessions regardless of the static gate. */
+    * Long.MaxValue unreached sentinel, or a node count past
+    * `Budgets.ssspNodes` or the session-resource guard (node-dictionary
+    * collect ~24 B/node of task results; driver arrays + per-round
+    * broadcast ~64 B/node of heap). Measured 2.3× faster than the join
+    * plan at 120M edges / 8M nodes on a default 8g driver (SCALE.md
+    * r15graph). */
   def runBroadcast(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, source: Long, rounds: Int,
-      maxNodes: Long = 16000000L): Option[DataFrame] = {
+      weightCol: String, source: Long, rounds: Int): Option[DataFrame] = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
+    val maxNodes = graft.operators.Budgets.get.ssspNodes
     val srcT = edges.schema(srcCol).dataType
     val dstT = edges.schema(dstCol).dataType
     if (!integral(srcT) || srcT != dstT || maxNodes <= 0) return None
@@ -359,12 +328,7 @@ object ShortestPaths {
       .union(e.select(col("v").as("node"))).distinct().localCheckpoint()
     val nDistinct = nodesDf.count()
     val nodeCap = (Int.MaxValue / 2 - 8).toLong
-    val maxResult = try sc.getConf
-      .getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    catch { case _: Throwable => 1L << 30 }
-    val resourceCap = math.min(
-      if (maxResult <= 0) Long.MaxValue else maxResult * 9L / 10L / 24L,
-      Runtime.getRuntime.maxMemory() * 2L / 5L / 64L)
+    val resourceCap = graft.operators.Budgets.driverRows(sc.getConf, 24L, 64L)
     if (nDistinct > math.min(math.min(maxNodes, nodeCap), resourceCap)) {
       graft.operators.Checkpoints.free(nodesDf)
       e.unpersist(blocking = false)
@@ -472,17 +436,16 @@ object ShortestPaths {
     Some(spark.createDataset(b.result()).toDF("node", "dist"))
   }
 
-  /** Budget dispatcher for [[run]]: driver-CSR kernel under `maxEdges`,
-    * then the executor-side broadcast sweep under `maxNodes` (round 15
+  /** Budget dispatcher for [[run]]: driver-CSR kernel under
+    * `Budgets.ssspEdges`, then the executor-side broadcast sweep under
+    * `Budgets.ssspNodes` (round 15
     * — its driver bound is node-count, so it serves the m ≫ n decade
     * the driver kernel's guards refuse), then the BSP join plan. All
     * three routes are bit-identical by the min-plus order-free
     * contract. */
   def runAuto(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, source: Long, rounds: Int,
-      maxEdges: Long = 16000000L, maxNodes: Long = 16000000L): DataFrame =
-    runFused(edges, srcCol, dstCol, weightCol, source, rounds, maxEdges)
-      .orElse(runBroadcast(edges, srcCol, dstCol, weightCol, source,
-        rounds, maxNodes))
+      weightCol: String, source: Long, rounds: Int): DataFrame =
+    runFused(edges, srcCol, dstCol, weightCol, source, rounds)
+      .orElse(runBroadcast(edges, srcCol, dstCol, weightCol, source, rounds))
       .getOrElse(run(edges, srcCol, dstCol, weightCol, source, rounds))
 }

@@ -2,7 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.DataType
+import graft.operators.Budgets.integral
 
 /** Exact triangle counting + local clustering coefficients over an
   * undirected graph — the degree-ordered orientation algorithm (the
@@ -38,26 +39,21 @@ object Triangles {
   private def lexLess(d1: Column, n1: Column, d2: Column, n2: Column): Column =
     d1 < d2 || (d1 === d2 && n1 < n2)
 
-  private def integral(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
-  }
-
   /** Per-node triangle participation and local clustering coefficient.
     * Input edges may be directed/duplicated/self-looped — canonicalized
     * here. Output: (node, degree, triangles, coeff) with
     * coeff = 2·triangles / (degree·(degree−1)), NULL below degree 2.
-    * Dispatches fused ↔ composed on `edgeLimit` (distinct undirected
-    * edges; default 8M ≈ a couple hundred MB of broadcast adjacency). */
-  def perNode(edges: DataFrame, srcCol: String, dstCol: String,
-      edgeLimit: Long = 8000000L): DataFrame =
-    perNodeFused(edges, srcCol, dstCol, edgeLimit)
-      .getOrElse(perNodeComposed(edges, srcCol, dstCol, edgeLimit))
+    * Dispatches fused ↔ composed on `Budgets.triangleEdges` (distinct
+    * undirected edges; 8M ≈ a couple hundred MB of broadcast adjacency). */
+  def perNode(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    perNodeFused(edges, srcCol, dstCol)
+      .getOrElse(perNodeComposed(edges, srcCol, dstCol))
 
   /** The fused plan: one shuffle (groupBy collect_set — map-side deduped),
     * one budget aggregate BEFORE any driver collect, one bounded driver
-    * artifact (the oriented adjacency, ≤ `maxEdges` longs in id-sorted
-    * arrays — the IVF-index/codebook class of collect, never unbounded),
+    * artifact (the oriented adjacency, ≤ `Budgets.triangleEdges` longs
+    * in id-sorted arrays — the IVF-index/codebook class of collect, never
+    * unbounded),
     * one broadcast; then every apex intersects its out-neighborhood
     * against each out-neighbor's in a distributed loop with per-partition
     * count pre-aggregation, so the only remaining exchanges are |V| apex
@@ -65,8 +61,9 @@ object Triangles {
     * back to the composed plan — past the budget or when the id columns
     * are not one shared integral type (the driver orientation keys and
     * ranks by long). */
-  def perNodeFused(edges: DataFrame, srcCol: String, dstCol: String,
-      maxEdges: Long = 8000000L): Option[DataFrame] = {
+  def perNodeFused(edges: DataFrame, srcCol: String,
+      dstCol: String): Option[DataFrame] = {
+    val maxEdges = graft.operators.Budgets.get.triangleEdges
     val srcT = edges.schema(srcCol).dataType
     val dstT = edges.schema(dstCol).dataType
     if (!integral(srcT) || srcT != dstT || maxEdges <= 0) return None
@@ -85,8 +82,8 @@ object Triangles {
       .head().getLong(0)
     // Int-index bound (round-16, ADVICE r15): the packed transfer and the
     // CSR arrays index with Int — packed entries total ≤ 2·groups + m ≤ 3m
-    // (each group contributes [u, len] + its neighbors), so a caller
-    // passing maxEdges past ~Int.MaxValue/3 would overflow into negative
+    // (each group contributes [u, len] + its neighbors), so a gate
+    // raised past ~Int.MaxValue/3 would overflow into negative
     // array sizes/indices instead of refusing. Cap the fused route
     // explicitly; oversized graphs fall back to the composed plan.
     val intIndexCap = (Int.MaxValue / 3 - 4).toLong
@@ -246,8 +243,8 @@ object Triangles {
   }
 
   /** The composed (all-DataFrame) plan — any id type, any graph size. */
-  def perNodeComposed(edges: DataFrame, srcCol: String, dstCol: String,
-      broadcastEdgeLimit: Long = 8000000L): DataFrame = {
+  def perNodeComposed(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val broadcastEdgeLimit = graft.operators.Budgets.get.triangleEdges
     // materialize the canonical edge set ONCE: deg, the orientation join,
     // and (via `oriented`) three join branches all read it, and `edges` is
     // often an expensive upstream join (q155's co-purchase self-join)
@@ -300,8 +297,7 @@ object Triangles {
   }
 
   /** Global triangle count (one row) — the corners sum / 3. */
-  def globalCount(edges: DataFrame, srcCol: String, dstCol: String,
-      edgeLimit: Long = 8000000L): DataFrame =
-    perNode(edges, srcCol, dstCol, edgeLimit)
+  def globalCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    perNode(edges, srcCol, dstCol)
       .agg((sum(col("triangles")) / 3L).cast("long").as("n_triangles"))
 }

@@ -3,6 +3,7 @@ package graft.rank
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Relational
+import graft.operators.Budgets.integral
 
 /** Deterministic item–item co-occurrence retrieval (the engine's fully
   * reproducible recommender; capability analog of the reference's top-k
@@ -29,34 +30,8 @@ object Cooccur {
     * (subset-key clustering) and the item_a window, so neither inserts
     * another exchange over the multi-10M-row pair stream.
     */
-  def itemNeighbors(inter: DataFrame, maxNeighbors: Int = 50, maxBasket: Int = 0): DataFrame = {
-    // user-keyed repartition feeds the (user, item) distinct (subset
-    // clustering) AND both sides of the self-join (co-partitioned on the
-    // join key) — measured 2 fewer exchanges than distinct-then-join.
-    // With maxBasket > 0 the capped history is already distinct AND already
-    // HashPartitioning(user_id) after recentN's window, so the self-join
-    // still reuses one exchange and the pair space is bounded by N·(N-1)
-    // per user.
-    val t =
-      if (maxBasket > 0)
-        Interactions.recentN(inter, maxBasket).select(col("user_id"), col("item_id"))
-      else inter.select(col("user_id"), col("item_id"))
-        .repartition(col("user_id")).distinct()
-    // shuffled-hash build (round 15, guide §3.1): the sides are already
-    // co-partitioned on the basket key, so sort-merge paid two
-    // per-partition sorts for nothing — the hinted build is
-    // row-identical (order-insensitive consumers) and measured faster
-    // on every basket self-join shape (see StarQueries.copurchaseJoin).
-    val pairs = t.as("a").join(t.as("b").hint("shuffle_hash"),
-        col("a.user_id") === col("b.user_id") && col("a.item_id") =!= col("b.item_id"))
-      .select(col("a.item_id").as("item_a"), col("b.item_id").as("item_b"))
-      .repartition(col("item_a"))
-      .groupBy(col("item_a"), col("item_b"))
-      .agg(count(lit(1)).as("c"))
-    Relational.topKPerGroup(pairs, Seq("item_a"),
-        Seq(col("c").desc, col("item_b").asc), maxNeighbors, "__nrk")
-      .drop("__nrk")
-  }
+  def itemNeighbors(inter: DataFrame, maxNeighbors: Int = 50, maxBasket: Int = 0): DataFrame =
+    itemNeighborsRanked(inter, maxNeighbors, maxBasket).drop("nb_rank")
 
   /** Recommend: top-k unseen items per user, scored by the summed co-user
     * count over the user's history. Output: user_id, rk, item_id, score.
@@ -111,6 +86,13 @@ object Cooccur {
     * cap instead of once per point. */
   def itemNeighborsRanked(inter: DataFrame, maxNeighbors: Int = 50,
       maxBasket: Int = 0): DataFrame = {
+    // user-keyed repartition feeds the (user, item) distinct (subset
+    // clustering) AND both sides of the self-join (co-partitioned on the
+    // join key) — measured 2 fewer exchanges than distinct-then-join.
+    // With maxBasket > 0 the capped history is already distinct AND already
+    // HashPartitioning(user_id) after recentN's window, so the self-join
+    // still reuses one exchange and the pair space is bounded by N·(N-1)
+    // per user.
     val t =
       if (maxBasket > 0)
         Interactions.recentN(inter, maxBasket).select(col("user_id"), col("item_id"))
@@ -180,25 +162,16 @@ object Cooccur {
     }.reduce(_ unionByName _)
   }
 
-  private def integral(t: org.apache.spark.sql.types.DataType): Boolean =
-    t match {
-      case org.apache.spark.sql.types.ByteType
-         | org.apache.spark.sql.types.ShortType
-         | org.apache.spark.sql.types.IntegerType
-         | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-
   /** Budget-fused [[recommend]] — the TopKDotF32 lesson applied to the
     * EXACT co-occurrence ranker. The round-11 serving audit (SCALE.md
     * r11serve) proved the join plan's candidate shuffle is the
     * exact-semantics floor FOR A JOIN PLAN: a candidate's (user, item_b)
     * duplicates originate in different item_a partitions, so no map-side
     * combine exists. But the model itself is BOUNDED (items × maxNeighbors
-    * rows, capped by construction) — under `maxModelRows` it broadcasts,
-    * and each user's scores accumulate ROW-LOCALLY over their grouped
-    * history: the |history|×M candidate rows never exist, and the only
-    * exchanges are the two user-keyed groupings (seen set + capped
+    * rows, capped by construction) — under `Budgets.cooccurModelRows` it
+    * broadcasts, and each user's scores accumulate ROW-LOCALLY over their
+    * grouped history: the |history|×M candidate rows never exist, and the
+    * only exchanges are the two user-keyed groupings (seen set + capped
     * basket, co-partitioned for their join). Scores are sums of longs
     * (order-free) and the cut replays (score desc, item asc), so the
     * output is row-identical to [[recommend]] — spec-pinned at cap 0 and
@@ -212,12 +185,8 @@ object Cooccur {
     * collect_set-size device before anything is collected): 100 TB of
     * interactions stream through this plan fine (they are never
     * collected), but a model past executor memory belongs to the join.
-    * The default budget is a MEASURED crossover, not a heap bound
-    * (SCALE.md r12serve): fused wins 2.2× at a 1M-row model / 150k users
-    * (3.30 vs 7.13 s) and LOSES 1.2× at a 10M-row model / 1.5M users
-    * (85.4 vs 71.0 s — the model collect and per-user map merges
-    * overtake the candidate shuffle), so the gate sits at 4M rows inside
-    * the win decade.
+    * The model gate is a MEASURED crossover, not a heap bound (SCALE.md
+    * r12serve: fused wins 2.2× at a 1M-row model, loses 1.2× at 10M).
     *
     * `users` (round-12 verdict task 3 — the TwoTower.recommend pattern):
     * when given, only those users are scored — the history/seen frames
@@ -230,22 +199,21 @@ object Cooccur {
     * type refuses; null user rows can never match a semi-join and are
     * dropped on both plans.
     *
-    * `minFusedUsers` (round-13 verdict task 4 — sim.Knn's
-    * minFusedQueries lesson applied here): a SMALL user subset refuses
-    * the fused path. The fused plan's fixed cost (model groupBy +
-    * collect + broadcast) is paid regardless of |users|, while the
-    * join-plan fallback's cost SCALES with the subset (Catalyst pushes
-    * the semi-join below the score aggregate to the history scans), so
-    * a 200-user request was pinning ABOVE the join plan (r13: q182
-    * 4.76 s fused vs ~4 s join). The subset count is probed on the
+    * `minFusedUsers` (default `Budgets.cooccurMinUsers`; round-13 verdict
+    * task 4): a SMALL user subset refuses the fused path. The fused
+    * plan's fixed cost (model groupBy + collect + broadcast) is paid
+    * regardless of |users|, while the join-plan fallback's cost SCALES
+    * with the subset (Catalyst pushes the semi-join below the score
+    * aggregate to the history scans). The subset count is probed on the
     * already-checkpointed distinct frame — one bounded aggregate, no
     * extra scan of `inter`. */
   def recommendFused(inter: DataFrame, neighbors: DataFrame, k: Int = 10,
       maxBasket: Int = 0,
-      maxModelRows: Long = 4000000L,
       users: Option[DataFrame] = None,
-      minFusedUsers: Long = 4096L): Option[DataFrame] = {
+      minFusedUsers: Long = graft.operators.Budgets.get.cooccurMinUsers)
+      : Option[DataFrame] = {
     require(k >= 1, s"k must be >= 1: $k")
+    val maxModelRows = graft.operators.Budgets.get.cooccurModelRows
     val uT = inter.schema("user_id").dataType
     val iT = inter.schema("item_id").dataType
     val aT = neighbors.schema("item_a").dataType
@@ -470,16 +438,13 @@ object Cooccur {
   /** Budget dispatcher for [[recommend]]. With a `users` subset, the fused
     * plan scores only those users — and only when the subset is large
     * enough to amortize the fused plan's fixed model prep
-    * (`minFusedUsers`); the join-plan fallback appends a left-semi join
-    * that Catalyst's PushDownLeftSemiAntiJoin pushes below the top-k
-    * window and the score aggregate to the history scans — both routes
-    * serve the subset without a full-population pass. */
+    * (`Budgets.cooccurMinUsers`); the join-plan fallback appends a
+    * left-semi join that Catalyst's PushDownLeftSemiAntiJoin pushes below
+    * the top-k window and the score aggregate to the history scans —
+    * both routes serve the subset without a full-population pass. */
   def recommendAuto(inter: DataFrame, neighbors: DataFrame, k: Int = 10,
-      maxBasket: Int = 0, maxModelRows: Long = 4000000L,
-      users: Option[DataFrame] = None,
-      minFusedUsers: Long = 4096L): DataFrame =
-    recommendFused(inter, neighbors, k, maxBasket, maxModelRows, users,
-        minFusedUsers)
+      maxBasket: Int = 0, users: Option[DataFrame] = None): DataFrame =
+    recommendFused(inter, neighbors, k, maxBasket, users)
       .getOrElse {
         val r = recommend(inter, neighbors, k, maxBasket)
         users.map(u => r.join(u.select(col("user_id")).distinct(),

@@ -106,16 +106,16 @@ object NegativeSampling {
     // and the heaviest-weight buckets concentrated into single tasks.
     // Broadcasting removes the draws-side shuffle entirely and sidesteps
     // the low-cardinality skew. Row-identical: join algorithm only.
-    // SCALE GATE: the bucket table has at most nItems + numBuckets rows
-    // (each item once, plus one extra row per bucket boundary an interval
-    // crosses) — broadcast only while that is executor-budget-sized
-    // (~4 slim longs/row; 8M rows ≈ 256 MB relation); a catalog past the
-    // gate keeps the r15 shuffled-hash plan, which completes at any
+    // SCALE GATE (`Budgets.negativeBucketRows`): the bucket table has at
+    // most nItems + numBuckets rows (each item once, plus one extra row
+    // per bucket boundary an interval crosses); a catalog past the gate
+    // keeps the r15 shuffled-hash plan, which completes at any
     // scale. (The positives anti-join keeps its r15 shuffled-hash build —
     // its key is (user, item), high-cardinality, and the build side is
     // one partition's slice of the distinct positives.)
     val bucketSide =
-      if (nItems + numBuckets <= 8000000L) broadcast(buckets)
+      if (nItems + numBuckets <= graft.operators.Budgets.get.negativeBucketRows)
+        broadcast(buckets)
       else buckets.hint("shuffle_hash")
     val hits = draws.join(bucketSide, Seq("__bkt"))
       .filter(col("__u") >= col("lo") && col("__u") < col("hi"))

@@ -2,6 +2,7 @@ package graft.rank
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets.integral
 
 /** Neural two-tower retrieval trainer — the reference's TF/Merlin
   * TwoTowerModel (src/my_merlin_flow.py:306-324: user tower MLP × item
@@ -27,11 +28,11 @@ import org.apache.spark.sql.functions._
   * data-parallel form — chunks sharded across tasks against the
   * broadcast snapshot, driver sums in shard order and applies one
   * Adagrad step (still deterministic; see Config doc).
-  * Embedding tables are the parameter-server part: driver-held by
-  * default (fine to ~10M ids × dim 32 ≈ 1.2 GB; `require`d), and
-  * CLUSTER-HELD past that via `Config.embedParts` — the factored/ALS
-  * block layout, bit-identical to the driver-held form (see Config and
-  * EmbStore docs).
+  * Embedding tables are the parameter-server part: driver-held while
+  * both fit `Budgets.driverEmbedFloats` (~10M ids × dim 32 ≈ 1.2 GB),
+  * and CLUSTER-HELD past that, chosen by the trainer itself — the
+  * factored/ALS block layout, bit-identical to the driver-held form (see
+  * [[EmbStore]]).
   *
   * Serving integrates with the existing stack: towers are PRECOMPUTED
   * into (id, vec array<float>) frames — the CLIP-style corpus-embedding
@@ -58,22 +59,21 @@ object TwoTower {
     * the driver merge is ordered — they just fix DIFFERENT accumulation
     * orders, so they converge to different (equally valid) weights.
     *
-    * `embedParts` > 0 moves the EMBEDDING TABLES off the driver (round-10
-    * — the last `require` between this trainer and the 100 TB story):
-    * each table lives as a persisted RDD of (id, (vec, adagradAcc)) rows
-    * in `embedParts` partitions, the ALS block idea applied to the
-    * id space. Per step the driver touches only the BATCH'S rows — one
-    * tiny job lists the step's touched ids, a gather job filters them
-    * out of the table (broadcast id set, batch-bounded result), the
-    * existing step logic runs on the compact gathered arrays, and a
-    * scatter map writes the updated rows into a new persisted RDD
-    * (batch-bounded broadcast delta; lineage cut every 25 steps).
-    * Driver memory is O(batch), table memory is distributed — and the
-    * model is BIT-IDENTICAL to the driver-held form (spec-pinned):
-    * the compact remap changes indexing, not one float of arithmetic.
-    * Costs per step: two extra small jobs + one table-wide filter scan;
-    * worth paying exactly when the table no longer fits the driver
-    * (`driverEmbedBudget`, ~1.2 GB at the default).
+    * When either embedding table would pass `Budgets.driverEmbedFloats`
+    * (~1.2 GB), training moves the EMBEDDING TABLES off the driver
+    * (round 10): each table lives as a persisted RDD of (id, (vec,
+    * adagradAcc)) rows in `defaultParallelism` partitions, the ALS block
+    * idea applied to the id space. Per step the driver touches only the
+    * BATCH'S rows — one tiny job lists the step's touched ids, a gather
+    * job filters them out of the table (broadcast id set, batch-bounded
+    * result), the existing step logic runs on the compact gathered
+    * arrays, and a scatter map writes the updated rows into a new
+    * persisted RDD (batch-bounded broadcast delta; lineage cut every 25
+    * steps). Driver memory is O(batch), table memory is distributed —
+    * and the model is BIT-IDENTICAL to the driver-held form
+    * (spec-pinned): the compact remap changes indexing, not one float of
+    * arithmetic. Costs per step: two extra small jobs + one table-wide
+    * filter scan, paid only past the driver budget.
     *
     * `stepsPerJob` (round-10 verdict task 3) folds k consecutive
     * optimizer steps into ONE Spark job when `shards == 1`: the batch
@@ -89,15 +89,13 @@ object TwoTower {
     * gradient merge IS the synchronization point, so stepsPerJob is
     * ignored there.
     *
-    * `embedParts` and `stepsPerJob` are EXECUTION choices, not
-    * hyperparameters (the model is identical), so they stay out of
-    * `key`. */
+    * `stepsPerJob` is an EXECUTION choice, not a hyperparameter (the
+    * model is identical), so it stays out of `key`. */
   case class Config(
       embDim: Int = 32, hiddenDim: Int = 16, steps: Int = 80,
       batchRows: Int = 4096, chunk: Int = 256, lr: Double = 0.1,
       lrDecay: Double = 1.0, logitScale: Double = 4.0, seed: String = "tt",
-      shards: Int = 1, embedParts: Int = 0,
-      driverEmbedBudget: Long = 300000000L, stepsPerJob: Int = 1) {
+      shards: Int = 1, stepsPerJob: Int = 1) {
     /** Deterministic grid identity (the F11 model-selection contract). */
     def key: String = s"bs=$batchRows,lr=$lr,dim=$embDim,steps=$steps," +
       s"shards=$shards"
@@ -368,8 +366,8 @@ object TwoTower {
     override def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
-  /** Cluster-held embedding table (Config.embedParts > 0): (id, (vec,
-    * adagradAccumulator)) rows persisted across `parts` partitions — the
+  /** Cluster-held embedding table (past the driver budget): (id, (vec,
+    * adagradAccumulator)) rows persisted across the default parallelism — the
     * ALS block layout applied to one tower's id space, so the table's
     * memory is executor memory, not driver memory. Initialization runs
     * the SAME md5 ladder as the driver-held `initMatrix` (same tags), so
@@ -383,14 +381,14 @@ object TwoTower {
     * single-box fault-tolerance trade the fit already makes for its
     * batch layout. */
   private final class EmbStore(sc: org.apache.spark.SparkContext, n: Int,
-      cfg: Config, tag: String, scale: Float, parts: Int) {
+      cfg: Config, tag: String, scale: Float, embedFloats: Long) {
     import org.apache.spark.storage.StorageLevel
 
     var rdd: org.apache.spark.rdd.RDD[(Int, (Array[Float], Array[Double]))] = {
       // locals only in the closure: capturing a field would drag this
       // (non-serializable) store into the task
       val (seed, t, d, sc2) = (cfg.seed, tag, cfg.embDim, scale)
-      val r = sc.parallelize(0 until n, math.max(1, math.min(parts, math.max(1, n))))
+      val r = sc.parallelize(0 until n, math.max(1, math.min(sc.defaultParallelism, n)))
         .map(id => (id,
           (Array.tabulate(d)(c => initVal(seed, s"$t|$id", c, sc2)),
             new Array[Double](d))))
@@ -408,7 +406,7 @@ object TwoTower {
       * steps — the SAME cadence as the old lineage cut, which the
       * compaction now IS. Driver memory stays O(batch): the overlay is
       * bounded by `deltaRowCap` (an early compaction trips before it
-      * outgrows a fixed slice of `driverEmbedBudget`), and values are the
+      * outgrows a fixed slice of the driver budget), and values are the
       * exact arrays the step produced — storage layout cannot change one
       * float (bit-parity spec-pinned in TwoTowerSpec). */
     private val delta = new java.util.HashMap[Int, (Array[Float], Array[Double])]()
@@ -417,7 +415,7 @@ object TwoTower {
     // vec floats (4 B) + adagrad doubles (8 B) ≈ 12·embDim B/row; cap the
     // overlay at ~1/8 of the driver budget's float bytes
     private val deltaRowCap =
-      math.max(1L, cfg.driverEmbedBudget / (8L * math.max(1, cfg.embDim)))
+      math.max(1L, embedFloats / (8L * math.max(1, cfg.embDim)))
 
     /** Rows for `ids` (ascending), as (vecs, accs) in ids order — the
       * driver-held overlay answers ids it holds; only the rest run the
@@ -539,7 +537,11 @@ object TwoTower {
     * with their sizes, and the encoded distinct pairs with their count.
     * `gridSearch` builds it once for the whole grid. */
   private final class Prepared(val uDict: DataFrame, val iDict: DataFrame,
-      val nU: Int, val nI: Int, val enc: DataFrame, val nPairs: Long)
+      val nU: Int, val nI: Int, val enc: DataFrame, val nPairs: Long) {
+    /** Both tables of `cfg` fit `embedFloats` on the driver. */
+    def driverHeld(cfg: Config, embedFloats: Long): Boolean =
+      nU.toLong * cfg.embDim < embedFloats && nI.toLong * cfg.embDim < embedFloats
+  }
 
   /** `fork` runs the item dictionary's fit while this thread fits the
     * user dictionary; the default runs it inline, after. */
@@ -631,27 +633,24 @@ object TwoTower {
   private final case class Trained(model: Model, losses: Seq[Double],
       userVecs: Option[Array[Array[Float]]], itemVecs: Option[Array[Array[Float]]])
 
-  /** The per-config half of a fit: the driver-budget check, then training
-    * on the layout `batches` returns for this config's geometry, then the
-    * serving vectors. Reads `p`, never frees it. */
+  /** The per-config half of a fit: the embedding layout (driver-held
+    * under `Budgets.driverEmbedFloats`, cluster-held past it), then
+    * training on the layout `batches` returns for this config's geometry,
+    * then the serving vectors. Reads `p`, never frees it. */
   private def train(p: Prepared, cfg: Config, batches: Geometry => Batches): Trained = {
     val spark = p.enc.sparkSession
     val (uDict, iDict, nU, nI) = (p.uDict, p.iDict, p.nU, p.nI)
-    val clusterEmb = cfg.embedParts > 0
-    if (!clusterEmb)
-      require(nU.toLong * cfg.embDim < cfg.driverEmbedBudget &&
-          nI.toLong * cfg.embDim < cfg.driverEmbedBudget,
-        s"embedding tables must fit the driver ($nU users / $nI items at dim " +
-          s"${cfg.embDim}, budget ${cfg.driverEmbedBudget} floats); set " +
-          "Config.embedParts > 0 for the cluster-held layout (bit-identical model)")
+    require(cfg.chunk >= 1, s"chunk must be >= 1, got ${cfg.chunk}")
+    val embedFloats = graft.operators.Budgets.get.driverEmbedFloats
+    val clusterEmb = !p.driverHeld(cfg, embedFloats)
     val g = geometry(p, cfg)
     val (shards, nBatches, groupSize) = (g.shards, g.nBatches, g.groupSize)
     val batchRdd = batches(g)
 
     val uStore = if (clusterEmb)
-      new EmbStore(spark.sparkContext, nU, cfg, "ue", 0.5f, cfg.embedParts) else null
+      new EmbStore(spark.sparkContext, nU, cfg, "ue", 0.5f, embedFloats) else null
     val iStore = if (clusterEmb)
-      new EmbStore(spark.sparkContext, nI, cfg, "ie", 0.5f, cfg.embedParts) else null
+      new EmbStore(spark.sparkContext, nI, cfg, "ie", 0.5f, embedFloats) else null
     // cluster mode: w/ada carry only the (tiny) MLP halves; embedding
     // rows live in the stores and visit the driver per step, compacted
     var w = if (clusterEmb) init(0, 0, cfg) else init(nU, nI, cfg)
@@ -947,17 +946,14 @@ object TwoTower {
     *    contract, one candidate-width exchange more.
     *  - the seen-pair broadcast is right for eval-user subsets but a
     *    full-user-base serve would exceed executor broadcast memory;
-    *    when the semi-filtered history exceeds `broadcastSeenLimit` rows
-    *    (counted — one cheap job on two slim columns; default sized
-    *    ~30 bytes/row ≈ 1 GB, well under a 4 GB executor overhead slot)
-    *    the exclusion falls back to a shuffle anti-join: slower, but the
-    *    plan that actually completes at catalog × user-base scale
-    *    (spec-pinned in TwoTowerSpec with a limit of 1). */
+    *    when the semi-filtered history exceeds `Budgets.seenBroadcastRows`
+    *    (counted — one cheap job on two slim columns) the exclusion falls
+    *    back to a shuffle anti-join: slower, but the plan that actually
+    *    completes at catalog × user-base scale (spec-pinned). */
   def recommend(model: Model, users: DataFrame, k: Int = 10,
-      excludeSeen: Option[DataFrame] = None,
-      broadcastSeenLimit: Long = 32000000L,
-      fusedCatalogFloatLimit: Long = 64000000L): DataFrame = {
+      excludeSeen: Option[DataFrame] = None): DataFrame = {
     graft.sql.GraftFunctions.register(model.userVecs.sparkSession)
+    val budgets = graft.operators.Budgets.get
     val uIds = users.select(col("user_id")).distinct()
     val iType = model.itemVecs.schema("item_id").dataType
     val integralId = integral(iType)
@@ -968,12 +964,11 @@ object TwoTower {
     // and the plan's only exchange is the small per-user history
     // aggregation. Row-identical to the unfused plan below (spec-pinned);
     // catalogs past the budget (or non-integral ids) fall through to it.
-    if (integralId && fusedCatalogFloatLimit > 0) {
+    if (integralId && budgets.catalogFloats > 0) {
       val u = uIds.join(model.userVecs, Seq("user_id"))
       graft.sim.Retrieval.topKDot(u, "user_id", "vec",
           model.itemVecs, "item_id", "vec", k,
-          seen = excludeSeen.map(_.select(col("user_id"), col("item_id"))),
-          catalogFloatLimit = fusedCatalogFloatLimit) match {
+          seen = excludeSeen.map(_.select(col("user_id"), col("item_id")))) match {
         case Some(recs) =>
           return recs.select(col("user_id"), col("rk"),
             col("item_id").cast(iType).as("item_id"),
@@ -996,8 +991,9 @@ object TwoTower {
         // over materialized rows, not a second semi-join pass
         val seenScored = seen.select(col("user_id"), col("item_id"))
           .join(uIds, Seq("user_id"), "left_semi").localCheckpoint()
-        val small = seenScored.limit(broadcastSeenLimit.min(Int.MaxValue - 1L)
-          .toInt + 1).count() <= broadcastSeenLimit
+        val seenLimit = budgets.seenBroadcastRows
+        val small = seenScored.limit(seenLimit.min(Int.MaxValue - 1L)
+          .toInt + 1).count() <= seenLimit
         scored0.join(if (small) broadcast(seenScored) else seenScored,
           Seq("user_id", "item_id"), "left_anti")
       case None => scored0
@@ -1014,15 +1010,6 @@ object TwoTower {
           Seq(col("score").desc, col("item_id").asc), k)
         .select(col("user_id"), col("rk").cast("int").as("rk"),
           col("item_id"), col("score"))
-  }
-
-  /** Ids the fused kernel and TopKAggF carry as LONG without loss. */
-  private def integral(t: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
   }
 
   /** MIPS→L2 reduction of the item catalog (Bachrach et al., RecSys 2014;
@@ -1173,6 +1160,7 @@ object TwoTower {
     * order, and the argmax of (metric, config key) never sees thread
     * timing.
     *
+    * Pool threads run under the caller's [[graft.operators.Budgets]].
     * A failing config surfaces its OWN exception (e.g. the
     * IllegalArgumentException of a bad config's require), not the pool's
     * ExecutionException wrapper. Its siblings are interrupted and their
@@ -1186,10 +1174,14 @@ object TwoTower {
     require(maxWorkers > 0, s"maxWorkers must be positive, got $maxWorkers")
     import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
     val sc = trainDf.sparkSession.sparkContext
+    val budgets = graft.operators.Budgets.get
     val tag = s"graft-twotower-grid-${java.util.UUID.randomUUID()}"
     val pool = Executors.newFixedThreadPool(math.min(maxWorkers, configs.size))
     def submit[T](body: => T): Future[T] = pool.submit(new Callable[T] {
-      override def call(): T = { sc.addJobTag(tag); body }
+      override def call(): T = {
+        sc.addJobTag(tag)
+        graft.operators.Budgets.scoped(_ => budgets)(body)
+      }
     })
     var ctx: Option[Future[DataFrame]] = None
     var prep: Option[Prepared] = None
@@ -1216,7 +1208,8 @@ object TwoTower {
         }
       }
       // on this otherwise idle thread, while the configs train
-      if (evalCtx.isDefined && configs.exists(_.embedParts <= 0)) ids.load()
+      if (evalCtx.isDefined && configs.exists(p.driverHeld(_, budgets.driverEmbedFloats)))
+        ids.load()
       val fitted = futures.map(_.get()) // grid order, independent of completion order
       failed = false
       val best = fitted.maxBy { case (cfg, _, r) => (r, cfg.key) }
@@ -1303,7 +1296,7 @@ object TwoTower {
     * user without a vector ranks nothing and scores 0, as in
     * [[RankingEval.perUser]]. Driver-held vectors publish straight from
     * the driver; cluster-held ones collect like [[recommend]]. None =
-    * catalog past the fused float budget (the [[recommend]] default). */
+    * catalog past the fused float budget (`Budgets.catalogFloats`). */
   private def fusedRecall(t: Trained, ids: DictIds, ctx: DataFrame,
       k: Int): Option[Double] = {
     require(k >= 1, s"k must be >= 1, got $k")

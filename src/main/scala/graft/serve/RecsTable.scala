@@ -281,10 +281,8 @@ object RecsTable {
     * a past-budget generation (cache returns None) serves through the
     * cid-join plan instead. */
   private[serve] def annServe(itemIndex: () => DataFrame,
-      centroids: () => Array[Array[Float]], k: Int, nprobe: Int,
-      fusedIndexFloatLimit: Long): DataFrame => DataFrame = {
-    val cache = new graft.sim.Retrieval.CellCatalogCache(
-      itemIndex, "item_id", "vec", centroids, fusedIndexFloatLimit)
+      centroids: () => Array[Array[Float]], k: Int, nprobe: Int): DataFrame => DataFrame = {
+    val cache = new graft.sim.Retrieval.CellCatalogCache(itemIndex, "item_id", "vec", centroids)
     queries => cache.get() match {
       case Some(bc) => kernelLists(graft.sim.Retrieval.rankedArrays(queries, "user_id",
         graft.sim.Retrieval.annKernel("vec", bc, k, nprobe)))
@@ -357,7 +355,8 @@ object RecsTable {
     * (item_id, cid, vec) frame ([[graft.sim.Retrieval.annIndex]],
     * typically parquet partitioned by cid so probes prune files), and a
     * refreshed index + centroids take effect on the next batch. An index
-    * inside `fusedIndexFloatLimit` serves through the fused cell kernel
+    * inside `Budgets.cellCatalogFloats` (read when the query starts)
+    * serves through the fused cell kernel
     * (`sim.Retrieval.annKernel`, its ranked array is the rec list); past
     * it, through `topKAnn`'s cid-join plan. Recall vs the dense kernel
     * is governed by nprobe/nlist (spec-pinned floor in RetrievalSpec);
@@ -371,11 +370,10 @@ object RecsTable {
   def streamAnnRefresh(stream: DataFrame, history: DataFrame,
       userVecs: () => DataFrame, itemIndex: () => DataFrame,
       centroids: () => Array[Array[Float]], k: Int, nprobe: Int,
-      put: Iterator[(String, String)] => Unit, streamLogDir: String,
-      fusedIndexFloatLimit: Long = 64000000L)
+      put: Iterator[(String, String)] => Unit, streamLogDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     streamSeenServe(stream, history, userVecs, put, streamLogDir,
-      annServe(itemIndex, centroids, k, nprobe, fusedIndexFloatLimit))
+      annServe(itemIndex, centroids, k, nprobe))
 
   /** Typed [[streamAnnRefresh]] for INNER-PRODUCT catalogs (two-tower
     * model vectors) — round-13 verdict task 6. The generic seam above
@@ -394,13 +392,12 @@ object RecsTable {
       userVecs: () => DataFrame,
       artifacts: () => graft.rank.TwoTower.AnnServeArtifacts, k: Int,
       nprobe: Int, put: Iterator[(String, String)] => Unit,
-      streamLogDir: String, fusedIndexFloatLimit: Long)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      streamLogDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val (idx, cents) = pairedArtifactThunks(artifacts)
     streamAnnRefresh(stream, history,
       () => userVecs().select(col("user_id"),
         concat(col("vec"), array(lit(0.0f))).as("vec")),
-      idx, cents, k, nprobe, put, streamLogDir, fusedIndexFloatLimit)
+      idx, cents, k, nprobe, put, streamLogDir)
   }
 
   /** Round-15 (ADVICE r14): the typed overload used to pass

@@ -30,21 +30,17 @@ object Knn {
     * explicitly for a kernel-free plan.
     *
     * Scale shape (round-12, verdict task 3): under the default cosine
-    * with integral ids, a catalog inside `fusedCatalogFloatLimit`, AND a
-    * query side of at least `minFusedQueries` rows (one bounded
+    * with integral ids, a catalog inside `Budgets.catalogFloats`, AND a
+    * query side of at least `Budgets.knnMinQueries` rows (one bounded
     * limit-count probe), the whole |Q|×|C| candidate stream is FUSED
     * into sim.Retrieval's broadcast-catalog kernel — candidates never
     * exist as rows, the self-exclusion is a row-local id test, and the
     * cosine arithmetic is bit-equal to cosineF32's composition, so the
     * row-set (and the q41/q143 oracle hashes) is dispatch-invariant
     * (KnnSpec). The query-count gate is a REGIME test, not a safety one:
-    * the kernel pays a fixed catalog collect + broadcast (~0.2 s at 2k
-    * rows on the bench box) that a handful of queries never amortizes,
-    * while the unfused plan's cost is exactly the |Q|×|C| candidate rows
-    * it materializes — tiny at small |Q| (measured: q41's 32 queries ran
-    * 0.24 s unfused vs 0.45 s fused at sf0.1). Under the float budget a
-    * small-|Q| unfused plan is never catastrophic (|C| is bounded), so
-    * small query sets keep the broadcast join. Catalogs past the budget,
+    * the kernel's fixed catalog collect + broadcast is never amortized by
+    * a handful of queries (q41's 32 queries: 0.24 s unfused vs 0.45 s
+    * fused at sf0.1). Catalogs past the budget,
     * non-integral ids, or a custom simFn also take the unfused plan:
     * |Q|×|C| candidate rows through a broadcast nested-loop join, cut by
     * the map-side k-bounded heap when types allow (topKPerGroupBest —
@@ -52,27 +48,22 @@ object Knn {
     * window form otherwise. */
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame, idCol: String,
       vecCol: String, k: Int,
-      simFn: (Column, Column) => Column = defaultSim,
-      fusedCatalogFloatLimit: Long = 64000000L,
-      minFusedQueries: Int = 1024): DataFrame = {
+      simFn: (Column, Column) => Column = defaultSim): DataFrame = {
     graft.sql.GraftFunctions.register(queries.sparkSession)
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val budgets = graft.operators.Budgets.get
+    val minFusedQueries = budgets.knnMinQueries
     val idType = candidates.schema(idCol).dataType
-    val integralIds = Seq(queries.schema(idCol).dataType, idType).forall {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
+    val integralIds = Seq(queries.schema(idCol).dataType, idType)
+      .forall(graft.operators.Budgets.integral)
     def manyQueries: Boolean = minFusedQueries <= 1 ||
       queries.limit(minFusedQueries).count() >= minFusedQueries
-    if ((simFn eq defaultSim) && integralIds && fusedCatalogFloatLimit > 0 &&
+    if ((simFn eq defaultSim) && integralIds && budgets.catalogFloats > 0 &&
         manyQueries) {
       val fused = Retrieval.topKDot(
         queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv")),
         "query_id", "__qv",
         candidates.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv")),
-        "neighbor_id", "__cv", k,
-        catalogFloatLimit = fusedCatalogFloatLimit,
-        cosine = true, excludeSelf = true)
+        "neighbor_id", "__cv", k, cosine = true, excludeSelf = true)
       fused match {
         case Some(r) => return r.select(col("query_id"),
           col("neighbor_id").cast(idType).as("neighbor_id"),

@@ -35,8 +35,8 @@ import graft.sql.TopKDotF32.FlatCatalog
   * probe skips null embeddings, so the fused path succeeds wherever the
   * fallback path does.
   *
-  * Returns None when the catalog exceeds `catalogFloatLimit` (≈256 MB at
-  * the default) or is empty — past that seam retrieval belongs to the ANN
+  * Returns None when the catalog exceeds `Budgets.catalogFloats` (≈256 MB)
+  * or is empty — past that seam retrieval belongs to the ANN
   * stack, not a dense scan; callers fall back explicitly.
   * Output: (qId, rk int 1..k, cId long, score double), rk ordered
   * (score desc, cId asc) per query. Query ids absent from `queries`'
@@ -44,12 +44,12 @@ import graft.sql.TopKDotF32.FlatCatalog
   */
 object Retrieval {
 
-  /** Collect + flatten + broadcast a catalog under the float budget.
-    * None = over budget or empty (the ANN handoff seam). The broadcast is
-    * ContextCleaner-reclaimed once unreferenced; long-lived callers
-    * (streaming serve) hold it in a [[CatalogCache]]. */
+  /** Collect + flatten + broadcast a catalog under the float budget
+    * (`Budgets.catalogFloats`). None = over budget or empty (the ANN
+    * handoff seam). The broadcast is ContextCleaner-reclaimed once
+    * unreferenced; long-lived callers (streaming serve) hold it in a
+    * [[CatalogCache]]. */
   def publishCatalog(catalog: DataFrame, cId: String, cVec: String,
-      catalogFloatLimit: Long = 64000000L,
       cosine: Boolean = false): Option[Broadcast[FlatCatalog]] = {
     val clean = catalog
       .select(col(cId).cast("long").as("__id"),
@@ -57,7 +57,7 @@ object Retrieval {
       .filter(col("__id").isNotNull && col("__v").isNotNull)
     val dimRow = clean.select(size(col("__v")).as("d")).head(1)
     val maxRows = budgetRows(if (dimRow.isEmpty) 0 else dimRow(0).getInt(0),
-      catalogFloatLimit)
+      graft.operators.Budgets.get.catalogFloats)
     if (maxRows <= 0) return None
     val rows = clean.limit(maxRows + 1).collect()
     if (rows.length > maxRows || rows.isEmpty) return None
@@ -71,9 +71,9 @@ object Retrieval {
     * float budget, the same flattened broadcast, no Spark job. `ids` and
     * `vecs` are parallel arrays of non-null rows, in any order. */
   private[graft] def publishLocal(sc: org.apache.spark.SparkContext, ids: Array[Long],
-      vecs: Array[Array[Float]], catalogFloatLimit: Long = 64000000L,
-      cosine: Boolean = false): Option[Broadcast[FlatCatalog]] = {
-    val maxRows = budgetRows(if (vecs.isEmpty) 0 else vecs(0).length, catalogFloatLimit)
+      vecs: Array[Array[Float]], cosine: Boolean = false): Option[Broadcast[FlatCatalog]] = {
+    val maxRows = budgetRows(if (vecs.isEmpty) 0 else vecs(0).length,
+      graft.operators.Budgets.get.catalogFloats)
     if (ids.isEmpty || ids.length > maxRows) None
     else Some(sc.broadcast(TopKDotF32.flatten(ids, vecs, cosine)))
   }
@@ -93,9 +93,11 @@ object Retrieval {
     * frame. The superseded broadcast is unpersisted (not destroyed: tasks
     * of an in-flight batch may still read it; the ContextCleaner finishes
     * the job). `collects` counts generations — spec-pinned to 1 across
-    * batches of a stable model. */
+    * batches of a stable model. The float budget is read once, when the
+    * cache is built. */
   final class CatalogCache(supplier: () => DataFrame, cId: String, cVec: String,
-      catalogFloatLimit: Long = 64000000L, cosine: Boolean = false) {
+      cosine: Boolean = false) {
+    private val budgets = graft.operators.Budgets.get
     @volatile private var keyFrame: DataFrame = null
     @volatile private var cached: Option[Broadcast[FlatCatalog]] = None
     @volatile var collects: Int = 0
@@ -104,7 +106,8 @@ object Retrieval {
       val frame = supplier()
       if (!(frame eq keyFrame)) {
         cached.foreach(_.unpersist(blocking = false))
-        cached = publishCatalog(frame, cId, cVec, catalogFloatLimit, cosine)
+        cached = graft.operators.Budgets.scoped(_ => budgets)(
+          publishCatalog(frame, cId, cVec, cosine))
         keyFrame = frame
         collects += 1
       }
@@ -196,10 +199,9 @@ object Retrieval {
   def topKDot(queries: DataFrame, qId: String, qVec: String,
       catalog: DataFrame, cId: String, cVec: String, k: Int,
       seen: Option[DataFrame] = None,
-      catalogFloatLimit: Long = 64000000L,
       cosine: Boolean = false, excludeSelf: Boolean = false): Option[DataFrame] = {
     require(k >= 1, s"k must be >= 1, got $k")
-    publishCatalog(catalog, cId, cVec, catalogFloatLimit, cosine).map(bc =>
+    publishCatalog(catalog, cId, cVec, cosine).map(bc =>
       topKDotWith(queries, qId, qVec, bc, k, seen, cId, cosine, excludeSelf))
   }
 
@@ -214,16 +216,15 @@ object Retrieval {
 
   /** Collect + group + broadcast a cell-assigned index (id, cid, vec)
     * into the fused IVF kernel's payload (sql.TopKDotIvfF32.CellCatalog).
-    * None = over the float budget or empty — past that seam the join
-    * plan of [[topKAnn]] is the only option. */
+    * None = over the float budget (`Budgets.cellCatalogFloats`) or
+    * empty — past that seam the join plan of [[topKAnn]] is the only
+    * option. */
   def publishCellCatalog(index: DataFrame, cId: String, cVec: String,
-      centroids: Array[Array[Float]],
-      indexFloatLimit: Long = 64000000L)
+      centroids: Array[Array[Float]])
       : Option[Broadcast[graft.sql.TopKDotIvfF32.CellCatalog]] = {
-    if (indexFloatLimit <= 0 || centroids.isEmpty) return None
-    val dim = centroids(0).length
-    if (dim <= 0) return None
-    val maxRows = math.min(indexFloatLimit / dim, (Int.MaxValue - 1).toLong).toInt
+    val maxRows = budgetRows(if (centroids.isEmpty) 0 else centroids(0).length,
+      graft.operators.Budgets.get.cellCatalogFloats)
+    if (maxRows <= 0) return None
     val rows = index
       .select(col(cId).cast("long").as("__id"), col("cid").cast("int").as("__c"),
         col(cVec).cast("array<float>").as("__v"))
@@ -241,10 +242,11 @@ object Retrieval {
     * supplier's returned frame identity, re-collected (and re-grouped
     * under the possibly-new quantizer) only when the supplier hands back
     * a new frame; the superseded broadcast is unpersisted. None = over
-    * budget (the join plan's regime — the stream caller decides). */
+    * budget (the join plan's regime — the stream caller decides). The
+    * float budget is read once, when the cache is built. */
   final class CellCatalogCache(supplier: () => DataFrame, cId: String,
-      cVec: String, centroids: () => Array[Array[Float]],
-      indexFloatLimit: Long = 64000000L) {
+      cVec: String, centroids: () => Array[Array[Float]]) {
+    private val budgets = graft.operators.Budgets.get
     @volatile private var keyFrame: DataFrame = null
     @volatile private var cached: Option[Broadcast[graft.sql.TopKDotIvfF32.CellCatalog]] = None
     @volatile var collects: Int = 0
@@ -253,7 +255,8 @@ object Retrieval {
       val frame = supplier()
       if (!(frame eq keyFrame)) {
         cached.foreach(_.unpersist(blocking = false))
-        cached = publishCellCatalog(frame, cId, cVec, centroids(), indexFloatLimit)
+        cached = graft.operators.Budgets.scoped(_ => budgets)(
+          publishCellCatalog(frame, cId, cVec, centroids()))
         keyFrame = frame
         collects += 1
       }
@@ -277,7 +280,7 @@ object Retrieval {
   /** IVF-probed top-k with EXACT in-cell scoring: the mid-scale ANN form
     * (full-width vectors kept, storage uncompressed). Two plans behind
     * one contract (round 12):
-    *  - index INSIDE `fusedIndexFloatLimit` → the FUSED kernel
+    *  - index INSIDE `Budgets.cellCatalogFloats` → the FUSED kernel
     *    (sql.TopKDotIvfF32): probe + probed-cell scan + heap in one
     *    expression per query, candidates never materialized, seen
     *    excluded by row-local binary search; the only exchanges are the
@@ -300,11 +303,10 @@ object Retrieval {
   def topKAnn(queries: DataFrame, qId: String, qVec: String,
       index: DataFrame, cId: String, cVec: String,
       centroids: Array[Array[Float]], k: Int, nprobe: Int = 8,
-      seen: Option[DataFrame] = None,
-      fusedIndexFloatLimit: Long = 64000000L): DataFrame = {
+      seen: Option[DataFrame] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     graft.sql.GraftFunctions.register(queries.sparkSession)
-    publishCellCatalog(index, cId, cVec, centroids, fusedIndexFloatLimit) match {
+    publishCellCatalog(index, cId, cVec, centroids) match {
       case Some(bc) => topKAnnWith(queries, qId, qVec, bc, k, nprobe, seen, cId)
       case None => topKAnnJoin(withSeen(queries, qId, seen, cId), qId, qVec,
         index, cId, cVec, centroids, k, nprobe)

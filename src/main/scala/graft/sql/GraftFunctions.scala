@@ -2,6 +2,8 @@ package graft.sql
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType}
 import org.apache.spark.sql.functions.call_function
 
 /** Registration surface for graft's custom Catalyst expressions.
@@ -86,6 +88,32 @@ object GraftFunctions {
       case i: Int => i
       case l: Long if l.isValidInt => l.toInt
       case _ => fail()
+    }
+  }
+
+  /** The value of array literal argument `arg` of SQL function `fn`,
+    * nested arrays included. A non-literal, a NULL literal or a NULL
+    * element at any depth fails with an IllegalArgumentException naming
+    * `fn` and `arg` (a NULL would otherwise read as 0 or throw an NPE). */
+  def arrayLiteral(fn: String, arg: String, e: Expression): ArrayData = {
+    def fail(got: String) = throw new IllegalArgumentException(
+      s"$fn: $arg must be an array literal without NULL elements, got $got")
+    def check(a: ArrayData, elem: DataType): Unit = {
+      var i = 0
+      while (i < a.numElements()) {
+        if (a.isNullAt(i)) fail(s"a NULL element at index $i")
+        elem match {
+          case ArrayType(inner, _) => check(a.getArray(i), inner)
+          case _ =>
+        }
+        i += 1
+      }
+    }
+    if (!e.foldable) fail("a non-literal")
+    (e.eval(), e.dataType) match {
+      case (a: ArrayData, ArrayType(elem, _)) => check(a, elem); a
+      case (null, _) => fail("NULL")
+      case (_, t) => fail(t.simpleString)
     }
   }
 

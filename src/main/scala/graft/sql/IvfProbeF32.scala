@@ -143,11 +143,10 @@ object IvfProbeF32 {
   /** Registry-style builder: centroids and nprobe must be foldable
     * (a typedLit matrix and a lit int). */
   def fromExprs(vec: Expression, centroidsExpr: Expression, nprobeExpr: Expression): IvfProbeF32 = {
-    require(centroidsExpr.foldable,
-      "graft_ivf_probe_f32 centroids must be a literal")
     val nprobe = GraftFunctions.intLiteral(
       GraftFunctions.IvfProbeName, "nprobe", nprobeExpr)
-    val rows = centroidsExpr.eval().asInstanceOf[ArrayData]
+    val rows = GraftFunctions.arrayLiteral(
+      GraftFunctions.IvfProbeName, "centroids", centroidsExpr)
     val m = (0 until rows.numElements()).map { i =>
       rows.getArray(i).toFloatArray()
     }.toArray

@@ -66,6 +66,13 @@ case class TopKDotF32(left: Expression, right: Expression,
     "cosine scoring needs a FlatCatalog flattened with cosine=true")
   private val kept = math.min(k, n)
 
+  // NULL seen elements are skipped; collect_set's arrays cannot hold one,
+  // so the serving paths keep the bulk decode
+  @transient private lazy val seenMayHoldNull: Boolean = right.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  }
+
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(FloatType, _), ArrayType(LongType, _)) =>
@@ -123,7 +130,7 @@ case class TopKDotF32(left: Expression, right: Expression,
       qNorm = math.sqrt(qq)
     }
     // the row's own history, sorted once for binary-search membership
-    val s = seen.toLongArray()
+    val s = if (seenMayHoldNull) TopKDotF32.nonNullLongs(seen) else seen.toLongArray()
     java.util.Arrays.sort(s)
     val topSc = new Array[Double](kept)
     val topId = new Array[Long](kept)
@@ -178,6 +185,14 @@ case class TopKDotF32(left: Expression, right: Expression,
 }
 
 object TopKDotF32 {
+
+  /** The non-NULL elements of a long array. */
+  private def nonNullLongs(a: ArrayData): Array[Long] = {
+    val b = new scala.collection.mutable.ArrayBuilder.ofLong
+    var i = 0
+    while (i < a.numElements()) { if (!a.isNullAt(i)) b += a.getLong(i); i += 1 }
+    b.result()
+  }
 
   /** The broadcast payload: catalog ids ASCENDING (equal scores admit the
     * smaller id first; the kernel's insertion comparator enforces the
@@ -242,12 +257,11 @@ object TopKDotF32 {
     * discarded after this resolution-time eval. */
   def fromExprs(vec: Expression, seen: Expression, idsExpr: Expression,
       itemsExpr: Expression, kExpr: Expression): TopKDotF32 = {
-    require(idsExpr.foldable && itemsExpr.foldable,
-      "graft_topk_dot_f32 catalog ids and vectors must be literals")
-    // checked before the broadcast so a bad k leaks no catalog copy
-    val k = GraftFunctions.intLiteral(GraftFunctions.TopKDotName, "k", kExpr)
-    val ids = idsExpr.eval().asInstanceOf[ArrayData].toLongArray()
-    val rows = itemsExpr.eval().asInstanceOf[ArrayData]
+    import GraftFunctions.{arrayLiteral, TopKDotName}
+    // checked before the broadcast so a bad argument leaks no catalog copy
+    val k = GraftFunctions.intLiteral(TopKDotName, "k", kExpr)
+    val ids = arrayLiteral(TopKDotName, "ids", idsExpr).toLongArray()
+    val rows = arrayLiteral(TopKDotName, "vectors", itemsExpr)
     val m = (0 until rows.numElements()).map(i => rows.getArray(i).toFloatArray()).toArray
     val bc = org.apache.spark.sql.SparkSession.active.sparkContext
       .broadcast(flatten(ids, m, cosine = false))

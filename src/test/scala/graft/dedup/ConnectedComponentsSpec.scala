@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets
 
 class ConnectedComponentsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -103,11 +104,13 @@ class ConnectedComponentsSpec extends SparkSpecBase {
 
   test("fused refuses past the budget / string ids; runAuto falls back; null edges drop") {
     val df = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
-    assert(ConnectedComponents.runFused(df, maxEdges = 1L).isEmpty)
+    assert(Budgets.scoped(_.copy(componentEdges = 1L))(
+      ConnectedComponents.runFused(df)).isEmpty)
     assert(ConnectedComponents
       .runFused(Seq(("x", "y")).toDF("a", "b")).isEmpty)
-    assert(ConnectedComponents.runAuto(df, maxEdges = 1L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(Budgets.scoped(_.copy(componentEdges = 1L))(
+        ConnectedComponents.runAuto(df).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
       == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
     // a null endpoint vanishes in BOTH plans (the x =!= y filter)
     val withNull = df.unionByName(

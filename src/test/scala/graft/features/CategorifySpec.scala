@@ -2,6 +2,7 @@ package graft.features
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.types.LongType
+import graft.operators.Budgets
 
 class CategorifySpec extends SparkSpecBase {
   import spark.implicits._
@@ -27,9 +28,10 @@ class CategorifySpec extends SparkSpecBase {
     // bit-identical to the window path (same freq desc / value asc total
     // order, same 1-based long ids), so the API default can never pick the
     // single-partition window for a 100M-distinct column
-    val viaWindow = Categorify.fitDictionary(fixture, "v",
-      autoSwitchDistinct = Long.MaxValue)
-    val viaAuto = Categorify.fitDictionary(fixture, "v", autoSwitchDistinct = 1L)
+    val viaWindow = Budgets.scoped(_.copy(dictionaryDistinct = Long.MaxValue))(
+      Categorify.fitDictionary(fixture, "v"))
+    val viaAuto = Budgets.scoped(_.copy(dictionaryDistinct = 1L))(
+      Categorify.fitDictionary(fixture, "v"))
     assert(viaAuto.orderBy("id").collect().toSeq ==
       viaWindow.orderBy("id").collect().toSeq)
     // and the switched plan is genuinely windowless

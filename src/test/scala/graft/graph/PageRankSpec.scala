@@ -2,6 +2,7 @@ package graft.graph
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets
 
 /** PageRank: fixed-point recurrence vs an independent Map-based reference
   * (same integer arithmetic, written without Spark), invariance under
@@ -161,7 +162,7 @@ class PageRankSpec extends SparkSpecBase {
 
   test("fused refuses past the budget / non-integral ids / null endpoints; Auto falls back") {
     val df = g.toDF("src", "dst")
-    assert(PageRank.runFused(df, 2, maxEdges = 3L).isEmpty)
+    assert(Budgets.scoped(_.copy(pageRankEdges = 3L))(PageRank.runFused(df, 2)).isEmpty)
     val strs = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
     assert(PageRank.runFused(strs, 2).isEmpty)
     val withNull = df.unionByName(
@@ -169,7 +170,7 @@ class PageRankSpec extends SparkSpecBase {
     assert(PageRank.runFused(withNull, 2).isEmpty,
       "null endpoints must fall back to the join plan's semantics")
     // dispatchers serve all three through the join plan
-    assert(PageRank.runAuto(df, 2, maxEdges = 3L).collect()
+    assert(Budgets.scoped(_.copy(pageRankEdges = 3L))(PageRank.runAuto(df, 2).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === run(g, 2))
     assert(PageRank.runAuto(strs, 1).count() == 2)
   }
@@ -196,7 +197,7 @@ class PageRankSpec extends SparkSpecBase {
   test("broadcast sweep refuses what the fused kernel refuses; Auto dispatches through it") {
     val df = g.toDF("src", "dst")
     // node budget: the fixture has 5 nodes
-    assert(PageRank.runBroadcast(df, 2, maxNodes = 4L).isEmpty)
+    assert(Budgets.scoped(_.copy(pageRankNodes = 4L))(PageRank.runBroadcast(df, 2)).isEmpty)
     val strs = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
     assert(PageRank.runBroadcast(strs, 2).isEmpty)
     val withNull = df.unionByName(
@@ -208,10 +209,12 @@ class PageRankSpec extends SparkSpecBase {
     assert(bi.schema.map(f => (f.name, f.dataType))
       == PageRank.run(gi, 2).schema.map(f => (f.name, f.dataType)))
     // edge budget refuses the CSR kernel, node budget admits this route
-    assert(PageRank.runAuto(df, 2, maxEdges = 3L, maxNodes = 64L).collect()
+    assert(Budgets.scoped(_.copy(pageRankEdges = 3L, pageRankNodes = 64L))(
+        PageRank.runAuto(df, 2).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === run(g, 2))
     // both refused: the join plan still answers identically
-    assert(PageRank.runAuto(df, 2, maxEdges = 3L, maxNodes = 2L).collect()
+    assert(Budgets.scoped(_.copy(pageRankEdges = 3L, pageRankNodes = 2L))(
+        PageRank.runAuto(df, 2).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === run(g, 2))
   }
 

@@ -2,6 +2,7 @@ package graft.graph
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets
 
 class RandomWalksSpec extends SparkSpecBase {
   import spark.implicits._
@@ -72,13 +73,14 @@ class RandomWalksSpec extends SparkSpecBase {
 
   test("fused walker falls back past the edge budget and on non-rankable id types") {
     val g = Seq((1L, 2L), (2L, 1L), (1L, 3L)).toDF("src", "dst")
-    assert(RandomWalks.walksFused(g, "src", "dst", 1, 2, "s", maxEdges = 2L).isEmpty)
+    assert(Budgets.scoped(_.copy(walkEdges = 2L))(
+      RandomWalks.walksFused(g, "src", "dst", 1, 2, "s")).isEmpty)
     val gs = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
     assert(RandomWalks.walksFused(gs, "src", "dst", 1, 2, "s").isEmpty,
       "string ids rank lexicographically — the long-keyed map must refuse")
     // walksAuto serves the join plan in both refusal cases
-    assert(RandomWalks.walksAuto(g, "src", "dst", 1, 2, "s", maxEdges = 2L)
-      .count() > 0)
+    assert(Budgets.scoped(_.copy(walkEdges = 2L))(
+      RandomWalks.walksAuto(g, "src", "dst", 1, 2, "s").count()) > 0)
   }
 
   test("fused walker refuses null endpoints (join plan keeps them — round-12 advice)") {

@@ -2,6 +2,7 @@ package graft.graph
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets
 
 class ShortestPathsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -58,11 +59,13 @@ class ShortestPathsSpec extends SparkSpecBase {
   }
 
   test("fused refuses past the budget and on string ids; Auto falls back") {
-    assert(ShortestPaths.runFused(g, "u", "v", "w", 1L, 2, maxEdges = 2L).isEmpty)
+    assert(Budgets.scoped(_.copy(ssspEdges = 2L))(
+      ShortestPaths.runFused(g, "u", "v", "w", 1L, 2)).isEmpty)
     val gs = Seq(("a", "b", 1L)).toDF("u", "v", "w")
     assert(ShortestPaths.runFused(gs, "u", "v", "w", 1L, 2).isEmpty)
-    val auto = ShortestPaths.runAuto(g, "u", "v", "w", 1L, 4, maxEdges = 2L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val auto = Budgets.scoped(_.copy(ssspEdges = 2L))(
+        ShortestPaths.runAuto(g, "u", "v", "w", 1L, 4).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(auto == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
   }
 
@@ -104,8 +107,8 @@ class ShortestPathsSpec extends SparkSpecBase {
 
   test("broadcast sweep refuses what the driver kernel refuses; Auto dispatches through it") {
     // node budget: the diamond has 4 nodes
-    assert(ShortestPaths.runBroadcast(g, "u", "v", "w", 1L, 2,
-      maxNodes = 3L).isEmpty)
+    assert(Budgets.scoped(_.copy(ssspNodes = 3L))(
+      ShortestPaths.runBroadcast(g, "u", "v", "w", 1L, 2)).isEmpty)
     // string ids / sentinel-reachable weights / negatives: same refusals
     val gs = Seq(("a", "b", 1L)).toDF("u", "v", "w")
     assert(ShortestPaths.runBroadcast(gs, "u", "v", "w", 1L, 2).isEmpty)
@@ -116,14 +119,14 @@ class ShortestPathsSpec extends SparkSpecBase {
     assert(ShortestPaths.runBroadcast(neg, "u", "v", "w", 1L, 2).isEmpty)
     // dispatcher: edge budget refuses the driver kernel, node budget
     // admits the broadcast sweep — the middle tier serves the query
-    val viaBroadcast = ShortestPaths.runAuto(g, "u", "v", "w", 1L, 4,
-      maxEdges = 2L, maxNodes = 64L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaBroadcast = Budgets.scoped(_.copy(ssspEdges = 2L, ssspNodes = 64L))(
+        ShortestPaths.runAuto(g, "u", "v", "w", 1L, 4).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaBroadcast == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
     // both budgets refused: the join plan still answers identically
-    val viaJoin = ShortestPaths.runAuto(g, "u", "v", "w", 1L, 4,
-      maxEdges = 2L, maxNodes = 2L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaJoin = Budgets.scoped(_.copy(ssspEdges = 2L, ssspNodes = 2L))(
+        ShortestPaths.runAuto(g, "u", "v", "w", 1L, 4).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaJoin == viaBroadcast)
   }
 

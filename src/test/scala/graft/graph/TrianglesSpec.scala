@@ -2,6 +2,7 @@ package graft.graph
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets
 
 class TrianglesSpec extends SparkSpecBase {
   import spark.implicits._
@@ -71,8 +72,8 @@ class TrianglesSpec extends SparkSpecBase {
     // which is the desired SMALL-graph plan, covered by the budget test)
     withSQLConf("spark.sql.adaptive.enabled" -> "false",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val p = Triangles.perNodeComposed(square, "src", "dst",
-          broadcastEdgeLimit = 0L)
+      val p = Budgets.scoped(_.copy(triangleEdges = 0L))(
+          Triangles.perNodeComposed(square, "src", "dst"))
         .queryExecution.executedPlan.toString
       assert(p.contains("ReusedExchange"), s"wedge join must reuse:\n$p")
     }
@@ -82,8 +83,8 @@ class TrianglesSpec extends SparkSpecBase {
     withSQLConf("spark.sql.adaptive.enabled" -> "false",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val bcast = Triangles.perNodeComposed(square, "src", "dst")
-      val shuf = Triangles.perNodeComposed(square, "src", "dst",
-        broadcastEdgeLimit = 0L)
+      val shuf = Budgets.scoped(_.copy(triangleEdges = 0L))(
+        Triangles.perNodeComposed(square, "src", "dst"))
       val pb = bcast.queryExecution.executedPlan.toString
       val ps = shuf.queryExecution.executedPlan.toString
       // the explicit gate, not the optimizer's size estimate, picks the form
@@ -120,12 +121,13 @@ class TrianglesSpec extends SparkSpecBase {
   }
 
   test("fused kernel refuses past the budget and on non-integral ids") {
-    assert(Triangles.perNodeFused(square, "src", "dst", maxEdges = 2L).isEmpty)
+    assert(Budgets.scoped(_.copy(triangleEdges = 2L))(
+      Triangles.perNodeFused(square, "src", "dst")).isEmpty)
     val gs = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")
     assert(Triangles.perNodeFused(gs, "src", "dst").isEmpty)
     // the dispatcher still serves both through the composed plan
-    assert(Triangles.perNode(square, "src", "dst", edgeLimit = 2L)
-      .collect().length == 4)
+    assert(Budgets.scoped(_.copy(triangleEdges = 2L))(
+      Triangles.perNode(square, "src", "dst").collect()).length == 4)
     val strTri = Triangles.perNode(gs, "src", "dst")
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(strTri == Map("a" -> 1L, "b" -> 1L, "c" -> 1L))

@@ -3,6 +3,7 @@ package graft.rank
 import graft.SparkSpecBase
 import graft.operators.Relational
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets
 
 /** Cooccur's shuffle-collapsed plan (marker-row union instead of an anti
   * join) must be observationally identical to the textbook formulation. */
@@ -148,7 +149,8 @@ class CooccurSpec extends SparkSpecBase {
 
   test("fused recommend refuses past the model budget and on null interactions") {
     val nb = Cooccur.itemNeighbors(tr, 20)
-    assert(Cooccur.recommendFused(tr, nb, 10, maxModelRows = 5L).isEmpty)
+    assert(Budgets.scoped(_.copy(cooccurModelRows = 5L))(
+      Cooccur.recommendFused(tr, nb, 10)).isEmpty)
     val withNull = tr.select($"user_id", $"item_id", $"ts").unionByName(
       Seq((Option.empty[Long], Option(1L), Option("2000-01-01")))
         .toDF("user_id", "item_id", "ts")
@@ -156,8 +158,8 @@ class CooccurSpec extends SparkSpecBase {
     assert(Cooccur.recommendFused(withNull, nb, 10).isEmpty,
       "null user must fall back to the join plan's null semantics")
     // dispatcher serves the refusal through the join plan
-    assert(Cooccur.recommendAuto(tr, nb, 10, maxModelRows = 5L)
-      .limit(1).count() == 1)
+    assert(Budgets.scoped(_.copy(cooccurModelRows = 5L))(
+      Cooccur.recommendAuto(tr, nb, 10).limit(1).count()) == 1)
   }
 
   test("fused recommend with a users subset equals the post-filtered full serve") {
@@ -178,8 +180,8 @@ class CooccurSpec extends SparkSpecBase {
       assert(s.nonEmpty)
     }
     // the dispatcher's join-plan fallback also honors the subset (semi-join)
-    val viaJoin = Cooccur.recommendAuto(tr, nb, 10, maxModelRows = 5L,
-        users = Some(users)).collect()
+    val viaJoin = Budgets.scoped(_.copy(cooccurModelRows = 5L))(
+        Cooccur.recommendAuto(tr, nb, 10, users = Some(users)).collect())
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val fullJ = Cooccur.recommend(tr, nb, 10).filter($"user_id" < 200).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
@@ -217,8 +219,8 @@ class CooccurSpec extends SparkSpecBase {
       minFusedUsers = nUsers).isDefined, "at the gate: fuse")
     // dispatch invariance: the emitted rows do not depend on the route
     def rows(minFused: Long) =
-      Cooccur.recommendAuto(tr, nb, 10, users = Some(users),
-          minFusedUsers = minFused).collect()
+      Budgets.scoped(_.copy(cooccurMinUsers = minFused))(
+          Cooccur.recommendAuto(tr, nb, 10, users = Some(users)).collect())
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
         .toSet
     assert(rows(nUsers + 1) == rows(1L),

@@ -3,6 +3,7 @@ package graft.rank
 import graft.SparkSpecBase
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets
 
 class NegativeSamplingSpec extends SparkSpecBase {
   import spark.implicits._
@@ -51,6 +52,25 @@ class NegativeSamplingSpec extends SparkSpecBase {
       "identical draws regardless of physical partitioning")
     val c = NegativeSampling.sampleNegatives(positives, 5, seed = 43L)
     assert(a.exceptAll(c).limit(1).count() > 0, "a different seed must change the sample")
+  }
+
+  test("past the bucket-table gate the shuffled-hash join draws the broadcast join's rows") {
+    // the explicit gate, not the optimizer's size estimate, picks the join
+    withSQLConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val viaBroadcast = NegativeSampling.sampleNegatives(positives, 5, seed = 42L)
+      val viaShuffle = Budgets.scoped(_.copy(negativeBucketRows = 0L))(
+        NegativeSampling.sampleNegatives(positives, 5, seed = 42L))
+      val pb = viaBroadcast.queryExecution.executedPlan.toString
+      val ps = viaShuffle.queryExecution.executedPlan.toString
+      // the bucket lookup is the one join keyed on __bkt
+      assert(pb.contains("BroadcastHashJoin [__bkt"), s"under the gate: broadcast\n$pb")
+      assert(ps.contains("ShuffledHashJoin [__bkt") && !ps.contains("BroadcastHashJoin [__bkt"),
+        s"past the gate: shuffled hash\n$ps")
+      assert(viaShuffle.count() > 0)
+      assert(viaShuffle.exceptAll(viaBroadcast).isEmpty &&
+        viaBroadcast.exceptAll(viaShuffle).isEmpty)
+    }
   }
 
   test("empirical draw frequency tracks item weight (popularity-proportional)") {

@@ -2,6 +2,7 @@ package graft.rank
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets
 
 class TwoTowerSpec extends SparkSpecBase {
   import spark.implicits._
@@ -153,25 +154,28 @@ class TwoTowerSpec extends SparkSpecBase {
   test("gridSearch equals the standalone fit + recommend + perUser path per config") {
     // the grid shares one prepare, one layout per geometry and one eval
     // context; two configs here share a batch size (one layout), one does
-    // not, one holds its tables on the cluster (its catalog is collected,
-    // not published from the driver), and user 999 has a truth item but
-    // no vector (scores 0)
+    // not, one holds its tables on the cluster (80 users x dim 32 pass a
+    // 2000-float driver budget that dim 16 fits: its catalog is
+    // collected, not published from the driver), and user 999 has a
+    // truth item but no vector (scores 0)
     val tr = trainRows.toDF("user_id", "item_id")
     val te = (testRows :+ ((999L, 101L))).toDF("user_id", "item_id")
     val grid = Seq(cfg.copy(steps = 30), cfg.copy(steps = 30, lr = 0.05),
-      cfg.copy(steps = 30, batchRows = 128), cfg.copy(steps = 20, embedParts = 2))
-    val (best, model, metrics) = TwoTower.gridSearch(tr, te, grid, k = 10,
-      excludeSeen = Some(tr))
-    for (c <- grid) {
-      val alone = RankingEval.meanMetrics(RankingEval.perUser(
-        TwoTower.recommend(TwoTower.fit(tr, c), te, 10, Some(tr)), te, 10))._1
-      assert(math.abs(metrics(c.key) - alone) <= 1e-12,
-        s"${c.key}: grid recall ${metrics(c.key)} != standalone $alone")
+      cfg.copy(steps = 30, batchRows = 128), cfg.copy(steps = 20, embDim = 32))
+    Budgets.scoped(_.copy(driverEmbedFloats = 2000L)) {
+      val (best, model, metrics) = TwoTower.gridSearch(tr, te, grid, k = 10,
+        excludeSeen = Some(tr))
+      for (c <- grid) {
+        val alone = RankingEval.meanMetrics(RankingEval.perUser(
+          TwoTower.recommend(TwoTower.fit(tr, c), te, 10, Some(tr)), te, 10))._1
+        assert(math.abs(metrics(c.key) - alone) <= 1e-12,
+          s"${c.key}: grid recall ${metrics(c.key)} != standalone $alone")
+      }
+      def dump(m: TwoTower.Model) =
+        m.userVecs.orderBy("user_id").collect().map(_.toString).toSeq ++
+          m.itemVecs.orderBy("item_id").collect().map(_.toString).toSeq
+      assert(dump(model) == dump(TwoTower.fit(tr, best)))
     }
-    def dump(m: TwoTower.Model) =
-      m.userVecs.orderBy("user_id").collect().map(_.toString).toSeq ++
-        m.itemVecs.orderBy("item_id").collect().map(_.toString).toSeq
-    assert(dump(model) == dump(TwoTower.fit(tr, best)))
   }
 
   test("gridSearch over string item ids evaluates through recommend + perUser") {
@@ -187,16 +191,16 @@ class TwoTowerSpec extends SparkSpecBase {
   }
 
   test("a failing grid config surfaces its own exception; the next grid succeeds") {
-    // 80 users x dim 16 floats exceed a 100-float driver budget
+    // a chunk of 0 rows fails train's require on a pool thread
     val tr = trainRows.toDF("user_id", "item_id")
     val te = testRows.toDF("user_id", "item_id")
     val ok = Seq(cfg.copy(steps = 30), cfg.copy(steps = 30, batchRows = 128))
-    val bad = cfg.copy(steps = 30, lr = 0.05, driverEmbedBudget = 100L)
+    val bad = cfg.copy(steps = 30, lr = 0.05, chunk = 0)
     val e = intercept[IllegalArgumentException] {
       TwoTower.gridSearch(tr, te, Seq(ok(0), bad, ok(1)), k = 10,
         excludeSeen = Some(tr))
     }
-    assert(e.getMessage.contains("embedParts"), e.getMessage)
+    assert(e.getMessage.contains("chunk must be >= 1"), e.getMessage)
     val (_, model, metrics) = TwoTower.gridSearch(tr, te, ok, k = 10,
       excludeSeen = Some(tr))
     assert(metrics.keySet == ok.map(_.key).toSet)
@@ -204,7 +208,8 @@ class TwoTowerSpec extends SparkSpecBase {
   }
 
   test("cluster-held embeddings train BIT-IDENTICALLY to the driver-held form") {
-    // embedParts moves the tables off the driver; gather/scatter change
+    // a table past the driver budget (80 users x dim 16 >> 100 floats)
+    // trains cluster-held with NO config change; gather/scatter change
     // WHERE rows live, never one float of arithmetic — so the two
     // storage modes must produce identical vectors, in both gradient
     // forms, regardless of input partitioning.
@@ -212,15 +217,16 @@ class TwoTowerSpec extends SparkSpecBase {
     def dump(m: TwoTower.Model) =
       m.userVecs.orderBy("user_id").collect().map(_.toString).toSeq ++
         m.itemVecs.orderBy("item_id").collect().map(_.toString).toSeq
+    def pastBudget[T](body: => T): T = Budgets.scoped(_.copy(driverEmbedFloats = 100L))(body)
     val driver = dump(TwoTower.fit(trainRows.toDF("user_id", "item_id"), short))
-    val cluster = dump(TwoTower.fit(
-      trainRows.toDF("user_id", "item_id").repartition(5),
-      short.copy(embedParts = 3)))
-    assert(cluster == driver)
+    val clusterModel = pastBudget(TwoTower.fit(
+      trainRows.toDF("user_id", "item_id").repartition(5), short))
+    assert(clusterModel.userVecs.count() == 80)
+    assert(dump(clusterModel) == driver)
     val driverSh = dump(TwoTower.fit(trainRows.toDF("user_id", "item_id"),
       short.copy(shards = 2)))
-    val clusterSh = dump(TwoTower.fit(trainRows.toDF("user_id", "item_id"),
-      short.copy(shards = 2, embedParts = 2)))
+    val clusterSh = dump(pastBudget(TwoTower.fit(trainRows.toDF("user_id", "item_id"),
+      short.copy(shards = 2))))
     assert(clusterSh == driverSh)
   }
 
@@ -243,19 +249,9 @@ class TwoTowerSpec extends SparkSpecBase {
     val (mBig, lBig) = TwoTower.fitWithLoss(df, short.copy(stepsPerJob = 1000))
     assert(lBig == l1 && dump(mBig) == dump(m1))
     // cluster-held tables: one gather/scatter per GROUP, same floats
-    val (mc, lc) = TwoTower.fitWithLoss(df, short.copy(stepsPerJob = 4, embedParts = 3))
+    val (mc, lc) = Budgets.scoped(_.copy(driverEmbedFloats = 100L))(
+      TwoTower.fitWithLoss(df, short.copy(stepsPerJob = 4)))
     assert(lc == l1 && dump(mc) == dump(m1))
-  }
-
-  test("driver-held mode refuses past its budget; cluster-held mode accepts") {
-    // the seam the 100 TB story rides: the same data that trips the
-    // driver-RAM require trains fine with embedParts > 0
-    val tiny = cfg.copy(steps = 2, driverEmbedBudget = 100L) // 100 floats
-    val df = trainRows.toDF("user_id", "item_id") // 80 users x dim 16 >> 100
-    val e = intercept[IllegalArgumentException] { TwoTower.fit(df, tiny) }
-    assert(e.getMessage.contains("embedParts"))
-    val m = TwoTower.fit(df, tiny.copy(embedParts = 2))
-    assert(m.userVecs.count() == 80)
   }
 
   test("recommend serves models with non-integral item ids (window-form fallback)") {
@@ -289,11 +285,11 @@ class TwoTowerSpec extends SparkSpecBase {
     val seen = trainRows.toDF("user_id", "item_id")
     def dump(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("user_id", "rk").collect().map(_.toString).toSeq
-    val viaBroadcast = dump(TwoTower.recommend(fitted._1, users, 5, Some(seen),
-      fusedCatalogFloatLimit = 0L))
+    val viaBroadcast = dump(Budgets.scoped(_.copy(catalogFloats = 0L))(
+      TwoTower.recommend(fitted._1, users, 5, Some(seen))))
     val viaShuffle = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      dump(TwoTower.recommend(fitted._1, users, 5, Some(seen),
-        broadcastSeenLimit = 1L, fusedCatalogFloatLimit = 0L))
+      dump(Budgets.scoped(_.copy(seenBroadcastRows = 1L, catalogFloats = 0L))(
+        TwoTower.recommend(fitted._1, users, 5, Some(seen))))
     }
     assert(viaShuffle == viaBroadcast)
     assert(viaShuffle.nonEmpty)
@@ -310,16 +306,16 @@ class TwoTowerSpec extends SparkSpecBase {
       df.orderBy("user_id", "rk").collect().map(_.toString).toSeq
     for (excl <- Seq(None, Some(seen))) {
       val fused = dump(TwoTower.recommend(fitted._1, users, 5, excl))
-      val unfused = dump(TwoTower.recommend(fitted._1, users, 5, excl,
-        fusedCatalogFloatLimit = 0L))
+      val unfused = dump(Budgets.scoped(_.copy(catalogFloats = 0L))(
+        TwoTower.recommend(fitted._1, users, 5, excl)))
       assert(fused == unfused, s"fused/unfused diverge (excludeSeen=$excl)")
       assert(fused.nonEmpty)
     }
     // k larger than the surviving catalog: both forms return every
     // survivor, ranked identically
     val big = dump(TwoTower.recommend(fitted._1, users, 1000, Some(seen)))
-    val bigU = dump(TwoTower.recommend(fitted._1, users, 1000, Some(seen),
-      fusedCatalogFloatLimit = 0L))
+    val bigU = dump(Budgets.scoped(_.copy(catalogFloats = 0L))(
+      TwoTower.recommend(fitted._1, users, 1000, Some(seen))))
     assert(big == bigU)
   }
 

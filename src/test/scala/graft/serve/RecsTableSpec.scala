@@ -4,6 +4,7 @@ import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import graft.operators.Budgets
 
 /** In-memory KV store standing in for the DynamoDB batch writer — static so
   * local-mode executor threads and the test share it. */
@@ -204,8 +205,9 @@ class RecsTableSpec extends SparkSpecBase {
       val serves = Seq(
         "dense" -> RecsTable.denseServe(
           new graft.sim.Retrieval.CatalogCache(() => itemVecs, "item_id", "vec"), 2),
-        "ann fused" -> RecsTable.annServe(() => index, () => cents, 2, 2, 64000000L),
-        "ann join" -> RecsTable.annServe(() => index, () => cents, 2, 2, 10L))
+        "ann fused" -> RecsTable.annServe(() => index, () => cents, 2, 2),
+        "ann join" -> Budgets.scoped(_.copy(cellCatalogFloats = 10L))(
+          RecsTable.annServe(() => index, () => cents, 2, 2)))
       for ((name, serve) <- serves) {
         val lists = RecsTable.batchLists(batch, spark.read.parquet(logDir), histSeen,
           userVecs, serve)
@@ -280,11 +282,12 @@ class RecsTableSpec extends SparkSpecBase {
         (active, seen) => graft.sim.Retrieval.topKAnn(active.join(userVecs, Seq("user_id")),
           "user_id", "vec", index, "item_id", "vec", cents, k, 2, seen = Some(seen))),
       ("ann join",
-        (s, dir) => RecsTable.streamAnnRefresh(s, history, () => userVecs, () => index,
-          () => cents, k, 2, BatchKv.put, dir, fusedIndexFloatLimit = 10L),
-        (active, seen) => graft.sim.Retrieval.topKAnn(active.join(userVecs, Seq("user_id")),
-          "user_id", "vec", index, "item_id", "vec", cents, k, 2, seen = Some(seen),
-          fusedIndexFloatLimit = 10L)))
+        (s, dir) => Budgets.scoped(_.copy(cellCatalogFloats = 10L))(
+          RecsTable.streamAnnRefresh(s, history, () => userVecs, () => index,
+            () => cents, k, 2, BatchKv.put, dir)),
+        (active, seen) => Budgets.scoped(_.copy(cellCatalogFloats = 10L))(
+          graft.sim.Retrieval.topKAnn(active.join(userVecs, Seq("user_id")),
+            "user_id", "vec", index, "item_id", "vec", cents, k, 2, seen = Some(seen)))))
     for ((name, serve, batchForm) <- forms) {
       BatchKv.puts.clear()
       val in = MemoryStream[(Long, Long)]
@@ -407,10 +410,11 @@ class RecsTableSpec extends SparkSpecBase {
       val in = MemoryStream[(Long, Long)]
       InMemoryKv.store.clear()
       val dir = java.nio.file.Files.createTempDirectory("graft_annlog").toString
-      val q = RecsTable.streamAnnRefresh(
+      // the budget is read when the query starts
+      val q = Budgets.scoped(_.copy(cellCatalogFloats = budget))(RecsTable.streamAnnRefresh(
         in.toDF().toDF("user_id", "item_id"), history, () => userVecs,
         () => index, () => cents, k = 2, nprobe = 2,
-        InMemoryKv.putBatch, s"$dir/log", fusedIndexFloatLimit = budget)
+        InMemoryKv.putBatch, s"$dir/log"))
       try {
         in.addData((1L, 4L))
         q.processAllAvailable()
@@ -467,8 +471,7 @@ class RecsTableSpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_annlog2").toString
     val q = RecsTable.streamAnnRefresh(
       in.toDF().toDF("user_id", "item_id"), history, () => userVecs,
-      () => artsCk, k = 2, nprobe = 2, InMemoryKv.putBatch, s"$dir/log",
-      fusedIndexFloatLimit = 64000000L)
+      () => artsCk, k = 2, nprobe = 2, InMemoryKv.putBatch, s"$dir/log")
     try {
       in.addData((1L, 4L))
       q.processAllAvailable()

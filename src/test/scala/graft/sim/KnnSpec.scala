@@ -2,6 +2,7 @@ package graft.sim
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets
 
 class KnnSpec extends SparkSpecBase {
   import spark.implicits._
@@ -78,7 +79,7 @@ class KnnSpec extends SparkSpecBase {
     def dump(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rk").collect().map(_.toString).toSeq
     assert(dump(agg) == dump(win))
-    // 16 queries sit under minFusedQueries: the regime gate keeps the
+    // 16 queries sit under Budgets.knnMinQueries: the regime gate keeps the
     // broadcast join + heap (the collect/broadcast fixed cost is not
     // amortized — measured on q41, round 12)
     val planSmall = agg.queryExecution.executedPlan.toString
@@ -88,8 +89,8 @@ class KnnSpec extends SparkSpecBase {
     // same shape FUSES into the broadcast-catalog kernel — row-identical
     // (oracle q41/q143 hashes unchanged), and NO candidate join of any
     // kind below the float budget
-    val fused = Knn.bruteForceTopK(queries, emb, "vec_id", "embedding", 5,
-      minFusedQueries = 1)
+    val fused = Budgets.scoped(_.copy(knnMinQueries = 1))(
+      Knn.bruteForceTopK(queries, emb, "vec_id", "embedding", 5))
     assert(dump(fused) == dump(agg), "fused/unfused dispatch diverged")
     val plan = fused.queryExecution.executedPlan.toString
     assert(plan.contains("graft_topk_dot_f32") && !plan.contains("Window"),
@@ -98,8 +99,8 @@ class KnnSpec extends SparkSpecBase {
       s"candidate join leaked below the budget:\n$plan")
     // forcing the budget to 0 keeps the unfused candidate join even past
     // the query gate (the ANN handoff seam TwoTower.recommend documents)
-    val unfused = Knn.bruteForceTopK(queries, emb, "vec_id", "embedding", 5,
-      fusedCatalogFloatLimit = 0L, minFusedQueries = 1)
+    val unfused = Budgets.scoped(_.copy(catalogFloats = 0L, knnMinQueries = 1))(
+      Knn.bruteForceTopK(queries, emb, "vec_id", "embedding", 5))
     assert(dump(unfused) == dump(fused))
     assert(unfused.queryExecution.executedPlan.toString
       .contains("BroadcastNestedLoopJoin"))

@@ -2,6 +2,7 @@ package graft.sim
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.operators.Budgets
 
 /** sim.Retrieval.topKDot — the fused serving primitive: row-parity with
   * the naive crossJoin+window plan, the seen-set contract, the budget
@@ -54,13 +55,13 @@ class RetrievalSpec extends SparkSpecBase {
   }
 
   test("catalog past the float budget returns None (the ANN handoff seam)") {
-    assert(Retrieval.topKDot(queries, "q_id", "qv", catalog, "item_id",
-      "cv", 5, catalogFloatLimit = 10L).isEmpty)
+    assert(Budgets.scoped(_.copy(catalogFloats = 10L))(Retrieval.topKDot(
+      queries, "q_id", "qv", catalog, "item_id", "cv", 5)).isEmpty)
     assert(Retrieval.topKDot(queries, "q_id", "qv",
       catalog.filter(lit(false)), "item_id", "cv", 5).isEmpty)
     // a generous Long budget must not overflow the row cap into a refusal
-    assert(Retrieval.topKDot(queries, "q_id", "qv", catalog, "item_id",
-      "cv", 5, catalogFloatLimit = Long.MaxValue).nonEmpty)
+    assert(Budgets.scoped(_.copy(catalogFloats = Long.MaxValue))(Retrieval.topKDot(
+      queries, "q_id", "qv", catalog, "item_id", "cv", 5)).nonEmpty)
   }
 
   test("plan: one fused Generate, no candidate join, and >1 scoring partition") {
@@ -130,8 +131,9 @@ class RetrievalSpec extends SparkSpecBase {
     assert(cache.collects == 2 && !(b3 eq b1) && b3.value.ids.length == 60)
     // a generation past the budget parks the cache at None (the stream
     // falls back to the join plan) without re-collecting per call
-    val tiny = new Retrieval.CellCatalogCache(() => gen1, "item_id", "cv",
-      () => cents, indexFloatLimit = 10L)
+    // past budget; the budget is read when the cache is built
+    val tiny = Budgets.scoped(_.copy(cellCatalogFloats = 10L))(
+      new Retrieval.CellCatalogCache(() => gen1, "item_id", "cv", () => cents))
     assert(tiny.get().isEmpty && tiny.get().isEmpty && tiny.collects == 1)
   }
 
@@ -141,9 +143,9 @@ class RetrievalSpec extends SparkSpecBase {
     for (sn <- Seq(None, Some(seen)); np <- Seq(2, 6)) {
       val fused = Retrieval.topKAnn(queries, "q_id", "qv", index, "item_id",
         "cv", cents, k = 4, nprobe = np, seen = sn)
-      val joined = Retrieval.topKAnn(queries, "q_id", "qv", index, "item_id",
-        "cv", cents, k = 4, nprobe = np, seen = sn,
-        fusedIndexFloatLimit = 0L)
+      val joined = Budgets.scoped(_.copy(cellCatalogFloats = 0L))(
+        Retrieval.topKAnn(queries, "q_id", "qv", index, "item_id",
+          "cv", cents, k = 4, nprobe = np, seen = sn))
       assert(fused.exceptAll(joined).isEmpty && joined.exceptAll(fused).isEmpty,
         s"fused/join ANN plans diverge (seen=${sn.isDefined}, nprobe=$np)")
     }
@@ -154,8 +156,9 @@ class RetrievalSpec extends SparkSpecBase {
       s"fused IVF kernel missing:\n$fusedPlan")
     assert(!fusedPlan.contains("BroadcastHashJoin") || !fusedPlan.contains("cid"),
       s"candidate cid join leaked into the fused plan:\n$fusedPlan")
-    val joinPlan = Retrieval.topKAnn(queries, "q_id", "qv", index, "item_id",
-        "cv", cents, k = 4, nprobe = 2, fusedIndexFloatLimit = 0L)
+    val joinPlan = Budgets.scoped(_.copy(cellCatalogFloats = 0L))(
+        Retrieval.topKAnn(queries, "q_id", "qv", index, "item_id",
+          "cv", cents, k = 4, nprobe = 2))
       .queryExecution.executedPlan.toString
     assert(!joinPlan.contains("graft_topk_dot_ivf_f32")
       && joinPlan.contains("graft_topk"),

@@ -538,10 +538,14 @@ object TwoTower {
     * `gridSearch` builds it once for the whole grid. */
   private final class Prepared(val uDict: DataFrame, val iDict: DataFrame,
       val nU: Int, val nI: Int, val enc: DataFrame, val nPairs: Long) {
-    /** Both tables of `cfg` fit `embedFloats` on the driver. */
     def driverHeld(cfg: Config, embedFloats: Long): Boolean =
-      nU.toLong * cfg.embDim < embedFloats && nI.toLong * cfg.embDim < embedFloats
+      TwoTower.driverHeld(nU, nI, cfg.embDim, embedFloats)
   }
+
+  /** Both `nU` x `embDim` and `nI` x `embDim` tables fit `embedFloats`
+    * on the driver; otherwise training holds them on the cluster. */
+  private[rank] def driverHeld(nU: Int, nI: Int, embDim: Int, embedFloats: Long): Boolean =
+    nU.toLong * embDim < embedFloats && nI.toLong * embDim < embedFloats
 
   /** `fork` runs the item dictionary's fit while this thread fits the
     * user dictionary; the default runs it inline, after. */

@@ -254,6 +254,20 @@ class TwoTowerSpec extends SparkSpecBase {
     assert(lc == l1 && dump(mc) == dump(m1))
   }
 
+  test("driver-held mode refuses past its budget; cluster-held mode accepts") {
+    // the gate: driver-held only while BOTH tables sit strictly under
+    // the budget (80 users x dim 16 = 1280 floats)
+    assert(TwoTower.driverHeld(80, 40, 16, 1281L))
+    assert(!TwoTower.driverHeld(80, 40, 16, 1280L))
+    assert(!TwoTower.driverHeld(40, 80, 16, 1280L))
+    // the same data past a 100-float budget trains cluster-held, no
+    // config change
+    val df = trainRows.toDF("user_id", "item_id")
+    val m = Budgets.scoped(_.copy(driverEmbedFloats = 100L))(
+      TwoTower.fit(df, cfg.copy(steps = 2)))
+    assert(m.userVecs.count() == 80)
+  }
+
   test("recommend serves models with non-integral item ids (window-form fallback)") {
     // Categorify accepts any key type; TopKAggF carries ids as LONG, so a
     // string-keyed model on the aggregate path would cast every id to

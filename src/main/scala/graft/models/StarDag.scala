@@ -21,9 +21,6 @@ import graft.operators.Relational
   */
 object StarDag {
 
-  /** The default train/test boundary: 2000-01-01T00:00:00Z in µs. */
-  val DefaultTrainEndUs: Long = 946684800000000L
-
   val txSchema: StructType = StructType(Seq(
     StructField("customer_id", LongType), StructField("article_id", LongType),
     StructField("price", DoubleType), StructField("sales_channel_id", IntegerType),
@@ -153,7 +150,7 @@ object StarDag {
     * bronze-warehouse bench form (q25b), so the two measure the same plan
     * downstream of staging. */
   def runFromStaged(tx: DataFrame, art: DataFrame, cust: DataFrame,
-      img: DataFrame, trainEndUs: Long = DefaultTrainEndUs,
+      img: DataFrame, trainEndUs: Long = 946684800000000L,
       minInteractions: Long = 5L, verifyFk: Boolean = false): DataFrame = {
     val meta = articlesMetadata(art, img)
     // Materialized ONCE (round 15, guide §2.3): dedup_transactions is read
@@ -192,7 +189,7 @@ object StarDag {
     * composing (the dbt-test analog). The fixture DAG satisfies it by
     * construction (StarDagSpec pins this), so q25 leaves it off.
     */
-  def run(spark: SparkSession, dir: String, trainEndUs: Long = DefaultTrainEndUs,
+  def run(spark: SparkSession, dir: String, trainEndUs: Long = 946684800000000L,
       minInteractions: Long = 5L, verifyFk: Boolean = false): DataFrame = {
     def env(df: DataFrame, tpe: String) =
       Relational.toEnvelope(df, tpe, 1700000000L, "batch-1")
@@ -210,7 +207,7 @@ object StarDag {
     * plan-identical to `run` above.
     */
   def dag(dir: String, warehouseDir: String, tables: Set[String] = Set.empty,
-      trainEndUs: Long = DefaultTrainEndUs, minInteractions: Long = 5L): Dag = {
+      trainEndUs: Long = 946684800000000L, minInteractions: Long = 5L): Dag = {
     def env(df: DataFrame, tpe: String) =
       Relational.toEnvelope(df, tpe, 1700000000L, "batch-1")
     def t(name: String) = tables.contains(name)

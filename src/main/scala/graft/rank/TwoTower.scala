@@ -1164,7 +1164,8 @@ object TwoTower {
     * order, and the argmax of (metric, config key) never sees thread
     * timing.
     *
-    * Pool threads run under the caller's [[graft.operators.Budgets]].
+    * Pool threads, started by the caller, inherit its
+    * [[graft.operators.Budgets]].
     * A failing config surfaces its OWN exception (e.g. the
     * IllegalArgumentException of a bad config's require), not the pool's
     * ExecutionException wrapper. Its siblings are interrupted and their
@@ -1178,14 +1179,10 @@ object TwoTower {
     require(maxWorkers > 0, s"maxWorkers must be positive, got $maxWorkers")
     import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
     val sc = trainDf.sparkSession.sparkContext
-    val budgets = graft.operators.Budgets.get
     val tag = s"graft-twotower-grid-${java.util.UUID.randomUUID()}"
     val pool = Executors.newFixedThreadPool(math.min(maxWorkers, configs.size))
     def submit[T](body: => T): Future[T] = pool.submit(new Callable[T] {
-      override def call(): T = {
-        sc.addJobTag(tag)
-        graft.operators.Budgets.scoped(_ => budgets)(body)
-      }
+      override def call(): T = { sc.addJobTag(tag); body }
     })
     var ctx: Option[Future[DataFrame]] = None
     var prep: Option[Prepared] = None
@@ -1212,7 +1209,8 @@ object TwoTower {
         }
       }
       // on this otherwise idle thread, while the configs train
-      if (evalCtx.isDefined && configs.exists(p.driverHeld(_, budgets.driverEmbedFloats)))
+      val embedFloats = graft.operators.Budgets.get.driverEmbedFloats
+      if (evalCtx.isDefined && configs.exists(p.driverHeld(_, embedFloats)))
         ids.load()
       val fitted = futures.map(_.get()) // grid order, independent of completion order
       failed = false

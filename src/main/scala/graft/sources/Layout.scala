@@ -32,15 +32,12 @@ import org.apache.spark.sql.functions.col
   */
 object Layout {
 
-  /** The default row cap per written file. */
-  val DefaultMaxRecordsPerFile: Long = 1000000L
-
   /** Write `df` range-clustered on `clusterCols`: repartitionByRange + sort
     * within partitions + bounded file size. Scans filtering on the leading
     * cluster column(s) skip non-matching row groups via parquet min/max.
     */
   def writeClustered(df: DataFrame, path: String, clusterCols: Seq[String],
-      maxRecordsPerFile: Long = DefaultMaxRecordsPerFile): Unit = {
+      maxRecordsPerFile: Long = 1000000L): Unit = {
     val cols = clusterCols.map(col)
     df.repartitionByRange(cols: _*)
       .sortWithinPartitions(cols: _*)

@@ -66,13 +66,6 @@ case class TopKDotF32(left: Expression, right: Expression,
     "cosine scoring needs a FlatCatalog flattened with cosine=true")
   private val kept = math.min(k, n)
 
-  // NULL seen elements are skipped; collect_set's arrays cannot hold one,
-  // so the serving paths keep the bulk decode
-  @transient private lazy val seenMayHoldNull: Boolean = right.dataType match {
-    case ArrayType(_, containsNull) => containsNull
-    case _ => true
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(FloatType, _), ArrayType(LongType, _)) =>
@@ -129,8 +122,9 @@ case class TopKDotF32(left: Expression, right: Expression,
       while (i < vn) { qq += va(i).toDouble * va(i).toDouble; i += 1 }
       qNorm = math.sqrt(qq)
     }
-    // the row's own history, sorted once for binary-search membership
-    val s = if (seenMayHoldNull) TopKDotF32.nonNullLongs(seen) else seen.toLongArray()
+    // the row's own history (NULL elements skipped), sorted once for
+    // binary-search membership
+    val s = TopKDotF32.nonNullLongs(seen)
     java.util.Arrays.sort(s)
     val topSc = new Array[Double](kept)
     val topId = new Array[Long](kept)

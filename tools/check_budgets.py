@@ -1,11 +1,18 @@
 #!/usr/bin/env python3
 """Regime-gate lint: every budget lives in graft.operators.Budgets.
 
-Fails when a Scala parameter in src/main (outside Budgets.scala) defaults
-to a large literal: `name: Long = <7+ digits>L` or `name: Int = <7+
-digits>`. Such a default is a regime gate hiding in an operator
-signature; add it to Budgets instead. Named `val` constants are not
-parameter defaults and are not checked.
+Fails when a budget-shaped name in src/main (outside Budgets.scala) is
+bound to a numeric literal, as a parameter default (`edgeLimit: Long =
+8000000L`) or as a `val`/`var` (`val maxEdges = 16000000L`). Budget-shaped
+names are the ones the engine's gates went by: `*Limit`, `*Budget`,
+`maxEdges`, `maxNodes`, `maxModelRows`, `minFused*`, `autoSwitchDistinct`,
+`embedParts`. Such a binding is a regime gate held outside Budgets; add
+it to Budgets instead. Reading a gate (`val maxEdges = Budgets.get.walkEdges`)
+and passing a named argument (`minFusedUsers = 1`) are not bindings of a
+literal and pass.
+
+NOT_GATES lists the budget-named literals that bound something other than
+a plan choice; each entry says what it bounds.
 
 Usage (from the repo root, or pass the root):
     python3 tools/check_budgets.py [repo_root]
@@ -15,10 +22,18 @@ import os
 import re
 import sys
 
-DEFAULT = re.compile(
-    r"(?<![\w.])(?:(val|var)\s+)?\w+\s*:\s*"
-    r"(?:Long\s*=\s*[0-9_]{7,}L|Int\s*=\s*[0-9_]{7,})(?![\w.])")
+NAME = (r"(?:\w*Limit|\w*Budget|maxEdges|maxNodes|maxModelRows|minFused\w*"
+        r"|[aA]utoSwitchDistinct|embedParts)")
+TYPE = r"(?::\s*[\w\[\]]+\s*)"
+BINDING = re.compile(
+    rf"(?:\b(?:val|var)\s+({NAME})\b\s*{TYPE}?|(?<![\w.])({NAME})\s*{TYPE})"
+    r"=\s*[-+]?\d")
 EXEMPT = "Budgets.scala"
+NOT_GATES = {
+    # character budgets of the one stdout JSON line Bench prints
+    ("src/main/scala/graft/Bench.scala", "qBudget"),
+    ("src/main/scala/graft/Bench.scala", "floorBudget"),
+}
 
 
 def hits(root):
@@ -29,10 +44,12 @@ def hits(root):
             if not name.endswith(".scala") or name == EXEMPT:
                 continue
             path = os.path.join(d, name)
+            rel = os.path.relpath(path, root).replace(os.sep, "/")
             with open(path, encoding="utf-8") as f:
                 for n, line in enumerate(f, 1):
-                    if any(m.group(1) is None for m in DEFAULT.finditer(line)):
-                        out.append(f"{os.path.relpath(path, root)}:{n}: {line.strip()}")
+                    names = {m.group(1) or m.group(2) for m in BINDING.finditer(line)}
+                    if any((rel, v) not in NOT_GATES for v in names):
+                        out.append(f"{rel}:{n}: {line.strip()}")
     return out
 
 
@@ -42,10 +59,10 @@ def main(argv):
     for h in found:
         print(h)
     if found:
-        print(f"{len(found)} budget default(s) outside {EXEMPT}: "
+        print(f"{len(found)} budget literal(s) outside {EXEMPT}: "
               "move them to graft.operators.Budgets", file=sys.stderr)
         return 1
-    print(f"ok: no budget defaults outside {EXEMPT}")
+    print(f"ok: no budget literals outside {EXEMPT}")
     return 0
 
 

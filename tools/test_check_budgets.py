@@ -1,10 +1,12 @@
 #!/usr/bin/env python3
-"""Tests for check_budgets.py on synthetic source trees: a large literal
-parameter default outside Budgets.scala fails the lint; the same literal
-in Budgets.scala, in a named `val`, or below seven digits passes.
+"""Tests for check_budgets.py on synthetic source trees: a budget-named
+literal outside Budgets.scala fails the lint, whether it is a parameter
+default or a gate hidden in a `val`; Budgets.scala itself, a val that
+reads a gate, a named argument, a large non-budget default and the listed
+non-gate literals pass.
 
 Run from the repo root:  python3 tools/test_check_budgets.py
-Exit 0 = both cases behave; exit 1 = the lint regressed.
+Exit 0 = every case behaves; exit 1 = the lint regressed.
 """
 import os
 import subprocess
@@ -35,24 +37,40 @@ CLEAN = {
         "final case class Budgets(walkEdges: Long = 16000000L, knnMinQueries: Int = 1024)\n",
     "graph/Walks.scala":
         "object Walks {\n"
-        "  val Scale: Long = 1000000000000L\n"
-        "  def walks(edges: Long, salt: String, cap: Long = 4096L): Long = edges\n"
+        "  def walks(edges: Long, trainEndUs: Long = 946684800000000L): Long = {\n"
+        "    val maxEdges = Budgets.get.walkEdges\n"
+        "    if (edges <= maxEdges) serve(edges, minFusedUsers = 1L) else edges\n"
+        "  }\n"
+        "}\n",
+    "Bench.scala":
+        "object Bench {\n"
+        "  val qBudget = 880\n"
+        "  val floorBudget = 300\n"
         "}\n",
 }
 
-HIT = dict(CLEAN)
-HIT["graph/Triangles.scala"] = (
+PARAM_HIT = dict(CLEAN)
+PARAM_HIT["graph/Triangles.scala"] = (
     "object Triangles {\n"
     "  def perNode(edges: Long,\n"
-    "      edgeLimit: Long = 8000000L, rows: Int = 10000000): Long = edges\n"
+    "      edgeLimit: Long = 8000000L): Long = edges\n"
+    "}\n")
+
+VAL_HIT = dict(CLEAN)
+VAL_HIT["graph/Triangles.scala"] = (
+    "object Triangles {\n"
+    "  private val maxEdges = 8000000L\n"
+    "  def perNode(edges: Long): Long = if (edges <= maxEdges) edges else 0L\n"
     "}\n")
 
 
 def main():
     results = [
-        run_case("miss: Budgets.scala, vals and small defaults", CLEAN, 0, "ok:"),
-        run_case("hit: a 7+ digit Long/Int parameter default", HIT, 1,
+        run_case("miss: Budgets.scala, gate reads, named args, non-gates", CLEAN, 0, "ok:"),
+        run_case("hit: a budget-named parameter default", PARAM_HIT, 1,
                  "graph/Triangles.scala:3:"),
+        run_case("hit: a gate hidden in a val", VAL_HIT, 1,
+                 "graph/Triangles.scala:2:"),
     ]
     return 0 if all(results) else 1
 

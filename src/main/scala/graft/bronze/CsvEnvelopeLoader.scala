@@ -1,7 +1,7 @@
 package graft.bronze
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.Relational
 
 /** Bronze ingestion (reference: upload_to_snowflake.py): CSV with header →
@@ -32,10 +32,18 @@ object CsvEnvelopeLoader {
       .write.mode("append").partitionBy("etl_id")
       .parquet(s"$bronzeRoot/$eventType")
 
+  /** The envelope [[loadBatch]] writes, in the order a partitioned parquet
+    * read returns it: data columns, then the `etl_id` partition column. */
+  private val envelopeSchema = StructType(Seq(
+    StructField("etl_timestamp", LongType), StructField("event_type", StringType),
+    StructField("raw_data", StringType), StructField("etl_id", StringType)))
+
   /** Bronze scan for one source (all batches; compose with
-    * Relational.latestBatch for the snapshot read). */
+    * Relational.latestBatch for the snapshot read). Read with the envelope
+    * schema, so the scan runs no footer-inference job and `etl_id` stays a
+    * string whatever its values look like. */
   def readBronze(spark: SparkSession, bronzeRoot: String, eventType: String): DataFrame =
-    spark.read.parquet(s"$bronzeRoot/$eventType")
+    spark.read.schema(envelopeSchema).parquet(s"$bronzeRoot/$eventType")
 
   /** S5: register the bronze scan in the session catalog (the reference's
     * CREATE OR REPLACE TABLE; destructive reload semantics = overwrite). */

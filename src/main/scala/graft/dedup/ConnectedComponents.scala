@@ -95,19 +95,6 @@ object ConnectedComponents {
     labels
   }
 
-  /** Cluster-consistent near-duplicate removal: drop every node that is not
-    * its component's minimum (one representative survives per duplicate
-    * cluster, regardless of chain length). `dupPairs` is the verified pair
-    * set (a, b); `df` the corpus. Rows never appearing in a pair are kept.
-    */
-  def keepComponentRepresentatives(df: DataFrame, idCol: String,
-      dupPairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val comps = run(dupPairs, maxIter)
-    val drop = comps.filter(col("node") =!= col("comp"))
-      .select(col("node").as(idCol))
-    df.join(drop, Seq(idCol), "left_anti")
-  }
-
   /** Budget-fused [[run]]: under `Budgets.componentEdges` the pair graph
     * is a BOUNDED ARTIFACT (one map-side-grouped shuffle, budget-probed
     * distributed-first, collected once) and union–find with a final

@@ -54,20 +54,6 @@ object Decontaminate {
       .agg(count(lit(1)).as("n_grams"), count(col("__hit")).as("n_hits"))
   }
 
-  /** Drop documents whose contamination exceeds `maxFrac` (default 0.0 =
-    * drop on ANY shared gram, the strict decontamination policy). Gram-less
-    * docs are always kept (they are absent from the aggregated stats, so
-    * they never join the drop set — no corpus-wide restore join needed
-    * here, unlike the full report). Cost: one gram pass + one anti join. */
-  def dropContaminated(corpus: DataFrame, idCol: String, grams: Column,
-      benchGrams: DataFrame, maxFrac: Double = 0.0,
-      broadcastBench: Boolean = true): DataFrame = {
-    val bad = stats(corpus, idCol, grams, benchGrams, broadcastBench)
-      .filter(col("n_hits").cast("double") / col("n_grams") > maxFrac)
-      .select(col(idCol))
-    corpus.join(bad, Seq(idCol), "left_anti")
-  }
-
   /** SEMANTIC decontamination report: per-corpus-row maximum cosine
     * against the benchmark's EMBEDDINGS — catches paraphrased/reformatted
     * benchmark leakage the n-gram probe misses (the embedding-similarity
@@ -93,15 +79,5 @@ object Decontaminate {
       .agg(max(graft.sql.GraftFunctions.cosineF32(col("__cv"), col("__bv")))
         .as("max_cos"))
     corpus.select(col(idCol)).join(scored, Seq(idCol), "left")
-  }
-
-  /** Drop corpus rows whose embedding is closer than `maxCos` to ANY
-    * benchmark embedding. One broadcast pass + one anti join. */
-  def dropSemanticContaminated(corpus: DataFrame, idCol: String,
-      vecCol: String, bench: DataFrame, benchVecCol: String,
-      maxCos: Double): DataFrame = {
-    val bad = semanticContamination(corpus, idCol, vecCol, bench, benchVecCol)
-      .filter(col("max_cos") > maxCos).select(col(idCol))
-    corpus.join(bad, Seq(idCol), "left_anti")
   }
 }

@@ -37,17 +37,6 @@ object TextDedup {
   def exactDupGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
     exactDupGroupsBy(df, idCol, TextOps.fingerprint(col(textCol)))
 
-  /** Keep one canonical row per key (min id wins). */
-  def dropExactDuplicatesBy(df: DataFrame, idCol: String, key: Column): DataFrame = {
-    val keep = exactDupGroupsBy(df, idCol, key)
-      .select(col("canonical_id").as(idCol))
-    df.join(keep, Seq(idCol), "left_semi")
-  }
-
-  /** Keep one canonical row per fingerprint (min id wins). */
-  def dropExactDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    dropExactDuplicatesBy(df, idCol, TextOps.fingerprint(col(textCol)))
-
   /** Soft dedup (SoftDeDup, He et al. 2024): DOWN-WEIGHT duplicated
     * content instead of dropping it — every row survives, annotated with
     * its exact-duplicate cluster size and the loss weight 1/n_dups, so
@@ -210,7 +199,7 @@ object TextDedup {
   /** Verified near-duplicate pairs (a < b, jaccard ≥ threshold) — the
     * full discovery chain (MinHash → LSH candidates → candidate-restricted
     * Jaccard) shared by per-pair removal (dropNearDuplicates), the
-    * cluster-consistent policies (dropNearDuplicatesKeepBest), and the
+    * cluster-consistent keep policy (clusterKeepBest), and the
     * connected-components query.
     *
     * Shingle-less docs can't be near-duplicates under this measure and
@@ -272,15 +261,6 @@ object TextDedup {
     df.join(best, Seq(idCol), "left_semi")
   }
 
-  /** Cluster-consistent near-duplicate removal with a quality-priority
-    * keep: discovery chain → connected components → best-per-cluster. */
-  def dropNearDuplicatesKeepBest(df: DataFrame, idCol: String, shingles: Column,
-      quality: Column, numHashes: Int = 16, rowsPerBand: Int = 2,
-      threshold: Double = 0.7): DataFrame = {
-    val pairs = nearDupPairs(df, idCol, shingles, numHashes, rowsPerBand, threshold)
-    clusterKeepBest(df, idCol, ConnectedComponents.runAuto(pairs), quality)
-  }
-
   /** 64-bit SimHash over a token multiset: per-token xxhash64, each bit
     * votes ±1, sign of the vote becomes the output bit. Near-duplicates
     * have small Hamming distance. Explode + 64 conditional sums — a single
@@ -299,9 +279,6 @@ object TextDedup {
     }.reduce((x, y) => x.bitwiseOR(y))
     summed.select(col(idCol), sh.as("simhash"))
   }
-
-  /** Hamming distance between two 64-bit simhashes. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Portable SimHash: identical voting scheme but bits come from md5 hex
     * digits (bit j = (hexdigit(j/4) >> (j%4)) & 1), so any engine with md5
@@ -324,10 +301,6 @@ object TextDedup {
     summed.select(col(idCol), bitsStr.as("simhash"))
   }
 
-  /** Hamming distance between two simhashPortable bit strings. */
-  def hammingBits(a: Column, b: Column): Column =
-    size(filter(zip_with(split(a, ""), split(b, ""), (x, y) => x =!= y), x => x))
-
   // ---------------------------------------------------------------------
   // Incremental dedup: new batch vs a persisted signature index
   // ---------------------------------------------------------------------
@@ -341,15 +314,6 @@ object TextDedup {
     (0 until numHashes)
       .map(i => when(col(s"$prefixA.sig_$i") === col(s"$prefixB.sig_$i"), 1).otherwise(0))
       .reduce(_ + _).cast("double") / numHashes
-
-  /** The signature index IS the artifact: one row per already-ingested doc,
-    * (id, sig_0..sig_{k-1}) — linear in corpus size, constant per doc, and
-    * appendable batch over batch. Bands are derived from sigs at query
-    * time, so no second table to keep in sync. */
-  def saveSignatureIndex(df: DataFrame, idCol: String, shingles: Column,
-      numHashes: Int, path: String): Unit =
-    minhashSignatures(df.filter(size(shingles) > 0), idCol, shingles, numHashes)
-      .write.mode("overwrite").parquet(path)
 
   /** Incremental near-dup check of a NEW batch against the persisted index
     * (the streaming-ingest shape: the existing corpus is signatures on
@@ -365,7 +329,7 @@ object TextDedup {
     // agreement verification both read the new batch's signatures, and
     // without the checkpoint the shingle+minhash kernel ran twice (plus a
     // third evaluation pushed into the scan filter). Batch-linear blocks,
-    // ContextCleaner-reclaimed; inside DocIngest's foreachBatch this is a
+    // ContextCleaner-reclaimed; inside a streaming foreachBatch this is a
     // plain batch frame, so the streaming path shares the fix.
     val newSigs = minhashSignatures(
       newDocs.filter(size(shingles) > 0), idCol, shingles, numHashes)

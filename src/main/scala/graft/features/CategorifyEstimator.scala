@@ -19,11 +19,11 @@ import org.apache.spark.sql.types._
   */
 trait CategorifyParams extends Params {
   final val inputCols = new StringArrayParam(this, "inputCols", "columns to encode")
-  final val outputSuffix = new Param[String](this, "outputSuffix", "suffix for encoded columns")
   final val dictDir = new Param[String](this, "dictDir", "optional parquet dictionary dir ('' = none)")
-  setDefault(outputSuffix -> "_id", dictDir -> "")
+  setDefault(dictDir -> "")
   def getInputCols: Array[String] = $(inputCols)
-  def getOutputSuffix: String = $(outputSuffix)
+  /** Suffix of each encoded column: `c` encodes to `c_id`. */
+  protected final val idSuffix = "_id"
 }
 
 class CategorifyEstimator(override val uid: String)
@@ -31,7 +31,6 @@ class CategorifyEstimator(override val uid: String)
   def this() = this(Identifiable.randomUID("categorify"))
 
   def setInputCols(cols: Array[String]): this.type = set(inputCols, cols)
-  def setOutputSuffix(s: String): this.type = set(outputSuffix, s)
   def setDictDir(dir: String): this.type = set(dictDir, dir)
 
   override def fit(dataset: Dataset[_]): CategorifyModel = {
@@ -47,7 +46,7 @@ class CategorifyEstimator(override val uid: String)
 
   override def transformSchema(schema: StructType): StructType =
     $(inputCols).foldLeft(schema)((s, c) =>
-      StructType(s.fields :+ StructField(c + $(outputSuffix), LongType, nullable = false)))
+      StructType(s.fields :+ StructField(c + idSuffix, LongType, nullable = false)))
 
   override def copy(extra: ParamMap): CategorifyEstimator = defaultCopy(extra)
 }
@@ -58,12 +57,12 @@ class CategorifyModel(override val uid: String,
 
   override def transform(dataset: Dataset[_]): DataFrame =
     $(inputCols).foldLeft(dataset.toDF()) { (df, c) =>
-      Categorify.encode(df, c, dictionaries(c), c + $(outputSuffix))
+      Categorify.encode(df, c, dictionaries(c), c + idSuffix)
     }
 
   override def transformSchema(schema: StructType): StructType =
     $(inputCols).foldLeft(schema)((s, c) =>
-      StructType(s.fields :+ StructField(c + $(outputSuffix), LongType, nullable = false)))
+      StructType(s.fields :+ StructField(c + idSuffix, LongType, nullable = false)))
 
   override def copy(extra: ParamMap): CategorifyModel =
     copyValues(new CategorifyModel(uid, dictionaries).setParent(parent), extra)

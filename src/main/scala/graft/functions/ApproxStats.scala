@@ -28,27 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object ApproxStats {
 
-  /** Per-group sketch profile: row count, approximate distinct of
-    * `distinctCol`, and approximate quantiles of `valueCol`. */
-  def approxProfile(df: DataFrame, groupCols: Seq[String], distinctCol: String,
-      valueCol: String, quantiles: Seq[Double] = Seq(0.5, 0.95, 0.99),
-      rsd: Double = 0.05, accuracy: Int = 10000): DataFrame = {
-    val qArr = array(quantiles.map(lit): _*)
-    df.groupBy(groupCols.map(col): _*)
-      .agg(
-        count(lit(1)).as("n"),
-        approx_count_distinct(col(distinctCol), rsd).as(s"approx_distinct_$distinctCol"),
-        approx_percentile(col(valueCol), qArr, lit(accuracy)).as(s"approx_q_$valueCol"))
-  }
-
-  /** Global approximate distinct of each given column in ONE pass over the
-    * data (one HLL state per column — contrast COUNT(DISTINCT a), (DISTINCT
-    * b), ... which Spark plans as an Expand: one input copy per column). */
-  def approxDistinctEach(df: DataFrame, cols: Seq[String], rsd: Double = 0.05): DataFrame =
-    df.agg(
-      approx_count_distinct(col(cols.head), rsd).as(s"approx_distinct_${cols.head}"),
-      cols.tail.map(c => approx_count_distinct(col(c), rsd).as(s"approx_distinct_$c")): _*)
-
   /** EXACT heavy hitters without shuffling every distinct key: all keys
     * whose frequency exceeds N/(capacity+1), with their exact counts.
     *

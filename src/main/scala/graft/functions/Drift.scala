@@ -59,14 +59,4 @@ object Drift {
       .join(side(current, "n_cur", "p_cur"), Seq("bin"), "full_outer")
       .na.fill(0L, Seq("n_base", "n_cur")).na.fill(0.0, Seq("p_base", "p_cur"))
   }
-
-  /** Population stability index over a [[binnedCompare]] report (bounded
-    * collect: `bins` rows). `eps` floors empty-bin proportions the standard
-    * way. Rule of thumb: < 0.1 stable, 0.1–0.25 moderate, > 0.25 major. */
-  def psi(report: DataFrame, eps: Double = 1e-4): Double =
-    report.select(col("p_base"), col("p_cur")).collect().map { r =>
-      val p = math.max(r.getDouble(0), eps)
-      val q = math.max(r.getDouble(1), eps)
-      (q - p) * math.log(q / p)
-    }.sum
 }

@@ -29,22 +29,11 @@ object LangId {
     * CodegenFallback AND its per-position `substr` rescans the string
     * from byte 0: O(L²) per doc on the q36 hot path (value parity with
     * the chain pinned by CharNgramsFSpec). */
-  private def ngramRows(df: DataFrame, keyCol: Column, textCol: String, n: Int) = {
+  private[functions] def ngramRows(df: DataFrame, keyCol: Column, textCol: String, n: Int) = {
     graft.sql.GraftFunctions.register(df.sparkSession)
     df.select(keyCol.as("__k"), TextOps.normalizeText(col(textCol)).as("__t"))
       .select(col("__k"),
         explode(graft.sql.GraftFunctions.charNgrams(col("__t"), n)).as("ngram"))
-  }
-
-  /** Fit: DataFrame[lang, ngram] — the top-`profileSize` n-grams per
-    * language by frequency (count desc, ngram asc — deterministic). */
-  def fitProfiles(df: DataFrame, textCol: String, labelCol: String,
-      n: Int = 3, profileSize: Int = 300): DataFrame = {
-    val counts = ngramRows(df, col(labelCol), textCol, n)
-      .groupBy(col("__k").as("lang"), col("ngram")).agg(count(lit(1)).as("c"))
-    Relational.topKPerGroup(counts, Seq("lang"),
-        Seq(col("c").desc, col("ngram").asc), profileSize)
-      .select(col("lang"), col("ngram"))
   }
 
   /** Predict: adds `outputCol` = argmax-score language (score desc, lang asc

@@ -43,10 +43,4 @@ object Pii {
     Patterns.foldLeft(text) { case (t, (_, re)) =>
       regexp_replace(t, re, replacement)
     }
-
-  /** True iff the text contains any PII — the quarantine predicate form
-    * (composes with Quality.quarantine-style gates). */
-  def containsPii(text: Column): Column =
-    Patterns.map { case (_, re) => regexp_count(text, lit(re)) > 0 }
-      .reduce(_ || _)
 }

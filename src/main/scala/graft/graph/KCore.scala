@@ -57,12 +57,4 @@ object KCore {
       .groupBy(col("n")).agg(count(lit(1)).as("degree"))
       .select(col("n").as("node"), col("degree"))
   }
-
-  /** True when one more peel changes nothing — i.e. `rounds` reached the
-    * fixpoint (every surviving degree >= k and no node would be cut). */
-  def converged(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      rounds: Int): Boolean = {
-    val now = run(edges, srcCol, dstCol, k, rounds)
-    now.filter(col("degree") < k).isEmpty
-  }
 }

@@ -295,9 +295,4 @@ object Triangles {
           (coalesce(col("triangles"), lit(0L)) * 2L).cast("double")
             / (col("degree") * (col("degree") - 1L))).as("coeff"))
   }
-
-  /** Global triangle count (one row) — the corners sum / 3. */
-  def globalCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    perNode(edges, srcCol, dstCol)
-      .agg((sum(col("triangles")) / 3L).cast("long").as("n_triangles"))
 }

@@ -43,26 +43,6 @@ object CorpusPipeline {
   def htmlExtract(htmlCol: String): Stage =
     stage("html_extract")(graft.functions.HtmlExtract.extract(_, htmlCol))
 
-  /** HTML → text extraction with anchor-dense boilerplate lines dropped
-    * (q110/q111 operator — the jusText-lite link-density leg): structural
-    * lines whose visible characters are more than `maxAnchorPermille`‰
-    * inside <a> elements are removed before tag stripping. */
-  def htmlExtractDropBoilerplate(htmlCol: String,
-      maxAnchorPermille: Int = 500): Stage =
-    stage("html_extract")(df => df
-      .withColumn("title", graft.functions.HtmlExtract.title(col(htmlCol)))
-      .withColumn(htmlCol, graft.functions.HtmlExtract
-        .textDropBoilerplate(col(htmlCol), maxAnchorPermille)))
-
-  /** URL canonicalization + keep-first URL dedup (q112/q113 operator) —
-    * the crawl-entry dedup C4/RefinedWeb run BEFORE any content work;
-    * slots ahead of `html_extract` so duplicate fetches of one page never
-    * reach extraction. Adds `url_canon`; keeps the least-`tieBreak` row
-    * per canonical URL. */
-  def urlDedup(urlCol: String, tieBreak: String): Stage =
-    stage("url_dedup")(df =>
-      graft.functions.UrlCanon.dedupByUrl(df, urlCol, Seq(col(tieBreak))))
-
   /** Per-domain document cap (q116 operator) — the RefinedWeb-style
     * crawl-entry down-sample: at most `maxPerDomain` docs per URL host,
     * selected by the deterministic md5 rank; slots after `url_dedup`,
@@ -70,15 +50,6 @@ object CorpusPipeline {
   def domainCap(urlCol: String, idCol: String, maxPerDomain: Long): Stage =
     stage("domain_cap")(df => DataMix.capPerGroupConstant(
       df, graft.functions.UrlCanon.host(col(urlCol)), col(idCol), maxPerDomain))
-
-  /** Unicode-script census (q126 operator) as an APPENDING row-local
-    * stage: per-script char counts + digits + argmax `main_script` added
-    * to every row — the zero-model language triage a multilingual crawl
-    * runs before routing to per-language gates. Pure codegen projection,
-    * so it is batch≡stream like the other row-local stages. */
-  def scriptCensus(textCol: String): Stage =
-    stage("script_census")(
-      graft.functions.LangId.withScriptProfile(_, textCol))
 
   /** Gopher rule battery as a pushdown-friendly filter (q95 operator). */
   def qualityGate(textCol: String, minWords: Int = 50,
@@ -89,24 +60,6 @@ object CorpusPipeline {
   /** In-place PII redaction of the text column (q92 operator). */
   def piiRedact(textCol: String): Stage =
     stage("pii_redact")(_.withColumn(textCol, Pii.redact(col(textCol))))
-
-  /** Compression-ratio gate (the q139 signal as a row-local stage): keep
-    * docs whose DEFLATE ratio lies in [minRatio, maxRatio] — below the
-    * floor is template spam / repeated boilerplate, above the ceiling is
-    * gibberish or binary soup (MassiveText's compressibility band). Pure
-    * per-row filter over the codegen graft_deflate_len expression —
-    * pushdown-friendly, zero shuffle; requires GraftFunctions.register
-    * (handled by the session bootstrap paths that run registry stages).
-    * Empty docs divide a 2-byte deflate floor by octet_length 0 → NULL
-    * ratio → dropped (an empty doc passes no quality band). */
-  def deflateGate(textCol: String, minRatio: Double = 0.05,
-      maxRatio: Double = 0.98): Stage =
-    stage("deflate_gate")(df => {
-      graft.sql.GraftFunctions.register(df.sparkSession)
-      df.filter((graft.sql.GraftFunctions.deflateLen(col(textCol))
-        .cast("double") / octet_length(col(textCol)))
-        .between(minRatio, maxRatio))
-    })
 
   /** Learned-classifier gate (q104 operator) as a PURE FILTER: the margin
     * is evaluated over the codegen Gopher metric expressions directly, so
@@ -165,51 +118,6 @@ object CorpusPipeline {
       df.join(Dsir.gumbelTopK(scored, idCol, k, seed).select(col(idCol)),
         Seq(idCol), "left_semi")
     }
-
-  /** Soft-dedup annotation stage (q125 operator): every row survives,
-    * gaining `n_dups` (CCNet-normalized exact-dup cluster size) and
-    * `weight` = 1/n_dups for loss reweighting — the keep-everything
-    * alternative to the drop tiers. */
-  def softDedupAnnotate(idCol: String, textCol: String): Stage =
-    stage("soft_dedup") { df =>
-      df.join(TextDedup.softDedupWeights(df, idCol,
-          TextOps.ccnetFingerprint(col(textCol)))
-        .select(col(idCol), col("n_dups"), col("weight")), Seq(idCol))
-    }
-
-  /** Exact-duplicate removal tier (q32 operator; min-id canonical). */
-  def exactDedup(idCol: String, textCol: String): Stage =
-    stage("exact_dedup")(TextDedup.dropExactDuplicates(_, idCol, textCol))
-
-  /** CCNet-normalized exact-duplicate removal tier (q118 operator):
-    * dedup keyed on the hashing-normalized fingerprint (lowercase, NFD
-    * accent strip, digits→0, whitespace collapse — Wenzek 2020 §3.2), so
-    * case/accent/digit/spacing variants of one document collapse; the
-    * kept document keeps its ORIGINAL text. Same one-shuffle shape as
-    * exact_dedup; distinct stage name so a pipeline can run both tiers. */
-  def exactDedupNormalized(idCol: String, textCol: String): Stage =
-    stage("exact_dedup_norm")(df => TextDedup.dropExactDuplicatesBy(
-      df, idCol, TextOps.ccnetFingerprint(col(textCol))))
-
-  /** MinHash-LSH near-duplicate removal tier (q38 operator). */
-  def nearDedup(idCol: String, textCol: String, threshold: Double = 0.8,
-      numHashes: Int = 16, rowsPerBand: Int = 2): Stage =
-    stage("near_dedup")(df => TextDedup.dropNearDuplicates(df, idCol,
-      TextOps.wordShingles(TextOps.tokens(col(textCol)), 8),
-      numHashes, rowsPerBand, threshold))
-
-  /** Cluster-consistent near-duplicate removal with a quality-priority
-    * keep (q119 operator — the FineWeb policy): connected components
-    * over the verified near-dup pair graph, then one member per cluster
-    * survives — the highest-`quality` (ties to smallest id). Costs the
-    * near_dedup chain plus the iterative components fixpoint; use when
-    * WHICH duplicate survives matters (keep the longest/cleanest copy),
-    * `nearDedup` when any survivor will do. */
-  def nearDedupKeepBest(idCol: String, textCol: String, quality: Column,
-      threshold: Double = 0.8, numHashes: Int = 16, rowsPerBand: Int = 2): Stage =
-    stage("near_dedup_cluster")(df => TextDedup.dropNearDuplicatesKeepBest(
-      df, idCol, TextOps.wordShingles(TextOps.tokens(col(textCol)), 8),
-      quality, numHashes, rowsPerBand, threshold))
 
   /** Token counting — the weight column shuffle/pack stages consume. */
   def tokenCount(textCol: String, out: String = "n_tokens"): Stage =

@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   *  - [[upsert]] is MERGE type-1 semantics as copy-on-write: updated keys
   *    replace their old row, new keys insert, untouched keys carry over.
   *    One anti join + union — no table format required, the output is the
-  *    next snapshot (pair with [[graft.sources.Layout]] to keep the
-  *    rewrite clustered/compacted).
+  *    next snapshot.
   *
   *  - [[scd2Apply]] is slowly-changing-dimension type 2: history preserved
   *    as validity intervals. Each key has at most one OPEN row

@@ -26,11 +26,4 @@ object RetrievalPipeline {
   /** Load the persisted model. */
   def loadModel(spark: SparkSession, modelPath: String): DataFrame =
     spark.read.parquet(modelPath)
-
-  /** Recommend from the materialized model — the fit lineage is never
-    * re-executed, only the model parquet is scanned. `maxBasket` caps the
-    * candidate-generating history (seen-item exclusion stays full). */
-  def recommendFrom(spark: SparkSession, modelPath: String,
-      inter: DataFrame, k: Int = 10, maxBasket: Int = 0): DataFrame =
-    Cooccur.recommend(inter, loadModel(spark, modelPath), k, maxBasket)
 }

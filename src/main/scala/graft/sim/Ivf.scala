@@ -41,32 +41,6 @@ object Ivf {
   def probeCells(vec: Column, centroids: Array[Array[Float]], nprobe: Int): Column =
     GraftFunctions.ivfProbeF32(vec, centroids, nprobe)
 
-  /** Cell assignment against a centroid TABLE (cid, vec) instead of a
-    * plan-embedded matrix — the extreme-nlist form: IvfProbeF32 carries the
-    * matrix inside the plan (right up to ~10⁴ cells / tens of MB); beyond
-    * that the quantizer should be DATA, broadcast once per stage. The
-    * broadcast join fans each row out to nlist scored copies IN-TASK, and
-    * the argmin partial-aggregates back to one row per id before any
-    * exchange (rows of one id never leave their partition), so the only
-    * shuffle is the final tiny (id, cid) stream. Same distance + tie
-    * semantics as nearestCell (asserted in IvfSpec).
-    */
-  def assignCellsJoin(df: DataFrame, idCol: String, vecCol: String,
-      centroidsDf: DataFrame): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
-    val c = centroidsDf.select(col("cid"),
-      col("vec").as("__cv"),
-      GraftFunctions.dotF32(col("vec"), col("vec")).as("__cn2"))
-    df.select(col(idCol), col(vecCol))
-      .join(broadcast(c))
-      .select(col(idCol),
-        struct(
-          (col("__cn2") - lit(2.0) * GraftFunctions.dotF32(col(vecCol), col("__cv"))).as("d"),
-          col("cid").as("cid")).as("__dc"))
-      .groupBy(col(idCol))
-      .agg(min(col("__dc")).getField("cid").as("cid"))
-  }
-
   /** Fit `nlist` coarse centroids with `iters` Lloyd steps. Deterministic
     * init: the nlist vectors with the smallest (md5(id), id) — a seedless,
     * engine-reproducible sample. Empty cells keep their previous centroid.

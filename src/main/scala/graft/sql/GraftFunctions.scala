@@ -175,19 +175,6 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(nprobe))
 
   /** Column-level call; requires `register` (or GraftExtensions) first.
-    * Fused brute-force top-k retrieval: score `vec` against the whole
-    * catalog (DotF32-identical arithmetic), skip ids in the row's `seen`
-    * array, return the k best (score desc, id asc) as
-    * array<struct<item_id,score>> best-first. Catalog travels as data
-    * (one literal), plan size O(1) in catalog size. */
-  def topKDotF32(vec: Column, seen: Column, itemIds: Array[Long],
-      items: Array[Array[Float]], k: Int): Column =
-    call_function(TopKDotName, vec, seen,
-      org.apache.spark.sql.functions.typedLit(itemIds.toSeq),
-      org.apache.spark.sql.functions.typedLit(items.map(_.toSeq).toSeq),
-      org.apache.spark.sql.functions.lit(k))
-
-  /** Column-level call; requires `register` (or GraftExtensions) first.
     * Rabin–Karp hashes of every k-codepoint window, one O(L) pass. */
   def rollingHash(text: Column, k: Int): Column =
     call_function(RollingHashName, text,

@@ -10,8 +10,6 @@ import org.apache.spark.sql.types.DecimalType
   * The reference is batch-only (live ingestion explicitly deferred,
   * README.md:172) — these semantics are graft's own spec:
   *
-  *  - exact dedup by event id with a watermark bounding state (the
-  *    streaming A2/O5);
   *  - tumbling-window per-type aggregates with exact decimal sums (the
   *    streaming A1, same cross-engine determinism as QueryHelpers.dsum);
   *  - session windows via flatMapGroupsWithState with event-time timeout
@@ -30,11 +28,6 @@ object EventStream {
 
   case class Session(user_id: Long, session_start_ms: Long,
       session_end_ms: Long, n_events: Int)
-
-  /** Watermarked exact dedup by event id (state bounded by the watermark). */
-  def dedupEvents(events: DataFrame, idCol: String, tsCol: String,
-      watermark: String): DataFrame =
-    events.withWatermark(tsCol, watermark).dropDuplicates(Seq(idCol))
 
   /** Tumbling-window counts + exact-decimal value sums per event type. */
   def windowedTypeStats(events: DataFrame, tsCol: String, watermark: String,
@@ -109,37 +102,5 @@ object EventStream {
             closed.iterator.map(s => Session(user, s.start, s.end, s.nEvents))
           }
       }
-  }
-
-  /** Stream-stream attribution join: each outcome (purchase/conversion)
-    * matched to every trigger (click/impression) by the same user within
-    * the preceding `maxLagSeconds` — the streaming form of the batch
-    * interval join (q63). Both sides are watermarked and the join
-    * condition bounds event-time distance in BOTH directions, which is
-    * what lets Structured Streaming expire join state: a trigger's state
-    * can be dropped once the outcome-side watermark passes trigger_ts +
-    * maxLag (without the time bound the state store grows forever — the
-    * stream-stream analog of the unbounded-window trap).
-    *
-    * Inputs must carry disambiguated columns: triggers (t_user, t_id,
-    * t_ts), outcomes (o_user, o_id, o_ts). Output: one row per
-    * (trigger, outcome) pair in lag order — downstream pick-first
-    * attribution rides keep-first per o_id over this (same operator as
-    * batch O5). Batch parity: the identical join expression over static
-    * frames returns the same rows (spec'd), so backfill and live
-    * attribution share semantics. */
-  def attributionJoin(triggers: DataFrame, outcomes: DataFrame,
-      maxLagSeconds: Long, triggerWatermark: String,
-      outcomeWatermark: String): DataFrame = {
-    val t = triggers.withWatermark("t_ts", triggerWatermark)
-    val o = outcomes.withWatermark("o_ts", outcomeWatermark)
-    t.join(o, expr(
-      s"""t_user = o_user AND
-          o_ts >= t_ts AND
-          o_ts <= t_ts + interval $maxLagSeconds seconds"""))
-      .select(col("t_user").as("user_id"), col("t_id"), col("o_id"),
-        col("t_ts"), col("o_ts"),
-        (unix_timestamp(col("o_ts")) - unix_timestamp(col("t_ts")))
-          .as("lag_sec"))
   }
 }

@@ -67,12 +67,13 @@ class PropertySpec extends SparkSpecBase {
       Gen.zip(Gen.choose(1L, 1000L), Gen.oneOf("a b", "A  b", "x", "x ", "y z w")))
     check(Prop.forAll(docGen) { rows =>
       val df = rows.toDF("doc_id", "text").dropDuplicates("doc_id")
-      val once = graft.dedup.TextDedup.dropExactDuplicates(df, "doc_id", "text")
+      val fp = graft.functions.TextOps.fingerprint($"text")
+      val once = graft.dedup.TextDedupSpec.dropExactDuplicatesBy(df, "doc_id", fp)
       // re-materialize before the second pass: a doubly-nested self-semi-join
       // trips an attribute-binding INTERNAL_ERROR in Spark 4.1's analyzer
       val onceLocal = once.select($"doc_id", $"text").as[(Long, String)].collect().toSeq
-      val twice = graft.dedup.TextDedup.dropExactDuplicates(
-        onceLocal.toDF("doc_id", "text"), "doc_id", "text")
+      val twice = graft.dedup.TextDedupSpec.dropExactDuplicatesBy(
+        onceLocal.toDF("doc_id", "text"), "doc_id", fp)
       onceLocal.map(_._1).sorted == twice.select($"doc_id").as[Long].collect().toSeq.sorted
     }, cases = 10)
   }

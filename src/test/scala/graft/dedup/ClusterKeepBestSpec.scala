@@ -2,6 +2,8 @@ package graft.dedup
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.TextOps
 
 class ClusterKeepBestSpec extends SparkSpecBase {
   import spark.implicits._
@@ -60,11 +62,24 @@ class ClusterKeepBestSpec extends SparkSpecBase {
       (3L, "one two three four five six seven eight nine ten eleven twelve")
     ).toDF("doc_id", "text")
       .withColumn("__toks", split(trim($"text"), "\\s+"))
-    val kept = TextDedup.dropNearDuplicatesKeepBest(
+    val kept = ClusterKeepBestSpec.dropNearDuplicatesKeepBest(
         docs, "doc_id", graft.functions.TextOps.wordShingles($"__toks", 3),
         length($"text"), numHashes = 16, rowsPerBand = 2, threshold = 0.5)
       .select($"doc_id").as[Long].collect().sorted
     assert(kept.toSeq == Seq(2L, 3L),
       "the LONGER near-dup replica survives (per-pair keep-smallest would keep 1)")
+  }
+}
+
+/** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */
+object ClusterKeepBestSpec {
+
+  /** Cluster-consistent near-duplicate removal with a quality-priority
+    * keep: discovery chain → connected components → best-per-cluster. */
+  def dropNearDuplicatesKeepBest(df: DataFrame, idCol: String, shingles: Column,
+      quality: Column, numHashes: Int = 16, rowsPerBand: Int = 2,
+      threshold: Double = 0.7): DataFrame = {
+    val pairs = TextDedup.nearDupPairs(df, idCol, shingles, numHashes, rowsPerBand, threshold)
+    TextDedup.clusterKeepBest(df, idCol, ConnectedComponents.runAuto(pairs), quality)
   }
 }

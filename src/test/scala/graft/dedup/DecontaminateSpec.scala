@@ -32,22 +32,9 @@ class DecontaminateSpec extends SparkSpecBase {
     val corpus = withToks(Seq((1L, "a b"), (2L, "a b c")))
     val rep = Decontaminate.contamination(corpus, "id", grams3,
       Decontaminate.benchmarkGrams(bench, grams3)).orderBy("id").collect()
+    assert(rep.map(_.getLong(0)).toSeq == Seq(1L, 2L), "the gram-less doc stays in the report")
     assert(rep(0).getLong(1) == 0L && rep(0).getDouble(3) == 0.0)
     assert(rep(1).getLong(2) == 1L)
-    val kept = Decontaminate.dropContaminated(corpus, "id", grams3,
-      Decontaminate.benchmarkGrams(bench, grams3))
-    assert(kept.select("id").as[Long].collect().toSeq == Seq(1L))
-  }
-
-  test("dropContaminated threshold: only docs above maxFrac are dropped") {
-    val bench = withToks(Seq((100L, "x y z")))
-    val corpus = withToks(Seq(
-      (1L, "x y z w v u t"),   // 1 hit / 5 grams = 0.2
-      (2L, "x y z x y z x")))  // hits "x y z" (+ others) → frac > 0.3
-    val kept = Decontaminate.dropContaminated(corpus, "id", grams3,
-        Decontaminate.benchmarkGrams(bench, grams3), maxFrac = 0.3)
-      .select("id").as[Long].collect().toSeq
-    assert(kept == Seq(1L))
   }
 
   test("benchmark vocabulary joins broadcast (the 100 TB plan shape)") {
@@ -82,18 +69,6 @@ class DecontaminateSpec extends SparkSpecBase {
     assert(m(1L) === 1.0)
     assert(m(2L) === 0.0)
     assert(math.abs(m(3L) - 1.0 / math.sqrt(2.0)) < 1e-9)
-  }
-
-  test("semantic drop removes exactly the too-close rows, keeps the rest") {
-    import spark.implicits._
-    val bench = Seq(Tuple1(Array(1f, 0f))).toDF("v")
-    val corpus = Seq(
-      (1L, Array(1f, 0.01f)), (2L, Array(0f, 1f)), (3L, Array(0.5f, 0.5f))
-    ).toDF("vec_id", "v")
-    val kept = Decontaminate.dropSemanticContaminated(
-        corpus, "vec_id", "v", bench, "v", maxCos = 0.9)
-      .select("vec_id").as[Long].collect().sorted
-    assert(kept.toSeq === Seq(2L, 3L)) // row 1 ~cos 1.0; row 3 cos ~0.707
   }
 
   test("semantic report is one broadcast pass, no shuffle of the corpus side") {

@@ -2,13 +2,14 @@ package graft.functions
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame}
 
 class ApproxStatsSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("approxProfile distinct counts land within the HLL++ error bound of exact") {
     val ev = tbl("events", sfDirMid)
-    val approx = ApproxStats.approxProfile(ev, Seq("event_type"), "user_id", "value")
+    val approx = ApproxStatsSpec.approxProfile(ev, Seq("event_type"), "user_id", "value")
       .select($"event_type", $"approx_distinct_user_id")
       .as[(String, Long)].collect().toMap
     val exact = ev.groupBy($"event_type")
@@ -23,7 +24,7 @@ class ApproxStatsSpec extends SparkSpecBase {
 
   test("approxProfile quantiles are within rank tolerance of exact percentiles") {
     val ev = tbl("events", sfDirMid)
-    val approx = ApproxStats.approxProfile(ev, Seq("event_type"), "user_id", "value",
+    val approx = ApproxStatsSpec.approxProfile(ev, Seq("event_type"), "user_id", "value",
         quantiles = Seq(0.5), accuracy = 10000)
       .select($"event_type", element_at($"approx_q_value", 1))
       .as[(String, Double)].collect().toMap
@@ -40,7 +41,7 @@ class ApproxStatsSpec extends SparkSpecBase {
 
   test("approxDistinctEach sketches several columns in one pass without Expand") {
     val ev = tbl("events", sfDirMid)
-    val out = ApproxStats.approxDistinctEach(ev, Seq("user_id", "event_type", "event_id"))
+    val out = ApproxStatsSpec.approxDistinctEach(ev, Seq("user_id", "event_type", "event_id"))
     val p = out.queryExecution.executedPlan.toString
     assert(!p.contains("Expand"), s"one HLL per column must not Expand the input:\n$p")
     val row = out.head()
@@ -122,4 +123,29 @@ class ApproxStatsSpec extends SparkSpecBase {
       s"undercount bound violated: ${m("heavy")}")
     assert(m.size <= 16, "live entries bounded by 2*capacity")
   }
+}
+
+/** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */
+object ApproxStatsSpec {
+
+  /** Per-group sketch profile: row count, approximate distinct of
+    * `distinctCol`, and approximate quantiles of `valueCol`. */
+  def approxProfile(df: DataFrame, groupCols: Seq[String], distinctCol: String,
+      valueCol: String, quantiles: Seq[Double] = Seq(0.5, 0.95, 0.99),
+      rsd: Double = 0.05, accuracy: Int = 10000): DataFrame = {
+    val qArr = array(quantiles.map(lit): _*)
+    df.groupBy(groupCols.map(col): _*)
+      .agg(
+        count(lit(1)).as("n"),
+        approx_count_distinct(col(distinctCol), rsd).as(s"approx_distinct_$distinctCol"),
+        approx_percentile(col(valueCol), qArr, lit(accuracy)).as(s"approx_q_$valueCol"))
+  }
+
+  /** Global approximate distinct of each given column in ONE pass over the
+    * data (one HLL state per column — contrast COUNT(DISTINCT a), (DISTINCT
+    * b), ... which Spark plans as an Expand: one input copy per column). */
+  def approxDistinctEach(df: DataFrame, cols: Seq[String], rsd: Double = 0.05): DataFrame =
+    df.agg(
+      approx_count_distinct(col(cols.head), rsd).as(s"approx_distinct_${cols.head}"),
+      cols.tail.map(c => approx_count_distinct(col(c), rsd).as(s"approx_distinct_$c")): _*)
 }

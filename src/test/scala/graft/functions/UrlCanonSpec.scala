@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import graft.operators.CorpusPipeline
 
 class UrlCanonSpec extends SparkSpecBase {
   import spark.implicits._
@@ -110,7 +111,7 @@ class UrlCanonSpec extends SparkSpecBase {
       .toDF("doc_id", "url", "html")
     val pipeline = dag(
       _ => docs,
-      Seq(urlDedup("url", "doc_id"), htmlExtract("html")),
+      Seq(UrlCanonSpec.urlDedup("url", "doc_id"), htmlExtract("html")),
       warehouseDir = wh)
     val out = graft.operators.CorpusPipeline.run(spark, pipeline, "html_extract")
       .select($"doc_id", $"html").as[(Long, String)].collect().sortBy(_._1)
@@ -118,4 +119,17 @@ class UrlCanonSpec extends SparkSpecBase {
       "the URL-duplicate doc 2 must be gone before extraction")
     assert(out.head._2 == "hello world one")
   }
+}
+
+/** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */
+object UrlCanonSpec {
+
+  /** URL canonicalization + keep-first URL dedup (q112/q113 operator) —
+    * the crawl-entry dedup C4/RefinedWeb run BEFORE any content work;
+    * slots ahead of `html_extract` so duplicate fetches of one page never
+    * reach extraction. Adds `url_canon`; keeps the least-`tieBreak` row
+    * per canonical URL. */
+  def urlDedup(urlCol: String, tieBreak: String): CorpusPipeline.Stage =
+    CorpusPipeline.stage("url_dedup")(df =>
+      graft.functions.UrlCanon.dedupByUrl(df, urlCol, Seq(col(tieBreak))))
 }

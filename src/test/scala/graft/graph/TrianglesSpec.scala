@@ -21,11 +21,6 @@ class TrianglesSpec extends SparkSpecBase {
     assert(m(4) == (2L, 1L, 1.0))
   }
 
-  test("global count is corners/3") {
-    val g = Triangles.globalCount(square, "src", "dst").collect().head
-    assert(g.getLong(0) == 2L)
-  }
-
   test("direction, duplicates, and self-loops do not change the census") {
     val noisy = square
       .union(square.select(col("dst"), col("src")))     // reversed copies

@@ -42,6 +42,35 @@ class StarDagSpec extends SparkSpecBase {
     assert(latest.select("v").as[String].collect().toSet == Set("new", "new2"))
   }
 
+  test("readBronze submits no job before the first action; schema equals the inferred one") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tmp = java.nio.file.Files.createTempDirectory("bronze_schema").toString
+    CsvEnvelopeLoader.loadBatch(Seq((1L, "a")).toDF("id", "v"), "t", 100L, "batch-1", tmp)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("bronze-read", "readBronze")
+      val bronze = try CsvEnvelopeLoader.readBronze(spark, tmp, "t")
+        finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job is seen, any
+      // job the read submitted has been seen too
+      sc.setJobGroup("bronze-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("bronze-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("bronze-marker"), "marker job never reached the listener")
+      assert(!groups.contains("bronze-read"), s"readBronze submitted jobs: $groups")
+      assert(bronze.schema == spark.read.parquet(s"$tmp/t").schema)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("saveAsTable registers a catalog table (S5)") {
     val df = Seq((1, "a")).toDF("k", "v")
     CsvEnvelopeLoader.saveAsTable(df, "graft_s5_test")

@@ -3,6 +3,7 @@ package graft.operators
 import graft.SparkSpecBase
 import graft.functions.{GopherQuality, Pii, TextOps}
 import org.apache.spark.sql.functions._
+import graft.dedup.TextDedup
 
 class CorpusPipelineSpec extends SparkSpecBase {
   import spark.implicits._
@@ -119,7 +120,7 @@ class CorpusPipelineSpec extends SparkSpecBase {
       (1L, "alpha beta gamma"), (2L, "alpha beta gamma"), (3L, "delta eps")
     ).toDF("doc_id", "text")
     val p = CorpusPipeline.dag(_ => docs,
-      Seq(CorpusPipeline.exactDedup("doc_id", "text"),
+      Seq(CorpusPipelineSpec.exactDedup("doc_id", "text"),
         CorpusPipeline.tokenCount("text")),
       "/tmp/unused_audit")
     val report = CorpusPipeline.audit(spark, p,
@@ -133,7 +134,7 @@ class CorpusPipelineSpec extends SparkSpecBase {
       (1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
       (3L, "unique text here now")).toDF("doc_id", "text")
     val p = CorpusPipeline.dag(_ => docs,
-      Seq(CorpusPipeline.exactDedup("doc_id", "text")),
+      Seq(CorpusPipelineSpec.exactDedup("doc_id", "text")),
       "/tmp/unused_dedup")
     val kept = CorpusPipeline.run(spark, p, "exact_dedup")
       .select($"doc_id").as[Long].collect().toSeq.sorted
@@ -160,7 +161,7 @@ class CorpusPipelineSpec extends SparkSpecBase {
     val docs = Seq((1L, "same text"), (2L, "Same  TEXT"), (3L, "other"))
       .toDF("doc_id", "text")
     val p = CorpusPipeline.dag(_ => docs,
-      Seq(CorpusPipeline.softDedupAnnotate("doc_id", "text")),
+      Seq(CorpusPipelineSpec.softDedupAnnotate("doc_id", "text")),
       "/tmp/unused_soft")
     val out = CorpusPipeline.run(spark, p, "soft_dedup")
       .select($"doc_id", $"n_dups", $"weight").as[(Long, Long, Double)]
@@ -169,4 +170,23 @@ class CorpusPipelineSpec extends SparkSpecBase {
     assert(out(1L) == ((2L, 0.5)), "case/space variants share a cluster")
     assert(out(3L) == ((1L, 1.0)))
   }
+}
+
+/** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */
+object CorpusPipelineSpec {
+
+  /** Soft-dedup annotation stage (q125 operator): every row survives,
+    * gaining `n_dups` (CCNet-normalized exact-dup cluster size) and
+    * `weight` = 1/n_dups for loss reweighting — the keep-everything
+    * alternative to the drop tiers. */
+  def softDedupAnnotate(idCol: String, textCol: String): CorpusPipeline.Stage =
+    CorpusPipeline.stage("soft_dedup") { df =>
+      df.join(TextDedup.softDedupWeights(df, idCol,
+          TextOps.ccnetFingerprint(col(textCol)))
+        .select(col(idCol), col("n_dups"), col("weight")), Seq(idCol))
+    }
+
+  /** Exact-duplicate removal tier (q32 operator; min-id canonical). */
+  def exactDedup(idCol: String, textCol: String): CorpusPipeline.Stage =
+    CorpusPipeline.stage("exact_dedup")(graft.dedup.TextDedupSpec.dropExactDuplicatesBy(_, idCol, TextOps.fingerprint(col(textCol))))
 }

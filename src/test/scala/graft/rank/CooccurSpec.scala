@@ -4,6 +4,7 @@ import graft.SparkSpecBase
 import graft.operators.Relational
 import org.apache.spark.sql.functions._
 import graft.operators.Budgets
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cooccur's shuffle-collapsed plan (marker-row union instead of an anti
   * join) must be observationally identical to the textbook formulation. */
@@ -57,7 +58,7 @@ class CooccurSpec extends SparkSpecBase {
   test("recommendations from a materialized model equal the inline-lineage ones") {
     val dir = java.nio.file.Files.createTempDirectory("graft_nb").toString
     RetrievalPipeline.fitAndSave(tr, s"$dir/nb", maxNeighbors = 20)
-    val fromModel = RetrievalPipeline.recommendFrom(spark, s"$dir/nb", tr, 10)
+    val fromModel = CooccurSpec.recommendFrom(spark, s"$dir/nb", tr, 10)
     val inline = Cooccur.recommend(tr, Cooccur.itemNeighbors(tr, 20), 10)
     assert(fromModel.exceptAll(inline).isEmpty && inline.exceptAll(fromModel).isEmpty)
   }
@@ -243,4 +244,15 @@ class CooccurSpec extends SparkSpecBase {
       .select($"item_id".cast("string")).as[String].collect().toSeq
     assert(recs == counts)
   }
+}
+
+/** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */
+object CooccurSpec {
+
+  /** Recommend from the materialized model — the fit lineage is never
+    * re-executed, only the model parquet is scanned. `maxBasket` caps the
+    * candidate-generating history (seen-item exclusion stays full). */
+  def recommendFrom(spark: SparkSession, modelPath: String,
+      inter: DataFrame, k: Int = 10, maxBasket: Int = 0): DataFrame =
+    Cooccur.recommend(inter, RetrievalPipeline.loadModel(spark, modelPath), k, maxBasket)
 }

@@ -2,6 +2,10 @@ package graft.sim
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.VecCentroidAgg
+import graft.operators.Relational
+import graft.sql.GraftFunctions
 
 class IvfSpec extends SparkSpecBase {
   import spark.implicits._
@@ -95,12 +99,12 @@ class IvfSpec extends SparkSpecBase {
     val cdf = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cid", "vec").select($"cid", $"vec".cast("array<float>").as("vec"))
     val viaExpr = emb.select($"vec_id", Ivf.nearestCell($"embedding", centroids).as("cid"))
-    val viaJoin = Ivf.assignCellsJoin(emb, "vec_id", "embedding", cdf)
+    val viaJoin = IvfSpec.assignCellsJoin(emb, "vec_id", "embedding", cdf)
     assert(viaExpr.exceptAll(viaJoin).isEmpty && viaJoin.exceptAll(viaExpr).isEmpty)
     // duplicated-centroid tie still resolves to the lower cid
     val dup = cdf.filter($"cid" === 0)
       .unionByName(cdf.filter($"cid" === 0).select(lit(1).as("cid"), $"vec"))
-    val cids = Ivf.assignCellsJoin(emb, "vec_id", "embedding", dup)
+    val cids = IvfSpec.assignCellsJoin(emb, "vec_id", "embedding", dup)
       .select("cid").distinct().as[Int].collect().toSet
     assert(cids == Set(0), s"tie-break must pick cid 0, got $cids")
   }
@@ -126,5 +130,35 @@ class IvfSpec extends SparkSpecBase {
       Ivf.probeCells($"embedding", centroids, 3).as("probes"))
     assert(out.filter(element_at($"probes", 1) =!= $"c0").count() == 0)
     assert(out.filter(size(array_distinct($"probes")) =!= 3).count() == 0)
+  }
+}
+
+/** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */
+object IvfSpec {
+
+  /** Cell assignment against a centroid TABLE (cid, vec) instead of a
+    * plan-embedded matrix — the extreme-nlist form: IvfProbeF32 carries the
+    * matrix inside the plan (right up to ~10⁴ cells / tens of MB); beyond
+    * that the quantizer should be DATA, broadcast once per stage. The
+    * broadcast join fans each row out to nlist scored copies IN-TASK, and
+    * the argmin partial-aggregates back to one row per id before any
+    * exchange (rows of one id never leave their partition), so the only
+    * shuffle is the final tiny (id, cid) stream. Same distance + tie
+    * semantics as nearestCell (asserted in IvfSpec).
+    */
+  def assignCellsJoin(df: DataFrame, idCol: String, vecCol: String,
+      centroidsDf: DataFrame): DataFrame = {
+    GraftFunctions.register(df.sparkSession)
+    val c = centroidsDf.select(col("cid"),
+      col("vec").as("__cv"),
+      GraftFunctions.dotF32(col("vec"), col("vec")).as("__cn2"))
+    df.select(col(idCol), col(vecCol))
+      .join(broadcast(c))
+      .select(col(idCol),
+        struct(
+          (col("__cn2") - lit(2.0) * GraftFunctions.dotF32(col(vecCol), col("__cv"))).as("d"),
+          col("cid").as("cid")).as("__dc"))
+      .groupBy(col(idCol))
+      .agg(min(col("__dc")).getField("cid").as("cid"))
   }
 }

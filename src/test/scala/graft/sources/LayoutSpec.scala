@@ -1,9 +1,9 @@
 package graft.sources
 
 import graft.SparkSpecBase
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 class LayoutSpec extends SparkSpecBase {
 
@@ -78,5 +78,76 @@ class LayoutSpec extends SparkSpecBase {
     val out = spark.read.parquet(reclustered)
     assert(out.count() == ev.count())
     assert(out.exceptAll(ev).isEmpty && ev.exceptAll(out).isEmpty)
+  }
+}
+
+// Spec-held: no query, Verify, Bench or perfbench reaches it.
+/** File-layout control for parquet data at rest — the scan-side complement
+  * to [[BucketedTables]] (which lays data out for its dominant JOIN key):
+  *
+  *  - **Compaction** fights the small-files problem: a streaming sink or a
+  *    many-task ETL writes thousands of KB-sized files; every later scan
+  *    then pays per-file open/footer/schedule cost and the driver holds one
+  *    `FileStatus` per file. At 100 TB, uncompacted bronze is the classic
+  *    self-inflicted outage. `compact` rewrites a directory into
+  *    target-sized files.
+  *
+  *  - **Range-clustering** makes selective scans cheap: parquet stores
+  *    min/max stats per row group, and the reader skips row groups whose
+  *    stats exclude a pushed predicate — but only if values are CLUSTERED;
+  *    after a hash shuffle every row group spans the whole key domain and
+  *    nothing skips. `writeClustered` range-partitions and sorts within
+  *    partitions on the cluster columns, so each row group covers a narrow
+  *    key range and point/range scans on those columns read a sliver of the
+  *    data (measured in LayoutSpec: >97% of rows skipped on a point scan,
+  *    vs 0% on the same data unclustered). This is the single-column analog
+  *    of Z-ordering; for multi-column clustering, lead with the most
+  *    selective column (documented trade-off, same as any lexicographic
+  *    sort layout).
+  *
+  * Both writers cap file size with `maxRecordsPerFile` instead of a fixed
+  * file count, so write parallelism stays at the cluster's width and file
+  * sizes stay bounded no matter the input volume.
+  */
+private object Layout {
+
+  /** Write `df` range-clustered on `clusterCols`: repartitionByRange + sort
+    * within partitions + bounded file size. Scans filtering on the leading
+    * cluster column(s) skip non-matching row groups via parquet min/max.
+    */
+  def writeClustered(df: DataFrame, path: String, clusterCols: Seq[String],
+      maxRecordsPerFile: Long = 1000000L): Unit = {
+    val cols = clusterCols.map(col)
+    df.repartitionByRange(cols: _*)
+      .sortWithinPartitions(cols: _*)
+      .write.mode("overwrite")
+      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .parquet(path)
+  }
+
+  /** Rewrite a parquet directory into ~`targetFileBytes`-sized files: the
+    * output file count is ceil(inputBytes / target) — computed from file
+    * metadata, no data read — and the rewrite is a shuffle-free coalesce.
+    * Optionally re-cluster while compacting (compaction is the natural
+    * moment to fix ordering too; that path shuffles, by design).
+    */
+  def compact(spark: SparkSession, inPath: String, outPath: String,
+      targetFileBytes: Long = 128L << 20, clusterCols: Seq[String] = Nil): Unit = {
+    val df = spark.read.parquet(inPath)
+    val p = new org.apache.hadoop.fs.Path(inPath)
+    val bytes = p.getFileSystem(spark.sessionState.newHadoopConf())
+      .getContentSummary(p).getLength
+    if (clusterCols.nonEmpty) {
+      // honor targetFileBytes here too: convert it to a record cap via the
+      // input's average row size (row count is parquet footer metadata —
+      // no data pass)
+      val rows = math.max(1L, df.count())
+      val recordsPerFile =
+        math.max(1L, targetFileBytes / math.max(1L, bytes / rows))
+      writeClustered(df, outPath, clusterCols, recordsPerFile)
+    } else {
+      val files = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+      df.coalesce(files).write.mode("overwrite").parquet(outPath)
+    }
   }
 }

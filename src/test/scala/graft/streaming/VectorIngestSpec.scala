@@ -4,6 +4,8 @@ import graft.SparkSpecBase
 import graft.sim.IvfPq
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 class VectorIngestSpec extends SparkSpecBase {
   import spark.implicits._
@@ -92,5 +94,53 @@ class VectorIngestSpec extends SparkSpecBase {
     // and the probed rows serve a top-k end to end
     val top = IvfPq.topK(probed, "vec_id", qv, model, 5, nprobe = 2)
     assert(top.count() == 5)
+  }
+}
+
+// Spec-held: no query, Verify, Bench or perfbench reaches it.
+/** Streaming refresh of the IVFPQ vector index: each micro-batch of new
+  * embeddings is encoded with the PERSISTED model (IvfPq.load — no refit,
+  * the codebooks are a serving artifact, not per-batch state) and appended
+  * to the (id, cid, code) index partitioned by cid, so probes over the
+  * grown index keep pruning unprobed cells at the file level. The batch
+  * analog is `IvfPq.index(...).write.partitionBy("cid")`; this wires the
+  * same projection into a `foreachBatch` loop (same pattern as
+  * DocIngest / RecsTable.streamRefresh). Reference analog: the
+  * periodically re-exported serving artifact,
+  * the reference's src/app/pred_inspector.py:23-41.
+  *
+  * Scale notes: encoding is a pure projection (zero shuffle — the same
+  * plan IvfPqSpec asserts exchange-free), so per-batch cost is linear in
+  * batch size and INDEPENDENT of index size; history is never re-encoded.
+  * State lives entirely in the index parquet + the stream checkpoint:
+  * restart-safe, nothing to rebuild on the executors. Quantization drift
+  * is the operator's known trade: a model fit on yesterday's distribution
+  * encodes today's vectors with higher error — refit offline when recall
+  * degrades and rebuild once, exactly like the reference's retrain loop.
+  * The trade is QUANTIFIED in PqDriftSpec (and SCALE.md): on a
+  * deterministically shifted batch, stale codebooks served full-ADC
+  * recall@10 = 0.12 vs 0.56 after refit — monitor served recall against
+  * an exact-rerank sample and rebuild when it degrades past ~2×.
+  */
+private object VectorIngest {
+
+  /** Start the index-append stream. `modelPath` must hold an
+    * [[IvfPq.save]] artifact; the model is loaded once at start (bounded
+    * driver-side matrices). Pass `checkpointDir` for a restartable
+    * production stream — without it a restarted query replays the source
+    * from offset zero and re-appends every historical row. */
+  def start(stream: DataFrame, idCol: String, vecCol: String,
+      modelPath: String, indexPath: String,
+      checkpointDir: Option[String] = None): StreamingQuery = {
+    val model = IvfPq.load(stream.sparkSession, modelPath)
+    val writer = stream.writeStream.outputMode("append")
+    checkpointDir.foreach(d => writer.option("checkpointLocation", d))
+    writer
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
+        IvfPq.index(batch.toDF(), idCol, vecCol, model)
+          .write.partitionBy("cid").mode("append").parquet(indexPath)
+        ()
+      }
+      .start()
   }
 }

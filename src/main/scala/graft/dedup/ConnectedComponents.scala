@@ -2,7 +2,6 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Budgets.integral
 
 /** Distributed connected components over an undirected edge list — the
   * clustering step that turns PAIRWISE near-duplicate evidence into
@@ -103,14 +102,15 @@ object ConnectedComponents {
     * no convergence guard needed (union–find has no diameter term; a
     * graph whose diameter would trip [[run]]'s maxIter abort simply
     * succeeds here). Null endpoints drop exactly as the composed plan's
-    * x =!= y filter drops them. None past the budget or for non-integral
-    * id types — web-scale pair graphs keep the O(log d) pointer-jumping
-    * joins. */
+    * x =!= y filter drops them. None past the budget or what the
+    * session's driver holds, or for non-integral id types — web-scale
+    * pair graphs keep the O(log d) pointer-jumping joins. */
   def runFused(edges: DataFrame): Option[DataFrame] = {
     val maxEdges = graft.operators.Budgets.get.componentEdges
-    val aT = edges.schema("a").dataType
-    val bT = edges.schema("b").dataType
-    if (!integral(aT) || aT != bT || maxEdges <= 0) return None
+    val aT = graft.graph.PackedGraph.idType(edges, "a", "b") match {
+      case Some(t) if maxEdges > 0L => t
+      case _ => return None
+    }
     val spark = edges.sparkSession
     import spark.implicits._
     val grouped = edges
@@ -118,14 +118,17 @@ object ConnectedComponents {
       .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
       .groupBy(col("x")).agg(collect_list(col("y")).as("ys"))
       .localCheckpoint()
-    val m = grouped.agg(coalesce(sum(size(col("ys"))), lit(0L)))
-      .head().getLong(0)
-    if (m > maxEdges) {
-      graft.operators.Checkpoints.free(grouped)
-      return None
-    }
-    val rows = grouped.collect()
+    // the graph kernels' guarded packed collect of [x, len, y1..ylen]
+    // records: ~24 B/edge of task results at worst (one group per edge);
+    // the boxed union-find maps and the output rows hold ~256 B per node,
+    // about one node per edge on a pair graph
+    val got = graft.graph.PackedGraph.collect(grouped, maxEdges, 24L, 256L,
+      rows = coalesce(sum(size(col("ys"))), lit(0L)))()
     graft.operators.Checkpoints.free(grouped)
+    val chunks = got match {
+      case Some((cs, _)) => cs
+      case None => return None
+    }
     val parent = new java.util.HashMap[Long, Long]()
     def find(n: Long): Long = {
       var r = n
@@ -134,13 +137,21 @@ object ConnectedComponents {
       while (parent.get(c) != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
       r
     }
-    rows.foreach { rw =>
-      val x = rw.getLong(0)
-      if (!parent.containsKey(x)) parent.put(x, x)
-      rw.getSeq[Long](1).foreach { y =>
-        if (!parent.containsKey(y)) parent.put(y, y)
-        val rx = find(x); val ry = find(y)
-        if (rx != ry) parent.put(math.max(rx, ry), math.min(rx, ry))
+    chunks.foreach { c =>
+      var i = 0
+      while (i < c.length) {
+        val x = c(i)
+        val len = c(i + 1).toInt
+        if (!parent.containsKey(x)) parent.put(x, x)
+        var j = 0
+        while (j < len) {
+          val y = c(i + 2 + j)
+          if (!parent.containsKey(y)) parent.put(y, y)
+          val rx = find(x); val ry = find(y)
+          if (rx != ry) parent.put(math.max(rx, ry), math.min(rx, ry))
+          j += 1
+        }
+        i += 2 + len
       }
     }
     // min id per root, then every node labels with its root's min

@@ -261,29 +261,10 @@ object TextDedup {
     df.join(best, Seq(idCol), "left_semi")
   }
 
-  /** 64-bit SimHash over a token multiset: per-token xxhash64, each bit
-    * votes ±1, sign of the vote becomes the output bit. Near-duplicates
-    * have small Hamming distance. Explode + 64 conditional sums — a single
-    * shuffle on the id, all codegen'd. Engine-native hash → fastest path;
-    * for cross-engine verification use simhashPortable.
-    */
-  def simhash64(df: DataFrame, idCol: String, toks: Column): DataFrame = {
-    val t = df.select(col(idCol), explode(toks).as("tok"))
-      .select(col(idCol), xxhash64(col("tok")).as("h"))
-    val bitSums = (0 until 64).map { j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)).as(s"b_$j")
-    }
-    val summed = t.groupBy(col(idCol)).agg(bitSums.head, bitSums.tail: _*)
-    val sh = (0 until 64).map { j =>
-      when(col(s"b_$j") > 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
-    }.reduce((x, y) => x.bitwiseOR(y))
-    summed.select(col(idCol), sh.as("simhash"))
-  }
-
   /** Portable SimHash: identical voting scheme but bits come from md5 hex
     * digits (bit j = (hexdigit(j/4) >> (j%4)) & 1), so any engine with md5
-    * can reproduce it exactly — the cross-engine-verifiable variant of
-    * simhash64. Output is a 64-char '0'/'1' string, bit 0 first.
+    * can reproduce it exactly — the cross-engine-verifiable SimHash.
+    * Output is a 64-char '0'/'1' string, bit 0 first.
     */
   def simhashPortable(df: DataFrame, idCol: String, toks: Column): DataFrame = {
     val t = df.select(col(idCol), explode(toks).as("tok"))

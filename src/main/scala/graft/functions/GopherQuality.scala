@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * bit-reproducible in any SQL engine — no float thresholds anywhere.
   *
   * Scale design: one pure-codegen projection per document — no shuffle,
-  * no UDF, no aggregation, and `filterDocs` is a plain Filter that pushes
-  * down to the scan like any other predicate. The per-document metrics
+  * no UDF, no aggregation, and `keepExpr` is a plain Filter predicate
+  * that pushes down to the scan like any other. The per-document metrics
   * are emitted alongside `keep` so downstream reweighting/debugging reads
   * them without recomputation.
   */
@@ -112,11 +112,4 @@ object GopherQuality {
   def keepExpr(text: Column, minWords: Int = 50, maxWords: Int = 100000,
       minStopwords: Int = 2): Column =
     keepFrom(metricExprs(text).toMap, minWords, maxWords, minStopwords)
-
-  /** The filter itself: documents passing every rule, original columns
-    * untouched. A plain per-row Filter — no join, no shuffle. */
-  def filterDocs(docs: DataFrame, textCol: String,
-      minWords: Int = 50, maxWords: Int = 100000,
-      minStopwords: Int = 2): DataFrame =
-    docs.filter(keepExpr(col(textCol), minWords, maxWords, minStopwords))
 }

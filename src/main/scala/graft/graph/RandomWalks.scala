@@ -3,8 +3,6 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
-import graft.operators.Budgets.integral
 
 /** Deterministic random-walk corpus generation — the DeepWalk/node2vec
   * input stage (Perozzi et al. 2014): `numWalks` walks of `length` steps
@@ -121,14 +119,16 @@ object RandomWalks {
     * join plan ranks a null dst first and counts it in outdeg, and a null
     * src is a start — semantics the long-keyed map cannot hold, so
     * null-bearing graphs refuse and keep the join plan's behavior — the
-    * PageRank collectGraph convention). */
+    * [[PackedGraph]] convention), or past what the session's driver
+    * holds. */
   def walksFused(edges: DataFrame, srcCol: String, dstCol: String,
       numWalks: Int, length: Int, salt: String): Option[DataFrame] = {
     require(numWalks >= 1 && length >= 1, s"numWalks/length >= 1")
     val maxEdges = graft.operators.Budgets.get.walkEdges
-    val srcT = edges.schema(srcCol).dataType
-    val dstT = edges.schema(dstCol).dataType
-    if (!integral(srcT) || srcT != dstT || maxEdges <= 0) return None
+    val dstT = PackedGraph.idType(edges, srcCol, dstCol) match {
+      case Some(t) if maxEdges > 0L => t
+      case _ => return None
+    }
     val spark = edges.sparkSession
     import spark.implicits._
     // ONE shuffle builds the whole ranked adjacency: collect_set dedups
@@ -141,34 +141,40 @@ object RandomWalks {
     // Null endpoints are PROBED, not filtered (round-12 advice): the join
     // plan keeps them (a null dst sorts first in the rank window and counts
     // in outdeg; a null src node is a start), so a silently-filtered fused
-    // trace would diverge from walks() — the collectGraph convention is to
+    // trace would diverge from walks() — the PackedGraph convention is to
     // refuse and fall back instead. collect_set drops a null v, so the
-    // per-group count-vs-size device detects it; a null u is its own group.
+    // group's __nullv flag marks it; a null u is its own group.
     val grouped = edges
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .groupBy(col("u"))
       .agg(sort_array(collect_set(col("v"))).as("nbrs"),
         max(when(col("v").isNull, 1L).otherwise(0L)).as("__nullv"))
       .localCheckpoint()
-    // budget + null probe BEFORE any driver collect: one bounded aggregate
-    // over the checkpointed blocks — an over-budget or null-bearing graph
-    // is refused while it is still distributed, never after it lands on
-    // the driver (same pass, no second scan of the possibly-expensive
-    // `edges` lineage).
-    val probe = grouped.agg(
-      coalesce(sum(size(col("nbrs"))), lit(0L)),
-      coalesce(sum(when(col("u").isNull, 1L).otherwise(0L)), lit(0L)),
-      coalesce(sum(col("__nullv")), lit(0L)))
-      .head()
-    val edgeCount = probe.getLong(0)
-    if (edgeCount == 0L || edgeCount > maxEdges || probe.getLong(1) != 0L
-        || probe.getLong(2) != 0L) {
-      graft.operators.Checkpoints.free(grouped)
-      return None
+    // the guarded packed collect over the checkpointed blocks: a group
+    // with a null dst collects a null src, so the probe's one null count
+    // refuses both kinds of null endpoint while the graph is distributed.
+    // ~24 B/edge of task results at worst (one group per edge); the
+    // boxed-key map of ranked arrays and its broadcast copy ~128 B/edge
+    // of driver heap
+    val got = PackedGraph.collect(
+      grouped.select(when(col("__nullv") === 0L, col("u")).as("u"), col("nbrs")),
+      maxEdges, 24L, 128L, rows = coalesce(sum(size(col("nbrs"))), lit(0L)))(
+      _.getLong(0) > 0L)
+    val chunks = got match {
+      case Some((cs, _)) => cs
+      case None =>
+        graft.operators.Checkpoints.free(grouped)
+        return None
     }
-    val adjRows = grouped.collect()
-    val adj = new java.util.HashMap[Long, Array[Long]](adjRows.length * 2)
-    adjRows.foreach(r => adj.put(r.getLong(0), r.getSeq[Long](1).toArray))
+    val adj = new java.util.HashMap[Long, Array[Long]]()
+    chunks.foreach { c =>
+      var i = 0
+      while (i < c.length) {
+        val len = c(i + 1).toInt
+        adj.put(c(i), java.util.Arrays.copyOfRange(c, i + 2, i + 2 + len))
+        i += 2 + len
+      }
+    }
     val bc = spark.sparkContext.broadcast(adj)
     val slices = spark.sparkContext.defaultParallelism
     val starts = grouped.select(col("u"))

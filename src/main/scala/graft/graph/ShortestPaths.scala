@@ -1,9 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
-import graft.operators.Budgets.integral
 
 /** Single-source shortest paths by fixed-round Bellman–Ford relaxation —
   * the BSP min-plus iteration every distributed graph engine ships
@@ -54,19 +52,46 @@ object ShortestPaths {
     dist
   }
 
+  /** Edges (src, dst, weight) as long columns, and the probe that
+    * refuses what the fused routes cannot replay — the sentinel-collision
+    * guard (round-13 advice): INF = Long.MaxValue is both the unreached
+    * marker and a representable distance. A fused distance is a sum of
+    * <= rounds edge weights, so bounding rounds·maxW strictly below the
+    * sentinel makes a collision (or a silent wrap — run()'s ANSI long
+    * arithmetic would throw instead) impossible; negative weights refuse
+    * for the same wrap reason. */
+  private def weighted(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
+      col(weightCol).cast("long").as("w"))
+  private def weightProbe = Seq(coalesce(min(col("w")), lit(0L)),
+    coalesce(max(col("w")), lit(0L)))
+  private def weightsFit(rounds: Int)(p: Row): Boolean = {
+    val maxW = p.getLong(3)
+    p.getLong(2) >= 0L && !(maxW > 0L && maxW > (Long.MaxValue - 1L) / math.max(1, rounds))
+  }
+  private final val INF = Long.MaxValue
+
   /** Budget-fused [[run]]: under `Budgets.ssspEdges` the weighted
     * multi-edge list is a BOUNDED ARTIFACT (budget-probed
     * distributed-first, collected once) and the whole R-round min-plus
     * relaxation is rounds·O(m) exact long arithmetic — the same order of
     * work as one collect of the graph, so the per-round join+checkpoint
     * scaffolding is pure overhead at this size. Bit-identical distances
-    * (min/+ on longs are order-free); None past the budget, for
-    * non-integral or mismatched id types, or when any endpoint/weight is
+    * (min/+ on longs are order-free); None past the budget or the
+    * session's driver (~24 B/edge of task results; the heap divisor is
+    * set from MEASURED FAILURE — r14: 120M edges died on a 24 GB
+    * driver's id-image build and a 48 GB driver's full-GC pauses — so the
+    * guard demands ~480 B of heap per edge and the next decade belongs to
+    * [[runBroadcast]]), for non-integral or mismatched id types, for
+    * weights the sentinel guard refuses, or when any endpoint/weight is
     * null (the join plan's null semantics are kept by falling back).
     *
-    * Round 13 (verdict task 7): the relaxation runs over a primitive CSR
-    * image grouped by DST — next(v) = min(cur(v), min over in-edges
-    * (u,w) of cur(u)+w) — so disjoint node ranges parallelize across
+    * Round 13 (verdict task 7): the relaxation runs over the primitive
+    * dst-grouped CSR ([[PackedGraph.Csr]], weights carried; the source is
+    * in the node universe, so the unreached-source case keeps its
+    * {source: 0} row) — next(v) = min(cur(v), min over in-edges (u,w) of
+    * cur(u)+w) — so disjoint node ranges parallelize across
     * defaultParallelism threads with zero synchronization (each thread
     * owns its v slots; min is order-free, so bit-identity to the BSP
     * join plan is preserved by construction); measured 1.6× faster than
@@ -75,184 +100,48 @@ object ShortestPaths {
       weightCol: String, source: Long, rounds: Int): Option[DataFrame] = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val maxEdges = graft.operators.Budgets.get.ssspEdges
-    val srcT = edges.schema(srcCol).dataType
-    val dstT = edges.schema(dstCol).dataType
-    if (!integral(srcT) || srcT != dstT || maxEdges <= 0) return None
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // budget + null probe in one aggregate over the checkpointed blocks,
-    // then PACKED PRIMITIVE CHUNKS to the driver — one long[] of
-    // (u, v, w) triples per partition through the primitive Array[Long]
-    // encoder: no shuffle at all and no boxed rows (the round-12 grouped
-    // form paid an exchange and a 24M-struct boxed collect that dominated
-    // the fused wall at 10×)
-    val e = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .localCheckpoint()
-    val probe = e.agg(count(lit(1)),
-      coalesce(sum(when(col("u").isNull || col("v").isNull
-        || col("w").isNull, 1L).otherwise(0L)), lit(0L)),
-      coalesce(min(col("w")), lit(0L)), coalesce(max(col("w")), lit(0L))).head()
-    val m = probe.getLong(0)
-    // csrCap (round-13 advice): the node-id image is a long[2m+1] and the
-    // sort keys pack (denseV << 32 | flatIndex) into Int-indexed arrays —
-    // a budget raised past ~1.07B edges would wrap m.toInt into a negative
-    // allocation instead of falling back to the join plan
-    val csrCap = (Int.MaxValue / 2 - 8).toLong
-    // ~24 B/edge of task results; the heap divisor is set from MEASURED
-    // FAILURE (r14: 120M edges died on a 24 GB driver's id-image build
-    // and a 48 GB driver's full-GC pauses), so the guard demands ~480 B
-    // of heap per edge and the next decade belongs to [[runBroadcast]]
-    val resourceCap = graft.operators.Budgets.driverRows(
-      spark.sparkContext.getConf, 24L, 192L)
-    if (m == 0L || m > math.min(math.min(maxEdges, csrCap), resourceCap)
-        || probe.getLong(1) != 0L) {
-      graft.operators.Checkpoints.free(e)
-      return None
-    }
-    // sentinel-collision guard (round-13 advice): INF = Long.MaxValue is
-    // both the unreached marker and a representable distance. A fused
-    // distance is a sum of <= rounds edge weights, so bounding
-    // rounds·maxW strictly below the sentinel makes a collision (or a
-    // silent wrap — run()'s ANSI long arithmetic would throw instead)
-    // impossible; negative weights refuse for the same wrap reason.
-    val maxW = probe.getLong(3)
-    if (probe.getLong(2) < 0L
-        || (maxW > 0L && maxW > (Long.MaxValue - 1L) / math.max(1, rounds))) {
-      graft.operators.Checkpoints.free(e)
-      return None
-    }
-    // InternalRow RDD, not the Dataset encoder — see
-    // PageRank.collectGraph: the encoder's driver-side deserialize walks
-    // a boxed array per element and dominated the fused wall at 120M
-    val chunks = e.queryExecution.toRdd.mapPartitions { it =>
-      val b = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => b += r.getLong(0); b += r.getLong(1); b += r.getLong(2) }
-      Iterator.single(b.result())
-    }.collect()
-    graft.operators.Checkpoints.free(e)
-    // CSR grouped by dst (the gather side); node universe = every endpoint
-    // + the source, so the unreached-source case keeps its {source: 0}
-    // row. Build phases are parallel like PageRank.buildCsr: dense-map at
-    // disjoint offsets, one parallelSort on (denseV << 32 | flatIndex)
-    // keys (the flat index carries the weight through the sort), parallel
-    // gather — deterministic at any parallelism (equal keys impossible:
-    // the low word is unique).
-    val mi = m.toInt
-    val ids = new Array[Long](2 * mi + 1)
-    var p = 0
-    ids(p) = source; p += 1
-    chunks.foreach { c =>
-      var i = 0
-      while (i < c.length) { ids(p) = c(i); ids(p + 1) = c(i + 1); p += 2
-        i += 3 }
-    }
-    java.util.Arrays.parallelSort(ids)
-    var n = 0
-    var i = 0
-    while (i < ids.length) {
-      if (n == 0 || ids(n - 1) != ids(i)) { ids(n) = ids(i); n += 1 }
-      i += 1
-    }
-    val nodes = java.util.Arrays.copyOf(ids, n)
-    val offs = new Array[Int](chunks.length + 1)
-    i = 0
-    while (i < chunks.length) { offs(i + 1) = offs(i) + chunks(i).length / 3
-      i += 1 }
-    val us = new Array[Int](mi)
-    val ws = new Array[Long](mi)
-    val keys = new Array[Long](mi)
-    val fjp = java.util.concurrent.ForkJoinPool.commonPool()
-    val mapTasks = new java.util.ArrayList[java.util.concurrent.Callable[Unit]]()
-    chunks.indices.foreach { ci =>
-      mapTasks.add { () =>
-        val c = chunks(ci)
-        var o = offs(ci)
-        var j = 0
-        while (j < c.length) {
-          us(o) = java.util.Arrays.binarySearch(nodes, c(j))
-          ws(o) = c(j + 2)
-          keys(o) = (java.util.Arrays.binarySearch(nodes, c(j + 1)).toLong
-            << 32) | o.toLong
-          o += 1; j += 3
-        }
-      }
-    }
-    fjp.invokeAll(mapTasks).forEach(_.get())
-    java.util.Arrays.parallelSort(keys)
-    val inSrc = new Array[Int](mi)
-    val inW = new Array[Long](mi)
-    val gatherThreads = math.max(1, math.min(
-      Runtime.getRuntime.availableProcessors(), math.max(1, mi / 65536)))
-    val gatherTasks = new java.util.ArrayList[java.util.concurrent.Callable[Unit]]()
-    (0 until gatherThreads).foreach { t =>
-      gatherTasks.add { () =>
-        var j = (t.toLong * mi / gatherThreads).toInt
-        val hi = ((t + 1).toLong * mi / gatherThreads).toInt
-        while (j < hi) {
-          val fi = keys(j).toInt
-          inSrc(j) = us(fi)
-          inW(j) = ws(fi)
-          j += 1
-        }
-      }
-    }
-    fjp.invokeAll(gatherTasks).forEach(_.get())
-    val inOff = new Array[Int](n + 1)
-    i = 0
-    while (i < mi) { inOff((keys(i) >>> 32).toInt + 1) += 1; i += 1 }
-    i = 1
-    while (i <= n) { inOff(i) += inOff(i - 1); i += 1 }
-    val INF = Long.MaxValue
-    var cur = new Array[Long](n)
-    java.util.Arrays.fill(cur, INF)
-    cur(java.util.Arrays.binarySearch(nodes, source)) = 0L
-    var next = new Array[Long](n)
-    val threads = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, n))
-    val bounds = (0 to threads).map(t => (t.toLong * n / threads).toInt)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    try {
-      var r = 0
-      while (r < rounds) {
-        val c = cur
-        val nx = next
-        val tasks = new java.util.ArrayList[java.util.concurrent.Callable[Unit]]()
-        (0 until threads).foreach { t =>
-          tasks.add { () =>
-            var v = bounds(t)
-            val hi = bounds(t + 1)
-            while (v < hi) {
-              var best = c(v)
-              var e = inOff(v)
-              val end = inOff(v + 1)
-              while (e < end) {
-                val du = c(inSrc(e))
-                // only reached nodes relax — the join plan's inner join
-                if (du != INF) {
-                  val cand = du + inW(e)
-                  if (cand < best) best = cand
+    PackedGraph.idType(edges, srcCol, dstCol).filter(_ => maxEdges > 0L).flatMap { _ =>
+      PackedGraph.driverCsr(weighted(edges, srcCol, dstCol, weightCol), maxEdges,
+        24L, 192L, Some(source), weightProbe)(weightsFit(rounds))
+    }.map { g =>
+      val spark = edges.sparkSession
+      val n = g.n
+      val dist = PackedGraph.withPool(n, spark.sparkContext.defaultParallelism) {
+        (pool, threads) =>
+          var cur = new Array[Long](n)
+          java.util.Arrays.fill(cur, INF)
+          cur(g.denseIdOf(source)) = 0L
+          var next = new Array[Long](n)
+          var r = 0
+          while (r < rounds) {
+            val c = cur
+            val nx = next
+            PackedGraph.inParallel(pool, n, threads) { (_, lo, hi) =>
+              var v = lo
+              while (v < hi) {
+                var best = c(v)
+                var e = g.inOff(v)
+                val end = g.inOff(v + 1)
+                while (e < end) {
+                  val du = c(g.inSrc(e))
+                  // only reached nodes relax — the join plan's inner join
+                  if (du != INF) {
+                    val cand = du + g.inW(e)
+                    if (cand < best) best = cand
+                  }
+                  e += 1
                 }
-                e += 1
+                nx(v) = best
+                v += 1
               }
-              nx(v) = best
-              v += 1
             }
+            val tmp = cur; cur = next; next = tmp
+            r += 1
           }
-        }
-        pool.invokeAll(tasks).forEach(_.get())
-        val tmp = cur; cur = next; next = tmp
-        r += 1
+          cur
       }
-    } finally pool.shutdown()
-    val b = Seq.newBuilder[(Long, Long)]
-    i = 0
-    while (i < n) {
-      if (cur(i) != INF) b += ((nodes(i), cur(i)))
-      i += 1
+      PackedGraph.frame(spark, g.nodes, dist, "dist", keep = _ != INF)
     }
-    Some(spark.createDataset(b.result()).toDF("node", "dist"))
   }
 
   /** Executor-side broadcast-CSR sweep (round 15, verdict task 5) — the
@@ -260,10 +149,11 @@ object ShortestPaths {
     * attempts died on BOTH a 24 GB driver (OOM in the id-image build)
     * and a 48 GB one (full-GC heartbeat suicide), because the driver
     * kernel's resource bound is ~192 B per EDGE. This sweep never
-    * collects the edges at all: they are dense-indexed ONCE against the
-    * broadcast node dictionary and cached as packed primitive chunks
-    * ACROSS THE EXECUTORS (memory-and-disk, so cache pressure spills
-    * instead of failing), and each Bellman–Ford round is
+    * collects the edges at all ([[PackedGraph.executorImage]]: they are
+    * dense-indexed ONCE against the broadcast node dictionary — the
+    * distinct endpoints plus the source, guarded by NODE count — and
+    * cached as packed (uIdx, vIdx, w) chunks ACROSS THE EXECUTORS), and
+    * each Bellman–Ford round is
     *   broadcast(dist) → per-partition relaxation into a local sparse
     *   min-map (only IMPROVEMENTS vs the broadcast image are emitted)
     *   → one reduceByKey(min) → one ≤ n-entry collect → driver apply.
@@ -280,160 +170,63 @@ object ShortestPaths {
     *
     * Returns None (→ caller falls back to the join plan) for
     * non-integral or mismatched id types, null endpoints/weights,
-    * negative weights, a rounds·maxW sum that could reach the
-    * Long.MaxValue unreached sentinel, or a node count past
-    * `Budgets.ssspNodes` or the session-resource guard (node-dictionary
-    * collect ~24 B/node of task results; driver arrays + per-round
-    * broadcast ~64 B/node of heap). Measured 2.3× faster than the join
-    * plan at 120M edges / 8M nodes on a default 8g driver (SCALE.md
-    * r15graph). */
+    * weights the sentinel guard refuses, or a node count past
+    * `Budgets.ssspNodes` or the session-resource guard. Measured 2.3×
+    * faster than the join plan at 120M edges / 8M nodes on a default 8g
+    * driver (SCALE.md r15graph). */
   def runBroadcast(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, source: Long, rounds: Int): Option[DataFrame] = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val maxNodes = graft.operators.Budgets.get.ssspNodes
-    val srcT = edges.schema(srcCol).dataType
-    val dstT = edges.schema(dstCol).dataType
-    if (!integral(srcT) || srcT != dstT || maxNodes <= 0) return None
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val sc = spark.sparkContext
-    // DISK_ONLY, not localCheckpoint: the projected frame is scanned
-    // three times (probe, node dictionary, packed build) and must be
-    // STABLE across scans for any source — but at 120M edges the
-    // checkpoint's deserialized in-memory blocks (~5 GB) starved the
-    // execution pool on an 8g session (UNABLE_TO_ACQUIRE_MEMORY in the
-    // dictionary distinct — the first r15graph attempt). Disk-backed
-    // blocks give the same scan stability with zero storage-pool
-    // pressure, which is also the only posture that scales: at 100 TB
-    // you re-read cheap columnar bytes, you never materialize a copy.
-    val e = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
-        col(weightCol).cast("long").as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val probe = e.agg(count(lit(1)),
-      coalesce(sum(when(col("u").isNull || col("v").isNull
-        || col("w").isNull, 1L).otherwise(0L)), lit(0L)),
-      coalesce(min(col("w")), lit(0L)), coalesce(max(col("w")), lit(0L))).head()
-    val m = probe.getLong(0)
-    val maxW = probe.getLong(3)
-    if (m == 0L || probe.getLong(1) != 0L || probe.getLong(2) < 0L
-        || (maxW > 0L && maxW > (Long.MaxValue - 1L) / math.max(1, rounds))) {
-      e.unpersist(blocking = false)
-      return None
-    }
-    // node dictionary: distinct endpoints + the source, guarded by NODE
-    // count (the whole point: m never touches the driver). Same packed
-    // InternalRow-RDD transfer as the driver kernels — no boxed rows.
-    val nodesDf = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node"))).distinct().localCheckpoint()
-    val nDistinct = nodesDf.count()
-    val nodeCap = (Int.MaxValue / 2 - 8).toLong
-    val resourceCap = graft.operators.Budgets.driverRows(sc.getConf, 24L, 64L)
-    if (nDistinct > math.min(math.min(maxNodes, nodeCap), resourceCap)) {
-      graft.operators.Checkpoints.free(nodesDf)
-      e.unpersist(blocking = false)
-      return None
-    }
-    val nodeChunks = nodesDf.queryExecution.toRdd.mapPartitions { it =>
-      val b = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach(r => b += r.getLong(0))
-      Iterator.single(b.result())
-    }.collect()
-    graft.operators.Checkpoints.free(nodesDf)
-    val ids = new Array[Long](nodeChunks.map(_.length).sum + 1)
-    ids(0) = source
-    var p = 1
-    nodeChunks.foreach { c =>
-      System.arraycopy(c, 0, ids, p, c.length); p += c.length
-    }
-    java.util.Arrays.parallelSort(ids)
-    var n = 0
-    var i = 0
-    while (i < ids.length) {
-      if (n == 0 || ids(n - 1) != ids(i)) { ids(n) = ids(i); n += 1 }
-      i += 1
-    }
-    val nodes = java.util.Arrays.copyOf(ids, n)
-    // dense-index the edges ONCE on the executors; the packed chunks
-    // (uIdx, vIdx, w) stay distributed for every round. Emitted as
-    // FIXED-SIZE sub-chunks (1M triples = 24 MB), not one array per
-    // partition: a single ArrayBuilder doubling up to a ~90 MB
-    // partition image holds ~2x that transiently, and 32 concurrent
-    // tasks of it starved the 8g execution pool in the first r15graph
-    // attempt — the bounded chunk keeps the build's working set flat
-    // at any partition size.
-    val bcNodes = sc.broadcast(nodes)
-    val chunkTriples = 1 << 20
-    val packed = e.queryExecution.toRdd.mapPartitions { it =>
-      val dict = bcNodes.value
-      new Iterator[Array[Long]] {
-        def hasNext: Boolean = it.hasNext
-        def next(): Array[Long] = {
-          val b = new Array[Long](3 * chunkTriples)
-          var k = 0
-          while (k < b.length && it.hasNext) {
-            val r = it.next()
-            b(k) = java.util.Arrays.binarySearch(dict, r.getLong(0)).toLong
-            b(k + 1) = java.util.Arrays.binarySearch(dict, r.getLong(1)).toLong
-            b(k + 2) = r.getLong(2)
-            k += 3
-          }
-          if (k == b.length) b else java.util.Arrays.copyOf(b, k)
-        }
-      }
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    packed.count() // materialize so e's blocks can be freed now
-    e.unpersist(blocking = false)
-    val INF = Long.MaxValue
-    val cur = new Array[Long](n)
-    java.util.Arrays.fill(cur, INF)
-    cur(java.util.Arrays.binarySearch(nodes, source)) = 0L
-    try {
-      var r = 0
-      while (r < rounds) {
-        val bcDist = sc.broadcast(cur)
-        val ups = packed.mapPartitions { it =>
-          val d = bcDist.value
-          // sparse partition-local min-combine: only strict improvements
-          // over the broadcast image leave the partition
-          val best = new scala.collection.mutable.LongMap[Long]()
-          it.foreach { c =>
-            var j = 0
-            while (j < c.length) {
-              val du = d(c(j).toInt)
-              if (du != INF) {
-                val cand = du + c(j + 2)
-                val v = c(j + 1).toInt
-                if (cand < d(v)) {
-                  val prev = best.getOrElse(v.toLong, INF)
-                  if (cand < prev) best.update(v.toLong, cand)
+    PackedGraph.idType(edges, srcCol, dstCol).filter(_ => maxNodes > 0L).flatMap { _ =>
+      PackedGraph.executorImage(weighted(edges, srcCol, dstCol, weightCol), maxNodes,
+        Some(source), weightProbe)(weightsFit(rounds))
+    }.map { case (nodes, bcNodes, packed) =>
+      val spark = edges.sparkSession
+      val cur = new Array[Long](nodes.length)
+      java.util.Arrays.fill(cur, INF)
+      cur(java.util.Arrays.binarySearch(nodes, source)) = 0L
+      try {
+        var r = 0
+        while (r < rounds) {
+          val bcDist = spark.sparkContext.broadcast(cur)
+          val ups = packed.mapPartitions { it =>
+            val d = bcDist.value
+            // sparse partition-local min-combine: only strict improvements
+            // over the broadcast image leave the partition
+            val best = new scala.collection.mutable.LongMap[Long]()
+            it.foreach { c =>
+              var j = 0
+              while (j < c.length) {
+                val du = d(c(j).toInt)
+                if (du != INF) {
+                  val cand = du + c(j + 2)
+                  val v = c(j + 1).toInt
+                  if (cand < d(v)) {
+                    val prev = best.getOrElse(v.toLong, INF)
+                    if (cand < prev) best.update(v.toLong, cand)
+                  }
                 }
+                j += 3
               }
-              j += 3
             }
+            best.iterator
+          }.reduceByKey((a, b) => math.min(a, b)).collect()
+          bcDist.destroy()
+          ups.foreach { case (v, dvt) =>
+            val vi = v.toInt
+            if (dvt < cur(vi)) cur(vi) = dvt
           }
-          best.iterator
-        }.reduceByKey((a, b) => math.min(a, b)).collect()
-        bcDist.destroy()
-        ups.foreach { case (v, dvt) =>
-          val vi = v.toInt
-          if (dvt < cur(vi)) cur(vi) = dvt
+          r += 1
         }
-        r += 1
+      } finally {
+        packed.unpersist(blocking = false)
+        bcNodes.destroy()
       }
-    } finally {
-      packed.unpersist(blocking = false)
-      bcNodes.destroy()
+      // long node/dist, matching run()'s union-coerced schema and
+      // runFused's output exactly (bit-identity includes the schema)
+      PackedGraph.frame(spark, nodes, cur, "dist", keep = _ != INF)
     }
-    val b = Seq.newBuilder[(Long, Long)]
-    i = 0
-    while (i < n) {
-      if (cur(i) != INF) b += ((nodes(i), cur(i)))
-      i += 1
-    }
-    // long node/dist, matching run()'s union-coerced schema and
-    // runFused's output exactly (bit-identity includes the schema)
-    Some(spark.createDataset(b.result()).toDF("node", "dist"))
   }
 
   /** Budget dispatcher for [[run]]: driver-CSR kernel under

@@ -2,8 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
-import graft.operators.Budgets.integral
 
 /** Exact triangle counting + local clustering coefficients over an
   * undirected graph — the degree-ordered orientation algorithm (the
@@ -58,15 +56,16 @@ object Triangles {
     * against each out-neighbor's in a distributed loop with per-partition
     * count pre-aggregation, so the only remaining exchanges are |V| apex
     * ids out and ≤|V| partial counts back. Returns None — callers fall
-    * back to the composed plan — past the budget or when the id columns
-    * are not one shared integral type (the driver orientation keys and
-    * ranks by long). */
+    * back to the composed plan — past the budget or what the session's
+    * driver holds, or when the id columns are not one shared integral
+    * type (the driver orientation keys and ranks by long). */
   def perNodeFused(edges: DataFrame, srcCol: String,
       dstCol: String): Option[DataFrame] = {
     val maxEdges = graft.operators.Budgets.get.triangleEdges
-    val srcT = edges.schema(srcCol).dataType
-    val dstT = edges.schema(dstCol).dataType
-    if (!integral(srcT) || srcT != dstT || maxEdges <= 0) return None
+    val srcT = PackedGraph.idType(edges, srcCol, dstCol) match {
+      case Some(t) if maxEdges > 0L => t
+      case _ => return None
+    }
     val spark = edges.sparkSession
     import spark.implicits._
     // half-adjacency over canonical pairs: collect_set dedups map-side, so
@@ -78,43 +77,27 @@ object Triangles {
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .groupBy(col("u")).agg(collect_set(col("v")).as("nbrs"))
       .localCheckpoint()
-    val m = grouped.agg(coalesce(sum(size(col("nbrs"))), lit(0L)))
-      .head().getLong(0)
-    // Int-index bound (round-16, ADVICE r15): the packed transfer and the
-    // CSR arrays index with Int — packed entries total ≤ 2·groups + m ≤ 3m
-    // (each group contributes [u, len] + its neighbors), so a gate
-    // raised past ~Int.MaxValue/3 would overflow into negative
-    // array sizes/indices instead of refusing. Cap the fused route
-    // explicitly; oversized graphs fall back to the composed plan.
-    val intIndexCap = (Int.MaxValue / 3 - 4).toLong
-    if (m == 0L || m > maxEdges || m > intIndexCap) {
-      graft.operators.Checkpoints.free(grouped)
-      return None
-    }
-    // PACKED PRIMITIVE transfer (round 15 — the r14 PageRank lesson
-    // applied here): the old boxed Dataset collect deserialized every
-    // half-adjacency row through Row + Seq[Long] (per-element boxing on
-    // the single-threaded driver), and the old driver structures were
-    // java.util.HashMap[java.lang.Long, ...] — a boxed lookup per wedge
-    // step in the kernel's hottest loop. Each partition now emits one
-    // long[] stream of [u, len, v1..vlen] records (UnsafeArrayData →
-    // toLongArray is a bulk copy), and the driver builds DENSE int-indexed
-    // CSR arrays: node dictionary (sorted dedup), degrees, and the
-    // (deg, id)-oriented out-adjacency, id-sorted per node. Counts,
-    // orientation, and intersections are value-identical — only the
-    // representation changed (spec-pinned vs the composed plan).
-    val chunks = grouped.queryExecution.toRdd.mapPartitions { it =>
-      val b = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r =>
-        val vs = r.getArray(1).toLongArray()
-        b += r.getLong(0); b += vs.length.toLong
-        var i = 0
-        while (i < vs.length) { b += vs(i); i += 1 }
-      }
-      Iterator.single(b.result())
-    }.collect()
+    // PACKED PRIMITIVE transfer of [u, len, v1..vlen] records (round 15 —
+    // the r14 PageRank lesson; [[PackedGraph.collect]]): the old boxed
+    // Dataset collect deserialized every row through Row + Seq[Long] on
+    // the single-threaded driver. ~24 B/edge of task results at worst
+    // (one group per edge); the id image, its sorted copy and the arrays
+    // below peak near ~96 B/edge of driver heap. Int-index bound
+    // (round-16, ADVICE r15): the transfer and the CSR arrays index with
+    // Int, and packed entries total ≤ 2·groups + m ≤ 3m, so a gate raised
+    // past ~Int.MaxValue/3 refuses instead of overflowing.
+    val got = PackedGraph.collect(grouped, math.min(maxEdges, (Int.MaxValue / 3 - 4).toLong),
+      24L, 96L, rows = coalesce(sum(size(col("nbrs"))), lit(0L)))(_.getLong(0) > 0L)
     graft.operators.Checkpoints.free(grouped)
-    // node dictionary: every endpoint, sorted + deduped
+    val chunks = got match {
+      case Some((cs, _)) => cs
+      case None => return None
+    }
+    // the driver builds DENSE int-indexed arrays — node dictionary,
+    // degrees, and the (deg, id)-oriented out-adjacency, id-sorted per
+    // node — so no boxed lookup sits in the kernel's hottest loop. Counts,
+    // orientation, and intersections are value-identical to the composed
+    // plan (spec-pinned).
     val ids = new Array[Long](chunks.map(_.length).sum) // upper bound
     var p = 0
     chunks.foreach { c =>
@@ -127,15 +110,8 @@ object Triangles {
         i += 2 + len
       }
     }
-    val sorted = java.util.Arrays.copyOf(ids, p)
-    java.util.Arrays.parallelSort(sorted)
-    var n = 0
-    var si = 0
-    while (si < sorted.length) {
-      if (n == 0 || sorted(n - 1) != sorted(si)) { sorted(n) = sorted(si); n += 1 }
-      si += 1
-    }
-    val nodes = java.util.Arrays.copyOf(sorted, n)
+    val nodes = PackedGraph.dictionary(java.util.Arrays.copyOf(ids, p))
+    val n = nodes.length
     def idx(id: Long): Int = java.util.Arrays.binarySearch(nodes, id)
     // exact degrees per dense id
     val deg = new Array[Long](n)
@@ -226,16 +202,11 @@ object Triangles {
           }
         }
         counts.iterator.map { case (i, c) => (nodesL(i.toInt), c) }
-      }.toDF("n", "__tri")
-      .groupBy(col("n")).agg(sum(col("__tri")).as("triangles"))
-    val degDf = spark.createDataset(
-      { val b = Seq.newBuilder[(Long, Long)]
-        var i = 0
-        while (i < n) { b += ((nodes(i), deg(i))); i += 1 }
-        b.result() })
-      .toDF("n", "degree")
-    Some(degDf.join(partials, Seq("n"), "left")
-      .select(col("n").cast(srcT).as("node"), col("degree"),
+      }.toDF("node", "__tri")
+      .groupBy(col("node")).agg(sum(col("__tri")).as("triangles"))
+    Some(PackedGraph.frame(spark, nodes, deg, "degree")
+      .join(partials, Seq("node"), "left")
+      .select(col("node").cast(srcT).as("node"), col("degree"),
         coalesce(col("triangles"), lit(0L)).as("triangles"),
         when(col("degree") >= 2L,
           (coalesce(col("triangles"), lit(0L)) * 2L).cast("double")

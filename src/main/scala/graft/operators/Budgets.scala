@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *
   * | gate | value | bounds | measured crossover (SCALE.md bullet) |
   * |---|---|---|---|
-  * | `pageRankEdges` | 100M | edges `PageRank.runFused`/`personalizedFused` collect into the driver CSR | "Round-14 graph decade" (`r14graph`) |
+  * | `pageRankEdges` | 100M | edges `PageRank.runFused`/`personalizedFused` collect into the driver CSR, and the seeds `personalizedFused` collects | "Round-14 graph decade" (`r14graph`) |
   * | `pageRankNodes` | 16M | distinct nodes `PageRank.runBroadcast` holds on the driver | none for PageRank; the same sweep for SSSP: "Round-15 SSSP decade" |
   * | `ssspEdges` | 16M | edges `ShortestPaths.runFused` collects | "Round-13 graph kernels: parallel CSR builds move the fused crossover a decade" (`r13graph`) |
   * | `ssspNodes` | 16M | distinct nodes `ShortestPaths.runBroadcast` holds | "Round-15 SSSP decade" (`r15graph`): 2× its measured 8M nodes |
@@ -36,7 +36,10 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * The driver-resource guard ([[Budgets.driverRows]]) bounds every
   * driver collect of the graph kernels by the session itself, whatever
   * the gate says: 90 % of `spark.driver.maxResultSize` and 40 % of the
-  * JVM's max heap, each divided by the caller's bytes per row. Ahead of
+  * JVM's max heap, each divided by the caller's bytes per row. The
+  * graph kernels' packed format — the guarded collect that applies gate
+  * and guard before anything reaches the driver, the node dictionary and
+  * the dst-grouped CSR — lives in `graft.graph.PackedGraph`. Ahead of
   * any size gate, a fused kernel keys ids by long, so non-integral ids
   * take the distributed plan ([[Budgets.integral]]).
   */

@@ -195,8 +195,7 @@ object TextQueries {
     },
 
     // Portable SimHash (md5-hex-digit bits — exactly reproducible by the
-    // DuckDB oracle; simhash64 is the engine-native fast path, its Hamming
-    // properties are asserted in TextDedupSpec).
+    // DuckDB oracle; TextDedupSpec holds the engine-native xxhash form).
     "q35_simhash" -> { (s, d) =>
       TextDedup.simhashPortable(table(s, d, "documents"), "doc_id",
           TextOps.tokens(col("text")))

@@ -122,6 +122,21 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       == ConnectedComponents.run(withNull).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap)
   }
+
+  test("fused guarded collect caps the collected pair count; runAuto serves the joins past it") {
+    // 5 rows, of which a self-loop and a null pair never reach the driver:
+    // the shared guarded collect admits the 3 pairs at a cap of 3 and
+    // refuses at 2
+    val df = Seq((Option(1L), Option(2L)), (Option(2L), Option(3L)), (Option(5L), Option(6L)),
+      (Option(7L), Option(7L)), (Option.empty[Long], Option(9L))).toDF("a", "b")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
+    assert(Budgets.scoped(_.copy(componentEdges = 3L))(ConnectedComponents.runFused(df))
+      .get.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+    assert(Budgets.scoped(_.copy(componentEdges = 2L))(
+      ConnectedComponents.runFused(df)).isEmpty)
+    assert(Budgets.scoped(_.copy(componentEdges = 2L))(ConnectedComponents.runAuto(df)
+      .collect()).map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+  }
 }
 
 /** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */

@@ -108,7 +108,7 @@ class TextDedupSpec extends SparkSpecBase {
     val perturbed = ((1 to 57).map(i => s"tok$i") ++ Seq("x", "y", "z")).mkString(" ")
     val other = (1 to 60).map(i => s"zzz$i").mkString(" ")
     val df = Seq((1L, base), (2L, base), (3L, perturbed), (4L, other)).toDF("doc_id", "text")
-    val sh = TextDedup.simhash64(df, "doc_id", TextOps.tokens(col("text")))
+    val sh = TextDedupSpec.simhash64(df, "doc_id", TextOps.tokens(col("text")))
     val m = sh.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(m(1L), m(2L)) == 0)
@@ -156,4 +156,25 @@ object TextDedupSpec {
       .select(col("canonical_id").as(idCol))
     df.join(keep, Seq(idCol), "left_semi")
   }
+
+  /** 64-bit SimHash over a token multiset: per-token xxhash64, each bit
+    * votes ±1, sign of the vote becomes the output bit. Near-duplicates
+    * have small Hamming distance. Explode + 64 conditional sums — a single
+    * shuffle on the id, all codegen'd. Engine-native hash → fastest path;
+    * the engine-native form of
+    * `TextDedup.simhashPortable`, whose md5 bits any engine replays.
+    */
+  def simhash64(df: DataFrame, idCol: String, toks: Column): DataFrame = {
+    val t = df.select(col(idCol), explode(toks).as("tok"))
+      .select(col(idCol), xxhash64(col("tok")).as("h"))
+    val bitSums = (0 until 64).map { j =>
+      sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)).as(s"b_$j")
+    }
+    val summed = t.groupBy(col(idCol)).agg(bitSums.head, bitSums.tail: _*)
+    val sh = (0 until 64).map { j =>
+      when(col(s"b_$j") > 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
+    }.reduce((x, y) => x.bitwiseOR(y))
+    summed.select(col(idCol), sh.as("simhash"))
+  }
+
 }

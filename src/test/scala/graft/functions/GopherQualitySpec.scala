@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GopherQualitySpec extends SparkSpecBase {
@@ -13,7 +14,7 @@ class GopherQualitySpec extends SparkSpecBase {
   private def docs(rows: (Long, String)*) = rows.toSeq.toDF("id", "text")
 
   private def kept(rows: (Long, String)*): Seq[Long] =
-    GopherQuality.filterDocs(docs(rows: _*), "text")
+    GopherQualitySpec.filterDocs(docs(rows: _*), "text")
       .select($"id").as[Long].collect().toSeq.sorted
 
   test("the passing baseline passes; each rule violation alone rejects") {
@@ -82,11 +83,22 @@ class GopherQualitySpec extends SparkSpecBase {
   }
 
   test("the battery is a pure per-row filter: no shuffle, no join, no UDF") {
-    val plan = GopherQuality.filterDocs(docs((1L, good)), "text")
+    val plan = GopherQualitySpec.filterDocs(docs((1L, good)), "text")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.contains("Join"),
       s"quality filtering must not shuffle:\n$plan")
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
       s"rules must stay codegen expressions:\n$plan")
   }
+}
+
+/** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */
+object GopherQualitySpec {
+
+  /** The filter itself: documents passing every rule, original columns
+    * untouched. A plain per-row Filter — no join, no shuffle. */
+  def filterDocs(docs: DataFrame, textCol: String,
+      minWords: Int = 50, maxWords: Int = 100000,
+      minStopwords: Int = 2): DataFrame =
+    docs.filter(GopherQuality.keepExpr(col(textCol), minWords, maxWords, minStopwords))
 }

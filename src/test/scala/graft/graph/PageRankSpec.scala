@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Budgets
 
@@ -128,8 +129,8 @@ class PageRankSpec extends SparkSpecBase {
 
   test("massDelta shrinks geometrically with iterations (convergence gap)") {
     val df = g.toDF("src", "dst")
-    val d1 = PageRank.massDelta(PageRank.run(df, 1), PageRank.run(df, 2))
-    val d4 = PageRank.massDelta(PageRank.run(df, 4), PageRank.run(df, 5))
+    val d1 = PageRankSpec.massDelta(PageRank.run(df, 1), PageRank.run(df, 2))
+    val d4 = PageRankSpec.massDelta(PageRank.run(df, 4), PageRank.run(df, 5))
     assert(d4 < d1)
   }
 
@@ -227,4 +228,52 @@ class PageRankSpec extends SparkSpecBase {
     assert(fused.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       == joined.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
   }
+
+  test("scale below the node / seed count: zero teleport on the join and fused routes") {
+    // scale DIV N = 0 (scale 3, 5 nodes) and scale DIV |S| = 0 (scale 2,
+    // 3 seeds) start every rank at 0, which the shared formula keeps;
+    // scale 7 leaves a one-unit teleport whose floors the routes share
+    val df = g.toDF("src", "dst")
+    val seeds = Seq(1L, 2L, 99L)
+    def toMap(d: DataFrame) = d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val iters = 2
+    for (scale <- Seq(2L, 3L, 7L)) {
+      val want = reference(g, iters, scale = scale)
+      assert(toMap(PageRank.run(df, iters, scale = scale)) === want, s"join scale=$scale")
+      assert(toMap(PageRank.runFused(df, iters, scale = scale).get) === want,
+        s"fused scale=$scale")
+      val ppr = referencePpr(g, seeds.toSet, iters, scale = scale)
+      assert(toMap(PageRank.personalized(df, seeds.toDF("node"), iters, scale = scale))
+        === ppr, s"personalized join scale=$scale")
+      assert(toMap(PageRank.personalizedFused(df, seeds.toDF("node"), iters,
+        scale = scale).get) === ppr, s"personalized fused scale=$scale")
+    }
+  }
+
+  test("fused PPR refuses a seed set past the edge gate; Auto serves the join plan") {
+    // the graph's 6 edges fit the gate, its 7 distinct seeds do not: the
+    // seed collect refuses at the same cap as the graph collect
+    val df = g.toDF("src", "dst")
+    val seeds = (1L to 7L).toDF("node")
+    assert(Budgets.scoped(_.copy(pageRankEdges = 6L))(
+      PageRank.personalizedFused(df, seeds, 2)).isEmpty)
+    assert(Budgets.scoped(_.copy(pageRankEdges = 7L))(
+      PageRank.personalizedFused(df, seeds, 2)).isDefined)
+    assert(Budgets.scoped(_.copy(pageRankEdges = 6L))(
+        PageRank.personalizedAuto(df, seeds, 2).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      === referencePpr(g, (1L to 7L).toSet, 2))
+  }
+}
+
+/** Spec-held forms: no query, Verify, Bench or perfbench reaches them. */
+object PageRankSpec {
+
+  /** Total |rank−rank'| between two rank frames (fixed-point units) — the
+    * L1 convergence gap, one aggregate. */
+  def massDelta(a: DataFrame, b: DataFrame): Long =
+    a.select(col("node"), col("rank_fp").as("__a"))
+      .join(b.select(col("node"), col("rank_fp").as("__b")), Seq("node"), "outer")
+      .agg(sum(abs(coalesce(col("__a"), lit(0L)) - coalesce(col("__b"), lit(0L)))))
+      .head().getLong(0)
 }

@@ -115,4 +115,19 @@ class RandomWalksSpec extends SparkSpecBase {
     assert(auto.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
       == joined.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet)
   }
+
+  test("fused walker's guarded collect caps the deduplicated adjacency") {
+    // 4 rows with one parallel edge rank 3 adjacency entries: the shared
+    // guarded collect admits them at a cap of 3 and refuses at 2, where
+    // walksAuto's join plan writes the same traces
+    val g = Seq((1L, 2L), (2L, 1L), (1L, 3L), (1L, 2L)).toDF("src", "dst")
+    val want = RandomWalks.walks(g, "src", "dst", 2, 3, "cap").collect().toSet
+    val at3 = Budgets.scoped(_.copy(walkEdges = 3L))(
+      RandomWalks.walksFused(g, "src", "dst", 2, 3, "cap"))
+    assert(at3.isDefined && at3.get.collect().toSet == want)
+    assert(Budgets.scoped(_.copy(walkEdges = 2L))(
+      RandomWalks.walksFused(g, "src", "dst", 2, 3, "cap")).isEmpty)
+    assert(Budgets.scoped(_.copy(walkEdges = 2L))(
+      RandomWalks.walksAuto(g, "src", "dst", 2, 3, "cap").collect().toSet) == want)
+  }
 }

@@ -127,4 +127,20 @@ class TrianglesSpec extends SparkSpecBase {
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(strTri == Map("a" -> 1L, "b" -> 1L, "c" -> 1L))
   }
+
+  test("fused kernel's guarded collect caps the canonical edge count, not the raw rows") {
+    // 12 raw rows (reversed copies, a duplicate, a self-loop) canonicalize
+    // to the square's 5 edges: the shared guarded collect admits them at a
+    // cap of 5 and refuses at 4, where the dispatcher serves the composed plan
+    val noisy = square.union(square.select(col("dst"), col("src")))
+      .union(Seq((1, 2), (3, 3)).toDF("src", "dst"))
+    val want = Triangles.perNodeComposed(square, "src", "dst").collect().toSet
+    val at5 = Budgets.scoped(_.copy(triangleEdges = 5L))(
+      Triangles.perNodeFused(noisy, "src", "dst"))
+    assert(at5.isDefined && at5.get.collect().toSet == want)
+    assert(Budgets.scoped(_.copy(triangleEdges = 4L))(
+      Triangles.perNodeFused(noisy, "src", "dst")).isEmpty)
+    assert(Budgets.scoped(_.copy(triangleEdges = 4L))(
+      Triangles.perNode(noisy, "src", "dst").collect().toSet) == want)
+  }
 }

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Tests for check_reach.py on synthetic source trees: a public def that
-only a spec calls fails the lint; a name SURVEY's capability table gives
-as where a row lives, a name another main file calls, a name a comment
-names, a private def and a KEEP name pass.
+only a spec calls, or that main names only in a comment, fails the lint;
+a name SURVEY's capability table gives as where a row lives, a name
+another main file calls (a `//` inside a string literal is no comment), a
+private def and a KEEP name pass.
 
 Run from the repo root:  python3 tools/test_check_reach.py
 Exit 0 = every case behaves; exit 1 = the lint regressed.
@@ -56,7 +57,9 @@ CLEAN = {
         "}\n",
     MAIN + "Verify.scala":
         "object Verify {\n"
-        "  def main(args: Array[String]): Unit = RecsTable.assemble(1)\n"
+        "  def main(args: Array[String]): Unit = {\n"
+        "    RecsTable.assemble(1); val log = \"s3://bucket/log\"; Sinks.compact(log)\n"
+        "  }\n"
         "}\n",
     MAIN + "Explain.scala":
         "object Explain {\n"
@@ -74,9 +77,15 @@ SPEC_ONLY_HIT[MAIN + "serve/Sinks.scala"] = CLEAN[MAIN + "serve/Sinks.scala"].re
 SPEC_ONLY_HIT["src/test/scala/graft/serve/SinksSpec.scala"] = (
     "class SinksSpec { Sinks.writeCsv(\"out\") }\n")
 
+COMMENT_ONLY_HIT = dict(CLEAN)
+COMMENT_ONLY_HIT[MAIN + "Verify.scala"] = CLEAN[MAIN + "Verify.scala"].replace(
+    "Sinks.compact(log)", "/* Sinks.compact(log) */ // Sinks.compact")
+
 CASES = [
-    ("clean tree: called, table-named, comment-named, private and KEEP names pass",
+    ("clean tree: called, table-named, private and KEEP names pass",
      CLEAN, 0, "ok:"),
+    ("a def main names only in comments is a hit",
+     COMMENT_ONLY_HIT, 1, "src/main/scala/graft/serve/Sinks.scala:4: compact"),
     ("a def only its spec calls is a hit (prose outside the table does not exempt it)",
      SPEC_ONLY_HIT, 1, "src/main/scala/graft/serve/Sinks.scala:5: writeCsv"),
 ]

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.graph.PackedGraph
 
 /** Distributed connected components over an undirected edge list — the
   * clustering step that turns PAIRWISE near-duplicate evidence into
@@ -17,19 +18,16 @@ import org.apache.spark.sql.functions._
   * as DataFrame joins so it runs at any scale:
   *  - one shuffle per iteration (join labels to the symmetrized edges,
   *    min-aggregate per node);
-  *  - POINTER JUMPING (on by default): each iteration also applies
-  *    L(u) := L(L(u)) — one extra self-join on the label — so labels race
-  *    down chains geometrically and convergence is O(log diameter), not
-  *    O(diameter): the Shiloach–Vishkin shortcut, the same device
-  *    large-star/small-star (Kiveris et al.) builds from. A 2000-node
-  *    path converges in ~11 rounds where plain hash-min needs 2000 (it
-  *    aborted at the maxIter guard before this round). The fixpoint is
-  *    unchanged — L only ever decreases and is bounded below by the
-  *    component min, and any hash-min fixpoint already satisfies
-  *    L(u) = L(L(u)) — so q64's oracle row is byte-identical either way;
-  *    `pointerJumping = false` keeps the one-join-per-round form for
-  *    plan-shape comparison. The maxIter guard still fails loudly rather
-  *    than silently mislabeling;
+  *  - POINTER JUMPING: each iteration also applies L(u) := L(L(u)) —
+  *    one extra self-join on the label — so labels race down chains
+  *    geometrically and convergence is O(log diameter), not O(diameter):
+  *    the Shiloach–Vishkin shortcut, the same device large-star/small-star
+  *    (Kiveris et al.) builds from. A 2000-node path converges in ~11
+  *    rounds where plain hash-min needs 2000. The fixpoint is unchanged —
+  *    L only ever decreases and is bounded below by the component min,
+  *    and any hash-min fixpoint already satisfies L(u) = L(L(u)) — so
+  *    q64's oracle row is the plain hash-min fixpoint. The maxIter guard
+  *    still fails loudly rather than silently mislabeling;
   *  - `localCheckpoint` after every iteration cuts the growing lineage
   *    (the classic iterative-Spark failure is an exponentially deep plan,
   *    not the data);
@@ -42,8 +40,7 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  def run(edges: DataFrame, maxIter: Int = 20,
-      pointerJumping: Boolean = true): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     require(maxIter > 0)
     // symmetrize once; self-loops drop out (they never change a min)
     val sym = edges.select(col("a").as("x"), col("b").as("y"))
@@ -69,14 +66,11 @@ object ConnectedComponents {
       // comp value is itself a labeled node (labels start as node ids and
       // only ever take neighbor values), so the left join always hits;
       // coalesce is belt-and-braces for an empty-side corner.
-      val next = (if (!pointerJumping) propagated
-        else {
-          val parent = propagated
-            .select(col("node").as("__pn"), col("comp").as("__pc"))
-          propagated.join(parent, col("comp") === col("__pn"), "left")
-            .select(col("node"),
-              coalesce(col("__pc"), col("comp")).as("comp"))
-        }).localCheckpoint()
+      val parent = propagated
+        .select(col("node").as("__pn"), col("comp").as("__pc"))
+      val next = propagated.join(parent, col("comp") === col("__pn"), "left")
+        .select(col("node"), coalesce(col("__pc"), col("comp")).as("comp"))
+        .localCheckpoint()
       changed = next.as("n")
         .join(labels.as("o"), col("n.node") === col("o.node"))
         .filter(col("n.comp") =!= col("o.comp"))
@@ -95,80 +89,62 @@ object ConnectedComponents {
   }
 
   /** Budget-fused [[run]]: under `Budgets.componentEdges` the pair graph
-    * is a BOUNDED ARTIFACT (one map-side-grouped shuffle, budget-probed
-    * distributed-first, collected once) and union–find with a final
-    * min-per-root pass labels every node in O(m α(m)) — identical
-    * (node, min reachable id) rows to the iterative hash-min plan, with
-    * no convergence guard needed (union–find has no diameter term; a
-    * graph whose diameter would trip [[run]]'s maxIter abort simply
-    * succeeds here). Null endpoints drop exactly as the composed plan's
-    * x =!= y filter drops them. None past the budget or what the
-    * session's driver holds, or for non-integral id types — web-scale
-    * pair graphs keep the O(log d) pointer-jumping joins. */
+    * is a BOUNDED ARTIFACT (collected once through the packed graph
+    * format's guarded collect, `graft.graph.PackedGraph`) and union–find
+    * over its dense ids labels every node in O(m log n): a union makes
+    * the smaller dense id the root, and the dictionary is sorted, so
+    * every root is its component's minimum id — identical (node, min
+    * reachable id) rows to the iterative hash-min plan, with no
+    * convergence guard needed (union–find has no diameter term; a graph
+    * whose diameter would trip [[run]]'s maxIter abort simply succeeds
+    * here). Null endpoints drop exactly as the composed plan's x =!= y
+    * filter drops them. None past the budget or what the session's
+    * driver holds, or for non-integral id types — web-scale pair graphs
+    * keep the O(log d) pointer-jumping joins. */
   def runFused(edges: DataFrame): Option[DataFrame] = {
     val maxEdges = graft.operators.Budgets.get.componentEdges
-    val aT = graft.graph.PackedGraph.idType(edges, "a", "b") match {
+    val aT = PackedGraph.idType(edges, "a", "b") match {
       case Some(t) if maxEdges > 0L => t
       case _ => return None
     }
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val grouped = edges
+    // checkpointed so the probe and the collect read one stable copy
+    val pairs = edges
       .select(col("a").cast("long").as("x"), col("b").cast("long").as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
-      .groupBy(col("x")).agg(collect_list(col("y")).as("ys"))
       .localCheckpoint()
-    // the graph kernels' guarded packed collect of [x, len, y1..ylen]
-    // records: ~24 B/edge of task results at worst (one group per edge);
-    // the boxed union-find maps and the output rows hold ~256 B per node,
-    // about one node per edge on a pair graph
-    val got = graft.graph.PackedGraph.collect(grouped, maxEdges, 24L, 256L,
-      rows = coalesce(sum(size(col("ys"))), lit(0L)))()
-    graft.operators.Checkpoints.free(grouped)
+    // 16 B/edge of task results; ~32 B/edge of driver heap for the
+    // transfer and the id image, ~20 B per node for the dictionary, the
+    // parents and the labels, and ~128 B per node for the output rows
+    // (the builder's tuples and the local relation), about one node per
+    // edge on a pair graph
+    val got = PackedGraph.collect(pairs, maxEdges, 16L, 192L)()
+    graft.operators.Checkpoints.free(pairs)
     val chunks = got match {
       case Some((cs, _)) => cs
       case None => return None
     }
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(n: Long): Long = {
-      var r = n
-      while (parent.get(r) != r) r = parent.get(r)
-      var c = n // path compression
-      while (parent.get(c) != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
-      r
+    val nodes = PackedGraph.dictionary(chunks, 2, None)
+    val parent = Array.range(0, nodes.length)
+    def find(v0: Int): Int = {
+      var v = v0
+      while (parent(v) != v) { parent(v) = parent(parent(v)); v = parent(v) }
+      v
     }
     chunks.foreach { c =>
       var i = 0
       while (i < c.length) {
-        val x = c(i)
-        val len = c(i + 1).toInt
-        if (!parent.containsKey(x)) parent.put(x, x)
-        var j = 0
-        while (j < len) {
-          val y = c(i + 2 + j)
-          if (!parent.containsKey(y)) parent.put(y, y)
-          val rx = find(x); val ry = find(y)
-          if (rx != ry) parent.put(math.max(rx, ry), math.min(rx, ry))
-          j += 1
-        }
-        i += 2 + len
+        val rx = find(java.util.Arrays.binarySearch(nodes, c(i)))
+        val ry = find(java.util.Arrays.binarySearch(nodes, c(i + 1)))
+        if (rx < ry) parent(ry) = rx else parent(rx) = ry
+        i += 2
       }
     }
-    // min id per root, then every node labels with its root's min
-    val minOfRoot = new java.util.HashMap[Long, Long]()
-    parent.forEach { (n, _) =>
-      val r = find(n)
-      minOfRoot.merge(r, n, (a: Long, b: Long) => math.min(a, b))
-    }
-    val b = Seq.newBuilder[(Long, Long)]
-    parent.forEach((n, _) => b += ((n, minOfRoot.get(find(n)))))
-    Some(spark.createDataset(b.result()).toDF("node", "comp")
-      .select(col("node").cast(aT).as("node"), col("comp").cast(aT).as("comp")))
+    val comp = Array.tabulate(nodes.length)(v => nodes(find(v)))
+    Some(PackedGraph.frame(edges.sparkSession, nodes, comp, "comp", aT)
+      .select(col("node"), col("comp").cast(aT).as("comp")))
   }
 
   /** Budget dispatcher for [[run]]. */
-  def runAuto(edges: DataFrame, maxIter: Int = 20,
-      pointerJumping: Boolean = true): DataFrame =
-    runFused(edges)
-      .getOrElse(run(edges, maxIter, pointerJumping))
+  def runAuto(edges: DataFrame, maxIter: Int = 20): DataFrame =
+    runFused(edges).getOrElse(run(edges, maxIter))
 }

@@ -10,7 +10,11 @@ import graft.operators.{Budgets, Checkpoints}
 
 /** The packed graph format the fused and broadcast graph kernels share:
   * how an edge list reaches the driver, how node ids become dense ints,
-  * and how the dst-grouped CSR is laid out.
+  * and how the dst-grouped CSR is laid out. Two fused serves outside
+  * `graft.graph` use it too: `Cooccur.recommendFused` builds its neighbor
+  * model with [[driverCsr]] (each item's in-edges are its neighbors), and
+  * `ConnectedComponents.runFused` collects its pair graph through
+  * [[collect]] and labels it over [[dictionary]]'s dense ids.
   *
   *  - Transfer: each partition sends ONE long[] of its rows through the
   *    InternalRow RDD (a long column writes its value, an array column

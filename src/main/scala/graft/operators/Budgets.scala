@@ -27,19 +27,21 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * | `cellCatalogFloats` | 64M | index floats the fused IVF kernel publishes (`Retrieval.topKAnn`/`CellCatalogCache`, `RecsTable.streamAnnRefresh`) | "Round-12 broadcast-catalog kernel + the serving ladder" (`r12ladder`) |
   * | `knnMinQueries` | 1024 | query rows below which `Knn.bruteForceTopK` keeps the broadcast join | same bullet, "Query-count regime gate on the exact-KNN dispatch" |
   * | `seenBroadcastRows` | 32M | seen pairs `TwoTower.recommend`'s unfused plan broadcasts before it shuffles the anti-join | none measured: ~30 B/row ≈ 1 GB of executor broadcast |
-  * | `cooccurModelRows` | 4M | neighbor-model rows `Cooccur.recommendFused` broadcasts | "Round-12 second half" (`r12serve`), fused co-occurrence serve |
+  * | `cooccurModelRows` | 4M | neighbor-model rows `Cooccur.recommendFused` collects into its driver CSR and broadcasts | "Round-12 second half" (`r12serve`), fused co-occurrence serve |
   * | `cooccurMinUsers` | 4096 | user-subset size below which `Cooccur.recommendFused` refuses (q183 passes 1) | "Round-14 close", users-count regime gate |
   * | `negativeBucketRows` | 8M | bucket-table rows `NegativeSampling.sampleNegatives` broadcasts before it shuffles | none measured: ~4 slim longs/row ≈ 256 MB relation |
   * | `dictionaryDistinct` | 2M (`2 << 20`) | approximate distinct values above which `Categorify.fitDictionary` zips per partition | none measured: ~60 MB single-partition window sort |
   * | `driverEmbedFloats` | 300M | floats per embedding table `TwoTower` keeps on the driver; past it training is cluster-held | "Round-10 cluster-held embedding tables" (`r10embed`) |
   *
   * The driver-resource guard ([[Budgets.driverRows]]) bounds every
-  * driver collect of the graph kernels by the session itself, whatever
-  * the gate says: 90 % of `spark.driver.maxResultSize` and 40 % of the
-  * JVM's max heap, each divided by the caller's bytes per row. The
-  * graph kernels' packed format — the guarded collect that applies gate
-  * and guard before anything reaches the driver, the node dictionary and
-  * the dst-grouped CSR — lives in `graft.graph.PackedGraph`. Ahead of
+  * driver collect of the graph kernels, of `ConnectedComponents.runFused`
+  * and of the co-occurrence neighbor model (`Cooccur.recommendFused`) by
+  * the session itself, whatever the gate says: 90 % of
+  * `spark.driver.maxResultSize` and 40 % of the JVM's max heap, each
+  * divided by the caller's bytes per row. Their packed format — the
+  * guarded collect that applies gate and guard before anything reaches
+  * the driver, the node dictionary and the dst-grouped CSR — lives in
+  * `graft.graph.PackedGraph`. Ahead of
   * any size gate, a fused kernel keys ids by long, so non-integral ids
   * take the distributed plan ([[Budgets.integral]]).
   */

@@ -177,10 +177,12 @@ object Cooccur {
     * output is row-identical to [[recommend]] — spec-pinned at cap 0 and
     * capped, with ties.
     *
-    * None — callers fall back to the join plan — past the model budget,
-    * for non-integral/mismatched id types or a non-integral score column
-    * (the fused path casts `c` to long, which would silently truncate a
-    * double where recommend() sums it exactly — round-12 advice), or when
+    * None — callers fall back to the join plan — past the model budget
+    * or what the session's driver holds (`Budgets.driverRows`), for an
+    * empty or null-bearing model, for non-integral/mismatched id types
+    * or a non-integral score column (the fused path casts `c` to long,
+    * which would silently truncate a double where recommend() sums it
+    * exactly — round-12 advice), or when
     * interactions carry a null user/item (detected with the
     * collect_set-size device before anything is collected): 100 TB of
     * interactions stream through this plan fine (they are never
@@ -201,7 +203,7 @@ object Cooccur {
     *
     * `minFusedUsers` (default `Budgets.cooccurMinUsers`; round-13 verdict
     * task 4): a SMALL user subset refuses the fused path. The fused
-    * plan's fixed cost (model groupBy + collect + broadcast) is paid
+    * plan's fixed cost (model collect + broadcast) is paid
     * regardless of |users|, while the join-plan fallback's cost SCALES
     * with the subset (Catalyst pushes the semi-join below the score
     * aggregate to the history scans). The subset count is probed on the
@@ -230,8 +232,7 @@ object Cooccur {
     val uSub = users.map(_.select(col("user_id").cast("long").as("u"))
       .filter(col("u").isNotNull).distinct().localCheckpoint())
     // free the subset checkpoint on every refusal path (round-13 advice:
-    // the three refusals below freed nbG/seenG but leaked uSub's cached
-    // blocks per refused call)
+    // a refused call leaked uSub's cached blocks)
     def refuse(): Option[DataFrame] = {
       uSub.foreach(graft.operators.Checkpoints.free)
       None
@@ -239,69 +240,20 @@ object Cooccur {
     // |users| regime gate (see the doc): the count reads the checkpointed
     // blocks — bounded, no recompute
     if (uSub.exists(_.count() < minFusedUsers)) return refuse()
-    // model: grouped neighbor lists, budget-probed distributed-first
-    val nbG = neighbors
-      .select(col("item_a").cast("long").as("ia"),
-        struct(col("item_b").cast("long").as("ib"),
-          col("c").cast("long").as("c")).as("nb"))
-      .groupBy(col("ia")).agg(collect_list(col("nb")).as("nbs"))
-      .localCheckpoint()
-    val mProbe = nbG.agg(coalesce(sum(size(col("nbs"))), lit(0L)),
-      coalesce(sum(when(col("ia").isNull, 1L).otherwise(0L)), lit(0L))).head()
-    if (mProbe.getLong(0) == 0L || mProbe.getLong(0) > maxModelRows
-        || mProbe.getLong(1) != 0L) {
-      graft.operators.Checkpoints.free(nbG)
-      return refuse()
-    }
-    val nbRows = nbG.collect()
-    graft.operators.Checkpoints.free(nbG)
-    // DENSE CSR MODEL (round 16, guide §4/§5 — the Triangles/PageRank
-    // packed-kernel lesson applied to the serve kernel): the old model was
-    // java.util.HashMap[java.lang.Long, (Array[Long], Array[Long])] — a
-    // boxed lookup per history item AND per-candidate boxed HashMap/HashSet
-    // work in the scoring loop below. Here the model is five primitive
-    // arrays: sorted item_a ids + CSR offsets, neighbor counts, and
-    // neighbors pre-translated to DENSE indices over the sorted distinct
-    // item_b dictionary, so the executor kernel scores by direct array
-    // indexing with zero hashing and zero boxing. Values unchanged — the
-    // same (item_b, c) multiset per item_a, summed in a different order
-    // (long sums are order-free); spec-pinned against the join plan.
-    val sortedRows = nbRows.sortBy(_.getLong(0))
-    val nA = sortedRows.length
-    val aIds = new Array[Long](nA)
-    val aOff = new Array[Int](nA + 1)
-    var nullInner = false
-    val bAll = new scala.collection.mutable.ArrayBuilder.ofLong
-    var ai = 0
-    sortedRows.foreach { r =>
-      aIds(ai) = r.getLong(0)
-      val nbs = r.getSeq[org.apache.spark.sql.Row](1)
-      aOff(ai + 1) = aOff(ai) + nbs.length
-      nbs.foreach { e =>
-        if (e.isNullAt(0) || e.isNullAt(1)) nullInner = true
-        else bAll += e.getLong(0)
-      }
-      ai += 1
-    }
-    if (nullInner) return refuse()
-    val bSorted = bAll.result()
-    java.util.Arrays.sort(bSorted)
-    var nB = 0
-    var si = 0
-    while (si < bSorted.length) {
-      if (nB == 0 || bSorted(nB - 1) != bSorted(si)) { bSorted(nB) = bSorted(si); nB += 1 }
-      si += 1
-    }
-    val bIds = java.util.Arrays.copyOf(bSorted, nB)
-    val nbIdx = new Array[Int](aOff(nA))
-    val nbCnt = new Array[Long](aOff(nA))
-    var p = 0
-    sortedRows.foreach { r =>
-      r.getSeq[org.apache.spark.sql.Row](1).foreach { e =>
-        nbIdx(p) = java.util.Arrays.binarySearch(bIds, e.getLong(0))
-        nbCnt(p) = e.getLong(1)
-        p += 1
-      }
+    // model: the packed graph format's driver CSR over (item_b, item_a, c)
+    // (graft.graph.PackedGraph): each item_a's in-edge group is its
+    // neighbor list, `inW` its counts, and `nodes` the dense id dictionary
+    // of both columns, so the executor kernel scores by direct array
+    // indexing with zero hashing and zero boxing. The one probe refuses an
+    // empty model, a null anywhere and a model past the gate or what the
+    // session's driver holds (~24 B/row of task results, ~192 B/row of
+    // heap: the weighted-CSR sizing of ShortestPaths.runFused).
+    val model = graft.graph.PackedGraph.driverCsr(
+        neighbors.select(col("item_b").cast("long").as("b"),
+          col("item_a").cast("long").as("a"), col("c").cast("long").as("c")),
+        maxModelRows, 24L, 192L)() match {
+      case Some(g) => g
+      case None => return refuse()
     }
     // per-user frames: full-history seen set (+ the collect_set-size null
     // device: t is distinct, so size(set) == count(1) iff no null item).
@@ -326,7 +278,7 @@ object Cooccur {
     // broadcast AFTER the last refusal path (round-12 advice: a broadcast
     // created before the seenG probe leaked one executor-resident model
     // per refused call until the ContextCleaner ran)
-    val bc = spark.sparkContext.broadcast((aIds, aOff, bIds, nbIdx, nbCnt))
+    val bc = spark.sparkContext.broadcast((model.nodes, model.inOff, model.inSrc, model.inW))
     val both =
       if (maxBasket > 0) {
         val capped = inter.select(col("user_id").cast("long").as("user_id"),
@@ -340,16 +292,11 @@ object Cooccur {
         histG.join(seenG, Seq("u"))
       } else seenG.withColumn("__hist", col("__seen"))
     val slices = spark.sparkContext.defaultParallelism
-    // PRIMITIVE SCORING KERNEL (round 16, guide §4/§5 — with the dense
-    // CSR model above): the old loop paid a boxed HashMap.merge per
-    // (history item × neighbor) — the kernel's hottest line — a boxed
-    // HashSet membership test per candidate, and a boxed tuple sort per
-    // user for the top-k cut. Now: rows decode through the InternalRow
-    // RDD (UnsafeArrayData.toLongArray is a bulk primitive copy — the
-    // exchange/plan shape is IDENTICAL, only the row decode changed, so
-    // this is not the r15 reverted transfer rewrite), scores accumulate
-    // into a generation-stamped dense long[] (one per task, reused across
-    // users — O(touched) per user, no per-user allocation or zeroing),
+    // PRIMITIVE SCORING KERNEL (round 16, guide §4/§5): rows decode
+    // through the InternalRow RDD (UnsafeArrayData.toLongArray is a bulk
+    // primitive copy), scores accumulate into a generation-stamped dense
+    // long[] over the model's dense ids (one per task, reused across users
+    // — O(touched) per user, no per-user allocation or zeroing),
     // seen-membership is a binary search over the user's sorted seen ids,
     // and the top-k cut is a bounded insertion into two k-length arrays
     // under the same (score desc, id asc) order. Row-identical: long sums
@@ -360,11 +307,11 @@ object Cooccur {
         col("__seen").cast("array<bigint>"))
       .repartition(slices)
     val outRdd = prepared.queryExecution.toRdd.mapPartitions { it =>
-      val (aIdsL, aOffL, bIdsL, nbIdxL, nbCntL) = bc.value
-      val nBL = bIdsL.length
-      val scores = new Array[Long](nBL)
-      val stamp = new Array[Int](nBL)
-      var touched = new Array[Int](math.min(math.max(nBL, 16), 1 << 16))
+      val (nodes, inOff, inSrc, inW) = bc.value
+      val n = nodes.length
+      val scores = new Array[Long](n)
+      val stamp = new Array[Int](n)
+      var touched = new Array[Int](math.min(math.max(n, 16), 1 << 16))
       var epoch = 0
       val topI = new Array[Long](k)
       val topS = new Array[Long](k)
@@ -381,20 +328,20 @@ object Cooccur {
         var nTouched = 0
         var hi = 0
         while (hi < hist.length) {
-          val a = java.util.Arrays.binarySearch(aIdsL, hist(hi))
+          val a = java.util.Arrays.binarySearch(nodes, hist(hi))
           if (a >= 0) {
-            var j = aOffL(a)
-            val end = aOffL(a + 1)
+            var j = inOff(a)
+            val end = inOff(a + 1)
             while (j < end) {
-              val bi = nbIdxL(j)
+              val bi = inSrc(j)
               if (stamp(bi) != epoch) {
                 stamp(bi) = epoch
-                scores(bi) = nbCntL(j)
+                scores(bi) = inW(j)
                 if (nTouched == touched.length)
                   touched = java.util.Arrays.copyOf(touched, touched.length * 2)
                 touched(nTouched) = bi
                 nTouched += 1
-              } else scores(bi) += nbCntL(j)
+              } else scores(bi) += inW(j)
               j += 1
             }
           }
@@ -405,7 +352,7 @@ object Cooccur {
         var t = 0
         while (t < nTouched) {
           val bi = touched(t)
-          val id = bIdsL(bi)
+          val id = nodes(bi)
           if (java.util.Arrays.binarySearch(seen, id) < 0) {
             val s = scores(bi)
             if (sz < k || s > topS(sz - 1) ||

@@ -1,7 +1,7 @@
 package graft.sim
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.sql.TopKDotF32
 import graft.sql.TopKDotF32.FlatCatalog
@@ -56,15 +56,10 @@ object Retrieval {
         col(cVec).cast("array<float>").as("__v"))
       .filter(col("__id").isNotNull && col("__v").isNotNull)
     val dimRow = clean.select(size(col("__v")).as("d")).head(1)
-    val maxRows = budgetRows(if (dimRow.isEmpty) 0 else dimRow(0).getInt(0),
-      graft.operators.Budgets.get.catalogFloats)
-    if (maxRows <= 0) return None
-    val rows = clean.limit(maxRows + 1).collect()
-    if (rows.length > maxRows || rows.isEmpty) return None
-    val ids = rows.map(_.getLong(0))
-    val mats = rows.map(_.getSeq[Float](1).toArray)
-    Some(catalog.sparkSession.sparkContext.broadcast(
-      TopKDotF32.flatten(ids, mats, cosine)))
+    boundedRows(clean, budgetRows(if (dimRow.isEmpty) 0 else dimRow(0).getInt(0),
+        graft.operators.Budgets.get.catalogFloats))
+      .map(rows => catalog.sparkSession.sparkContext.broadcast(TopKDotF32.flatten(
+        rows.map(_.getLong(0)), rows.map(_.getSeq[Float](1).toArray), cosine)))
   }
 
   /** [[publishCatalog]] for a catalog already on the driver: the same
@@ -85,29 +80,36 @@ object Retrieval {
     if (dim <= 0 || catalogFloatLimit <= 0) 0
     else math.min(catalogFloatLimit / dim, (Int.MaxValue - 1).toLong).toInt
 
+  /** `frame`'s rows when it has some and no more than `maxRows`: one
+    * bounded `limit(maxRows + 1)` collect. */
+  private def boundedRows(frame: DataFrame, maxRows: Int): Option[Array[Row]] =
+    if (maxRows <= 0) None
+    else Some(frame.limit(maxRows + 1).collect())
+      .filter(rows => rows.nonEmpty && rows.length <= maxRows)
+
   /** One published catalog per MODEL GENERATION (round-11 verdict task 5):
     * streaming serves re-enter the kernel every micro-batch, but the
     * catalog only changes on model hot-swap — so the cache keys the
-    * broadcast on the supplier's returned frame IDENTITY and re-collects
-    * (re-probing dim and budget) only when the supplier hands back a new
+    * broadcast on the supplier's returned frame IDENTITY and re-publishes
+    * (re-probing its budget) only when the supplier hands back a new
     * frame. The superseded broadcast is unpersisted (not destroyed: tasks
     * of an in-flight batch may still read it; the ContextCleaner finishes
     * the job). `collects` counts generations — spec-pinned to 1 across
-    * batches of a stable model. The float budget is read once, when the
-    * cache is built. */
-  final class CatalogCache(supplier: () => DataFrame, cId: String, cVec: String,
-      cosine: Boolean = false) {
+    * batches of a stable model. The budgets are read once, when the cache
+    * is built. [[CatalogCache]] and [[CellCatalogCache]] are its two
+    * catalogs. */
+  sealed abstract class GenerationCache[T](supplier: () => DataFrame,
+      publish: DataFrame => Option[Broadcast[T]]) {
     private val budgets = graft.operators.Budgets.get
     @volatile private var keyFrame: DataFrame = null
-    @volatile private var cached: Option[Broadcast[FlatCatalog]] = None
+    @volatile private var cached: Option[Broadcast[T]] = None
     @volatile var collects: Int = 0
 
-    def get(): Option[Broadcast[FlatCatalog]] = synchronized {
+    def get(): Option[Broadcast[T]] = synchronized {
       val frame = supplier()
       if (!(frame eq keyFrame)) {
         cached.foreach(_.unpersist(blocking = false))
-        cached = graft.operators.Budgets.scoped(_ => budgets)(
-          publishCatalog(frame, cId, cVec, cosine))
+        cached = graft.operators.Budgets.scoped(_ => budgets)(publish(frame))
         keyFrame = frame
         collects += 1
       }
@@ -115,9 +117,14 @@ object Retrieval {
     }
   }
 
+  /** The dense kernel's catalog per model generation ([[publishCatalog]]
+    * under a [[GenerationCache]]). */
+  final class CatalogCache(supplier: () => DataFrame, cId: String, cVec: String,
+      cosine: Boolean = false)
+      extends GenerationCache[FlatCatalog](supplier, publishCatalog(_, cId, cVec, cosine))
+
   /** (qId, `as`): each query's distinct seen ids as array<bigint> — the
-    * one seen aggregation (collect_set skips null ids, never returns a
-    * null element, so the kernels' primitive decode is safe). */
+    * one seen aggregation (collect_set skips null ids). */
   private[graft] def seenSets(pairs: DataFrame, qId: String, cId: String,
       as: String = "__seen"): DataFrame =
     pairs.select(col(qId), col(cId).cast("long").as("__sid"))
@@ -221,48 +228,27 @@ object Retrieval {
     * option. */
   def publishCellCatalog(index: DataFrame, cId: String, cVec: String,
       centroids: Array[Array[Float]])
-      : Option[Broadcast[graft.sql.TopKDotIvfF32.CellCatalog]] = {
-    val maxRows = budgetRows(if (centroids.isEmpty) 0 else centroids(0).length,
-      graft.operators.Budgets.get.cellCatalogFloats)
-    if (maxRows <= 0) return None
-    val rows = index
-      .select(col(cId).cast("long").as("__id"), col("cid").cast("int").as("__c"),
-        col(cVec).cast("array<float>").as("__v"))
-      .filter(col("__id").isNotNull && col("__c").isNotNull && col("__v").isNotNull)
-      .limit(maxRows + 1).collect()
-    if (rows.length > maxRows || rows.isEmpty) return None
-    Some(index.sparkSession.sparkContext.broadcast(
-      graft.sql.TopKDotIvfF32.group(
-        rows.map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray)),
-        centroids)))
-  }
+      : Option[Broadcast[graft.sql.TopKDotIvfF32.CellCatalog]] =
+    boundedRows(index
+        .select(col(cId).cast("long").as("__id"), col("cid").cast("int").as("__c"),
+          col(cVec).cast("array<float>").as("__v"))
+        .filter(col("__id").isNotNull && col("__c").isNotNull && col("__v").isNotNull),
+      budgetRows(if (centroids.isEmpty) 0 else centroids(0).length,
+        graft.operators.Budgets.get.cellCatalogFloats))
+      .map(rows => index.sparkSession.sparkContext.broadcast(
+        graft.sql.TopKDotIvfF32.group(
+          rows.map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray)),
+          centroids)))
 
   /** [[CatalogCache]]'s IVF counterpart (round 12): one published cell
-    * catalog per INDEX GENERATION for streaming ANN serves — keyed on the
-    * supplier's returned frame identity, re-collected (and re-grouped
-    * under the possibly-new quantizer) only when the supplier hands back
-    * a new frame; the superseded broadcast is unpersisted. None = over
-    * budget (the join plan's regime — the stream caller decides). The
-    * float budget is read once, when the cache is built. */
+    * catalog per INDEX GENERATION for streaming ANN serves
+    * ([[publishCellCatalog]] under a [[GenerationCache]]), re-grouped
+    * under the possibly-new quantizer on each new frame. None = over
+    * budget (the join plan's regime — the stream caller decides). */
   final class CellCatalogCache(supplier: () => DataFrame, cId: String,
-      cVec: String, centroids: () => Array[Array[Float]]) {
-    private val budgets = graft.operators.Budgets.get
-    @volatile private var keyFrame: DataFrame = null
-    @volatile private var cached: Option[Broadcast[graft.sql.TopKDotIvfF32.CellCatalog]] = None
-    @volatile var collects: Int = 0
-
-    def get(): Option[Broadcast[graft.sql.TopKDotIvfF32.CellCatalog]] = synchronized {
-      val frame = supplier()
-      if (!(frame eq keyFrame)) {
-        cached.foreach(_.unpersist(blocking = false))
-        cached = graft.operators.Budgets.scoped(_ => budgets)(
-          publishCellCatalog(frame, cId, cVec, centroids()))
-        keyFrame = frame
-        collects += 1
-      }
-      cached
-    }
-  }
+      cVec: String, centroids: () => Array[Array[Float]])
+      extends GenerationCache[graft.sql.TopKDotIvfF32.CellCatalog](supplier,
+        publishCellCatalog(_, cId, cVec, centroids()))
 
   /** The fused IVF plan against an already-published cell catalog: probe
     * selection, probed-cell scan, seen exclusion and the k-heap all in

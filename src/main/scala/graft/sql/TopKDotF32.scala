@@ -122,10 +122,7 @@ case class TopKDotF32(left: Expression, right: Expression,
       while (i < vn) { qq += va(i).toDouble * va(i).toDouble; i += 1 }
       qNorm = math.sqrt(qq)
     }
-    // the row's own history (NULL elements skipped), sorted once for
-    // binary-search membership
-    val s = TopKDotF32.nonNullLongs(seen)
-    java.util.Arrays.sort(s)
+    val s = TopKDotF32.sortedSeen(seen)
     val topSc = new Array[Double](kept)
     val topId = new Array[Long](kept)
     var filled = 0
@@ -180,12 +177,16 @@ case class TopKDotF32(left: Expression, right: Expression,
 
 object TopKDotF32 {
 
-  /** The non-NULL elements of a long array. */
-  private def nonNullLongs(a: ArrayData): Array[Long] = {
+  /** A row's seen ids for both vector kernels: the non-NULL elements of
+    * `seen` (a NULL is no item, never item 0), sorted for binary-search
+    * membership. */
+  private[sql] def sortedSeen(seen: ArrayData): Array[Long] = {
     val b = new scala.collection.mutable.ArrayBuilder.ofLong
     var i = 0
-    while (i < a.numElements()) { if (!a.isNullAt(i)) b += a.getLong(i); i += 1 }
-    b.result()
+    while (i < seen.numElements()) { if (!seen.isNullAt(i)) b += seen.getLong(i); i += 1 }
+    val s = b.result()
+    java.util.Arrays.sort(s)
+    s
   }
 
   /** The broadcast payload: catalog ids ASCENDING (equal scores admit the

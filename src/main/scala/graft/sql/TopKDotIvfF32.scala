@@ -120,8 +120,7 @@ case class TopKDotIvfF32(left: Expression, right: Expression,
       cix += 1
     }
     // --- scan the probed cells only
-    val s = seen.toLongArray()
-    java.util.Arrays.sort(s)
+    val s = TopKDotF32.sortedSeen(seen)
     val topSc = new Array[Double](kept)
     val topId = new Array[Long](kept)
     var filled = 0

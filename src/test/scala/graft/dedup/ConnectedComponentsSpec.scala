@@ -24,11 +24,8 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       20L -> 20L, 21L -> 20L))
   }
 
-  test("matches a brute-force transitive closure on a random graph") {
-    val rnd = new scala.util.Random(7)
-    val edges = Seq.fill(60)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-      .filter { case (a, b) => a != b }
-    // brute force: repeated min-label relaxation to fixpoint on the driver
+  /** Brute force: repeated min-label relaxation to fixpoint on the driver. */
+  private def closure(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
     var lab = nodes.map(n => n -> n).toMap
     var stable = false
@@ -39,7 +36,14 @@ class ConnectedComponentsSpec extends SparkSpecBase {
         if (lab(a) != m || lab(b) != m) { stable = false; lab += a -> m; lab += b -> m }
       }
     }
-    assert(labels(edges) == lab)
+    lab
+  }
+
+  test("matches a brute-force transitive closure on a random graph") {
+    val rnd = new scala.util.Random(7)
+    val edges = Seq.fill(60)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+      .filter { case (a, b) => a != b }
+    assert(labels(edges) == closure(edges))
   }
 
   test("fails loudly instead of returning wrong labels when maxIter is too low") {
@@ -51,10 +55,6 @@ class ConnectedComponentsSpec extends SparkSpecBase {
 
   test("pointer jumping converges a 2000-node path in O(log n) rounds") {
     val chain = (0L until 2000L).sliding(2).map(s => (s(1), s.head)).toSeq
-    // plain hash-min needs ~2000 rounds — must abort at the guard
-    assertThrows[IllegalArgumentException](
-      ConnectedComponents.run(chain.toDF("a", "b"), maxIter = 15,
-        pointerJumping = false).count())
     // jumping: diameter 2000 -> ~log2 rounds; 15 is generous headroom
     val out = ConnectedComponents.run(chain.toDF("a", "b"), maxIter = 15)
       .as[(Long, Long)].collect()
@@ -66,11 +66,8 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     for (trial <- 1 to 3) {
       val edges = Seq.fill(80)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
         .filter { case (a, b) => a != b }
-      val fast = ConnectedComponents.run(edges.toDF("a", "b"), 30)
-        .as[(Long, Long)].collect().toMap
-      val slow = ConnectedComponents.run(edges.toDF("a", "b"), 30,
-        pointerJumping = false).as[(Long, Long)].collect().toMap
-      assert(fast === slow, s"trial $trial")
+      // the jumping plan reaches the plain hash-min fixpoint: the closure
+      assert(labels(edges, maxIter = 30) === closure(edges), s"trial $trial")
     }
   }
 

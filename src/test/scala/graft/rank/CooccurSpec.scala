@@ -148,6 +148,37 @@ class CooccurSpec extends SparkSpecBase {
     assert(j == f)
   }
 
+  private def recRows(df: DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
+
+  test("fused recommend equals the join plan on a hand model with a duplicate row and one-sided items") {
+    // (1, 3) is in the model twice (both rows add); 7 is only ever a
+    // neighbor, and user 3's only item; user 2's item 9 is never an item_a
+    val inter = Seq((1L, 1L, "2000-01-01"), (1L, 2L, "2000-01-02"),
+        (2L, 9L, "2000-01-03"), (2L, 3L, "2000-01-04"), (3L, 7L, "2000-01-05"))
+      .toDF("user_id", "item_id", "ts")
+      .select($"user_id", $"item_id", $"ts".cast("timestamp"))
+    val nb = Seq((1L, 3L, 2L), (1L, 3L, 1L), (1L, 7L, 2L), (2L, 4L, 5L),
+        (3L, 1L, 1L), (3L, 7L, 4L))
+      .toDF("item_a", "item_b", "c")
+    val f = recRows(Cooccur.recommendFused(inter, nb, 10).get)
+    assert(f == recRows(Cooccur.recommend(inter, nb, 10)))
+    assert(f == Set((1L, 1, 4L, 5L), (1L, 2, 3L, 3L), (1L, 3, 7L, 2L),
+      (2L, 1, 7L, 4L), (2L, 2, 1L, 1L)))
+  }
+
+  test("fused recommend's guarded model collect admits at the model's row count, refuses one below") {
+    val nb = Cooccur.itemNeighbors(tr, 20)
+    val m = nb.count()
+    assert(Budgets.scoped(_.copy(cooccurModelRows = m))(
+      Cooccur.recommendFused(tr, nb, 10)).isDefined)
+    assert(Budgets.scoped(_.copy(cooccurModelRows = m - 1))(
+      Cooccur.recommendFused(tr, nb, 10)).isEmpty)
+    def viaAuto(cap: Long) = Budgets.scoped(_.copy(cooccurModelRows = cap))(
+      recRows(Cooccur.recommendAuto(tr, nb, 10)))
+    assert(viaAuto(m) == viaAuto(m - 1), "fused and join routes must emit identical rows")
+  }
+
   test("fused recommend refuses past the model budget and on null interactions") {
     val nb = Cooccur.itemNeighbors(tr, 20)
     assert(Budgets.scoped(_.copy(cooccurModelRows = 5L))(

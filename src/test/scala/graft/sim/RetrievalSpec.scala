@@ -137,6 +137,18 @@ class RetrievalSpec extends SparkSpecBase {
     assert(tiny.get().isEmpty && tiny.get().isEmpty && tiny.collects == 1)
   }
 
+  test("fused IVF kernel reads a NULL seen element as no item, never as item 0") {
+    // a catalog that holds id 0, one cell; a seen array of one NULL
+    val rows = (0L until 6L).map(id => (id, 0, vec(id, 8).toArray)).toArray
+    val bc = spark.sparkContext.broadcast(
+      graft.sql.TopKDotIvfF32.group(rows, Array(Array.fill(8)(0f))))
+    val served = queries.limit(1)
+      .select(posexplode(graft.sql.TopKDotIvfF32.fused(col("qv").cast("array<float>"),
+        array(lit(null).cast("long")), bc, k = 6, nprobe = 1)))
+      .select(col("col.item_id")).as[Long].collect().toSet
+    assert(served == (0L until 6L).toSet, s"item 0 must be served: $served")
+  }
+
   test("fused IVF kernel is row-identical to the join plan, with plan shapes pinned") {
     val cents = centroidsFor(6)
     val index = Retrieval.annIndex(catalog, "item_id", "cv", cents)

@@ -114,10 +114,10 @@ object ConnectedComponents {
       .localCheckpoint()
     // 16 B/edge of task results; ~32 B/edge of driver heap for the
     // transfer and the id image, ~20 B per node for the dictionary, the
-    // parents and the labels, and ~128 B per node for the output rows
-    // (the builder's tuples and the local relation), about one node per
-    // edge on a pair graph
-    val got = PackedGraph.collect(pairs, maxEdges, 16L, 192L)()
+    // parents and the labels, and ~17 B per node for the output
+    // (`PackedGraph.frame`'s primitive slices, measured), about one node
+    // per edge on a pair graph
+    val got = PackedGraph.collect(pairs, maxEdges, 16L, 96L)()
     graft.operators.Checkpoints.free(pairs)
     val chunks = got match {
       case Some((cs, _)) => cs

@@ -318,18 +318,26 @@ private[graft] object PackedGraph {
   }
 
   /** (node, `valueCol`) rows of every dense id whose value `keep`s, the
-    * node cast back to `nodeType`. */
+    * node cast back to `nodeType`, in node order. The rows are emitted on
+    * the executors from `defaultParallelism` primitive slices of the two
+    * arrays, so the driver holds the slices (16 B per node) and no row
+    * objects: no boxed builder and no local relation. */
   def frame(spark: SparkSession, nodes: Array[Long], values: Array[Long],
       valueCol: String, nodeType: DataType = LongType,
       keep: Long => Boolean = _ => true): DataFrame = {
     import spark.implicits._
-    val b = Seq.newBuilder[(Long, Long)]
-    var i = 0
-    while (i < nodes.length) {
-      if (keep(values(i))) b += ((nodes(i), values(i)))
-      i += 1
+    val n = nodes.length
+    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, n))
+    val parts = Seq.tabulate(slices) { s =>
+      val from = (n.toLong * s / slices).toInt
+      val until = (n.toLong * (s + 1) / slices).toInt
+      (java.util.Arrays.copyOfRange(nodes, from, until),
+        java.util.Arrays.copyOfRange(values, from, until))
     }
-    spark.createDataset(b.result()).toDF("node", valueCol)
+    val rows = spark.sparkContext.parallelize(parts, slices).flatMap { case (ns, vs) =>
+      Iterator.range(0, ns.length).filter(i => keep(vs(i))).map(i => (ns(i), vs(i)))
+    }
+    spark.createDataset(rows).toDF("node", valueCol)
       .select(col("node").cast(nodeType).as("node"), col(valueCol))
   }
 }

@@ -139,74 +139,129 @@ object RecsTable {
 
   /** The dense and ANN serves' shared query shape. The history is read
     * ONCE, when the query starts: its per-user seen-id arrays are built
-    * and persisted (recomputable — a long-running query survives an
-    * executor loss) before `start()`, and released when the query stops
-    * or fails. After that, new interactions arrive only through the
-    * stream; a later change to `history`'s source is not seen.
+    * into the query's one persisted frame of served users
+    * ([[servedUsers]]), materialized before `start()` (recomputable — a
+    * long-running query survives an executor loss) and released when the
+    * query stops or fails. After that, new interactions arrive only
+    * through the stream; a later change to `history`'s source is not seen.
     *
-    * Per micro-batch the batch is first APPENDED to `streamLogDir`
-    * (parquet, read back with the batch's own schema — no per-batch
+    * Per micro-batch the batch is APPENDED to `streamLogDir` (parquet,
+    * read back with the batch's own schema — no per-batch
     * schema-inference job), so an item seen in batch 1 is still excluded
-    * when the same user reappears in batch 5. A retried micro-batch
-    * appends duplicate rows, which is harmless: the seen sets are sets —
-    * the log is at-least-once, the derived state exactly-once. Then
+    * when the same user reappears in batch 5. The append runs beside the
+    * batch's query, which groups the batch's own rows with the log's, and
+    * the batch ends once both have. A retried micro-batch appends
+    * duplicate rows, which is harmless: the seen sets are sets — the log
+    * is at-least-once, the derived state exactly-once. Meanwhile
     * [[batchLists]] ranks the active users through `serve`, and every
-    * non-empty list is put through the same kvSink seam as the batch table (a user
-    * with nothing left to recommend gets no put). Per-batch cost is the
-    * log scan plus O(active × their history); the history is never
-    * rescanned. The log compacts on the model-refit cadence (fold it into
-    * the history snapshot, restart the query). */
+    * non-empty list is put through the same kvSink seam as the batch table
+    * (a user with nothing left to recommend gets no put). Per-batch cost
+    * is the log scan, one in-memory scan of the served-users frame where
+    * it is cached, and O(batch + active × their history) rows exchanged
+    * and scored: only the log's and the batch's rows move, once; the
+    * history and the user vectors are never rescanned or shuffled. The
+    * log compacts on the model-refit cadence (fold it into the history
+    * snapshot, restart the query). */
   private def streamSeenServe(stream: DataFrame, history: DataFrame,
       userVecs: () => DataFrame, put: Iterator[(String, String)] => Unit,
       streamLogDir: String, serve: DataFrame => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val histSeen = historySeen(history)
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val served = servedUsers(history, userVecs)
     try {
-      histSeen.count()
+      served.get()
+      // the log exists (empty) before the first append lands
+      val logPath = new org.apache.hadoop.fs.Path(streamLogDir)
+      logPath.getFileSystem(stream.sparkSession.sparkContext.hadoopConfiguration)
+        .mkdirs(logPath)
+      // one new thread per append, started by the batch's thread so it
+      // inherits the batch's Spark job properties
+      val appender = ExecutionContext.fromExecutor { r =>
+        val t = new Thread(r, "graft-stream-log-append")
+        t.setDaemon(true)
+        t.start()
+      }
       val q = stream.writeStream.outputMode("append")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
           val b = batch.select(col("user_id"), col("item_id"))
-          b.write.mode("append").parquet(streamLogDir)
+          // the append runs beside the query: the query groups the batch's
+          // rows itself, so it may read the log with or without them (a
+          // listing sees a log file only once the committer has moved it
+          // in whole), and the batch ends only once its append has
+          val appended = Future(b.write.mode("append").parquet(streamLogDir))(appender)
           val log = batch.sparkSession.read.schema(b.schema).parquet(streamLogDir)
-          kvSink(batchLists(b, log, histSeen, userVecs(), serve), put)
+          try kvSink(batchLists(b, log, served.get(), serve), put)
+          finally Await.ready(appended, Duration.Inf)
+          Await.result(appended, Duration.Inf)
           ()
         }
         .start()
-      val release = new ReleaseOnTermination(q, histSeen)
+      val release = new ReleaseOnTermination(q, () => served.clear())
       q.sparkSession.streams.addListener(release)
       // terminated before the listener was added: its event is gone
       if (!q.isActive) release.release()
       q
     } catch {
       case e: Throwable =>
-        histSeen.unpersist()
+        served.clear()
         throw e
     }
   }
 
-  /** The history's per-user seen-id arrays (user_id, __hseen), persisted
-    * — a streaming serve's only read of its history. */
-  private[serve] def historySeen(history: DataFrame): DataFrame =
-    graft.sim.Retrieval.seenSets(history, "user_id", "item_id", "__hseen").persist()
+  /** The query's per-generation frame of served users
+    * (user_id, vec, __hseen): the history's per-user seen-id arrays
+    * full-outer-joined with the user vectors, hash-partitioned by user_id
+    * over `defaultParallelism` partitions, persisted and materialized. A
+    * new user-vector generation (the supplier returning a new frame)
+    * rebuilds it from the superseded frame's `__hseen` — the history is
+    * read only for the first — and the superseded frame is released once
+    * its successor is materialized. */
+  private[serve] def servedUsers(history: DataFrame, userVecs: () => DataFrame)
+      : graft.sim.Retrieval.GenerationCache[DataFrame] =
+    new graft.sim.Retrieval.GenerationCache[DataFrame](userVecs, (vecs, prev) => {
+      val histSeen = prev match {
+        case Some(old) => old.select(col("user_id"), col("__hseen"))
+          .filter(col("__hseen").isNotNull)
+        case None => graft.sim.Retrieval.seenSets(history, "user_id", "item_id", "__hseen")
+      }
+      val frame = histSeen.join(vecs.select(col("user_id"), col("vec")), Seq("user_id"),
+          "full_outer")
+        .repartition(vecs.sparkSession.sparkContext.defaultParallelism, col("user_id"))
+        .persist()
+      try frame.count() catch {
+        case e: Throwable =>
+          frame.unpersist()
+          throw e
+      }
+      frame
+    }, _.unpersist())
 
-  /** One micro-batch's non-empty (user_id, recs) lists. The queries are
-    * the batch's distinct users that have a vector, each with `__seen` =
-    * its [[historySeen]] array ++ its seen array over the log; `serve`
-    * ranks them. The log is left-semi-pruned to the batch's users BEFORE
-    * its one seen aggregation, and the history relation is not read at
-    * all. Plan shape pinned in RecsTableSpec. */
-  private[serve] def batchLists(batch: DataFrame, log: DataFrame,
-      histSeen: DataFrame, userVecs: DataFrame,
+  /** One micro-batch's non-empty (user_id, recs) lists. One grouping over
+    * the log's rows ∪ the batch's rows tagged active — a single exchange
+    * by user_id into `served`'s partitioning — gives each user's seen set
+    * over the log (`collect_set`, so reading the batch's rows twice
+    * changes nothing) and keeps the batch's users. Those join IN PLACE to
+    * the served-users frame ([[servedUsers]]; users without a vector drop
+    * out): the small grouped side is the hash-join build, so the frame is
+    * neither shuffled nor broadcast, and `serve` ranks each user with
+    * `__seen` = its history array ++ its log array on the frame's own
+    * partitions. The history relation is not read at all. Plan shape
+    * pinned in RecsTableSpec. */
+  private[serve] def batchLists(batch: DataFrame, log: DataFrame, served: DataFrame,
       serve: DataFrame => DataFrame): DataFrame = {
-    val active = batch.select(col("user_id")).distinct()
-    val logSeen = graft.sim.Retrieval.seenSets(
-      log.join(active, Seq("user_id"), "left_semi"), "user_id", "item_id", "__lseen")
-    val none = typedLit(Seq.empty[Long])
-    val queries = active.join(userVecs, Seq("user_id"))
-      .join(histSeen, Seq("user_id"), "left")
-      .join(logSeen, Seq("user_id"), "left")
+    val logSeen = log.select(col("user_id"), col("item_id"), lit(false).as("__active"))
+      .unionByName(batch.select(col("user_id"), col("item_id"), lit(true).as("__active")))
+      .repartition(batch.sparkSession.sparkContext.defaultParallelism, col("user_id"))
+      .groupBy(col("user_id"))
+      .agg(collect_set(col("item_id").cast("long")).as("__lseen"),
+        max(col("__active")).as("__active"))
+      .filter(col("__active"))
+    val queries = logSeen.hint("shuffle_hash")
+      .join(served.filter(col("vec").isNotNull), Seq("user_id"))
       .select(col("user_id"), col("vec"),
-        concat(coalesce(col("__hseen"), none), coalesce(col("__lseen"), none)).as("__seen"))
+        concat(coalesce(col("__hseen"), typedLit(Seq.empty[Long])), col("__lseen"))
+          .as("__seen"))
     serve(queries).filter(size(col("recs")) > 0)
   }
 
@@ -221,7 +276,7 @@ object RecsTable {
     val bc = itemCatalog.get().getOrElse(throw new IllegalStateException(
       "item catalog exceeds the fused-kernel budget; refresh through " +
         "streamAnnRefresh (the ANN index path) instead"))
-    kernelLists(graft.sim.Retrieval.rankedArrays(queries, "user_id",
+    kernelLists(graft.sim.Retrieval.rankedInPlace(queries, "user_id",
       graft.sim.Retrieval.dotKernel("vec", bc, k)))
   }
 
@@ -234,7 +289,7 @@ object RecsTable {
       centroids: () => Array[Array[Float]], k: Int, nprobe: Int): DataFrame => DataFrame = {
     val cache = new graft.sim.Retrieval.CellCatalogCache(itemIndex, "item_id", "vec", centroids)
     queries => cache.get() match {
-      case Some(bc) => kernelLists(graft.sim.Retrieval.rankedArrays(queries, "user_id",
+      case Some(bc) => kernelLists(graft.sim.Retrieval.rankedInPlace(queries, "user_id",
         graft.sim.Retrieval.annKernel("vec", bc, k, nprobe)))
       case None => recLists(graft.sim.Retrieval.topKAnnJoin(queries, "user_id", "vec",
         itemIndex(), "item_id", "vec", centroids(), k, nprobe))
@@ -242,15 +297,15 @@ object RecsTable {
     }
   }
 
-  /** Unpersists `frame` once `q` terminates — stopped or failed — and
-    * then removes itself; keyed on the query id. */
+  /** Runs `free` once `q` terminates — stopped or failed — and then
+    * removes itself; keyed on the query id. */
   private[serve] final class ReleaseOnTermination(
-      q: org.apache.spark.sql.streaming.StreamingQuery, frame: DataFrame)
+      q: org.apache.spark.sql.streaming.StreamingQuery, free: () => Unit)
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
     private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
     def release(): Unit = if (released.compareAndSet(false, true)) {
-      frame.unpersist()
+      free()
       q.sparkSession.streams.removeListener(this)
     }
     override def onQueryStarted(e: QueryStartedEvent): Unit = ()
@@ -264,16 +319,18 @@ object RecsTable {
     * their tower/factor vectors against the item catalog through the
     * fused retrieval kernel (`sim.Retrieval.dotKernel`). The seen ids —
     * history (aggregated once per query) plus the accumulated stream log
-    * (aggregated per batch, active users only) — are excluded ROW-LOCALLY
-    * inside the kernel, and the kernel's ranked array IS the rec list, so
-    * a refresh costs |active| × catalog fused dots with zero candidate
-    * materialization and no regrouping (query shape and lifecycle:
-    * [[streamSeenServe]]). The model is DATA: `userVecs` is a supplier
-    * re-read per batch, and the item catalog rides a
-    * [[graft.sim.Retrieval.CatalogCache]] — collected, flattened and
-    * broadcast ONCE PER MODEL GENERATION (round-11 verdict task 5), not
-    * once per batch; a hot-swap (the supplier returning a NEW frame)
-    * takes effect on the next batch without restarting the query.
+    * (aggregated per batch) — are excluded ROW-LOCALLY inside the kernel,
+    * and the kernel's ranked array IS the rec list. A batch costs the log
+    * scan, one in-memory scan of the query's cached served-users frame,
+    * one exchange of the log's and the batch's rows — O(batch + active ×
+    * their history) rows, never O(all users) — and |active| × catalog
+    * fused dots, with zero candidate materialization and no regrouping
+    * (query shape and lifecycle: [[streamSeenServe]]). The model is DATA:
+    * the user vectors are cached in the served-users frame and the item
+    * catalog rides a [[graft.sim.Retrieval.CatalogCache]] — each rebuilt
+    * ONCE PER MODEL GENERATION (round-11 verdict task 5), not once per
+    * batch; a hot-swap (a supplier returning a NEW frame) takes effect on
+    * the next batch without restarting the query.
     * A catalog past the kernel's float budget fails the batch LOUDLY —
     * streaming serve at that scale is [[streamAnnRefresh]], not a silent
     * fallback to a candidate blowup inside foreachBatch. */
@@ -344,10 +401,16 @@ object RecsTable {
       nprobe: Int, put: Iterator[(String, String)] => Unit,
       streamLogDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val (idx, cents) = pairedArtifactThunks(artifacts)
-    streamAnnRefresh(stream, history,
-      () => userVecs().select(col("user_id"),
-        concat(col("vec"), array(lit(0.0f))).as("vec")),
-      idx, cents, k, nprobe, put, streamLogDir)
+    // one augmented frame per user-vector frame, so the served-users
+    // cache (the only caller, under its lock) sees the supplier's
+    // generations, not a new frame per batch
+    var last: (DataFrame, DataFrame) = (null, null)
+    streamAnnRefresh(stream, history, () => {
+      val raw = userVecs()
+      if (!(raw eq last._1))
+        last = (raw, raw.select(col("user_id"), concat(col("vec"), array(lit(0.0f))).as("vec")))
+      last._2
+    }, idx, cents, k, nprobe, put, streamLogDir)
   }
 
   /** Round-15 (ADVICE r14): the typed overload used to pass

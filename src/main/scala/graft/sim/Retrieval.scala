@@ -87,41 +87,56 @@ object Retrieval {
     else Some(frame.limit(maxRows + 1).collect())
       .filter(rows => rows.nonEmpty && rows.length <= maxRows)
 
-  /** One published catalog per MODEL GENERATION (round-11 verdict task 5):
-    * streaming serves re-enter the kernel every micro-batch, but the
-    * catalog only changes on model hot-swap — so the cache keys the
-    * broadcast on the supplier's returned frame IDENTITY and re-publishes
-    * (re-probing its budget) only when the supplier hands back a new
-    * frame. The superseded broadcast is unpersisted (not destroyed: tasks
-    * of an in-flight batch may still read it; the ContextCleaner finishes
-    * the job). `collects` counts generations — spec-pinned to 1 across
-    * batches of a stable model. The budgets are read once, when the cache
-    * is built. [[CatalogCache]] and [[CellCatalogCache]] are its two
-    * catalogs. */
-  sealed abstract class GenerationCache[T](supplier: () => DataFrame,
-      publish: DataFrame => Option[Broadcast[T]]) {
+  /** One value per MODEL GENERATION (round-11 verdict task 5): streaming
+    * serves re-enter the kernel every micro-batch, but a model frame only
+    * changes on hot-swap — so the cache keys its value on the supplier's
+    * returned frame IDENTITY and rebuilds it only when the supplier hands
+    * back a new frame. `build` sees the superseded value (a rebuild may
+    * start from it); that value is released only once its successor is
+    * built, and is kept if the build fails. A released broadcast is
+    * unpersisted, not destroyed: tasks of an in-flight batch may still
+    * read it, and the ContextCleaner finishes the job. `collects` counts
+    * generations — spec-pinned to 1 across batches of a stable model. The
+    * budgets are read once, when the cache is built. [[CatalogCache]] and
+    * [[CellCatalogCache]] are its two catalogs; a streaming serve's
+    * per-query frame of served users is its third value. */
+  sealed class GenerationCache[V] private[graft] (supplier: () => DataFrame,
+      build: (DataFrame, Option[V]) => V, release: V => Unit) {
     private val budgets = graft.operators.Budgets.get
     @volatile private var keyFrame: DataFrame = null
-    @volatile private var cached: Option[Broadcast[T]] = None
+    @volatile private var cached: Option[V] = None
     @volatile var collects: Int = 0
 
-    def get(): Option[Broadcast[T]] = synchronized {
+    def get(): V = synchronized {
       val frame = supplier()
       if (!(frame eq keyFrame)) {
-        cached.foreach(_.unpersist(blocking = false))
-        cached = graft.operators.Budgets.scoped(_ => budgets)(publish(frame))
+        val next = graft.operators.Budgets.scoped(_ => budgets)(build(frame, cached))
+        cached.foreach(release)
+        cached = Some(next)
         keyFrame = frame
         collects += 1
       }
-      cached
+      cached.get
+    }
+
+    /** Releases the current value; a later [[get]] builds afresh. */
+    private[graft] def clear(): Unit = synchronized {
+      cached.foreach(release)
+      cached = None
+      keyFrame = null
     }
   }
+
+  /** A catalog cache's release: the superseded broadcast is unpersisted. */
+  private def unpersisted[T](bc: Option[Broadcast[T]]): Unit =
+    bc.foreach(_.unpersist(blocking = false))
 
   /** The dense kernel's catalog per model generation ([[publishCatalog]]
     * under a [[GenerationCache]]). */
   final class CatalogCache(supplier: () => DataFrame, cId: String, cVec: String,
       cosine: Boolean = false)
-      extends GenerationCache[FlatCatalog](supplier, publishCatalog(_, cId, cVec, cosine))
+      extends GenerationCache[Option[Broadcast[FlatCatalog]]](supplier,
+        (frame, _) => publishCatalog(frame, cId, cVec, cosine), unpersisted)
 
   /** (qId, `as`): each query's distinct seen ids as array<bigint> — the
     * one seen aggregation (collect_set skips null ids). */
@@ -149,14 +164,22 @@ object Retrieval {
     * rank-ordered array<struct<item_id, score>>. `base` is first
     * repartitioned by ROW COUNT: each query row is ~dim bytes but catalog
     * × dim WORK, so AQE's size-based coalescing would otherwise serialize
-    * the scoring loop on one core (SCALE.md, round 11). The streaming
-    * serves read `__top` as the rec list; the row forms explode it. */
+    * the scoring loop on one core (SCALE.md, round 11). The row forms
+    * explode `__top`. */
   private[graft] def rankedArrays(base: DataFrame, qId: String,
       kernel: Column => Column): DataFrame = {
     val slices = base.sparkSession.sparkContext.defaultParallelism
-    base.repartition(slices).select(col(qId),
-      kernel(coalesce(col("__seen"), typedLit(Seq.empty[Long]))).as("__top"))
+    rankedInPlace(base.repartition(slices), qId, kernel)
   }
+
+  /** [[rankedArrays]] on `base`'s own partitions, for queries already
+    * spread over `defaultParallelism` partitions: the streaming serves'
+    * queries sit on the partitions of their per-query served-users frame,
+    * and read `__top` as the rec list. */
+  private[graft] def rankedInPlace(base: DataFrame, qId: String,
+      kernel: Column => Column): DataFrame =
+    base.select(col(qId),
+      kernel(coalesce(col("__seen"), typedLit(Seq.empty[Long]))).as("__top"))
 
   /** The dense kernel over an already-published catalog, as a
     * [[rankedArrays]] kernel. */
@@ -247,8 +270,8 @@ object Retrieval {
     * budget (the join plan's regime — the stream caller decides). */
   final class CellCatalogCache(supplier: () => DataFrame, cId: String,
       cVec: String, centroids: () => Array[Array[Float]])
-      extends GenerationCache[graft.sql.TopKDotIvfF32.CellCatalog](supplier,
-        publishCellCatalog(_, cId, cVec, centroids()))
+      extends GenerationCache[Option[Broadcast[graft.sql.TopKDotIvfF32.CellCatalog]]](supplier,
+        (index, _) => publishCellCatalog(index, cId, cVec, centroids()), unpersisted)
 
   /** The fused IVF plan against an already-published cell catalog: probe
     * selection, probed-cell scan, seen exclusion and the k-heap all in

@@ -4,8 +4,8 @@ import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
 /** The packed graph format the graph kernels share: the CSR build against
-  * a sequential reference past its thread split, the dictionary, and the
-  * guarded collect's refusals. */
+  * a sequential reference past its thread split, the dictionary, the
+  * guarded collect's refusals and the output frame. */
 class PackedGraphSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -78,5 +78,21 @@ class PackedGraphSpec extends SparkSpecBase {
     val rec = PackedGraph.collect(grouped, 2L, 24L, 96L,
       rows = coalesce(sum(size(col("nbrs"))), lit(0L)))().get
     assert(rec._1.flatten.toSeq == Seq(1L, 2L, 2L, 3L, 4L, 0L))
+  }
+
+  test("frame keeps node order and type over any slice count") {
+    for (n <- Seq(0, 1, 3, 10, 1001)) {
+      val nodes = Array.tabulate(n)(i => i * 5L - 7L)
+      val values = Array.tabulate(n)(i => (i % 4).toLong)
+      val all = PackedGraph.frame(spark, nodes, values, "v")
+      assert(all.columns.toSeq == Seq("node", "v"))
+      assert(all.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+        nodes.toSeq.zip(values.toSeq), s"n = $n")
+      val kept = PackedGraph.frame(spark, nodes, values, "v",
+        org.apache.spark.sql.types.IntegerType, keep = _ != 3L)
+      assert(kept.schema("node").dataType == org.apache.spark.sql.types.IntegerType)
+      assert(kept.collect().map(r => (r.getInt(0).toLong, r.getLong(1))).toSeq ==
+        nodes.toSeq.zip(values.toSeq).filter(_._2 != 3L), s"n = $n, kept")
+    }
   }
 }

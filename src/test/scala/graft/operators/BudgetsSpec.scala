@@ -42,7 +42,7 @@ class BudgetsSpec extends AnyFunSuite {
     ("ShortestPaths.runBroadcast node dictionary", 24L, 64L, 429496729L, 40265318L),
     ("PageRank.personalizedFused seed set", 16L, 128L, 214748364L, 60397977L),
     ("Triangles.perNodeFused half-adjacency", 24L, 96L, 286331153L, 40265318L),
-    ("ConnectedComponents.runFused pair graph", 16L, 192L, 143165576L, 60397977L),
+    ("ConnectedComponents.runFused pair graph", 16L, 96L, 286331153L, 60397977L),
     ("Cooccur.recommendFused neighbor model", 24L, 192L, 143165576L, 40265318L),
     ("RandomWalks.walksFused ranked adjacency", 24L, 128L, 214748364L, 40265318L))
   private val heap = 64L << 30

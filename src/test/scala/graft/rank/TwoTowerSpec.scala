@@ -363,6 +363,15 @@ class TwoTowerSpec extends SparkSpecBase {
     assert(partial.columns.toSeq == Seq("user_id", "rk", "item_id", "score"))
   }
 
+  test("recommendAnn refuses empty centroids with annServeArtifacts' named message") {
+    val users = testRows.map(_._1).distinct.toDF("user_id")
+    val e = intercept[IllegalArgumentException] {
+      TwoTower.recommendAnn(fitted._1, users, 5, centroids = Some(Array.empty))
+    }
+    assert(e.getMessage.contains("centroids must be fit in the MIPS-augmented space") &&
+      e.getMessage.contains("got 0"), s"refusal must name the contract: ${e.getMessage}")
+  }
+
   test("fused recommend feeds the RecsTable serving contract end-to-end") {
     import graft.serve.RecsTable
     val users = testRows.map(_._1).distinct.toDF("user_id")

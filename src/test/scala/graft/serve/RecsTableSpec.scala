@@ -174,12 +174,14 @@ class RecsTableSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("micro-batch plan: no history scan, log semi-pruned before one seen agg") {
+  test("micro-batch plan: one grouping of log and batch, frame joined in place") {
     import org.apache.spark.sql.catalyst.expressions.aggregate.CollectSet
-    import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, RepartitionOperation, Union}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
     val base = java.nio.file.Files.createTempDirectory("graft_planshape")
     val histDir = base.resolve("history").toString
     val logDir = base.resolve("log").toString
@@ -201,8 +203,21 @@ class RecsTableSpec extends SparkSpecBase {
       }
       case _ => Nil
     }
-    val histSeen = RecsTable.historySeen(spark.read.parquet(histDir))
+    // every (node, ancestors) of a final AQE plan, query stages unwrapped;
+    // a cached scan's own plan is not descended into
+    def walk(p: SparkPlan, above: List[SparkPlan]): Seq[(SparkPlan, List[SparkPlan])] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case _: InMemoryTableScanExec => Nil
+        case other => other.children
+      }
+      (p, above) +: kids.flatMap(walk(_, p :: above))
+    }
+    val served = RecsTable.servedUsers(spark.read.parquet(histDir), () => userVecs)
     try {
+      val frame = served.get()
+      assert(frame.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
       val serves = Seq(
         "dense" -> RecsTable.denseServe(
           new graft.sim.Retrieval.CatalogCache(() => itemVecs, "item_id", "vec"), 2),
@@ -210,33 +225,41 @@ class RecsTableSpec extends SparkSpecBase {
         "ann join" -> Budgets.scoped(_.copy(cellCatalogFloats = 10L))(
           RecsTable.annServe(() => index, () => cents, 2, 2)))
       for ((name, serve) <- serves) {
-        val lists = RecsTable.batchLists(batch, spark.read.parquet(logDir), histSeen,
-          userVecs, serve)
+        val lists = RecsTable.batchLists(batch, spark.read.parquet(logDir), frame, serve)
         // u1 saw {1 (history), 4 (log), 3 (batch)}, u4 saw {2 (log), 1 (batch)}
         assert(lists.collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap ==
           Map("1" -> Seq("2"), "4" -> Seq("4", "3")), name)
         val plan = lists.queryExecution.optimizedPlan
-        // (1) the history relation is never scanned: its seen arrays come
-        // from the one per-query cached relation
+        // (1) the history relation is never scanned: its seen arrays and
+        // the vectors come from the one per-query cached relation
         assert(!paths(plan).exists(_.contains(histDir)), s"$name scans history:\n$plan")
-        assert(plan.collectLeaves().count(_.isInstanceOf[InMemoryRelation]) == 1,
-          s"$name: expected the one cached history seen relation:\n$plan")
-        // (2) exactly one seen aggregation, over the log semi-pruned to
-        // the batch's users below it
+        val cached = plan.collect { case m: InMemoryRelation => m }
+        assert(cached.size == 1, s"$name: expected the one served-users relation:\n$plan")
+        // (2) the frame is not repartitioned: nothing above it repartitions
+        val toCached = plan.collect {
+          case r: RepartitionOperation if r.find(_ eq cached.head).isDefined => r
+        }
+        assert(toCached.isEmpty, s"$name: the served-users frame is repartitioned:\n$plan")
+        // (3) exactly one seen aggregation, over the log ∪ the batch
         val seenAggs = plan.collect {
           case a: Aggregate if a.aggregateExpressions.exists(_.exists(_.isInstanceOf[CollectSet])) => a
         }
         assert(seenAggs.size == 1, s"$name: ${seenAggs.size} seen aggregations:\n$plan")
-        val semis = plan.collect { case j: Join if j.joinType == LeftSemi => j }
-        // (3) no second semi-join against the query set
-        assert(semis.size == 1, s"$name: ${semis.size} semi-joins:\n$plan")
-        assert(seenAggs.head.find(_ eq semis.head).isDefined,
-          s"$name: the semi-join is not below the seen aggregation:\n$plan")
-        assert(paths(semis.head.left).exists(_.contains(logDir)) &&
-          paths(semis.head.right).isEmpty,
-          s"$name: the semi-join does not prune the log to the batch:\n$plan")
+        val unions = seenAggs.head.collect { case u: Union => u }
+        assert(unions.size == 1 && unions.head.children.size == 2 &&
+          unions.head.children.count(c => paths(c).exists(_.contains(logDir))) == 1 &&
+          unions.head.children.count(c => paths(c).isEmpty) == 1,
+          s"$name: the seen aggregation is not over log ∪ batch:\n$plan")
+        // (4) in the executed plan the frame's scan sits under no exchange
+        val scans = walk(lists.queryExecution.executedPlan, Nil).collect {
+          case (s: InMemoryTableScanExec, above) => above
+        }
+        assert(scans.size == 1, s"$name: ${scans.size} cached scans")
+        assert(!scans.head.exists(p => p.isInstanceOf[ShuffleExchangeLike] ||
+          p.isInstanceOf[BroadcastExchangeLike]),
+          s"$name: the served-users frame moves:\n${lists.queryExecution.executedPlan}")
       }
-    } finally histSeen.unpersist()
+    } finally served.clear()
   }
 
   test("streaming serves put what the batch forms give on history plus log") {
@@ -383,6 +406,62 @@ class RecsTableSpec extends SparkSpecBase {
     }
   }
 
+  test("user-vector hot-swap rebuilds the served-users frame, frees the old one") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    implicit val sqlCtx = spark.sqlContext
+    // items 1..6 one-hot, so each user's ranking is its vector's order
+    val itemVecs = (1 to 6).map(i => (i.toLong, Seq.tabulate(6)(d => if (d == i - 1) 1f else 0f)))
+      .toDF("item_id", "vec")
+    // generation 1: u1 prefers 1>2>3>4>5>6; u3 has history but no vector
+    val gen1 = Seq((1L, Seq(0.9f, 0.8f, 0.7f, 0.6f, 0.5f, 0.4f))).toDF("user_id", "vec")
+    // generation 2: u1 re-embedded to 1>4>6>5>3>2; u3 gains 2>6>5>4>3>1
+    val gen2 = Seq(
+      (1L, Seq(1.0f, 0.1f, 0.2f, 0.9f, 0.5f, 0.8f)),
+      (3L, Seq(0.1f, 1.0f, 0.2f, 0.3f, 0.4f, 0.5f))).toDF("user_id", "vec")
+    val history = Seq((1L, 1L), (3L, 2L)).toDF("user_id", "item_id")
+    @volatile var current = gen1
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    BatchKv.puts.clear()
+    val in = MemoryStream[(Long, Long)]
+    val dir = java.nio.file.Files.createTempDirectory("graft_swaplog").toString
+    val q = RecsTable.streamDenseRefresh(in.toDF().toDF("user_id", "item_id"), history,
+      () => current, new graft.sim.Retrieval.CatalogCache(() => itemVecs, "item_id", "vec"),
+      k = 2, BatchKv.put, s"$dir/log")
+    val gen1Frame = persisted -- before
+    def puts(n: Int) = Option(BatchKv.puts.get(n)).map(_.asScala.toMap).getOrElse(Map.empty)
+    try {
+      assert(gen1Frame.size == 1, s"one served-users frame per query: $gen1Frame")
+      BatchKv.batch = 0
+      in.addData((1L, 4L), (3L, 5L)); q.processAllAvailable()
+      // u1 saw {1 (history), 4}; u3 has no vector yet, so no put
+      assert(puts(0) == Map("1" -> "[\"2\",\"3\"]"), s"batch 0: ${puts(0)}")
+
+      current = gen2
+      BatchKv.batch = 1
+      in.addData((3L, 3L)); q.processAllAvailable()
+      // u3 is served with its new vector; its history item 2 (its top
+      // preference) and its batch-0 item 5 stay seen. u1 was active in
+      // batch 0 only: no put
+      assert(puts(1) == Map("3" -> "[\"6\",\"4\"]"), s"batch 1: ${puts(1)}")
+      val gen2Frame = persisted -- before
+      assert(gen2Frame.size == 1 && (gen2Frame & gen1Frame).isEmpty,
+        s"the superseded served-users frame is released: $gen1Frame -> $gen2Frame")
+
+      BatchKv.batch = 2
+      in.addData((1L, 2L)); q.processAllAvailable()
+      // u1 re-ranked by generation 2 over its unseen {3, 5, 6}; its history
+      // item 1 and log item 4 (its top two) stay seen
+      assert(puts(2) == Map("1" -> "[\"6\",\"5\"]"), s"batch 2: ${puts(2)}")
+      assert(persisted -- before == gen2Frame, "a stable generation builds no frame")
+    } finally q.stop()
+    eventually(timeout(Span(30, Seconds))) {
+      assert((persisted -- before).isEmpty, "released after stop()")
+    }
+  }
+
   test("streamAnnRefresh serves the recs contract through the IVF index (round-12)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
@@ -481,6 +560,14 @@ class RecsTableSpec extends SparkSpecBase {
       // dot(u1, i2) = 0.7 > dot(u1, i3) = 0.5
       assert(InMemoryKv.store.get("1") == "[\"2\",\"3\"]",
         s"payload ${InMemoryKv.store.get("1")}")
+      // the 0-extended user vectors are one generation across batches:
+      // the served-users frame is not rebuilt
+      val frames = spark.sparkContext.getPersistentRDDs.keySet
+      in.addData((1L, 2L))
+      q.processAllAvailable()
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- frames).isEmpty,
+        "a stable user-vector supplier rebuilt the served-users frame")
+      assert(InMemoryKv.store.get("1") == "[\"3\"]", s"payload ${InMemoryKv.store.get("1")}")
     } finally q.stop()
   }
 

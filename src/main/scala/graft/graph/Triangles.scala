@@ -89,85 +89,49 @@ object Triangles {
     val got = PackedGraph.collect(grouped, math.min(maxEdges, (Int.MaxValue / 3 - 4).toLong),
       24L, 96L, rows = coalesce(sum(size(col("nbrs"))), lit(0L)))(_.getLong(0) > 0L)
     graft.operators.Checkpoints.free(grouped)
-    val chunks = got match {
-      case Some((cs, _)) => cs
+    val (chunks, m) = got match {
+      case Some((cs, p)) => (cs, p.getLong(0).toInt)
       case None => return None
     }
     // the driver builds DENSE int-indexed arrays — node dictionary,
     // degrees, and the (deg, id)-oriented out-adjacency, id-sorted per
     // node — so no boxed lookup sits in the kernel's hottest loop. Counts,
     // orientation, and intersections are value-identical to the composed
-    // plan (spec-pinned).
-    val ids = new Array[Long](chunks.map(_.length).sum) // upper bound
+    // plan (spec-pinned). First the m canonical (u, v) edges, flat:
+    val e = new Array[Long](2 * m)
     var p = 0
     chunks.foreach { c =>
       var i = 0
       while (i < c.length) {
         val len = c(i + 1).toInt
-        ids(p) = c(i); p += 1
         var j = 0
-        while (j < len) { ids(p) = c(i + 2 + j); p += 1; j += 1 }
+        while (j < len) { e(p) = c(i); e(p + 1) = c(i + 2 + j); p += 2; j += 1 }
         i += 2 + len
       }
     }
-    val nodes = PackedGraph.dictionary(java.util.Arrays.copyOf(ids, p))
+    val nodes = PackedGraph.dictionary(Array(e), 2, None)
     val n = nodes.length
     def idx(id: Long): Int = java.util.Arrays.binarySearch(nodes, id)
     // exact degrees per dense id
     val deg = new Array[Long](n)
-    chunks.foreach { c =>
-      var i = 0
-      while (i < c.length) {
-        val len = c(i + 1).toInt
-        val ui = idx(c(i))
-        deg(ui) += len.toLong
-        var j = 0
-        while (j < len) { deg(idx(c(i + 2 + j))) += 1L; j += 1 }
-        i += 2 + len
-      }
+    p = 0
+    while (p < e.length) { deg(idx(e(p))) += 1L; deg(idx(e(p + 1))) += 1L; p += 2 }
+    // (deg, id)-orientation lo -> hi, each edge rewritten as (hi, lo): the
+    // dst-grouped CSR of those records is every node's oriented
+    // out-adjacency (its dictionary is `nodes`: the same endpoints)
+    p = 0
+    while (p < e.length) {
+      val u = e(p); val v = e(p + 1)
+      val du = deg(idx(u)); val dv = deg(idx(v))
+      if (du < dv || (du == dv && u < v)) { e(p) = v; e(p + 1) = u }
+      p += 2
     }
-    // (deg, id)-orientation: count oriented out-degrees, then fill CSR
-    val outCnt = new Array[Int](n)
-    chunks.foreach { c =>
-      var i = 0
-      while (i < c.length) {
-        val len = c(i + 1).toInt
-        val ui = idx(c(i)); val du = deg(ui)
-        var j = 0
-        while (j < len) {
-          val vi = idx(c(i + 2 + j)); val dv = deg(vi)
-          val lo = if (du < dv || (du == dv && nodes(ui) < nodes(vi))) ui else vi
-          outCnt(lo) += 1
-          j += 1
-        }
-        i += 2 + len
-      }
-    }
-    val off = new Array[Int](n + 1)
-    var oi = 0
-    while (oi < n) { off(oi + 1) = off(oi) + outCnt(oi); oi += 1 }
-    val nbr = new Array[Int](off(n))
-    val fill = java.util.Arrays.copyOf(off, n)
-    chunks.foreach { c =>
-      var i = 0
-      while (i < c.length) {
-        val len = c(i + 1).toInt
-        val ui = idx(c(i)); val du = deg(ui)
-        var j = 0
-        while (j < len) {
-          val vi = idx(c(i + 2 + j)); val dv = deg(vi)
-          val (lo, hi) =
-            if (du < dv || (du == dv && nodes(ui) < nodes(vi))) (ui, vi)
-            else (vi, ui)
-          nbr(fill(lo)) = hi; fill(lo) += 1
-          j += 1
-        }
-        i += 2 + len
-      }
-    }
+    val csr = PackedGraph.buildCsr(Array(e), 2, m, None)
+    val off = csr.inOff
+    val nbr = csr.inSrc
     // id-sorted out-neighbor runs: set intersection needs one shared
     // order, and dense-id order (= id order) is it
-    oi = 0
+    var oi = 0
     while (oi < n) {
       java.util.Arrays.sort(nbr, off(oi), off(oi + 1)); oi += 1
     }

@@ -32,10 +32,12 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * | `negativeBucketRows` | 8M | bucket-table rows `NegativeSampling.sampleNegatives` broadcasts before it shuffles | none measured: ~4 slim longs/row ≈ 256 MB relation |
   * | `dictionaryDistinct` | 2M (`2 << 20`) | approximate distinct values above which `Categorify.fitDictionary` zips per partition | none measured: ~60 MB single-partition window sort |
   * | `driverEmbedFloats` | 300M | floats per embedding table `TwoTower` keeps on the driver; past it training is cluster-held | "Round-10 cluster-held embedding tables" (`r10embed`) |
+  * | `servedStateRows` | unbounded (`Long.MaxValue`) | users + seen pairs (+ the next batch's rows) a streaming dense/ANN serve keeps on the driver (`RecsTable.streamDenseRefresh`/`streamAnnRefresh`); past it the query serves from its persisted served-users frame | none: the session guard binds first; specs narrow it to force the distributed route |
   *
   * The driver-resource guard ([[Budgets.driverRows]]) bounds every
-  * driver collect of the graph kernels, of `ConnectedComponents.runFused`
-  * and of the co-occurrence neighbor model (`Cooccur.recommendFused`) by
+  * driver collect of the graph kernels, of `ConnectedComponents.runFused`,
+  * of the co-occurrence neighbor model (`Cooccur.recommendFused`) and of
+  * a streaming serve's driver-held state (`RecsTable`) by
   * the session itself, whatever the gate says: 90 % of
   * `spark.driver.maxResultSize` and 40 % of the JVM's max heap, each
   * divided by the caller's bytes per row. Their packed format — the
@@ -61,7 +63,8 @@ final case class Budgets private[graft] (
     cooccurMinUsers: Long = 4096L,
     negativeBucketRows: Long = 8000000L,
     dictionaryDistinct: Long = 2L << 20,
-    driverEmbedFloats: Long = 300000000L)
+    driverEmbedFloats: Long = 300000000L,
+    servedStateRows: Long = Long.MaxValue)
 
 object Budgets {
 

@@ -2,7 +2,7 @@ package graft.serve
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.operators.Relational
+import graft.operators.{Budgets, Relational}
 
 /** The serving contract (reference: prediction serialization
   * my_merlin_flow.py:512-537, DynamoDB write :620-630, read back at
@@ -138,43 +138,65 @@ object RecsTable {
       .start()
 
   /** The dense and ANN serves' shared query shape. The history is read
-    * ONCE, when the query starts: its per-user seen-id arrays are built
-    * into the query's one persisted frame of served users
-    * ([[servedUsers]]), materialized before `start()` (recomputable — a
-    * long-running query survives an executor loss) and released when the
-    * query stops or fails. After that, new interactions arrive only
-    * through the stream; a later change to `history`'s source is not seen.
+    * ONCE, when the query starts, into one of two routes; after that, new
+    * interactions arrive only through the stream, and a later change to
+    * `history`'s source is not seen.
     *
-    * Per micro-batch the batch is APPENDED to `streamLogDir` (parquet,
-    * read back with the batch's own schema — no per-batch
-    * schema-inference job), so an item seen in batch 1 is still excluded
-    * when the same user reappears in batch 5. The append runs beside the
-    * batch's query, which groups the batch's own rows with the log's, and
-    * the batch ends once both have. A retried micro-batch appends
-    * duplicate rows, which is harmless: the seen sets are sets — the log
-    * is at-least-once, the derived state exactly-once. Meanwhile
-    * [[batchLists]] ranks the active users through `serve`, and every
-    * non-empty list is put through the same kvSink seam as the batch table
-    * (a user with nothing left to recommend gets no put). Per-batch cost
-    * is the log scan, one in-memory scan of the served-users frame where
-    * it is cached, and O(batch + active × their history) rows exchanged
-    * and scored: only the log's and the batch's rows move, once; the
-    * history and the user vectors are never rescanned or shuffled. The
-    * log compacts on the model-refit cadence (fold it into the history
-    * snapshot, restart the query). */
+    *  - Driver route (the default): the query's serving state is held on
+    *    the driver ([[ServedState]]): each user's vector and each user's
+    *    seen ids over history ∪ the rows already in `streamLogDir`. Per
+    *    micro-batch, one bounded collect reads the batch's rows — the only
+    *    read of the source —, one task appends them to the log beside the
+    *    ranking, the driver folds them into the seen sets, and one job
+    *    ranks the active users with a vector (a `(user_id, vec, __seen)`
+    *    frame of their rows, spread over `defaultParallelism` partitions)
+    *    through `serve` and puts their lists. Per batch: 3 jobs, O(batch
+    *    + active × their seen ids) driver work, no log scan and no
+    *    exchange; the state holds ~(4·dim + 28) B per user and ~13 B per
+    *    distinct seen pair on the driver (measured at dim 16, 20 pairs per
+    *    user), nothing persisted on the executors. It is
+    *    admitted while users + seen pairs + the batch's rows fit
+    *    `Budgets.servedStateRows` and what the driver holds
+    *    (`Budgets.driverRows`), with non-null integral ids
+    *    (`Budgets.integral`) and one vector length.
+    *  - Distributed route (refused at start, or for good from the first
+    *    refused batch on, the driver state dropped): the query persists
+    *    one served-users frame ([[servedUsers]], from the history re-read
+    *    at that point), and per micro-batch [[batchLists]] groups the
+    *    batch's rows with the whole log's — the log scan and one exchange
+    *    of O(log + batch) rows — and joins them in place to the frame.
+    *    Per batch: 3 jobs plus the scan of a log that grows with every
+    *    batch; executor memory: the frame (users × (dim + their history)),
+    *    nothing on the driver.
+    *
+    * On both routes the batch is APPENDED to `streamLogDir` (parquet, read
+    * back with the batch's own schema — no per-batch schema-inference
+    * job) beside the ranking, and the batch ends once both have: an item
+    * seen in batch 1 stays excluded when the same user reappears in batch
+    * 5, and a later query (or the distributed route) reads it. A retried
+    * micro-batch appends duplicate rows, which is harmless: the seen sets
+    * are sets — the log is at-least-once, the derived state exactly-once.
+    * Every non-empty list is put through the same kvSink seam as the
+    * batch table (a user with nothing left to recommend gets no put). The
+    * state — the frame or the driver's — is released when the query stops
+    * or fails. The log compacts on the model-refit cadence (fold it into
+    * the history snapshot, restart the query). */
   private def streamSeenServe(stream: DataFrame, history: DataFrame,
       userVecs: () => DataFrame, put: Iterator[(String, String)] => Unit,
       streamLogDir: String, serve: DataFrame => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
+    val spark = stream.sparkSession
     val served = servedUsers(history, userVecs)
     try {
-      served.get()
       // the log exists (empty) before the first append lands
       val logPath = new org.apache.hadoop.fs.Path(streamLogDir)
-      logPath.getFileSystem(stream.sparkSession.sparkContext.hadoopConfiguration)
-        .mkdirs(logPath)
+      logPath.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(logPath)
+      val schema = stream.select(col("user_id"), col("item_id")).schema
+      @volatile var state = ServedState.start(history, userVecs,
+        spark.read.schema(schema).parquet(streamLogDir))
+      if (state.isEmpty) served.get()
       // one new thread per append, started by the batch's thread so it
       // inherits the batch's Spark job properties
       val appender = ExecutionContext.fromExecutor { r =>
@@ -182,22 +204,36 @@ object RecsTable {
         t.setDaemon(true)
         t.start()
       }
+      // the append runs beside the ranking, and the batch ends only once
+      // its append has
+      def beside(append: => Unit)(rank: => Unit): Unit = {
+        val appended = Future(append)(appender)
+        try rank finally Await.ready(appended, Duration.Inf)
+        Await.result(appended, Duration.Inf)
+      }
       val q = stream.writeStream.outputMode("append")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
           val b = batch.select(col("user_id"), col("item_id"))
-          // the append runs beside the query: the query groups the batch's
-          // rows itself, so it may read the log with or without them (a
-          // listing sees a log file only once the committer has moved it
-          // in whole), and the batch ends only once its append has
-          val appended = Future(b.write.mode("append").parquet(streamLogDir))(appender)
-          val log = batch.sparkSession.read.schema(b.schema).parquet(streamLogDir)
-          try kvSink(batchLists(b, log, served.get(), serve), put)
-          finally Await.ready(appended, Duration.Inf)
-          Await.result(appended, Duration.Inf)
+          state.flatMap(st => st.collect(b).map(st -> _)) match {
+            case Some((st, (vectors, pairs))) =>
+              beside(ServedState.logRows(batch.sparkSession, pairs, b.schema)
+                  .write.mode("append").parquet(streamLogDir)) {
+                kvSink(serve(st.fold(vectors, pairs)).filter(size(col("recs")) > 0), put)
+              }
+            case None =>
+              state = None
+              // the query groups the batch's rows itself, so it may read
+              // the log with or without them (a listing sees a log file
+              // only once the committer has moved it in whole)
+              val log = batch.sparkSession.read.schema(b.schema).parquet(streamLogDir)
+              beside(b.write.mode("append").parquet(streamLogDir)) {
+                kvSink(batchLists(b, log, served.get(), serve), put)
+              }
+          }
           ()
         }
         .start()
-      val release = new ReleaseOnTermination(q, () => served.clear())
+      val release = new ReleaseOnTermination(q, () => { state = None; served.clear() })
       q.sparkSession.streams.addListener(release)
       // terminated before the listener was added: its event is gone
       if (!q.isActive) release.release()
@@ -206,6 +242,136 @@ object RecsTable {
       case e: Throwable =>
         served.clear()
         throw e
+    }
+  }
+
+  /** The driver route's serving state of one streaming query
+    * ([[streamSeenServe]]): each user's vector — one flattened catalog of
+    * user vectors per user-vector generation, held in a
+    * [[graft.sim.Retrieval.GenerationCache]], so a new generation swaps
+    * the vectors and keeps the seen ids — and each user's sorted distinct
+    * seen ids. It stays admitted while users + seen pairs (+ the next
+    * batch's rows) fit `cap`; a refusal is final. Used from one batch
+    * thread at a time. */
+  private[serve] final class ServedState private (spark: org.apache.spark.sql.SparkSession,
+      cap: Long, userVecs: () => DataFrame) {
+    private val seen = new scala.collection.mutable.LongMap[Array[Long]]()
+    private var pairs = 0L
+    private val vectors = new graft.sim.Retrieval.GenerationCache[
+      Option[graft.sql.TopKDotF32.FlatCatalog]](userVecs, (frame, _) => collectVectors(frame),
+      _ => ())
+
+    /** `frame`'s non-null (user_id, vec) rows, flattened, when they fit
+      * beside the seen pairs, ids are integral and distinct and every
+      * vector has one length. */
+    private def collectVectors(frame: DataFrame): Option[graft.sql.TopKDotF32.FlatCatalog] =
+      if (!Budgets.integral(frame.schema("user_id").dataType)) None
+      else graft.sim.Retrieval.boundedRows(frame
+          .select(col("user_id").cast("long"), col("vec").cast("array<float>"))
+          .filter(col("user_id").isNotNull && col("vec").isNotNull), ServedState.rows(cap - pairs))
+        .map(rows => (rows.map(_.getLong(0)), rows.map(_.getSeq[Float](1).toArray)))
+        .filter { case (_, vs) => vs.forall(_.length == vs(0).length) }
+        .map { case (ids, vs) => graft.sql.TopKDotF32.flatten(ids, vs, cosine = false) }
+        .filter(c => c.ids.indices.tail.forall(i => c.ids(i - 1) != c.ids(i)))
+
+    /** Folds interleaved (user, item) longs into the seen sets. */
+    private def foldPacked(packed: Iterable[Array[Long]]): Unit = {
+      val add = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuilder.ofLong]()
+      packed.foreach { p =>
+        var i = 0
+        while (i < p.length) {
+          add.getOrElseUpdate(p(i), new scala.collection.mutable.ArrayBuilder.ofLong) += p(i + 1)
+          i += 2
+        }
+      }
+      add.foreachEntry { (u, items) =>
+        val old = seen.getOrElse(u, Array.emptyLongArray)
+        val merged = graft.graph.PackedGraph.dictionary(old ++ items.result())
+        pairs += merged.length - old.length
+        seen.update(u, merged)
+      }
+    }
+
+    /** The current user vectors (a new generation is taken first) and
+      * the batch's (user, item) ids as interleaved longs — one bounded
+      * collect — when they are non-null and users + seen pairs + rows fit
+      * `cap`; None = refused. */
+    def collect(batch: DataFrame)
+        : Option[(graft.sql.TopKDotF32.FlatCatalog, Array[Long])] = vectors.get().flatMap { v =>
+      val room = cap - v.n - pairs
+      val rows = if (room <= 0L) Array.empty[Row]
+        else batch.limit(ServedState.rows(room) + 1).collect()
+      if (room <= 0L || rows.length > room || rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+        None
+      else Some((v, rows.flatMap(r => Array(r.get(0), r.get(1)))
+        .map(_.asInstanceOf[Number].longValue)))
+    }
+
+    /** Folds a collected batch into the seen sets; returns the queries of
+      * its users with a vector in `v`, (user_id, vec, __seen), emitted on
+      * the executors from at most `defaultParallelism` slices of
+      * primitive arrays. */
+    def fold(v: graft.sql.TopKDotF32.FlatCatalog, packed: Array[Long]): DataFrame = {
+      foldPacked(Seq(packed))
+      val users = Iterator.range(0, packed.length, 2).map(packed(_)).distinct
+        .filter(java.util.Arrays.binarySearch(v.ids, _) >= 0).toArray
+      val n = users.length
+      val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, n))
+      val parts = Seq.tabulate(slices) { s =>
+        val us = users.slice((n.toLong * s / slices).toInt, (n.toLong * (s + 1) / slices).toInt)
+        val vecs = us.map { u =>
+          val i = java.util.Arrays.binarySearch(v.ids, u)
+          java.util.Arrays.copyOfRange(v.flat, i * v.dim, (i + 1) * v.dim)
+        }
+        (us, vecs, us.map(seen(_)))
+      }
+      import spark.implicits._
+      spark.createDataset(spark.sparkContext.parallelize(parts, slices).flatMap {
+        case (us, vecs, seens) => us.indices.iterator.map(i => (us(i), vecs(i), seens(i)))
+      }).toDF("user_id", "vec", "__seen")
+    }
+  }
+
+  private[serve] object ServedState {
+    /** Serialized task-result and driver-heap bytes per state row: a
+      * user row at dim 16, the dearer kind (a seen pair measured 16 B of
+      * task results, 17 B packed and 13 B held; SCALE.md, "Regime
+      * gates"). */
+    private val ResultBytes = 80L
+    private val HeapBytes = 688L
+
+    private def rows(n: Long): Int = math.min(n, (Int.MaxValue - 1).toLong).toInt
+
+    /** Interleaved (user, item) longs as rows of `schema`'s two integral
+      * columns, in ONE partition: the log append is one task and one
+      * file. */
+    def logRows(spark: org.apache.spark.sql.SparkSession, packed: Array[Long],
+        schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      import spark.implicits._
+      spark.createDataset(spark.sparkContext.parallelize(Seq(packed), 1).flatMap(p =>
+          Iterator.range(0, p.length, 2).map(i => (p(i), p(i + 1)))))
+        .select(schema.fields.zipWithIndex.map { case (f, i) =>
+          col(s"_${i + 1}").cast(f.dataType).as(f.name) }: _*)
+    }
+
+    /** The driver route's state when the query may start on it: the user
+      * vectors, then every (user, item) pair of `history` ∪ `log` through
+      * the guarded packed collect, all inside `Budgets.servedStateRows`
+      * and what the driver holds. None = serve on the distributed route. */
+    def start(history: DataFrame, userVecs: () => DataFrame, log: DataFrame)
+        : Option[ServedState] = {
+      val spark = log.sparkSession
+      val cap = math.min(Budgets.get.servedStateRows,
+        Budgets.driverRows(spark.sparkContext.getConf, ResultBytes, HeapBytes))
+      def ids(f: DataFrame) = f.select(col("user_id").cast("long"), col("item_id").cast("long"))
+      val st = new ServedState(spark, cap, userVecs)
+      val integral = Seq(history, log).forall(f =>
+        Seq("user_id", "item_id").forall(c => Budgets.integral(f.schema(c).dataType)))
+      if (!integral) None
+      else st.vectors.get().flatMap { v =>
+        graft.graph.PackedGraph.collect(ids(history).unionByName(ids(log)), cap - v.n,
+          ResultBytes, HeapBytes)()
+      }.map { case (chunks, _) => st.foldPacked(chunks.toSeq); st }
     }
   }
 
@@ -318,19 +484,28 @@ object RecsTable {
     * micro-batch, re-serve ONLY the users with new activity by scoring
     * their tower/factor vectors against the item catalog through the
     * fused retrieval kernel (`sim.Retrieval.dotKernel`). The seen ids —
-    * history (aggregated once per query) plus the accumulated stream log
-    * (aggregated per batch) — are excluded ROW-LOCALLY inside the kernel,
-    * and the kernel's ranked array IS the rec list. A batch costs the log
-    * scan, one in-memory scan of the query's cached served-users frame,
-    * one exchange of the log's and the batch's rows — O(batch + active ×
-    * their history) rows, never O(all users) — and |active| × catalog
-    * fused dots, with zero candidate materialization and no regrouping
-    * (query shape and lifecycle: [[streamSeenServe]]). The model is DATA:
-    * the user vectors are cached in the served-users frame and the item
-    * catalog rides a [[graft.sim.Retrieval.CatalogCache]] — each rebuilt
-    * ONCE PER MODEL GENERATION (round-11 verdict task 5), not once per
-    * batch; a hot-swap (a supplier returning a NEW frame) takes effect on
-    * the next batch without restarting the query.
+    * history plus the accumulated stream log — are excluded ROW-LOCALLY
+    * inside the kernel, and the kernel's ranked array IS the rec list:
+    * |active| × catalog fused dots per batch, with zero candidate
+    * materialization and no regrouping (query shape, routes and
+    * lifecycle: [[streamSeenServe]]).
+    *  - Driver route: a batch costs one bounded collect of its rows, a
+    *    one-task log append beside one ranking-and-put job over the
+    *    active users' rows, and O(batch + active × their seen ids)
+    *    driver work — no log scan, no exchange, whatever the log's
+    *    length. Memory: ~(4·dim + 28) B per user and ~13 B per distinct
+    *    seen pair on the driver, held for the query's life.
+    *  - Distributed route: a batch costs the log scan, one in-memory scan
+    *    of the query's cached served-users frame and one exchange of the
+    *    log's and the batch's rows — O(log + batch) rows, never O(all
+    *    users). Memory: the frame (users × (dim + their history)) in
+    *    executor storage, nothing on the driver.
+    * The model is DATA: the user vectors (in the driver state or the
+    * served-users frame) and the item catalog (a
+    * [[graft.sim.Retrieval.CatalogCache]]) are each rebuilt ONCE PER
+    * MODEL GENERATION (round-11 verdict task 5), not once per batch; a
+    * hot-swap (a supplier returning a NEW frame) takes effect on the next
+    * batch without restarting the query.
     * A catalog past the kernel's float budget fails the batch LOUDLY —
     * streaming serve at that scale is [[streamAnnRefresh]], not a silent
     * fallback to a candidate blowup inside foreachBatch. */
@@ -367,8 +542,15 @@ object RecsTable {
     * (`sim.Retrieval.annKernel`, its ranked array is the rec list); past
     * it, through `topKAnn`'s cid-join plan. Recall vs the dense kernel
     * is governed by nprobe/nlist (spec-pinned floor in RetrievalSpec);
-    * per-batch cost is O(active × nprobe/nlist × catalog) candidate rows,
-    * never the full catalog per user. For an INNER-PRODUCT catalog
+    * per-batch scoring is O(active × nprobe/nlist × catalog) candidate
+    * rows, never the full catalog per user. The seen ids and the user
+    * vectors follow [[streamSeenServe]]'s two routes at the costs
+    * [[streamDenseRefresh]] states: on the driver route a batch is one
+    * bounded collect, a one-task append and one ranking-and-put job (the
+    * cid-join plan adds its own exchanges), with ~(4·dim + 28) B per user
+    * and ~13 B per seen pair held on the driver; on the distributed route a
+    * batch scans and exchanges the log, and the served-users frame sits
+    * in executor storage. For an INNER-PRODUCT catalog
     * (two-tower model vectors), build the index and centroids in the
     * MIPS-augmented space at model-refresh time — `TwoTower.annCentroids`
     * + the augmented item frame, with query vectors 0-extended — or the
@@ -401,8 +583,9 @@ object RecsTable {
       nprobe: Int, put: Iterator[(String, String)] => Unit,
       streamLogDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val (idx, cents) = pairedArtifactThunks(artifacts)
-    // one augmented frame per user-vector frame, so the served-users
-    // cache (the only caller, under its lock) sees the supplier's
+    // one augmented frame per user-vector frame, so the user-vector
+    // caches (the driver state's or the served-users frame's, called by
+    // the query's start and then one batch at a time) see the supplier's
     // generations, not a new frame per batch
     var last: (DataFrame, DataFrame) = (null, null)
     streamAnnRefresh(stream, history, () => {

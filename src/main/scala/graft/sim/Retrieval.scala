@@ -82,7 +82,7 @@ object Retrieval {
 
   /** `frame`'s rows when it has some and no more than `maxRows`: one
     * bounded `limit(maxRows + 1)` collect. */
-  private def boundedRows(frame: DataFrame, maxRows: Int): Option[Array[Row]] =
+  private[graft] def boundedRows(frame: DataFrame, maxRows: Int): Option[Array[Row]] =
     if (maxRows <= 0) None
     else Some(frame.limit(maxRows + 1).collect())
       .filter(rows => rows.nonEmpty && rows.length <= maxRows)
@@ -99,7 +99,9 @@ object Retrieval {
     * generations — spec-pinned to 1 across batches of a stable model. The
     * budgets are read once, when the cache is built. [[CatalogCache]] and
     * [[CellCatalogCache]] are its two catalogs; a streaming serve's
-    * per-query frame of served users is its third value. */
+    * per-query served users are its third value: the persisted frame on
+    * the distributed route, the flattened user vectors on the driver
+    * route. */
   sealed class GenerationCache[V] private[graft] (supplier: () => DataFrame,
       build: (DataFrame, Option[V]) => V, release: V => Unit) {
     private val budgets = graft.operators.Budgets.get

@@ -23,6 +23,11 @@ class BudgetsSpec extends AnyFunSuite {
     assert(b.driverEmbedFloats == 300000000L)
   }
 
+  test("the driver-held streaming state gate never binds before the session guard") {
+    assert(Budgets.get.servedStateRows == Long.MaxValue)
+    assert(Budgets.scoped(_.copy(servedStateRows = 0L))(Budgets.get.servedStateRows) == 0L)
+  }
+
   test("scoped narrows the gates inside its block only, nesting on the current ones") {
     val outer = Budgets.scoped(_.copy(walkEdges = 2L)) {
       val inner = Budgets.scoped(_.copy(triangleEdges = 3L))(Budgets.get)
@@ -44,7 +49,8 @@ class BudgetsSpec extends AnyFunSuite {
     ("Triangles.perNodeFused half-adjacency", 24L, 96L, 286331153L, 40265318L),
     ("ConnectedComponents.runFused pair graph", 16L, 96L, 286331153L, 60397977L),
     ("Cooccur.recommendFused neighbor model", 24L, 192L, 143165576L, 40265318L),
-    ("RandomWalks.walksFused ranked adjacency", 24L, 128L, 214748364L, 40265318L))
+    ("RandomWalks.walksFused ranked adjacency", 24L, 128L, 214748364L, 40265318L),
+    ("RecsTable streaming serve's driver-held state", 80L, 688L, 39953184L, 12079595L))
   private val heap = 64L << 30
 
   private def conf(maxResultSize: Option[String]) = {

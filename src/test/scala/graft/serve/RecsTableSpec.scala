@@ -262,10 +262,23 @@ class RecsTableSpec extends SparkSpecBase {
     } finally served.clear()
   }
 
-  test("streaming serves put what the batch forms give on history plus log") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val rng = new scala.util.Random(11)
+  /** The distributed route, forced: no driver state is admitted. */
+  private def distributed[T](body: => T): T =
+    Budgets.scoped(_.copy(servedStateRows = 0L))(body)
+
+  /** The two routes of a streaming dense/ANN serve; the budget is read
+    * when the query starts. */
+  private val routes: Seq[(String, (=> org.apache.spark.sql.streaming.StreamingQuery) =>
+      org.apache.spark.sql.streaming.StreamingQuery)] =
+    Seq("driver" -> (q => q), "distributed" -> (q => distributed(q)))
+
+  private type Serve = (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery
+  private type BatchForm = (DataFrame, DataFrame) => DataFrame
+
+  /** The equivalence fixture: history, 4 micro-batches, and each serve
+    * form with the batch form it must equal. */
+  private object Equiv {
+    private val rng = new scala.util.Random(11)
     val itemVecs = (1L to 12L).map(i => (i, Seq.fill(4)(rng.nextFloat() - 0.5f)))
       .toDF("item_id", "vec")
     // user 99 streams but has no vector
@@ -280,21 +293,17 @@ class RecsTableSpec extends SparkSpecBase {
       Seq((1L, 10L), (4L, 8L), (5L, 1L), (2L, 11L), (99L, 2L)),
       Seq((1L, 11L), (1L, 12L), (3L, 1L), (6L, 7L)))
     val k = 4
-    val model = graft.rank.TwoTower.Model(userVecs, itemVecs,
+    private val model = graft.rank.TwoTower.Model(userVecs, itemVecs,
       graft.rank.TwoTower.Config(embDim = 4))
-    val cents = graft.sim.Ivf.fitCentroids(itemVecs, "item_id", "vec", nlist = 3, iters = 3)
-    val index = graft.sim.Retrieval.annIndex(itemVecs, "item_id", "vec", cents)
+    private val cents = graft.sim.Ivf.fitCentroids(itemVecs, "item_id", "vec", nlist = 3, iters = 3)
+    private val index = graft.sim.Retrieval.annIndex(itemVecs, "item_id", "vec", cents)
       .localCheckpoint()
-    def lists(recs: org.apache.spark.sql.DataFrame): Map[String, String] = recs
+    def lists(recs: DataFrame): Map[String, String] = recs
       .groupBy($"user_id")
       .agg(to_json(transform(sort_array(collect_list(struct($"rk",
         $"item_id".cast("string").as("i")))), x => x.getField("i"))).as("p"))
       .collect().map(r => r.get(0).toString -> r.getString(1)).toMap
-    type Serve = (org.apache.spark.sql.DataFrame, String) =>
-      org.apache.spark.sql.streaming.StreamingQuery
-    type Batch = (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
-      org.apache.spark.sql.DataFrame
-    val forms: Seq[(String, Serve, Batch)] = Seq(
+    val forms: Seq[(String, Serve, BatchForm)] = Seq(
       ("dense",
         (s, dir) => RecsTable.streamDenseRefresh(s, history, userVecs, itemVecs, k,
           BatchKv.put, dir),
@@ -312,37 +321,106 @@ class RecsTableSpec extends SparkSpecBase {
         (active, seen) => Budgets.scoped(_.copy(cellCatalogFloats = 10L))(
           graft.sim.Retrieval.topKAnn(active.join(userVecs, Seq("user_id")),
             "user_id", "vec", index, "item_id", "vec", cents, k, 2, seen = Some(seen)))))
-    for ((name, serve, batchForm) <- forms) {
+
+    /** Runs `batches` through `serve` (started by `route`) over a log
+      * that already holds `logged`, and checks each batch's puts against
+      * `batchForm` on history ∪ logged ∪ the batches so far; returns the
+      * puts per batch. `between` runs after each batch is served. */
+    def check(name: String, serve: Serve, batchForm: BatchForm,
+        route: (=> org.apache.spark.sql.streaming.StreamingQuery) =>
+          org.apache.spark.sql.streaming.StreamingQuery,
+        logged: Seq[(Long, Long)] = Nil)(
+        between: (Int, org.apache.spark.sql.streaming.StreamingQuery) => Unit = (_, _) => ())
+        : IndexedSeq[Map[String, String]] = {
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      implicit val sqlCtx = spark.sqlContext
       BatchKv.puts.clear()
       val in = MemoryStream[(Long, Long)]
       val dir = java.nio.file.Files.createTempDirectory("graft_equivlog").toString
-      val q = serve(in.toDF().toDF("user_id", "item_id"), s"$dir/log")
+      if (logged.nonEmpty) logged.toDF("user_id", "item_id").write.parquet(s"$dir/log")
+      val q = route(serve(in.toDF().toDF("user_id", "item_id"), s"$dir/log"))
       try {
         for ((events, n) <- batches.zipWithIndex) {
           BatchKv.batch = n
           in.addData(events)
           q.processAllAvailable()
+          between(n, q)
           val got = Option(BatchKv.puts.get(n)).map(_.asScala.toMap).getOrElse(Map.empty)
-          val seen = history.unionByName(batches.take(n + 1).flatten.toDF("user_id", "item_id"))
+          val seen = history.unionByName(
+            (logged ++ batches.take(n + 1).flatten).toDF("user_id", "item_id"))
           val expected = lists(batchForm(events.map(_._1).distinct.toDF("user_id"), seen))
           assert(got == expected, s"$name batch $n: puts $got vs batch form $expected")
           assert(!got.contains("99"), s"$name batch $n: a user with no vector was put")
           assert(!got.contains("5"),
             s"$name batch $n: a user who has seen the whole catalog was put")
         }
-        // the cases the batches carry, each reached the serve
-        val p = (0 until batches.size).map(n => BatchKv.puts.get(n).asScala.toMap)
-        assert(p(0).contains("1") && !p(0)("1").contains("\"3\""),
-          s"$name: a duplicated pair within a batch is seen: ${p(0)}")
-        assert(p(1).contains("1") && !p(1)("1").contains("\"3\""),
-          s"$name: a repeat of an earlier batch's item is seen: ${p(1)}")
-        assert(p(3).contains("6") && !p(3)("6").contains("\"1\"") &&
-          !p(3)("6").contains("\"7\""), s"$name: history and log both seen: ${p(3)}")
       } finally q.stop()
+      (0 until batches.size).map(n => BatchKv.puts.get(n).asScala.toMap)
     }
   }
 
-  test("streaming serves read history once, release it on stop or failure") {
+  test("streaming serves put what the batch forms give on history plus log") {
+    for ((route, start) <- routes; (form, serve, batchForm) <- Equiv.forms) {
+      val name = s"$form ($route)"
+      val p = Equiv.check(name, serve, batchForm, start)()
+      // the cases the batches carry, each reached the serve
+      assert(p(0).contains("1") && !p(0)("1").contains("\"3\""),
+        s"$name: a duplicated pair within a batch is seen: ${p(0)}")
+      assert(p(1).contains("1") && !p(1)("1").contains("\"3\""),
+        s"$name: a repeat of an earlier batch's item is seen: ${p(1)}")
+      assert(p(3).contains("6") && !p(3)("6").contains("\"1\"") &&
+        !p(3)("6").contains("\"7\""), s"$name: history and log both seen: ${p(3)}")
+    }
+  }
+
+  test("rows already in the stream log stay seen from the first batch on") {
+    for ((route, start) <- routes; (form, serve, batchForm) <- Equiv.forms) {
+      val name = s"$form ($route)"
+      // a previous query left in the log the item each of users 1, 2 and 4
+      // would be served first in batch 0 without it
+      val first = Equiv.lists(batchForm(Seq(1L, 2L, 4L).toDF("user_id"),
+        Equiv.history.unionByName(Equiv.batches(0).toDF("user_id", "item_id"))))
+      val logged = Seq(1L, 2L, 4L).map(u =>
+        (u, first(u.toString).stripPrefix("[\"").takeWhile(_ != '"').toLong))
+      val p = Equiv.check(name, serve, batchForm, start, logged)()
+      for ((u, i) <- logged)
+        assert(p(0).contains(u.toString) && !p(0)(u.toString).contains(s"\"$i\""),
+          s"$name: the logged item $i of user $u is recommended: ${p(0)}")
+    }
+  }
+
+  test("a batch past the driver-state gate moves the query to the served-users frame") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    // users with a vector + distinct seen pairs before batch 2 + its rows,
+    // less one: the start and batches 0 and 1 fit, batch 2 does not
+    val pairs = (Equiv.history.as[(Long, Long)].collect().toSeq ++
+      Equiv.batches.take(2).flatten).distinct.size.toLong
+    val gate = 6L + pairs + Equiv.batches(2).size - 1L
+    for ((form, serve, batchForm) <- Equiv.forms) {
+      val before = persisted
+      var added = Map.empty[Int, scala.collection.Set[Int]]
+      Equiv.check(s"$form (gate $gate)", serve, batchForm,
+          q => Budgets.scoped(_.copy(servedStateRows = gate))(q)) { (n, _) =>
+        added += n -> (persisted -- before)
+      }
+      assert(added(0).isEmpty && added(1).isEmpty,
+        s"$form: a frame persisted on the driver route: $added")
+      assert(added(2).size == 1 && added(3) == added(2),
+        s"$form: one served-users frame from the switch on: $added")
+      eventually(timeout(Span(30, Seconds))) {
+        assert((persisted & added(3)).isEmpty, s"$form: the frame is released after stop()")
+      }
+    }
+  }
+
+  /** The lifecycle of both routes: the history is read once, when the
+    * query starts (its files are deleted after), and the query's state is
+    * released when it stops (the dense serve) or fails (the ANN serve,
+    * whose put throws). `frames` = the persisted frames a query adds. */
+  private def lifecycle(route: (=> org.apache.spark.sql.streaming.StreamingQuery) =>
+      org.apache.spark.sql.streaming.StreamingQuery, frames: Int): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.StreamingQueryException
     import org.scalatest.concurrent.Eventually._
@@ -371,12 +449,12 @@ class RecsTableSpec extends SparkSpecBase {
     val in = MemoryStream[(Long, Long)]
     val dir = java.nio.file.Files.createTempDirectory("graft_lifelog").toString
     history.write.parquet(s"$dir/history")
-    val q = RecsTable.streamDenseRefresh(in.toDF().toDF("user_id", "item_id"),
+    val q = route(RecsTable.streamDenseRefresh(in.toDF().toDF("user_id", "item_id"),
       spark.read.parquet(s"$dir/history"), userVecs, itemVecs, 2, InMemoryKv.putBatch,
-      s"$dir/log")
+      s"$dir/log"))
     val added = persisted -- before
     try {
-      assert(added.size == 1, s"the history seen sets are built when the query starts: $added")
+      assert(added.size == frames, s"the history seen sets are built when the query starts: $added")
       assert(releases == 1)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/history"))
       in.addData((1L, 2L)); q.processAllAvailable()
@@ -393,20 +471,32 @@ class RecsTableSpec extends SparkSpecBase {
     val before2 = persisted
     val in2 = MemoryStream[(Long, Long)]
     val dir2 = java.nio.file.Files.createTempDirectory("graft_lifelog2").toString
-    val q2 = RecsTable.streamAnnRefresh(in2.toDF().toDF("user_id", "item_id"), history,
-      () => userVecs, () => index, () => cents, 2, 2, refuse, s"$dir2/log")
+    val q2 = route(RecsTable.streamAnnRefresh(in2.toDF().toDF("user_id", "item_id"), history,
+      () => userVecs, () => index, () => cents, 2, 2, refuse, s"$dir2/log"))
     val added2 = persisted -- before2
     try {
-      assert(added2.size == 1 && releases == 1, s"$added2")
+      assert(added2.size == frames && releases == 1, s"$added2")
       in2.addData((1L, 2L))
       intercept[StreamingQueryException](q2.processAllAvailable())
+      assert(persisted -- before2 == added2, "a failed batch adds no persisted frame")
     } finally q2.stop()
     eventually(timeout(Span(30, Seconds))) {
       assert((persisted & added2).isEmpty && releases == 0, "released after the query failed")
     }
   }
 
-  test("user-vector hot-swap rebuilds the served-users frame, frees the old one") {
+  test("streaming serves read history once, release it on stop or failure") {
+    lifecycle(q => distributed(q), frames = 1)
+  }
+
+  test("driver-route streaming serves read history once, persist nothing, release on stop or failure") {
+    lifecycle(q => q, frames = 0)
+  }
+
+  /** A user-vector hot-swap takes effect on the next batch and keeps the
+    * seen ids; on the distributed route it rebuilds the served-users frame
+    * and frees the old one, on the driver route nothing is persisted. */
+  private def hotSwap(driver: Boolean): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.{Seconds, Span}
@@ -427,13 +517,16 @@ class RecsTableSpec extends SparkSpecBase {
     BatchKv.puts.clear()
     val in = MemoryStream[(Long, Long)]
     val dir = java.nio.file.Files.createTempDirectory("graft_swaplog").toString
-    val q = RecsTable.streamDenseRefresh(in.toDF().toDF("user_id", "item_id"), history,
-      () => current, new graft.sim.Retrieval.CatalogCache(() => itemVecs, "item_id", "vec"),
+    val start = () => RecsTable.streamDenseRefresh(in.toDF().toDF("user_id", "item_id"),
+      history, () => current,
+      new graft.sim.Retrieval.CatalogCache(() => itemVecs, "item_id", "vec"),
       k = 2, BatchKv.put, s"$dir/log")
+    val q = if (driver) start() else distributed(start())
     val gen1Frame = persisted -- before
     def puts(n: Int) = Option(BatchKv.puts.get(n)).map(_.asScala.toMap).getOrElse(Map.empty)
     try {
-      assert(gen1Frame.size == 1, s"one served-users frame per query: $gen1Frame")
+      if (driver) assert(gen1Frame.isEmpty, s"the driver route persists nothing: $gen1Frame")
+      else assert(gen1Frame.size == 1, s"one served-users frame per query: $gen1Frame")
       BatchKv.batch = 0
       in.addData((1L, 4L), (3L, 5L)); q.processAllAvailable()
       // u1 saw {1 (history), 4}; u3 has no vector yet, so no put
@@ -447,7 +540,8 @@ class RecsTableSpec extends SparkSpecBase {
       // batch 0 only: no put
       assert(puts(1) == Map("3" -> "[\"6\",\"4\"]"), s"batch 1: ${puts(1)}")
       val gen2Frame = persisted -- before
-      assert(gen2Frame.size == 1 && (gen2Frame & gen1Frame).isEmpty,
+      if (driver) assert(gen2Frame.isEmpty, s"the driver route persists nothing: $gen2Frame")
+      else assert(gen2Frame.size == 1 && (gen2Frame & gen1Frame).isEmpty,
         s"the superseded served-users frame is released: $gen1Frame -> $gen2Frame")
 
       BatchKv.batch = 2
@@ -460,6 +554,14 @@ class RecsTableSpec extends SparkSpecBase {
     eventually(timeout(Span(30, Seconds))) {
       assert((persisted -- before).isEmpty, "released after stop()")
     }
+  }
+
+  test("user-vector hot-swap rebuilds the served-users frame, frees the old one") {
+    hotSwap(driver = false)
+  }
+
+  test("driver-route user-vector hot-swap swaps the vectors on the next batch, keeps the seen ids") {
+    hotSwap(driver = true)
   }
 
   test("streamAnnRefresh serves the recs contract through the IVF index (round-12)") {

@@ -9,9 +9,11 @@ its wall, its job count and its tasks run.
 
 With `--batches`, the groups that are streaming micro-batches (a root
 execution holding two or more child executions: `foreachBatch` runs the log
-write and the query) are printed one line each, then the medians over the
-batches after the first `--skip`. The write is the child whose plan inserts
-into files (else the first child); the query is the last other child:
+write and the query, and on the driver route first the batch's collect) are
+printed one line each, then the medians over the batches after the first
+`--skip`. The write is the child whose plan inserts into files (else the
+first child); the query is the last other child to start (the ranking and
+its puts):
 
   write_s  wall of the write
   gap_s    from the end of the write to the start of the query (negative
@@ -24,6 +26,20 @@ into files (else the first child); the query is the last other child:
   tasks    tasks of the query's last stage (where the kernel runs)
   moved    1 if the query's final plan has an `InMemoryTableScan` under an
            `Exchange` or a `BroadcastExchange` (a cached frame moved), else 0
+  scans    file-source scans (`Scan parquet`, ...) in the physical plans of
+           the batch's executions: the log's scan, 0 when no job reads
+           files (a cached frame's plan lists its own sources' scans too)
+
+and, from the batch's `StreamingQueryListener$QueryProgressEvent` (the one
+whose trigger holds the batch's root execution; `-` when none does):
+
+  wal_s     durationMs.walCommit: the offset log write before the batch
+  add_s     durationMs.addBatch: the sink's run of the batch (foreachBatch)
+  commit_s  durationMs.commitOffsets: the commit log write after it
+  rows      numInputRows over the sources (the rows the batch's jobs read
+            from the source, counted once per read)
+  put_s     from the trigger's start to the end of the batch's last job
+            outside the write (the last put, when the query puts)
 
 Enable the log with the JVM system properties `spark.eventLog.enabled=true`,
 `spark.eventLog.compress=false` and `spark.eventLog.dir=file:///some/dir`.
@@ -32,12 +48,15 @@ Enable the log with the JVM system properties `spark.eventLog.enabled=true`,
   python3 tools/eventlog_jobs.py /some/dir/eventlog_v2_local-123 --batches --skip 3
 """
 import argparse
+import datetime
 import json
 import os
+import re
 import statistics
 import sys
 
 EXCHANGES = ("Exchange", "BroadcastExchange", "ReusedExchange")
+FILE_SCAN = re.compile(r"^\(\d+\) Scan (?!ExistingRDD\b)\w+", re.M)
 
 
 def read_events(path):
@@ -101,7 +120,14 @@ def waves(intervals):
     return runs, busy
 
 
-def load(path):
+def iso_ms(ts):
+    """Epoch milliseconds of a progress timestamp (`2026-10-19T21:57:18.265Z`)."""
+    return datetime.datetime.strptime(ts, "%Y-%m-%dT%H:%M:%S.%f%z").timestamp() * 1000.0
+
+
+def load(path, progress=None):
+    """(application start, executions, jobs); `progress`, when a list, gets
+    one dict per streaming progress event."""
     app_start = None
     execs = {}   # id -> dict(root, start, end, details, tags, plan)
     jobs = {}    # id -> dict(root, exec, submit, end, tags, details, stages)
@@ -114,7 +140,8 @@ def load(path):
             execs[e["executionId"]] = dict(
                 root=e.get("rootExecutionId", e["executionId"]), start=e["time"], end=None,
                 details=e.get("details", ""), tags=e.get("jobTags") or [], plan=None,
-                write="InsertIntoHadoopFsRelationCommand" in e.get("physicalPlanDescription", ""))
+                write="InsertIntoHadoopFsRelationCommand" in e.get("physicalPlanDescription", ""),
+                scans=len(FILE_SCAN.findall(e.get("physicalPlanDescription", ""))))
         elif ev.endswith("SQLExecutionEnd"):
             if e["executionId"] in execs:
                 execs[e["executionId"]]["end"] = e["time"]
@@ -138,6 +165,16 @@ def load(path):
                 jobs[e["Job ID"]]["end"] = e["Completion Time"]
         elif ev == "SparkListenerTaskEnd":
             stage_tasks[e["Stage ID"]] = stage_tasks.get(e["Stage ID"], 0) + 1
+        elif ev.endswith("QueryProgressEvent") and progress is not None:
+            p = e["progress"]
+            d = p.get("durationMs") or {}
+            start = iso_ms(p["timestamp"])
+            progress.append(dict(
+                batch=p.get("batchId"), start=start,
+                end=start + d.get("triggerExecution", 0),
+                wal_s=d.get("walCommit", 0) / 1000.0, add_s=d.get("addBatch", 0) / 1000.0,
+                commit_s=d.get("commitOffsets", 0) / 1000.0,
+                rows=sum(src.get("numInputRows", 0) for src in p.get("sources") or [])))
     for j in jobs.values():
         if j["end"] is None:
             j["end"] = j["submit"]
@@ -176,7 +213,7 @@ def describe(key, xs, js, execs, jobs):
                 jobs=len(js), tasks=sum(jobs[j]["tasks"] for j in js))
 
 
-def batch_rows(execs, jobs):
+def batch_rows(execs, jobs, progress=()):
     rows = []
     for key, xs, js in groups(execs, jobs):
         children = sorted((x for x in xs if x != key and execs[x]["end"] is not None),
@@ -192,6 +229,9 @@ def batch_rows(execs, jobs):
         n_waves, busy = waves([(j["submit"], j["end"]) for j in qjobs])
         first = min((j["submit"] for j in qjobs), default=query["end"])
         last = max(qjobs, key=lambda j: j["submit"], default=None)
+        trig = next((p for p in progress
+                     if p["start"] <= execs[key]["start"] <= p["end"]), None)
+        batch_jobs = [jobs[j] for j in js if jobs[j]["exec"] != wid]
         rows.append(dict(
             root=key,
             write_s=(write["end"] - write["start"]) / 1000.0,
@@ -201,15 +241,27 @@ def batch_rows(execs, jobs):
             busy_s=busy / 1000.0,
             jobs=len(js), waves=n_waves,
             tasks=last["last_tasks"] if last else 0,
-            moved=int(cache_moved(query["plan"]))))
+            moved=int(cache_moved(query["plan"])),
+            scans=sum(execs[x]["scans"] for x in children),
+            **{c: trig[c] if trig else None for c in ("wal_s", "add_s", "commit_s", "rows")},
+            put_s=(max(j["end"] for j in batch_jobs) - trig["start"]) / 1000.0
+            if trig and batch_jobs else None))
     return rows
 
 
-COLUMNS = ("write_s", "gap_s", "query_s", "pre_s", "busy_s", "jobs", "waves", "tasks", "moved")
+COLUMNS = ("write_s", "gap_s", "query_s", "pre_s", "busy_s", "jobs", "waves", "tasks", "moved",
+           "scans", "wal_s", "add_s", "commit_s", "rows", "put_s")
 
 
 def fmt(v, seconds):
+    if v is None:
+        return "-"
     return f"{v:.3f}" if seconds else f"{v:g}"
+
+
+def median(values):
+    known = [v for v in values if v is not None]
+    return statistics.median(known) if known else None
 
 
 def main(argv=None):
@@ -220,7 +272,8 @@ def main(argv=None):
     ap.add_argument("--skip", type=int, default=0,
                     help="leading micro-batches left out of the medians")
     args = ap.parse_args(argv)
-    app_start, execs, jobs = load(args.eventlog)
+    progress = []
+    app_start, execs, jobs = load(args.eventlog, progress)
     if not args.batches:
         print(f"{'offset_s':>9} {'wall_s':>7} {'jobs':>4} {'tasks':>5}  tag  name")
         for key, xs, js in groups(execs, jobs):
@@ -228,7 +281,7 @@ def main(argv=None):
             print(f"{(d['start'] - app_start) / 1000.0:9.3f} {d['wall']:7.3f} {d['jobs']:4d} "
                   f"{d['tasks']:5d}  {d['tag'] or '-'}  {d['name']}")
         return 0
-    rows = batch_rows(execs, jobs)
+    rows = batch_rows(execs, jobs, progress)
     print("batch root " + " ".join(f"{c:>7}" for c in COLUMNS))
     for i, r in enumerate(rows):
         print(f"{i:5d} {r['root']:4d} " + " ".join(f"{fmt(r[c], c.endswith('_s')):>7}" for c in COLUMNS))
@@ -236,11 +289,12 @@ def main(argv=None):
     if not steady:
         print("no micro-batch after the skipped ones")
         return 1
-    med = {c: statistics.median(r[c] for r in steady) for c in COLUMNS}
+    med = {c: median(r[c] for r in steady) for c in COLUMNS}
     print(f"median over {len(steady)} micro-batches (skipped {min(args.skip, len(rows))}): " +
           " ".join(f"{c}={fmt(med[c], c.endswith('_s'))}" for c in COLUMNS))
     print(f"micro-batches whose final plan moves a cached frame: "
           f"{sum(r['moved'] for r in steady)}/{len(steady)}")
+    print(f"micro-batches that scan files: {sum(r['scans'] > 0 for r in steady)}/{len(steady)}")
     return 0
 
 

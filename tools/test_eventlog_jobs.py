@@ -5,6 +5,7 @@ Run from the repo root:  python3 tools/test_eventlog_jobs.py
 Exit 0 = every rule behaves.
 """
 import contextlib
+import datetime
 import io
 import json
 import os
@@ -26,8 +27,9 @@ def node(name, *children):
             "metadata": {}, "metrics": []}
 
 
-def exec_start(xid, root, t, details=SERVE, tags=("pb-stream",), writes=False):
+def exec_start(xid, root, t, details=SERVE, tags=("pb-stream",), writes=False, scans=0):
     plan = "== Physical Plan ==\nExecute InsertIntoHadoopFsRelationCommand (4)" if writes else ""
+    plan += "\n(1) Scan ExistingRDD [codegen id : 1]" + "\n(2) Scan parquet \n" * scans
     return {"Event": SQL + "SparkListenerSQLExecutionStart", "executionId": xid,
             "rootExecutionId": root, "description": "", "details": details,
             "physicalPlanDescription": plan, "sparkPlanInfo": node("X"), "time": t,
@@ -61,6 +63,31 @@ def job(jid, root, xid, submit, end, stages, tags="pb-stream", details=""):
     return events
 
 
+def progress(batch, t0, trigger, wal, add, commit, rows):
+    """A streaming progress event whose trigger starts at t0 (epoch ms)."""
+    ts = datetime.datetime.fromtimestamp(t0 / 1000.0, datetime.timezone.utc)
+    return {"Event": "org.apache.spark.sql.streaming.StreamingQueryListener$QueryProgressEvent",
+            "progress": {"batchId": batch, "timestamp": ts.strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + "Z",
+                         "durationMs": {"triggerExecution": trigger, "walCommit": wal,
+                                        "addBatch": add, "commitOffsets": commit},
+                         "sources": [{"description": "MemoryStream", "numInputRows": rows}]}}
+
+
+def driver_batch(root, t0, first_job_id, first_stage_id):
+    """A driver-route micro-batch: root execution, the batch's collect
+    (one job), then the log append and the ranking-and-put query side by
+    side; the append's execution starts after the query's, and its job
+    ends last."""
+    ev = [exec_start(root, root, t0), exec_start(root + 1, root, t0 + 10)]
+    ev += job(first_job_id, root, root + 1, t0 + 20, t0 + 40, [(first_stage_id, 1)])
+    ev += [exec_end(root + 1, t0 + 45), exec_start(root + 3, root, t0 + 60),
+           exec_start(root + 2, root, t0 + 70, writes=True)]
+    ev += job(first_job_id + 1, root, root + 3, t0 + 90, t0 + 150, [(first_stage_id + 1, 4)])
+    ev += job(first_job_id + 2, root, root + 2, t0 + 95, t0 + 180, [(first_stage_id + 2, 1)])
+    ev += [exec_end(root + 3, t0 + 155), exec_end(root + 2, t0 + 190), exec_end(root, t0 + 200)]
+    return ev
+
+
 def micro_batch(root, t0, jobs, plan, first_job_id, first_stage_id):
     """A foreachBatch micro-batch: root execution, a one-job log write, then
     a query whose jobs run back to back (`jobs` of them, 100 ms each, after
@@ -68,7 +95,7 @@ def micro_batch(root, t0, jobs, plan, first_job_id, first_stage_id):
     t0 + 150."""
     ev = [exec_start(root, root, t0), exec_start(root + 1, root, t0 + 10, writes=True)]
     ev += job(first_job_id, root, root + 1, t0 + 20, t0 + 90, [(first_stage_id, 1)])
-    ev += [exec_end(root + 1, t0 + 100), exec_start(root + 2, root, t0 + 150)]
+    ev += [exec_end(root + 1, t0 + 100), exec_start(root + 2, root, t0 + 150, scans=1)]
     t = t0 + 190
     for i in range(jobs):
         last = i == jobs - 1
@@ -101,6 +128,8 @@ def synthetic_log():
     ev += [exec_end(1, 2250)]
     ev += micro_batch(10, 3000, 3, MOVED, 3, 4)
     ev += micro_batch(20, 4000, 2, IN_PLACE, 7, 8)
+    # the last batch's trigger starts 40 ms before its root execution
+    ev += [progress(2, 4960, 420, 30, 350, 40, 2000)]
     ev += micro_batch(30, 5000, 2, IN_PLACE, 10, 11)
     return ev
 
@@ -170,12 +199,13 @@ class EventLogJobs(unittest.TestCase):
     def test_medians_skip_leading_batches(self):
         code, lines = self.run_tool("--batches", "--skip", "1")
         self.assertEqual(code, 0)
-        self.assertIn("median over 2 micro-batches (skipped 1)", lines[-2])
-        self.assertIn("jobs=3 waves=2 tasks=4 moved=0", lines[-2])
-        self.assertEqual(lines[-1], "micro-batches whose final plan moves a cached frame: 0/2")
+        self.assertIn("median over 2 micro-batches (skipped 1)", lines[-3])
+        self.assertIn("jobs=3 waves=2 tasks=4 moved=0 scans=1", lines[-3])
+        self.assertEqual(lines[-2], "micro-batches whose final plan moves a cached frame: 0/2")
+        self.assertEqual(lines[-1], "micro-batches that scan files: 2/2")
         _, lines = self.run_tool("--batches")
-        self.assertIn("jobs=3 ", lines[-2])
-        self.assertEqual(lines[-1], "micro-batches whose final plan moves a cached frame: 1/3")
+        self.assertIn("jobs=3 ", lines[-3])
+        self.assertEqual(lines[-2], "micro-batches whose final plan moves a cached frame: 1/3")
 
     def test_an_append_started_after_the_query_is_still_the_write(self):
         ev = [exec_start(1, 1, 0), exec_start(3, 1, 5), exec_start(2, 1, 8, writes=True)]
@@ -193,6 +223,52 @@ class EventLogJobs(unittest.TestCase):
         self.assertAlmostEqual(r["query_s"], 0.135)
         self.assertAlmostEqual(r["pre_s"], 0.025)
         self.assertEqual((r["jobs"], r["waves"], r["tasks"]), (2, 1, 4))
+
+    def test_progress_columns(self):
+        progress = []
+        _, execs, jobs = ej.load(self.logdir, progress)
+        self.assertEqual([p["batch"] for p in progress], [2])
+        rows = ej.batch_rows(execs, jobs, progress)
+        # batches without a progress event read None
+        self.assertEqual([r["rows"] for r in rows], [None, None, 2000])
+        last = rows[-1]
+        self.assertAlmostEqual(last["wal_s"], 0.03)
+        self.assertAlmostEqual(last["add_s"], 0.35)
+        self.assertAlmostEqual(last["commit_s"], 0.04)
+        # trigger start 4960 -> the query's last job ends at 5000 + 390
+        self.assertAlmostEqual(last["put_s"], 0.43)
+        code, lines = self.run_tool("--batches")
+        self.assertEqual(code, 0)
+        self.assertEqual(lines[1].split()[-6:], ["1"] + ["-"] * 5)
+        self.assertEqual(lines[3].split()[-5:], ["0.030", "0.350", "0.040", "2000", "0.430"])
+        self.assertIn("wal_s=0.030 add_s=0.350 commit_s=0.040 rows=2000 put_s=0.430", lines[-3])
+
+    def test_driver_route_batch_shape(self):
+        ev = [{"Event": "SparkListenerApplicationStart", "App Name": "t", "Timestamp": 0}]
+        ev += [progress(0, 950, 300, 40, 220, 45, 1000)] + driver_batch(1, 1000, 0, 0)
+        ev += [progress(1, 1950, 280, 35, 210, 40, 1000)] + driver_batch(5, 2000, 3, 3)
+        path = os.path.join(self.dir.name, "driver.log")
+        with open(path, "w") as f:
+            f.write("\n".join(json.dumps(e) for e in ev) + "\n")
+        progress_events = []
+        _, execs, jobs = ej.load(path, progress_events)
+        rows = ej.batch_rows(execs, jobs, progress_events)
+        self.assertEqual([r["root"] for r in rows], [1, 5])
+        r = rows[0]
+        # the write is the append, the query the ranking-and-put started
+        # before it; the collect is neither
+        self.assertAlmostEqual(r["write_s"], 0.12)
+        self.assertAlmostEqual(r["query_s"], 0.095)
+        self.assertAlmostEqual(r["gap_s"], -0.13)
+        self.assertAlmostEqual(r["pre_s"], 0.03)
+        self.assertEqual((r["jobs"], r["waves"], r["tasks"], r["rows"]), (3, 1, 4, 1000))
+        # no execution of the batch reads files: the log is not scanned
+        self.assertEqual(r["scans"], 0)
+        # trigger start 950 -> the put job ends at 1150; the append's job
+        # (ends 1180) is not a put
+        self.assertAlmostEqual(r["put_s"], 0.2)
+        self.assertAlmostEqual(rows[1]["put_s"], 0.2)
+        self.assertAlmostEqual(rows[1]["add_s"], 0.21)
 
     def test_overlapping_jobs_are_one_wave(self):
         self.assertEqual(ej.waves([(0, 10), (5, 20), (30, 40)]), (2, 30))

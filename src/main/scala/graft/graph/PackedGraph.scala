@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 import graft.operators.{Budgets, Checkpoints}
 
 /** The packed graph format the fused and broadcast graph kernels share:
@@ -189,8 +190,12 @@ private[graft] object PackedGraph {
     *
     * Deterministic at any parallelism: the low word makes every key
     * unique, so the sort has one answer. */
-  def buildCsr(chunks: Array[Array[Long]], stride: Int, m: Int, extra: Option[Long]): Csr = {
-    val nodes = dictionary(chunks, stride, extra)
+  def buildCsr(chunks: Array[Array[Long]], stride: Int, m: Int, extra: Option[Long]): Csr =
+    buildCsr(dictionary(chunks, stride, extra), chunks, stride, m)
+
+  /** [[buildCsr]] over a node dictionary the caller already holds; it must
+    * contain every endpoint of `chunks`. */
+  def buildCsr(nodes: Array[Long], chunks: Array[Array[Long]], stride: Int, m: Int): Csr = {
     val n = nodes.length
     val offs = chunks.scanLeft(0)(_ + _.length / stride)
     val us = new Array[Int](m)
@@ -317,24 +322,29 @@ private[graft] object PackedGraph {
     }
   }
 
-  /** (node, `valueCol`) rows of every dense id whose value `keep`s, the
-    * node cast back to `nodeType`, in node order. The rows are emitted on
-    * the executors from `defaultParallelism` primitive slices of the two
-    * arrays, so the driver holds the slices (16 B per node) and no row
+  /** Rows of `n` driver-held records, emitted on the executors: `slice`
+    * copies each of at most `defaultParallelism` disjoint ranges
+    * [from, until) of them into one primitive payload, and `rows`
+    * expands a payload there. The driver holds the slices and no row
     * objects: no boxed builder and no local relation. */
+  def sliced[P: ClassTag, R: ClassTag](spark: SparkSession, n: Int)(slice: (Int, Int) => P)(
+      rows: P => Iterator[R]): RDD[R] = {
+    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, n))
+    val parts = Seq.tabulate(slices)(s =>
+      slice((n.toLong * s / slices).toInt, (n.toLong * (s + 1) / slices).toInt))
+    spark.sparkContext.parallelize(parts, slices).flatMap(rows)
+  }
+
+  /** (node, `valueCol`) rows of every dense id whose value `keep`s, the
+    * node cast back to `nodeType`, in node order, emitted from slices of
+    * the two arrays ([[sliced]]: the driver holds 16 B per node). */
   def frame(spark: SparkSession, nodes: Array[Long], values: Array[Long],
       valueCol: String, nodeType: DataType = LongType,
       keep: Long => Boolean = _ => true): DataFrame = {
     import spark.implicits._
-    val n = nodes.length
-    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, n))
-    val parts = Seq.tabulate(slices) { s =>
-      val from = (n.toLong * s / slices).toInt
-      val until = (n.toLong * (s + 1) / slices).toInt
-      (java.util.Arrays.copyOfRange(nodes, from, until),
-        java.util.Arrays.copyOfRange(values, from, until))
-    }
-    val rows = spark.sparkContext.parallelize(parts, slices).flatMap { case (ns, vs) =>
+    val rows = sliced(spark, nodes.length)((from, until) =>
+        (java.util.Arrays.copyOfRange(nodes, from, until),
+          java.util.Arrays.copyOfRange(values, from, until))) { case (ns, vs) =>
       Iterator.range(0, ns.length).filter(i => keep(vs(i))).map(i => (ns(i), vs(i)))
     }
     spark.createDataset(rows).toDF("node", valueCol)

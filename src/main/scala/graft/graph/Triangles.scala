@@ -126,7 +126,7 @@ object Triangles {
       if (du < dv || (du == dv && u < v)) { e(p) = v; e(p + 1) = u }
       p += 2
     }
-    val csr = PackedGraph.buildCsr(Array(e), 2, m, None)
+    val csr = PackedGraph.buildCsr(nodes, Array(e), 2, m)
     val off = csr.inOff
     val nbr = csr.inSrc
     // id-sorted out-neighbor runs: set intersection needs one shared

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * | `walkEdges` | 16M | ranked adjacency `RandomWalks.walksFused` broadcasts | "Round-12 second half" (`r12graph`), `walksAuto` |
   * | `componentEdges` | 16M | pair-graph edges `ConnectedComponents.runFused` collects | "Round-12 second half" (`r12cc`), `runAuto` |
   * | `triangleEdges` | 8M | canonical edges `Triangles.perNodeFused` collects; the closing-join broadcast of `perNodeComposed` | "Round-16 Triangles gate-scale measurement" (`r16tri`) |
-  * | `catalogFloats` | 64M | catalog floats the dense kernel publishes (`Retrieval.topKDot`/`publishCatalog`/`CatalogCache`, `Knn.bruteForceTopK`, `TwoTower.recommend`) | "Round-11 fused serving kernel" (the hand-off to IVF) |
+  * | `catalogFloats` | 64M | catalog floats the dense kernel publishes (`Retrieval.topKDot`/`publishCatalog`/`CatalogCache`, `Knn.bruteForceTopK`, `TwoTower.recommend`), and user-vector floats a streaming dense/ANN serve flattens on the driver (`RecsTable`) | "Round-11 fused serving kernel" (the hand-off to IVF) |
   * | `cellCatalogFloats` | 64M | index floats the fused IVF kernel publishes (`Retrieval.topKAnn`/`CellCatalogCache`, `RecsTable.streamAnnRefresh`) | "Round-12 broadcast-catalog kernel + the serving ladder" (`r12ladder`) |
   * | `knnMinQueries` | 1024 | query rows below which `Knn.bruteForceTopK` keeps the broadcast join | same bullet, "Query-count regime gate on the exact-KNN dispatch" |
   * | `seenBroadcastRows` | 32M | seen pairs `TwoTower.recommend`'s unfused plan broadcasts before it shuffles the anti-join | none measured: ~30 B/row ≈ 1 GB of executor broadcast |
@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * | `negativeBucketRows` | 8M | bucket-table rows `NegativeSampling.sampleNegatives` broadcasts before it shuffles | none measured: ~4 slim longs/row ≈ 256 MB relation |
   * | `dictionaryDistinct` | 2M (`2 << 20`) | approximate distinct values above which `Categorify.fitDictionary` zips per partition | none measured: ~60 MB single-partition window sort |
   * | `driverEmbedFloats` | 300M | floats per embedding table `TwoTower` keeps on the driver; past it training is cluster-held | "Round-10 cluster-held embedding tables" (`r10embed`) |
-  * | `servedStateRows` | unbounded (`Long.MaxValue`) | users + seen pairs (+ the next batch's rows) a streaming dense/ANN serve keeps on the driver (`RecsTable.streamDenseRefresh`/`streamAnnRefresh`); past it the query serves from its persisted served-users frame | none: the session guard binds first; specs narrow it to force the distributed route |
+  * | `servedStateRows` | unbounded (`Long.MaxValue`) | users + seen pairs (+ the next batch's rows) a streaming dense/ANN serve keeps on the driver (`RecsTable.streamDenseRefresh`/`streamAnnRefresh`); past it the query serves from its persisted served-users frame | none: a test-only seam. At the default the session guard (at a user row's bytes, which grow with the vector length) binds first; specs narrow it to force the distributed route and a mid-query switch |
   *
   * The driver-resource guard ([[Budgets.driverRows]]) bounds every
   * driver collect of the graph kernels, of `ConnectedComponents.runFused`,

@@ -138,7 +138,7 @@ object RecsTable {
       .start()
 
   /** The dense and ANN serves' shared query shape. The history is read
-    * ONCE, when the query starts, into one of two routes; after that, new
+    * only when the query starts, into one of two routes; after that, new
     * interactions arrive only through the stream, and a later change to
     * `history`'s source is not seen.
     *
@@ -157,17 +157,26 @@ object RecsTable {
     *    user), nothing persisted on the executors. It is
     *    admitted while users + seen pairs + the batch's rows fit
     *    `Budgets.servedStateRows` and what the driver holds
-    *    (`Budgets.driverRows`), with non-null integral ids
-    *    (`Budgets.integral`) and one vector length.
+    *    (`Budgets.driverRows` at a user row's cost, which grows with the
+    *    vector length) and the vectors fit `Budgets.catalogFloats`, with
+    *    non-null integral ids (`Budgets.integral`), distinct users and one
+    *    vector length. The query's start probes the vectors (one
+    *    aggregate) and then the history ∪ log pairs (the packed collect's
+    *    aggregate) before it collects either, so a refusal at start has
+    *    collected nothing; it has read the history once more than the
+    *    distributed route alone would.
     *  - Distributed route (refused at start, or for good from the first
     *    refused batch on, the driver state dropped): the query persists
-    *    one served-users frame ([[servedUsers]], from the history re-read
-    *    at that point), and per micro-batch [[batchLists]] groups the
+    *    one served-users frame ([[servedUsers]]: at start from the
+    *    history; at a switch from the driver state's seen sets, emitted
+    *    from the driver, so the history is never read again and the
+    *    driver keeps those slices as the frame's lineage, ~16 B per seen
+    *    pair), and per micro-batch [[batchLists]] groups the
     *    batch's rows with the whole log's — the log scan and one exchange
     *    of O(log + batch) rows — and joins them in place to the frame.
     *    Per batch: 3 jobs plus the scan of a log that grows with every
     *    batch; executor memory: the frame (users × (dim + their history)),
-    *    nothing on the driver.
+    *    and on the driver nothing past the switch's seed.
     *
     * On both routes the batch is APPENDED to `streamLogDir` (parquet, read
     * back with the batch's own schema — no per-batch schema-inference
@@ -188,15 +197,20 @@ object RecsTable {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val spark = stream.sparkSession
-    val served = servedUsers(history, userVecs)
+    // the distributed route's served-users frame, once the query is on it
+    @volatile var served: graft.sim.Retrieval.GenerationCache[DataFrame] = null
     try {
       // the log exists (empty) before the first append lands
       val logPath = new org.apache.hadoop.fs.Path(streamLogDir)
       logPath.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(logPath)
       val schema = stream.select(col("user_id"), col("item_id")).schema
+      val userType = history.schema("user_id").dataType
       @volatile var state = ServedState.start(history, userVecs,
         spark.read.schema(schema).parquet(streamLogDir))
-      if (state.isEmpty) served.get()
+      if (state.isEmpty) {
+        served = servedUsers(history, userVecs)
+        served.get()
+      }
       // one new thread per append, started by the batch's thread so it
       // inherits the batch's Spark job properties
       val appender = ExecutionContext.fromExecutor { r =>
@@ -221,6 +235,10 @@ object RecsTable {
                 kvSink(serve(st.fold(vectors, pairs)).filter(size(col("recs")) > 0), put)
               }
             case None =>
+              // the switch: the frame's seen sets are the driver state's,
+              // which already hold history ∪ log — the history is not
+              // read again
+              state.foreach(st => served = servedUsers(st.seenPairs(userType), userVecs))
               state = None
               // the query groups the batch's rows itself, so it may read
               // the log with or without them (a listing sees a log file
@@ -233,14 +251,17 @@ object RecsTable {
           ()
         }
         .start()
-      val release = new ReleaseOnTermination(q, () => { state = None; served.clear() })
+      val release = new ReleaseOnTermination(q, () => {
+        state = None
+        Option(served).foreach(_.clear())
+      })
       q.sparkSession.streams.addListener(release)
       // terminated before the listener was added: its event is gone
       if (!q.isActive) release.release()
       q
     } catch {
       case e: Throwable =>
-        served.clear()
+        Option(served).foreach(_.clear())
         throw e
     }
   }
@@ -251,28 +272,52 @@ object RecsTable {
     * [[graft.sim.Retrieval.GenerationCache]], so a new generation swaps
     * the vectors and keeps the seen ids — and each user's sorted distinct
     * seen ids. It stays admitted while users + seen pairs (+ the next
-    * batch's rows) fit `cap`; a refusal is final. Used from one batch
+    * batch's rows) fit `gate` and what the driver holds at the
+    * vectors' length; a refusal is final. Used from one batch
     * thread at a time. */
   private[serve] final class ServedState private (spark: org.apache.spark.sql.SparkSession,
-      cap: Long, userVecs: () => DataFrame) {
+      gate: Long, userVecs: () => DataFrame) {
     private val seen = new scala.collection.mutable.LongMap[Array[Long]]()
     private var pairs = 0L
+    private var probed: (DataFrame, Option[(Long, Int)]) = (null, None)
     private val vectors = new graft.sim.Retrieval.GenerationCache[
       Option[graft.sql.TopKDotF32.FlatCatalog]](userVecs, (frame, _) => collectVectors(frame),
       _ => ())
 
-    /** `frame`'s non-null (user_id, vec) rows, flattened, when they fit
-      * beside the seen pairs, ids are integral and distinct and every
-      * vector has one length. */
-    private def collectVectors(frame: DataFrame): Option[graft.sql.TopKDotF32.FlatCatalog] =
-      if (!Budgets.integral(frame.schema("user_id").dataType)) None
-      else graft.sim.Retrieval.boundedRows(frame
-          .select(col("user_id").cast("long"), col("vec").cast("array<float>"))
-          .filter(col("user_id").isNotNull && col("vec").isNotNull), ServedState.rows(cap - pairs))
-        .map(rows => (rows.map(_.getLong(0)), rows.map(_.getSeq[Float](1).toArray)))
-        .filter { case (_, vs) => vs.forall(_.length == vs(0).length) }
-        .map { case (ids, vs) => graft.sql.TopKDotF32.flatten(ids, vs, cosine = false) }
+    /** Rows users + seen pairs + a batch's rows may total with vectors of
+      * `dim` floats. */
+    private def cap(dim: Int): Long = math.min(gate, Budgets.driverRows(
+      spark.sparkContext.getConf, ServedState.resultBytes(dim), ServedState.heapBytes(dim)))
+
+    /** (rows, vector length) of `frame`'s non-null (user_id, vec) rows
+      * when it has some, its ids are integral and every vector has one
+      * length: one aggregate, nothing collected. Kept for the frame it
+      * probed, so the query's start and its first generation share it. */
+    private def probe(frame: DataFrame): Option[(Long, Int)] = {
+      if (!(probed._1 eq frame)) probed = (frame,
+        if (!Budgets.integral(frame.schema("user_id").dataType)) None
+        else {
+          val v = size(col("vec"))
+          val p = ServedState.clean(frame).agg(count(lit(1)), min(v), max(v)).head()
+          if (p.getLong(0) == 0L || p.getInt(1) != p.getInt(2)) None
+          else Some((p.getLong(0), p.getInt(2)))
+        })
+      probed._2
+    }
+
+    /** `frame`'s non-null (user_id, vec) rows, flattened, when the probe
+      * admits them: they fit beside the seen pairs and the catalog float
+      * budget (`Budgets.catalogFloats`), and the ids are distinct. */
+    private def collectVectors(frame: DataFrame): Option[graft.sql.TopKDotF32.FlatCatalog] = {
+      val p = probe(frame)
+      probed = (null, None)
+      p.filter { case (n, dim) => n <= cap(dim) - pairs &&
+          n <= graft.sim.Retrieval.budgetRows(dim, Budgets.get.catalogFloats) }
+        .flatMap { case (n, _) => graft.sim.Retrieval.boundedRows(ServedState.clean(frame), n.toInt) }
+        .map(rows => graft.sql.TopKDotF32.flatten(rows.map(_.getLong(0)),
+          rows.map(_.getSeq[Float](1).toArray), cosine = false))
         .filter(c => c.ids.indices.tail.forall(i => c.ids(i - 1) != c.ids(i)))
+    }
 
     /** Folds interleaved (user, item) longs into the seen sets. */
     private def foldPacked(packed: Iterable[Array[Long]]): Unit = {
@@ -295,10 +340,10 @@ object RecsTable {
     /** The current user vectors (a new generation is taken first) and
       * the batch's (user, item) ids as interleaved longs — one bounded
       * collect — when they are non-null and users + seen pairs + rows fit
-      * `cap`; None = refused. */
+      * the cap; None = refused. */
     def collect(batch: DataFrame)
         : Option[(graft.sql.TopKDotF32.FlatCatalog, Array[Long])] = vectors.get().flatMap { v =>
-      val room = cap - v.n - pairs
+      val room = cap(v.dim) - v.n - pairs
       val rows = if (room <= 0L) Array.empty[Row]
         else batch.limit(ServedState.rows(room) + 1).collect()
       if (room <= 0L || rows.length > room || rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
@@ -309,38 +354,57 @@ object RecsTable {
 
     /** Folds a collected batch into the seen sets; returns the queries of
       * its users with a vector in `v`, (user_id, vec, __seen), emitted on
-      * the executors from at most `defaultParallelism` slices of
-      * primitive arrays. */
+      * the executors from slices of primitive arrays
+      * (`PackedGraph.sliced`). */
     def fold(v: graft.sql.TopKDotF32.FlatCatalog, packed: Array[Long]): DataFrame = {
       foldPacked(Seq(packed))
       val users = Iterator.range(0, packed.length, 2).map(packed(_)).distinct
         .filter(java.util.Arrays.binarySearch(v.ids, _) >= 0).toArray
-      val n = users.length
-      val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, n))
-      val parts = Seq.tabulate(slices) { s =>
-        val us = users.slice((n.toLong * s / slices).toInt, (n.toLong * (s + 1) / slices).toInt)
+      import spark.implicits._
+      spark.createDataset(graft.graph.PackedGraph.sliced(spark, users.length) { (from, until) =>
+        val us = users.slice(from, until)
         val vecs = us.map { u =>
           val i = java.util.Arrays.binarySearch(v.ids, u)
           java.util.Arrays.copyOfRange(v.flat, i * v.dim, (i + 1) * v.dim)
         }
         (us, vecs, us.map(seen(_)))
-      }
+      } { case (us, vecs, seens) => us.indices.iterator.map(i => (us(i), vecs(i), seens(i))) })
+        .toDF("user_id", "vec", "__seen")
+    }
+
+    /** Every seen (user_id, item_id) pair — history ∪ log so far —, the
+      * user cast to `userType`, emitted on the executors from slices of
+      * the seen sets: the seed of the served-users frame when the query
+      * leaves the driver route. */
+    def seenPairs(userType: org.apache.spark.sql.types.DataType): DataFrame = {
+      val users = seen.keys.toArray
       import spark.implicits._
-      spark.createDataset(spark.sparkContext.parallelize(parts, slices).flatMap {
-        case (us, vecs, seens) => us.indices.iterator.map(i => (us(i), vecs(i), seens(i)))
-      }).toDF("user_id", "vec", "__seen")
+      spark.createDataset(graft.graph.PackedGraph.sliced(spark, users.length) { (from, until) =>
+        val us = users.slice(from, until)
+        (us, us.map(seen(_)))
+      } { case (us, items) => us.indices.iterator.flatMap(i => items(i).iterator.map(us(i) -> _)) })
+        .toDF("user_id", "item_id")
+        .select(col("user_id").cast(userType).as("user_id"), col("item_id"))
     }
   }
 
   private[serve] object ServedState {
-    /** Serialized task-result and driver-heap bytes per state row: a
-      * user row at dim 16, the dearer kind (a seen pair measured 16 B of
-      * task results, 17 B packed and 13 B held; SCALE.md, "Regime
-      * gates"). */
-    private val ResultBytes = 80L
-    private val HeapBytes = 688L
+    /** Serialized task-result and driver-heap bytes per state row with
+      * vectors of `dim` floats, a user row's: the dearer kind (a seen
+      * pair costs 16 B of task results, 17 B packed and 13 B held). A
+      * user row is collected as a `Row` of boxed floats, copied into a
+      * float array and flattened, all live at once: measured 637 B at
+      * dim 16, 1,096 B at 32 and 1,990 B at 64, and 73 / 138 / 268 B of
+      * task results (SCALE.md, "Regime gates"). */
+    private[serve] def resultBytes(dim: Int): Long = 16L + 4L * dim
+    private[serve] def heapBytes(dim: Int): Long = 192L + 30L * dim
 
     private def rows(n: Long): Int = math.min(n, (Int.MaxValue - 1).toLong).toInt
+
+    /** `frame`'s non-null (user_id, vec) rows as (long, array<float>). */
+    private def clean(frame: DataFrame): DataFrame = frame
+      .select(col("user_id").cast("long").as("user_id"), col("vec").cast("array<float>").as("vec"))
+      .filter(col("user_id").isNotNull && col("vec").isNotNull)
 
     /** Interleaved (user, item) longs as rows of `schema`'s two integral
       * columns, in ONE partition: the log append is one task and one
@@ -354,24 +418,26 @@ object RecsTable {
           col(s"_${i + 1}").cast(f.dataType).as(f.name) }: _*)
     }
 
-    /** The driver route's state when the query may start on it: the user
-      * vectors, then every (user, item) pair of `history` ∪ `log` through
-      * the guarded packed collect, all inside `Budgets.servedStateRows`
-      * and what the driver holds. None = serve on the distributed route. */
+    /** The driver route's state when the query may start on it. The user
+      * vectors are probed first, then every (user, item) pair of
+      * `history` ∪ `log` goes through the guarded packed collect, then the
+      * vectors are collected: all inside `Budgets.servedStateRows` and
+      * what the driver holds, and a refusal collects nothing before it.
+      * None = serve on the distributed route. */
     def start(history: DataFrame, userVecs: () => DataFrame, log: DataFrame)
         : Option[ServedState] = {
-      val spark = log.sparkSession
-      val cap = math.min(Budgets.get.servedStateRows,
-        Budgets.driverRows(spark.sparkContext.getConf, ResultBytes, HeapBytes))
       def ids(f: DataFrame) = f.select(col("user_id").cast("long"), col("item_id").cast("long"))
-      val st = new ServedState(spark, cap, userVecs)
+      val st = new ServedState(log.sparkSession, Budgets.get.servedStateRows, userVecs)
       val integral = Seq(history, log).forall(f =>
         Seq("user_id", "item_id").forall(c => Budgets.integral(f.schema(c).dataType)))
       if (!integral) None
-      else st.vectors.get().flatMap { v =>
-        graft.graph.PackedGraph.collect(ids(history).unionByName(ids(log)), cap - v.n,
-          ResultBytes, HeapBytes)()
-      }.map { case (chunks, _) => st.foldPacked(chunks.toSeq); st }
+      else st.probe(userVecs()).filter { case (n, dim) => st.cap(dim) > n }.flatMap {
+        case (n, dim) => graft.graph.PackedGraph.collect(ids(history).unionByName(ids(log)),
+          st.cap(dim) - n, resultBytes(dim), heapBytes(dim))()
+      }.flatMap { case (chunks, _) =>
+        st.foldPacked(chunks.toSeq)
+        st.vectors.get().map(_ => st)
+      }
     }
   }
 

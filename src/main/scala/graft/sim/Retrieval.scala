@@ -76,7 +76,7 @@ object Retrieval {
   /** Catalog rows of `dim` floats the float budget admits (0 = none).
     * Clamped before toInt: a generous Long budget must not truncate
     * negative. */
-  private def budgetRows(dim: Int, catalogFloatLimit: Long): Int =
+  private[graft] def budgetRows(dim: Int, catalogFloatLimit: Long): Int =
     if (dim <= 0 || catalogFloatLimit <= 0) 0
     else math.min(catalogFloatLimit / dim, (Int.MaxValue - 1).toLong).toInt
 

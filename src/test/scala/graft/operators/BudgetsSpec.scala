@@ -50,7 +50,8 @@ class BudgetsSpec extends AnyFunSuite {
     ("ConnectedComponents.runFused pair graph", 16L, 96L, 286331153L, 60397977L),
     ("Cooccur.recommendFused neighbor model", 24L, 192L, 143165576L, 40265318L),
     ("RandomWalks.walksFused ranked adjacency", 24L, 128L, 214748364L, 40265318L),
-    ("RecsTable streaming serve's driver-held state", 80L, 688L, 39953184L, 12079595L))
+    ("RecsTable streaming serve's driver-held state at dim 16", 80L, 672L, 40904450L, 12079595L),
+    ("RecsTable streaming serve's driver-held state at dim 32", 144L, 1152L, 23860929L, 6710886L))
   private val heap = 64L << 30
 
   private def conf(maxResultSize: Option[String]) = {

@@ -272,7 +272,8 @@ class RecsTableSpec extends SparkSpecBase {
       org.apache.spark.sql.streaming.StreamingQuery)] =
     Seq("driver" -> (q => q), "distributed" -> (q => distributed(q)))
 
-  private type Serve = (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery
+  /** (stream, history, log dir) => the started query. */
+  private type Serve = (DataFrame, DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery
   private type BatchForm = (DataFrame, DataFrame) => DataFrame
 
   /** The equivalence fixture: history, 4 micro-batches, and each serve
@@ -305,18 +306,18 @@ class RecsTableSpec extends SparkSpecBase {
       .collect().map(r => r.get(0).toString -> r.getString(1)).toMap
     val forms: Seq[(String, Serve, BatchForm)] = Seq(
       ("dense",
-        (s, dir) => RecsTable.streamDenseRefresh(s, history, userVecs, itemVecs, k,
+        (s, hist, dir) => RecsTable.streamDenseRefresh(s, hist, userVecs, itemVecs, k,
           BatchKv.put, dir),
         (active, seen) => graft.rank.TwoTower.recommend(model, active, k,
           excludeSeen = Some(seen))),
       ("ann fused",
-        (s, dir) => RecsTable.streamAnnRefresh(s, history, () => userVecs, () => index,
+        (s, hist, dir) => RecsTable.streamAnnRefresh(s, hist, () => userVecs, () => index,
           () => cents, k, 2, BatchKv.put, dir),
         (active, seen) => graft.sim.Retrieval.topKAnn(active.join(userVecs, Seq("user_id")),
           "user_id", "vec", index, "item_id", "vec", cents, k, 2, seen = Some(seen))),
       ("ann join",
-        (s, dir) => Budgets.scoped(_.copy(cellCatalogFloats = 10L))(
-          RecsTable.streamAnnRefresh(s, history, () => userVecs, () => index,
+        (s, hist, dir) => Budgets.scoped(_.copy(cellCatalogFloats = 10L))(
+          RecsTable.streamAnnRefresh(s, hist, () => userVecs, () => index,
             () => cents, k, 2, BatchKv.put, dir)),
         (active, seen) => Budgets.scoped(_.copy(cellCatalogFloats = 10L))(
           graft.sim.Retrieval.topKAnn(active.join(userVecs, Seq("user_id")),
@@ -325,7 +326,9 @@ class RecsTableSpec extends SparkSpecBase {
     /** Runs `batches` through `serve` (started by `route`) over a log
       * that already holds `logged`, and checks each batch's puts against
       * `batchForm` on history ∪ logged ∪ the batches so far; returns the
-      * puts per batch. `between` runs after each batch is served. */
+      * puts per batch. The serve reads the history from files deleted
+      * once the query has started, so it must read them once. `between`
+      * runs after each batch is served. */
     def check(name: String, serve: Serve, batchForm: BatchForm,
         route: (=> org.apache.spark.sql.streaming.StreamingQuery) =>
           org.apache.spark.sql.streaming.StreamingQuery,
@@ -338,7 +341,10 @@ class RecsTableSpec extends SparkSpecBase {
       val in = MemoryStream[(Long, Long)]
       val dir = java.nio.file.Files.createTempDirectory("graft_equivlog").toString
       if (logged.nonEmpty) logged.toDF("user_id", "item_id").write.parquet(s"$dir/log")
-      val q = route(serve(in.toDF().toDF("user_id", "item_id"), s"$dir/log"))
+      history.write.parquet(s"$dir/history")
+      val q = route(serve(in.toDF().toDF("user_id", "item_id"),
+        spark.read.parquet(s"$dir/history"), s"$dir/log"))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/history"))
       try {
         for ((events, n) <- batches.zipWithIndex) {
           BatchKv.batch = n
@@ -413,6 +419,31 @@ class RecsTableSpec extends SparkSpecBase {
         assert((persisted & added(3)).isEmpty, s"$form: the frame is released after stop()")
       }
     }
+  }
+
+  test("the driver state starts inside its gate only, and refuses before it collects") {
+    import RecsTable.ServedState
+    val dir = java.nio.file.Files.createTempDirectory("graft_stategate").toString
+    val history = Seq((1L, 1L), (1L, 2L), (2L, 3L)).toDF("user_id", "item_id")
+    val log = Seq.empty[(Long, Long)].toDF("user_id", "item_id")
+    val vecs = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f))).toDF("user_id", "vec")
+    def starts(gate: Long, v: DataFrame, h: DataFrame = history) =
+      Budgets.scoped(_.copy(servedStateRows = gate))(ServedState.start(h, () => v, log)).isDefined
+    assert(starts(5L, vecs), "2 users + 3 seen pairs fit 5 rows")
+    assert(!starts(4L, vecs), "2 users + 3 seen pairs do not fit 4 rows")
+    assert(!starts(5L, Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f, 0f))).toDF("user_id", "vec")),
+      "vectors of two lengths")
+    assert(!starts(5L, Seq((1L, Seq(1f, 0f)), (1L, Seq(0f, 1f))).toDF("user_id", "vec")),
+      "a user with two vectors")
+    // more users than the gate: refused by the vectors' probe, before the
+    // history is read (its files are gone)
+    history.write.parquet(s"$dir/history")
+    val gone = spark.read.parquet(s"$dir/history")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/history"))
+    assert(!starts(2L, vecs, gone))
+    // a row costs its vector's floats (BudgetsSpec's two driver-held rows)
+    assert(ServedState.resultBytes(16) == 80L && ServedState.heapBytes(16) == 672L)
+    assert(ServedState.resultBytes(32) == 144L && ServedState.heapBytes(32) == 1152L)
   }
 
   /** The lifecycle of both routes: the history is read once, when the

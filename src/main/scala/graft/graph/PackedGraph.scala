@@ -4,7 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 import org.apache.spark.storage.StorageLevel
 import scala.reflect.ClassTag
 import graft.operators.{Budgets, Checkpoints}
@@ -13,13 +13,20 @@ import graft.operators.{Budgets, Checkpoints}
   * how an edge list reaches the driver, how node ids become dense ints,
   * and how the dst-grouped CSR is laid out. Two fused serves outside
   * `graft.graph` use it too: `Cooccur.recommendFused` builds its neighbor
-  * model with [[driverCsr]] (each item's in-edges are its neighbors), and
+  * model with [[driverCsr]] (each item's in-edges are its neighbors),
   * `ConnectedComponents.runFused` collects its pair graph through
-  * [[collect]] and labels it over [[dictionary]]'s dense ids.
+  * [[collect]] and labels it over [[dictionary]]'s dense ids, and a
+  * streaming serve's driver state collects its seen pairs through
+  * [[collect]]. So do the vector collects (`Retrieval.vectorRows`): the
+  * dense catalog (`Retrieval.publishCatalog`), the IVF cell catalog
+  * (`Retrieval.publishCellCatalog`) and a streaming serve's user vectors
+  * (`RecsTable.ServedState`); [[unpack]] decodes their chunks.
   *
   *  - Transfer: each partition sends ONE long[] of its rows through the
-  *    InternalRow RDD (a long column writes its value, an array column
-  *    its length and then its elements). Not the Dataset encoder
+  *    InternalRow RDD (a long column writes its value, an array<long>
+  *    column its length and then its elements, an array<float> column its
+  *    length and then its elements' raw bits, two per long). Not the
+  *    Dataset encoder
   *    (round 14): a Dataset collect of big primitive-array rows
   *    deserializes on the DRIVER through SafeProjection → generic
   *    ArrayData.toLongArray, a per-element walk over a boxed array
@@ -27,11 +34,13 @@ import graft.operators.{Budgets, Checkpoints}
   *    GBs of Long garbage, dwarfing the sweep); the raw RDD path moves
   *    each chunk as a primitive array end to end. No shuffle either (the
   *    round-12 grouped form paid an exchange).
-  *  - Guard: one aggregate counts the rows and the rows with a null
-  *    column BEFORE anything is collected, so an over-budget or
-  *    null-bearing graph is refused while it is still distributed; the
-  *    cap is the caller's gate and what the session holds
-  *    ([[Budgets.driverRows]] at the caller's bytes per row).
+  *  - Guard: one pass ([[probe]]: one job, no exchange) counts the rows
+  *    and the rows with a null column, and folds the caller's extra
+  *    columns (a vector collect's min and max length), BEFORE anything is
+  *    collected, so an over-budget, null-bearing or otherwise refused
+  *    input is refused while it is still distributed; the cap is the
+  *    caller's gate and what the session holds ([[Budgets.driverRows]] at
+  *    the caller's bytes per row).
   *  - Node dictionary: sorted distinct ids; position = dense id.
   *  - CSR: in-edges grouped by dense dst (see [[Csr]]).
   */
@@ -57,23 +66,49 @@ private[graft] object PackedGraph {
     if (Budgets.integral(t) && edges.schema(dstCol).dataType == t) Some(t) else None
   }
 
-  /** One aggregate over `e`: `rows`, the count of rows with a null in
-    * any column, then `extra`. */
-  private def probe(e: DataFrame, rows: Column, extra: Column*): Row = {
-    val anyNull = e.columns.map(c => col(c).isNull).reduce(_ || _)
-    e.agg(rows, (coalesce(sum(when(anyNull, 1L).otherwise(0L)), lit(0L)) +: extra): _*)
-      .head()
+  /** A probe column: `c`, a long per row, summed over the rows
+    * ([[Fold.sum]]), or its least or greatest value ([[Fold.min]],
+    * [[Fold.max]]: Long.MaxValue and Long.MinValue over none); null values
+    * are skipped. */
+  final class Fold private (val c: Column, val op: Int) {
+    def zero: Long = if (op == 0) 0L else if (op == 1) Long.MaxValue else Long.MinValue
+  }
+  object Fold {
+    def sum(c: Column): Fold = new Fold(c, 0)
+    def min(c: Column): Fold = new Fold(c, 1)
+    def max(c: Column): Fold = new Fold(c, 2)
+  }
+
+  private def fold(op: Int, a: Long, b: Long): Long =
+    if (op == 0) a + b else if (op == 1) math.min(a, b) else math.max(a, b)
+
+  /** One pass over `e` — one job and no exchange, where an aggregate pays
+    * an exchange and, under adaptive execution, a second job: `rows`, the
+    * count of rows with a null in any column, then `extra`, as longs. */
+  private def probe(e: DataFrame, rows: Fold, extra: Seq[Fold]): Row = {
+    val folds = rows +: Fold.sum(e.columns.map(col(_).isNull).reduce(_ || _).cast("long")) +: extra
+    val (ops, zeros) = (folds.map(_.op).toArray, folds.map(_.zero).toArray)
+    Row.fromSeq(e.select(folds.map(_.c.cast("long")): _*).queryExecution.toRdd.mapPartitions { it =>
+      val v = zeros.clone()
+      it.foreach { r =>
+        var i = 0
+        while (i < v.length) { if (!r.isNullAt(i)) v(i) = fold(ops(i), v(i), r.getLong(i)); i += 1 }
+      }
+      Iterator.single(v)
+    }.fold(zeros)((a, b) => Array.tabulate(a.length)(i => fold(ops(i), a(i), b(i)))).toSeq)
   }
 
   /** The guarded packed collect: probes `e` ([[probe]]) and collects its
-    * packed chunks only when it has no null, passes `admit`, and its row
-    * count fits `gate` and the session's driver at `resultBytes` of task
-    * results and `heapBytes` of driver heap per row. Returns the chunks
-    * with the probe row. `e` stays as it is; the caller frees it. */
+    * packed chunks only when it has no null, passes `admit`, and its
+    * `rows` fit `gate` and the session's driver at `resultBytes` of task
+    * results and `heapBytes` of driver heap per row (a caller whose cost
+    * grows with an array's length counts its rows in elements). Returns
+    * the chunks with the probe row. `e` stays as it is; the caller frees
+    * it. */
   def collect(e: DataFrame, gate: Long, resultBytes: Long, heapBytes: Long,
-      rows: Column = count(lit(1)), extra: Seq[Column] = Nil)(
+      rows: Fold = Fold.sum(lit(1L)), extra: Seq[Fold] = Nil)(
       admit: Row => Boolean = _ => true): Option[(Array[Array[Long]], Row)] = {
-    val p = probe(e, rows, extra: _*)
+    val p = probe(e, rows, extra)
     val m = p.getLong(0)
     val cap = math.min(gate, Budgets.driverRows(
       e.sparkSession.sparkContext.getConf, resultBytes, heapBytes))
@@ -83,23 +118,63 @@ private[graft] object PackedGraph {
 
   /** Each partition's rows as one long[] (see the object doc). */
   private def chunks(e: DataFrame): Array[Array[Long]] = {
-    val isArray = e.schema.fields.map(_.dataType.isInstanceOf[ArrayType])
+    // per column: 0 = a long, 1 = an array<long>, 2 = an array<float>
+    val kinds = e.schema.fields.map(_.dataType match {
+      case ArrayType(FloatType, _) => 2
+      case _: ArrayType => 1
+      case _ => 0
+    })
     e.queryExecution.toRdd.mapPartitions { it =>
       val b = new scala.collection.mutable.ArrayBuilder.ofLong
       it.foreach { r =>
         var c = 0
-        while (c < isArray.length) {
-          if (isArray(c)) {
+        while (c < kinds.length) {
+          if (kinds(c) == 0) b += r.getLong(c)
+          else {
             val a = r.getArray(c)
+            def bits(i: Int): Long =
+              if (i < a.numElements()) java.lang.Float.floatToRawIntBits(a.getFloat(i)) else 0
             b += a.numElements().toLong
             var i = 0
-            while (i < a.numElements()) { b += a.getLong(i); i += 1 }
-          } else b += r.getLong(c)
+            if (kinds(c) == 1) while (i < a.numElements()) { b += a.getLong(i); i += 1 }
+            else while (i < a.numElements()) { b += bits(i + 1) << 32 | bits(i) & 0xffffffffL; i += 2 }
+          }
           c += 1
         }
       }
       Iterator.single(b.result())
     }.collect()
+  }
+
+  /** Packed records of `keys` longs and one array<float> ([[chunks]]) as
+    * `keys` arrays of their longs and one float array per record, in
+    * transfer order. Each chunk is released once read. */
+  private[graft] def unpack(chunks: Array[Array[Long]], keys: Int)
+      : (Array[Array[Long]], Array[Array[Float]]) = {
+    val n = chunks.map(c => Iterator.iterate(0)(j => j + keys + 1 + (c(j + keys).toInt + 1) / 2)
+      .takeWhile(_ < c.length).size).sum
+    val ks = Array.fill(keys)(new Array[Long](n))
+    val vs = new Array[Array[Float]](n)
+    var r = 0
+    chunks.indices.foreach { ci =>
+      val c = chunks(ci)
+      chunks(ci) = null
+      var j = 0
+      while (j < c.length) {
+        var k = 0
+        while (k < keys) { ks(k)(r) = c(j); j += 1; k += 1 }
+        val v = new Array[Float](c(j).toInt)
+        var i = 0
+        while (i < v.length) {
+          v(i) = java.lang.Float.intBitsToFloat((c(j + 1 + (i >> 1)) >>> 32 * (i & 1)).toInt)
+          i += 1
+        }
+        j += 1 + (v.length + 1) / 2
+        vs(r) = v
+        r += 1
+      }
+    }
+    (ks, vs)
   }
 
   /** The node dictionary of `ids`, which it sorts in place: sorted
@@ -245,7 +320,7 @@ private[graft] object PackedGraph {
     * fits `gate` and [[IntCap]], then [[buildCsr]] with `extra` in the
     * dictionary. */
   def driverCsr(e: DataFrame, gate: Long, resultBytes: Long, heapBytes: Long,
-      extra: Option[Long] = None, extraProbe: Seq[Column] = Nil)(
+      extra: Option[Long] = None, extraProbe: Seq[Fold] = Nil)(
       admit: Row => Boolean = _ => true): Option[Csr] = {
     val ck = e.localCheckpoint()
     val got = collect(ck, math.min(gate, IntCap), resultBytes, heapBytes,
@@ -274,10 +349,10 @@ private[graft] object PackedGraph {
     * weight]) chunks of [[SubChunk]] records, cached memory-and-disk
     * (cache pressure spills instead of failing). None on any refusal. */
   def executorImage(edges: DataFrame, gate: Long, extra: Option[Long] = None,
-      extraProbe: Seq[Column] = Nil)(admit: Row => Boolean = _ => true):
+      extraProbe: Seq[Fold] = Nil)(admit: Row => Boolean = _ => true):
       Option[(Array[Long], Broadcast[Array[Long]], RDD[Array[Long]])] = {
     val e = edges.persist(StorageLevel.DISK_ONLY)
-    val p = probe(e, count(lit(1)), extraProbe: _*)
+    val p = probe(e, Fold.sum(lit(1L)), extraProbe)
     val nodesDf =
       if (p.getLong(0) == 0L || p.getLong(1) != 0L || !admit(p)) None
       else Some(e.select(col(e.columns(0)).as("node"))

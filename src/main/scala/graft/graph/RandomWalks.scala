@@ -158,7 +158,7 @@ object RandomWalks {
     // of driver heap
     val got = PackedGraph.collect(
       grouped.select(when(col("__nullv") === 0L, col("u")).as("u"), col("nbrs")),
-      maxEdges, 24L, 128L, rows = coalesce(sum(size(col("nbrs"))), lit(0L)))(
+      maxEdges, 24L, 128L, rows = PackedGraph.Fold.sum(size(col("nbrs"))))(
       _.getLong(0) > 0L)
     val chunks = got match {
       case Some((cs, _)) => cs

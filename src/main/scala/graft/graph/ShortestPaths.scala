@@ -64,8 +64,7 @@ object ShortestPaths {
       weightCol: String): DataFrame =
     edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
       col(weightCol).cast("long").as("w"))
-  private def weightProbe = Seq(coalesce(min(col("w")), lit(0L)),
-    coalesce(max(col("w")), lit(0L)))
+  private def weightProbe = Seq(PackedGraph.Fold.min(col("w")), PackedGraph.Fold.max(col("w")))
   private def weightsFit(rounds: Int)(p: Row): Boolean = {
     val maxW = p.getLong(3)
     p.getLong(2) >= 0L && !(maxW > 0L && maxW > (Long.MaxValue - 1L) / math.max(1, rounds))

@@ -87,7 +87,7 @@ object Triangles {
     // Int, and packed entries total ≤ 2·groups + m ≤ 3m, so a gate raised
     // past ~Int.MaxValue/3 refuses instead of overflowing.
     val got = PackedGraph.collect(grouped, math.min(maxEdges, (Int.MaxValue / 3 - 4).toLong),
-      24L, 96L, rows = coalesce(sum(size(col("nbrs"))), lit(0L)))(_.getLong(0) > 0L)
+      24L, 96L, rows = PackedGraph.Fold.sum(size(col("nbrs"))))(_.getLong(0) > 0L)
     graft.operators.Checkpoints.free(grouped)
     val (chunks, m) = got match {
       case Some((cs, p)) => (cs, p.getLong(0).toInt)

@@ -961,13 +961,15 @@ object TwoTower {
     val uIds = users.select(col("user_id")).distinct()
     val iType = model.itemVecs.schema("item_id").dataType
     val integralId = integral(iType)
-    // FUSED serving path (round 11): integral-id catalogs inside the float
-    // budget are collected once (bounded: limit probes the budget in one
-    // job) and scored through sql.TopKDotF32 — candidates never materialize
-    // as rows, the seen-set anti-join becomes a row-local membership test,
-    // and the plan's only exchange is the small per-user history
-    // aggregation. Row-identical to the unfused plan below (spec-pinned);
-    // catalogs past the budget (or non-integral ids) fall through to it.
+    // FUSED serving path (round 11): integral-id catalogs of one vector
+    // length inside the float budget and the driver are collected once
+    // (Retrieval's guarded vector collect: one probe pass decides before
+    // one packed transfer) and scored through sql.TopKDotF32 —
+    // candidates never materialize as rows, the seen-set anti-join becomes
+    // a row-local membership test, and the plan's only exchange is the
+    // small per-user history aggregation. Row-identical to the unfused
+    // plan below (spec-pinned); catalogs it refuses (past the budget,
+    // ragged vectors) or non-integral ids fall through to it.
     if (integralId && budgets.catalogFloats > 0) {
       val u = uIds.join(model.userVecs, Seq("user_id"))
       graft.sim.Retrieval.topKDot(u, "user_id", "vec",

@@ -160,11 +160,11 @@ object RecsTable {
     *    (`Budgets.driverRows` at a user row's cost, which grows with the
     *    vector length) and the vectors fit `Budgets.catalogFloats`, with
     *    non-null integral ids (`Budgets.integral`), distinct users and one
-    *    vector length. The query's start probes the vectors (one
-    *    aggregate) and then the history ∪ log pairs (the packed collect's
-    *    aggregate) before it collects either, so a refusal at start has
-    *    collected nothing; it has read the history once more than the
-    *    distributed route alone would.
+    *    vector length. The query's start probes the vectors, then
+    *    collects the history ∪ log pairs through the guarded packed
+    *    collect (its probe first), then the vectors, so a refusal at
+    *    either probe has collected nothing; it has read the history once
+    *    more than the distributed route alone would.
     *  - Distributed route (refused at start, or for good from the first
     *    refused batch on, the driver state dropped): the query persists
     *    one served-users frame ([[servedUsers]]: at start from the
@@ -279,44 +279,41 @@ object RecsTable {
       gate: Long, userVecs: () => DataFrame) {
     private val seen = new scala.collection.mutable.LongMap[Array[Long]]()
     private var pairs = 0L
-    private var probed: (DataFrame, Option[(Long, Int)]) = (null, None)
+    /** The (user, item) pairs the first vector collect takes in between
+      * its probe and its transfer: the query's start only ([[seed]]). */
+    private var startPairs: Option[DataFrame] = None
     private val vectors = new graft.sim.Retrieval.GenerationCache[
       Option[graft.sql.TopKDotF32.FlatCatalog]](userVecs, (frame, _) => collectVectors(frame),
       _ => ())
 
     /** Rows users + seen pairs + a batch's rows may total with vectors of
-      * `dim` floats. */
-    private def cap(dim: Int): Long = math.min(gate, Budgets.driverRows(
-      spark.sparkContext.getConf, ServedState.resultBytes(dim), ServedState.heapBytes(dim)))
+      * `dim` floats, each charged as a user row, the dearer kind (a seen
+      * pair costs 16 B of task results and 17 B packed; a user row
+      * `Retrieval.rowResultBytes`/`rowHeapBytes`, as it is collected and
+      * flattened as a dense catalog row). */
+    private def cap(dim: Int): Long = math.min(gate, Budgets.driverRows(spark.sparkContext.getConf,
+      graft.sim.Retrieval.rowResultBytes(dim), graft.sim.Retrieval.rowHeapBytes(dim)))
 
-    /** (rows, vector length) of `frame`'s non-null (user_id, vec) rows
-      * when it has some, its ids are integral and every vector has one
-      * length: one aggregate, nothing collected. Kept for the frame it
-      * probed, so the query's start and its first generation share it. */
-    private def probe(frame: DataFrame): Option[(Long, Int)] = {
-      if (!(probed._1 eq frame)) probed = (frame,
-        if (!Budgets.integral(frame.schema("user_id").dataType)) None
-        else {
-          val v = size(col("vec"))
-          val p = ServedState.clean(frame).agg(count(lit(1)), min(v), max(v)).head()
-          if (p.getLong(0) == 0L || p.getInt(1) != p.getInt(2)) None
-          else Some((p.getLong(0), p.getInt(2)))
-        })
-      probed._2
-    }
-
-    /** `frame`'s non-null (user_id, vec) rows, flattened, when the probe
-      * admits them: they fit beside the seen pairs and the catalog float
-      * budget (`Budgets.catalogFloats`), and the ids are distinct. */
-    private def collectVectors(frame: DataFrame): Option[graft.sql.TopKDotF32.FlatCatalog] = {
-      val p = probe(frame)
-      probed = (null, None)
-      p.filter { case (n, dim) => n <= cap(dim) - pairs &&
-          n <= graft.sim.Retrieval.budgetRows(dim, Budgets.get.catalogFloats) }
-        .flatMap { case (n, _) => graft.sim.Retrieval.boundedRows(ServedState.clean(frame), n.toInt) }
-        .map(rows => graft.sql.TopKDotF32.flatten(rows.map(_.getLong(0)),
-          rows.map(_.getSeq[Float](1).toArray), cosine = false))
+    /** `frame`'s non-null (user_id, vec) rows, flattened, through the
+      * guarded vector collect (`Retrieval.flatCatalog`: one vector length,
+      * inside `Budgets.catalogFloats`), when the ids are integral and
+      * distinct and the users leave room beside the seen pairs for a
+      * batch row (users + pairs < the cap); at start the pairs are
+      * collected after the vectors' probe and before their transfer. */
+    private def collectVectors(frame: DataFrame): Option[graft.sql.TopKDotF32.FlatCatalog] =
+      if (!Budgets.integral(frame.schema("user_id").dataType)) None
+      else graft.sim.Retrieval.flatCatalog(frame, "user_id", "vec", cosine = false)(
+          (n, dim) => n < cap(dim) - pairs && startPairs.forall(seed(_, n, dim)))
         .filter(c => c.ids.indices.tail.forall(i => c.ids(i - 1) != c.ids(i)))
+
+    /** Folds `frame`'s (user, item) pairs into the seen sets when they fit
+      * the guarded packed collect under what `n` users of `dim` floats
+      * leave of the cap, each pair charged as a user row. */
+    private def seed(frame: DataFrame, n: Long, dim: Int): Boolean = {
+      startPairs = None
+      graft.graph.PackedGraph.collect(frame, cap(dim) - n, graft.sim.Retrieval.rowResultBytes(dim),
+          graft.sim.Retrieval.rowHeapBytes(dim))()
+        .exists { case (chunks, _) => foldPacked(chunks.toSeq); true }
     }
 
     /** Folds interleaved (user, item) longs into the seen sets. */
@@ -389,22 +386,7 @@ object RecsTable {
   }
 
   private[serve] object ServedState {
-    /** Serialized task-result and driver-heap bytes per state row with
-      * vectors of `dim` floats, a user row's: the dearer kind (a seen
-      * pair costs 16 B of task results, 17 B packed and 13 B held). A
-      * user row is collected as a `Row` of boxed floats, copied into a
-      * float array and flattened, all live at once: measured 637 B at
-      * dim 16, 1,096 B at 32 and 1,990 B at 64, and 73 / 138 / 268 B of
-      * task results (SCALE.md, "Regime gates"). */
-    private[serve] def resultBytes(dim: Int): Long = 16L + 4L * dim
-    private[serve] def heapBytes(dim: Int): Long = 192L + 30L * dim
-
     private def rows(n: Long): Int = math.min(n, (Int.MaxValue - 1).toLong).toInt
-
-    /** `frame`'s non-null (user_id, vec) rows as (long, array<float>). */
-    private def clean(frame: DataFrame): DataFrame = frame
-      .select(col("user_id").cast("long").as("user_id"), col("vec").cast("array<float>").as("vec"))
-      .filter(col("user_id").isNotNull && col("vec").isNotNull)
 
     /** Interleaved (user, item) longs as rows of `schema`'s two integral
       * columns, in ONE partition: the log append is one task and one
@@ -419,11 +401,12 @@ object RecsTable {
     }
 
     /** The driver route's state when the query may start on it. The user
-      * vectors are probed first, then every (user, item) pair of
-      * `history` ∪ `log` goes through the guarded packed collect, then the
-      * vectors are collected: all inside `Budgets.servedStateRows` and
-      * what the driver holds, and a refusal collects nothing before it.
-      * None = serve on the distributed route. */
+      * vectors are probed, then every (user, item) pair of `history` ∪
+      * `log` goes through the guarded packed collect under what the
+      * vectors leave of the cap, then the vectors are collected: all
+      * inside `Budgets.servedStateRows` and what the driver holds, and a
+      * refusal at either probe has collected nothing. None = serve on the
+      * distributed route. */
     def start(history: DataFrame, userVecs: () => DataFrame, log: DataFrame)
         : Option[ServedState] = {
       def ids(f: DataFrame) = f.select(col("user_id").cast("long"), col("item_id").cast("long"))
@@ -431,11 +414,8 @@ object RecsTable {
       val integral = Seq(history, log).forall(f =>
         Seq("user_id", "item_id").forall(c => Budgets.integral(f.schema(c).dataType)))
       if (!integral) None
-      else st.probe(userVecs()).filter { case (n, dim) => st.cap(dim) > n }.flatMap {
-        case (n, dim) => graft.graph.PackedGraph.collect(ids(history).unionByName(ids(log)),
-          st.cap(dim) - n, resultBytes(dim), heapBytes(dim))()
-      }.flatMap { case (chunks, _) =>
-        st.foldPacked(chunks.toSeq)
+      else {
+        st.startPairs = Some(ids(history).unionByName(ids(log)))
         st.vectors.get().map(_ => st)
       }
     }

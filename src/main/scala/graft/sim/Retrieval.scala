@@ -1,10 +1,13 @@
 package graft.sim
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.sql.TopKDotF32
 import graft.sql.TopKDotF32.FlatCatalog
+import graft.graph.PackedGraph
+import graft.graph.PackedGraph.Fold
+import graft.operators.Budgets
 
 /** Fused brute-force top-k retrieval of query vectors against a BOUNDED
   * embedding catalog — the serving-side primitive behind
@@ -16,8 +19,10 @@ import graft.sql.TopKDotF32.FlatCatalog
   * IVF / IVFADC index instead of a full scan.
   *
   * Plan shape (see sql.TopKDotF32): the catalog is collected once under a
-  * float budget (probed with one bounded `limit` job), flattened
-  * driver-side, and BROADCAST — executors hold one copy in their block
+  * float budget through `PackedGraph.collect` (one probe pass reads its
+  * rows and vector lengths, then each partition's rows come over as
+  * one packed long[]), flattened driver-side, and BROADCAST — executors
+  * hold one copy in their block
   * manager, tasks share it (round-12 advice; the old reference-object
   * form deserialized a copy per task). Each query row scores the whole
   * catalog inside a primitive-array loop (DotF32-identical arithmetic —
@@ -30,14 +35,16 @@ import graft.sql.TopKDotF32.FlatCatalog
   * serialize the scoring loop on one core (SCALE.md, round 11).
   *
   * Null hygiene (round-12 advice): catalog rows with a null id (or an id
-  * that casts to null) or a null vector are FILTERED before the collect —
-  * the same rows the unfused crossJoin plan silently drops — and the dim
-  * probe skips null embeddings, so the fused path succeeds wherever the
-  * fallback path does.
+  * that casts to null) or a null vector are FILTERED before the probe —
+  * the same rows the unfused crossJoin plan silently drops — so the fused
+  * path succeeds wherever the fallback path does.
   *
   * Returns None when the catalog exceeds `Budgets.catalogFloats` (≈256 MB)
-  * or is empty — past that seam retrieval belongs to the ANN
-  * stack, not a dense scan; callers fall back explicitly.
+  * or what the driver holds (`Budgets.driverRows` at [[rowResultBytes]] /
+  * [[rowHeapBytes]]), is empty, or has vectors of more than one length
+  * (the kernel scores a fixed width; DotF32 truncates each pair to the
+  * shorter vector) — past that seam retrieval belongs to the ANN stack or
+  * the unfused plan, not a dense scan; callers fall back explicitly.
   * Output: (qId, rk int 1..k, cId long, score double), rk ordered
   * (score desc, cId asc) per query. Query ids absent from `queries`'
   * vec column (null vec) produce no rows.
@@ -45,47 +52,78 @@ import graft.sql.TopKDotF32.FlatCatalog
 object Retrieval {
 
   /** Collect + flatten + broadcast a catalog under the float budget
-    * (`Budgets.catalogFloats`). None = over budget or empty (the ANN
+    * (`Budgets.catalogFloats`). None = refused ([[flatCatalog]]; the ANN
     * handoff seam). The broadcast is ContextCleaner-reclaimed once
     * unreferenced; long-lived callers (streaming serve) hold it in a
     * [[CatalogCache]]. */
   def publishCatalog(catalog: DataFrame, cId: String, cVec: String,
-      cosine: Boolean = false): Option[Broadcast[FlatCatalog]] = {
-    val clean = catalog
-      .select(col(cId).cast("long").as("__id"),
-        col(cVec).cast("array<float>").as("__v"))
-      .filter(col("__id").isNotNull && col("__v").isNotNull)
-    val dimRow = clean.select(size(col("__v")).as("d")).head(1)
-    boundedRows(clean, budgetRows(if (dimRow.isEmpty) 0 else dimRow(0).getInt(0),
-        graft.operators.Budgets.get.catalogFloats))
-      .map(rows => catalog.sparkSession.sparkContext.broadcast(TopKDotF32.flatten(
-        rows.map(_.getLong(0)), rows.map(_.getSeq[Float](1).toArray), cosine)))
+      cosine: Boolean = false): Option[Broadcast[FlatCatalog]] =
+    flatCatalog(catalog, cId, cVec, cosine)((_, _) => true)
+      .map(catalog.sparkSession.sparkContext.broadcast(_))
+
+  /** `frame`'s rows with a non-null id (`cId` as long) and vector (`cVec`
+    * as array<float>), flattened ([[TopKDotF32.flatten]]), when
+    * [[vectorRows]] admits them under `Budgets.catalogFloats` and
+    * `admit(rows, length)` holds. */
+  private[graft] def flatCatalog(frame: DataFrame, cId: String, cVec: String,
+      cosine: Boolean)(admit: (Long, Int) => Boolean): Option[FlatCatalog] =
+    vectorRows(frame, Seq(col(cId)), col(cVec), Budgets.get.catalogFloats)(admit)
+      .map { case (keys, vecs) => TopKDotF32.flatten(keys(0), vecs, cosine) }
+
+  /** `frame`'s rows whose `keys` (as longs) and vector `vec` (as
+    * array<float>) are non-null, as one array per key and one float array
+    * per row ([[PackedGraph.unpack]]), through the guarded packed collect
+    * (`PackedGraph.collect`): its probe pass reads the rows and the
+    * vectors' min and max length, and the rows are collected only when
+    * every vector has one length d > 0, rows × d fits `maxFloats` and an
+    * Int-indexed array, the rows fit the session at [[rowResultBytes]] /
+    * [[rowHeapBytes]] each, and `admit(rows, d)` holds. None, too, when
+    * the collect saw another row count than the probe (`frame` must read
+    * the same rows twice, as a model frame does). */
+  private[graft] def vectorRows(frame: DataFrame, keys: Seq[Column], vec: Column,
+      maxFloats: Long)(admit: (Long, Int) => Boolean)
+      : Option[(Array[Array[Long]], Array[Array[Float]])] = {
+    val cols = (keys.map(_.cast("long")) :+ vec.cast("array<float>")).zipWithIndex
+      .map { case (c, i) => c.as(s"__$i") }
+    val e = frame.select(cols: _*)
+      .filter(cols.indices.map(i => col(s"__$i").isNotNull).reduce(_ && _))
+    val len = size(col(s"__${keys.size}")).cast("long")
+    PackedGraph.collect(e, Long.MaxValue, FloatResultBytes, FloatHeapBytes,
+        rows = Fold.sum(len + RowFloats), extra = Seq(Fold.sum(lit(1L)), Fold.min(len),
+          Fold.max(len))) { p =>
+      val (m, lo, d) = (p.getLong(2), p.getLong(3), p.getLong(4))
+      m > 0L && d > 0L && lo == d && m <= math.min(maxFloats, Int.MaxValue - 8L) / d &&
+        admit(m, d.toInt)
+    }.map { case (chunks, p) => (PackedGraph.unpack(chunks, keys.size), p.getLong(2)) }
+      .collect { case (got, m) if got._2.length == m => got }
   }
+
+  /** A collected vector row of d floats — in either catalog, or a
+    * streaming serve's user row — is charged as d + `RowFloats` floats of
+    * `FloatResultBytes` task results and `FloatHeapBytes` driver heap
+    * each ([[vectorRows]] counts its rows so), 48 + 4·d and 96 + 8·d B:
+    * the packed transfer (keys, length, the floats two per long), then
+    * the decoded rows beside a chunk or beside the flattening's boxed sort
+    * index and catalog. Measured with `graft.serve.DriverBytes` at d = 16,
+    * 32 and 64: at most 88.5 / 152.8 / 281.4 B of task results and 197.5 /
+    * 328.4 / 582.2 B of heap at peak (SCALE.md, "Regime gates"). */
+  private val RowFloats = 12L
+  private val FloatResultBytes = 4L
+  private val FloatHeapBytes = 8L
+  private[graft] def rowResultBytes(d: Int): Long = FloatResultBytes * (d + RowFloats)
+  private[graft] def rowHeapBytes(d: Int): Long = FloatHeapBytes * (d + RowFloats)
 
   /** [[publishCatalog]] for a catalog already on the driver: the same
-    * float budget, the same flattened broadcast, no Spark job. `ids` and
-    * `vecs` are parallel arrays of non-null rows, in any order. */
+    * float budget and one-length rule, the same flattened broadcast, no
+    * Spark job. `ids` and `vecs` are parallel arrays of non-null rows, in
+    * any order. */
   private[graft] def publishLocal(sc: org.apache.spark.SparkContext, ids: Array[Long],
       vecs: Array[Array[Float]], cosine: Boolean = false): Option[Broadcast[FlatCatalog]] = {
-    val maxRows = budgetRows(if (vecs.isEmpty) 0 else vecs(0).length,
-      graft.operators.Budgets.get.catalogFloats)
-    if (ids.isEmpty || ids.length > maxRows) None
+    val dim = if (vecs.isEmpty) 0 else vecs(0).length
+    if (dim == 0 || vecs.exists(_.length != dim) ||
+        ids.length > math.min(Budgets.get.catalogFloats, Int.MaxValue - 8L) / dim) None
     else Some(sc.broadcast(TopKDotF32.flatten(ids, vecs, cosine)))
   }
-
-  /** Catalog rows of `dim` floats the float budget admits (0 = none).
-    * Clamped before toInt: a generous Long budget must not truncate
-    * negative. */
-  private[graft] def budgetRows(dim: Int, catalogFloatLimit: Long): Int =
-    if (dim <= 0 || catalogFloatLimit <= 0) 0
-    else math.min(catalogFloatLimit / dim, (Int.MaxValue - 1).toLong).toInt
-
-  /** `frame`'s rows when it has some and no more than `maxRows`: one
-    * bounded `limit(maxRows + 1)` collect. */
-  private[graft] def boundedRows(frame: DataFrame, maxRows: Int): Option[Array[Row]] =
-    if (maxRows <= 0) None
-    else Some(frame.limit(maxRows + 1).collect())
-      .filter(rows => rows.nonEmpty && rows.length <= maxRows)
 
   /** One value per MODEL GENERATION (round-11 verdict task 5): streaming
     * serves re-enter the kernel every micro-batch, but a model frame only
@@ -104,7 +142,7 @@ object Retrieval {
     * route. */
   sealed class GenerationCache[V] private[graft] (supplier: () => DataFrame,
       build: (DataFrame, Option[V]) => V, release: V => Unit) {
-    private val budgets = graft.operators.Budgets.get
+    private val budgets = Budgets.get
     @volatile private var keyFrame: DataFrame = null
     @volatile private var cached: Option[V] = None
     @volatile var collects: Int = 0
@@ -112,7 +150,7 @@ object Retrieval {
     def get(): V = synchronized {
       val frame = supplier()
       if (!(frame eq keyFrame)) {
-        val next = graft.operators.Budgets.scoped(_ => budgets)(build(frame, cached))
+        val next = Budgets.scoped(_ => budgets)(build(frame, cached))
         cached.foreach(release)
         cached = Some(next)
         keyFrame = frame
@@ -247,23 +285,18 @@ object Retrieval {
   // ------------------------------------------------------------------
 
   /** Collect + group + broadcast a cell-assigned index (id, cid, vec)
-    * into the fused IVF kernel's payload (sql.TopKDotIvfF32.CellCatalog).
-    * None = over the float budget (`Budgets.cellCatalogFloats`) or
-    * empty — past that seam the join plan of [[topKAnn]] is the only
-    * option. */
+    * into the fused IVF kernel's payload (sql.TopKDotIvfF32.CellCatalog)
+    * through the guarded vector collect ([[vectorRows]]). None =
+    * over the float budget (`Budgets.cellCatalogFloats`) or the driver,
+    * empty, or vectors not all of the centroids' length — past that seam
+    * the join plan of [[topKAnn]] is the only option. */
   def publishCellCatalog(index: DataFrame, cId: String, cVec: String,
       centroids: Array[Array[Float]])
       : Option[Broadcast[graft.sql.TopKDotIvfF32.CellCatalog]] =
-    boundedRows(index
-        .select(col(cId).cast("long").as("__id"), col("cid").cast("int").as("__c"),
-          col(cVec).cast("array<float>").as("__v"))
-        .filter(col("__id").isNotNull && col("__c").isNotNull && col("__v").isNotNull),
-      budgetRows(if (centroids.isEmpty) 0 else centroids(0).length,
-        graft.operators.Budgets.get.cellCatalogFloats))
-      .map(rows => index.sparkSession.sparkContext.broadcast(
-        graft.sql.TopKDotIvfF32.group(
-          rows.map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray)),
-          centroids)))
+    centroids.headOption.flatMap(c0 => vectorRows(index, Seq(col(cId), col("cid").cast("int")),
+        col(cVec), Budgets.get.cellCatalogFloats)((_, d) => d == c0.length))
+      .map { case (keys, vecs) => index.sparkSession.sparkContext.broadcast(
+        graft.sql.TopKDotIvfF32.group(keys(0), keys(1), vecs, centroids)) }
 
   /** [[CatalogCache]]'s IVF counterpart (round 12): one published cell
     * catalog per INDEX GENERATION for streaming ANN serves

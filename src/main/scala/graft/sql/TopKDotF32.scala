@@ -201,10 +201,13 @@ object TopKDotF32 {
     def floats: Long = flat.length.toLong
   }
 
-  /** Flatten (ids, vectors) into the broadcast payload. Rows whose vector
-    * is shorter than `dim` are zero-padded (DotF32 semantics: the fold
-    * runs over min(len, dim) terms). Done ONCE, driver-side, BEFORE the
-    * broadcast — executors never re-flatten (round-12 advice). */
+  /** Flatten (ids, vectors) into the broadcast payload, `dim` = the first
+    * vector's length. Rows whose vector is shorter are zero-padded and
+    * longer ones truncated, which matches DotF32 only when every vector
+    * has one length: the collected catalogs are admitted only then
+    * (`Retrieval.flatCatalog`), so this shapes only a SQL literal catalog.
+    * Done ONCE, driver-side, BEFORE the broadcast — executors never
+    * re-flatten (round-12 advice). */
   def flatten(ids: Array[Long], vecs: Array[Array[Float]],
       cosine: Boolean): FlatCatalog = {
     require(ids.length == vecs.length,

@@ -185,29 +185,30 @@ object TopKDotIvfF32 {
       val flat: Array[Float], val centFlat: Array[Float],
       val centNorm2: Array[Double], val dim: Int) extends Serializable
 
-  /** Group (id, cid, vec) rows into the cell layout. Rows are sorted
-    * (cid, id) so within-cell visit order is id-ascending (ties admit the
-    * smaller id first; the heap comparator enforces the order anyway).
-    * `cids` outside [0, nlist) are dropped — they cannot be probed. */
-  def group(rows: Array[(Long, Int, Array[Float])],
+  /** Group rows — parallel `ids`, cell ids and vectors — into the cell
+    * layout. Rows are sorted (cid, id) so within-cell visit order is
+    * id-ascending (ties admit the smaller id first; the heap comparator
+    * enforces the order anyway). `cells` outside [0, nlist) are dropped —
+    * they cannot be probed. */
+  def group(ids: Array[Long], cells: Array[Long], vecs: Array[Array[Float]],
       centroids: Array[Array[Float]]): CellCatalog = {
-    require(rows.nonEmpty, "empty catalog")
+    require(ids.nonEmpty, "empty catalog")
     require(centroids.nonEmpty, "empty quantizer")
     val nlist = centroids.length
     val dim = centroids(0).length
-    val valid = rows.filter(r => r._2 >= 0 && r._2 < nlist)
-      .sortBy(r => (r._2, r._1))
+    val valid = ids.indices.filter(r => cells(r) >= 0 && cells(r) < nlist)
+      .sortBy(r => (cells(r), ids(r)))
     val n = valid.length
     require(n > 0, "no catalog row carries a probe-able cell id")
     val offsets = new Array[Int](nlist + 1)
-    val ids = new Array[Long](n)
+    val sorted = new Array[Long](n)
     val flat = new Array[Float](n * dim)
     var i = 0
     while (i < n) {
-      val (id, cid, v) = valid(i)
-      ids(i) = id
-      System.arraycopy(v, 0, flat, i * dim, math.min(v.length, dim))
-      offsets(cid + 1) += 1
+      val r = valid(i)
+      sorted(i) = ids(r)
+      System.arraycopy(vecs(r), 0, flat, i * dim, math.min(vecs(r).length, dim))
+      offsets(cells(r).toInt + 1) += 1
       i += 1
     }
     var c = 0
@@ -226,7 +227,7 @@ object TopKDotIvfF32 {
       centNorm2(c) = s
       c += 1
     }
-    new CellCatalog(offsets, ids, flat, centFlat, centNorm2, dim)
+    new CellCatalog(offsets, sorted, flat, centFlat, centNorm2, dim)
   }
 
   /** Column builder over a published (broadcast) cell catalog. */

@@ -76,7 +76,7 @@ class PackedGraphSpec extends SparkSpecBase {
     // array columns pack as [len, elements...], the grouped-kernel records
     val grouped = Seq((1L, Seq(2L, 3L)), (4L, Seq.empty[Long])).toDF("u", "nbrs").coalesce(1)
     val rec = PackedGraph.collect(grouped, 2L, 24L, 96L,
-      rows = coalesce(sum(size(col("nbrs"))), lit(0L)))().get
+      rows = PackedGraph.Fold.sum(size(col("nbrs"))))().get
     assert(rec._1.flatten.toSeq == Seq(1L, 2L, 2L, 3L, 4L, 0L))
   }
 

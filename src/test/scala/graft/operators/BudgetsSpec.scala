@@ -50,8 +50,12 @@ class BudgetsSpec extends AnyFunSuite {
     ("ConnectedComponents.runFused pair graph", 16L, 96L, 286331153L, 60397977L),
     ("Cooccur.recommendFused neighbor model", 24L, 192L, 143165576L, 40265318L),
     ("RandomWalks.walksFused ranked adjacency", 24L, 128L, 214748364L, 40265318L),
-    ("RecsTable streaming serve's driver-held state at dim 16", 80L, 672L, 40904450L, 12079595L),
-    ("RecsTable streaming serve's driver-held state at dim 32", 144L, 1152L, 23860929L, 6710886L))
+    ("RecsTable streaming serve's driver-held state at dim 16", 112L, 224L, 122713351L, 8628282L),
+    ("RecsTable streaming serve's driver-held state at dim 32", 176L, 352L, 78090314L, 5490725L),
+    ("Retrieval.publishCatalog dense catalog at dim 16", 112L, 224L, 122713351L, 8628282L),
+    ("Retrieval.publishCatalog dense catalog at dim 32", 176L, 352L, 78090314L, 5490725L),
+    ("Retrieval.publishCellCatalog cell catalog at dim 16", 112L, 224L, 122713351L, 8628282L),
+    ("Retrieval.publishCellCatalog cell catalog at dim 32", 176L, 352L, 78090314L, 5490725L))
   private val heap = 64L << 30
 
   private def conf(maxResultSize: Option[String]) = {

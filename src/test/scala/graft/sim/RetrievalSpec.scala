@@ -1,7 +1,9 @@
 package graft.sim
 
 import graft.SparkSpecBase
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.operators.Budgets
 
 /** sim.Retrieval.topKDot — the fused serving primitive: row-parity with
@@ -139,9 +141,9 @@ class RetrievalSpec extends SparkSpecBase {
 
   test("fused IVF kernel reads a NULL seen element as no item, never as item 0") {
     // a catalog that holds id 0, one cell; a seen array of one NULL
-    val rows = (0L until 6L).map(id => (id, 0, vec(id, 8).toArray)).toArray
-    val bc = spark.sparkContext.broadcast(
-      graft.sql.TopKDotIvfF32.group(rows, Array(Array.fill(8)(0f))))
+    val ids = (0L until 6L).toArray
+    val bc = spark.sparkContext.broadcast(graft.sql.TopKDotIvfF32.group(ids,
+      ids.map(_ => 0L), ids.map(vec(_, 8).toArray), Array(Array.fill(8)(0f))))
     val served = queries.limit(1)
       .select(posexplode(graft.sql.TopKDotIvfF32.fused(col("qv").cast("array<float>"),
         array(lit(null).cast("long")), bc, k = 6, nprobe = 1)))
@@ -238,5 +240,133 @@ class RetrievalSpec extends SparkSpecBase {
       ids.intersect(annSets.getOrElse(q, Set.empty)).size.toDouble / ids.size }
     val mean = recalls.sum / recalls.size
     assert(mean >= 0.5, f"IVFADC recall@3 vs exact = $mean%.2f < 0.5")
+  }
+
+  // --- the guarded packed collect of both catalogs ---------------------
+
+  test("ragged catalogs take the unfused plans: no fused kernel truncates a vector") {
+    // the first row has 2 floats and id 3 has 3: DotF32 scores (1, 3) over
+    // all 3 (5.0, ranked first); a kernel of width 2 would score it 1.0
+    val ragged = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(0.5f, 0.5f, 4f)))
+      .toDF("item_id", "cv")
+    val q = Seq((1L, Seq(1f, 1f, 1f))).toDF("q_id", "qv")
+    graft.sql.GraftFunctions.register(spark)
+    val unfused = graft.operators.Relational.topKPerGroup(q.crossJoin(ragged)
+          .select($"q_id", $"item_id", graft.sql.GraftFunctions.dotF32(
+            $"qv".cast("array<float>"), $"cv".cast("array<float>")).as("score")),
+        Seq("q_id"), Seq($"score".desc, $"item_id".asc), 2)
+      .select($"q_id", $"rk".cast("int").as("rk"), $"item_id", $"score")
+    assert(unfused.orderBy("rk").select("item_id").as[Long].collect().toSeq == Seq(3L, 1L))
+    val dense = Retrieval.topKDot(q, "q_id", "qv", ragged, "item_id", "cv", 2)
+    assert(dense.forall(f => f.exceptAll(unfused).isEmpty && unfused.exceptAll(f).isEmpty),
+      s"the fused kernel ranked a truncated vector: ${dense.map(_.collect().toSeq)}")
+    assert(dense.isEmpty, "a ragged catalog must be refused (the caller falls back)")
+    // the IVF kernel against 2-float centroids: the same rule, and one
+    // length that is not the centroids' is refused too
+    val cents = Array(Array(1f, 0f), Array(0f, 1f))
+    val index = Retrieval.annIndex(ragged, "item_id", "cv", cents)
+    val ann = Retrieval.topKAnn(q, "q_id", "qv", index, "item_id", "cv", cents, k = 2, nprobe = 2)
+    val joined = Budgets.scoped(_.copy(cellCatalogFloats = 0L))(Retrieval.topKAnn(
+      q, "q_id", "qv", index, "item_id", "cv", cents, k = 2, nprobe = 2))
+    assert(ann.exceptAll(joined).isEmpty && joined.exceptAll(ann).isEmpty,
+      s"the fused IVF kernel ranked a truncated vector: ${ann.collect().toSeq}")
+    assert(Retrieval.publishCellCatalog(index, "item_id", "cv", cents).isEmpty)
+    val wide = Retrieval.annIndex(ragged.filter($"item_id" === 3L), "item_id", "cv", cents)
+    assert(Retrieval.publishCellCatalog(wide, "item_id", "cv", cents).isEmpty,
+      "vectors of one length other than the centroids' must be refused")
+  }
+
+  test("a catalog past its float budget is refused after the probe alone") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val cents = centroidsFor(4)
+    val index = Retrieval.annIndex(catalog, "item_id", "cv", cents).localCheckpoint()
+    // (job group, the job's stage names)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""), e.stageInfos.map(_.name)))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // one row of 8 floats fits 10 floats, the catalog's 120 do not
+      sc.setJobGroup("past-budget", "past-budget catalogs")
+      try Budgets.scoped(_.copy(catalogFloats = 10L, cellCatalogFloats = 10L)) {
+        assert(Retrieval.publishCatalog(catalog, "item_id", "cv").isEmpty)
+        assert(Retrieval.publishCellCatalog(index, "item_id", "cv", cents).isEmpty)
+      } finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job is seen, every
+      // job of the two refusals has been seen too
+      sc.setJobGroup("past-budget-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.asScala.exists(_._1 == "past-budget-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val refusals = jobs.asScala.filter(_._1 == "past-budget").map(_._2).toSeq
+      assert(refusals.nonEmpty, "the probes ran no job")
+      assert(refusals.flatten.forall(!_.startsWith("collect at")),
+        s"a refused catalog ran a collect job: $refusals")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The boxed-row form both catalogs were collected with before the
+    * packed transfer: a `Row` per catalog row, its vector decoded through
+    * `getSeq[Float]`. */
+  private def boxedRows(frame: DataFrame, cols: Column*): Array[Row] =
+    frame.select(cols: _*).filter(cols.map(_.isNotNull).reduce(_ && _)).collect()
+
+  /** `TopKDotIvfF32.group` as it was over boxed (id, cid, vec) rows. */
+  private def boxedGroup(rows: Array[(Long, Int, Array[Float])],
+      centroids: Array[Array[Float]]): graft.sql.TopKDotIvfF32.CellCatalog = {
+    val nlist = centroids.length
+    val dim = centroids(0).length
+    val valid = rows.filter(r => r._2 >= 0 && r._2 < nlist).sortBy(r => (r._2, r._1))
+    val offsets = new Array[Int](nlist + 1)
+    val flat = new Array[Float](valid.length * dim)
+    valid.zipWithIndex.foreach { case ((_, cid, v), i) =>
+      System.arraycopy(v, 0, flat, i * dim, math.min(v.length, dim))
+      offsets(cid + 1) += 1
+    }
+    (0 until nlist).foreach(c => offsets(c + 1) += offsets(c))
+    val centFlat = centroids.flatMap(_.take(dim).padTo(dim, 0f))
+    val centNorm2 = centroids.map(_.take(dim).map(x => x.toDouble * x.toDouble).sum)
+    new graft.sql.TopKDotIvfF32.CellCatalog(offsets, valid.map(_._1), flat, centFlat,
+      centNorm2, dim)
+  }
+
+  private def floatBits(a: Array[Float]) = a.map(java.lang.Float.floatToRawIntBits).toSeq
+  private def doubleBits(a: Array[Double]) =
+    Option(a).map(_.map(java.lang.Double.doubleToRawLongBits).toSeq)
+
+  test("published catalogs are bit-identical to the boxed-row form") {
+    // an odd length with signed zeros, a NaN, infinities and subnormals,
+    // over several partitions, and rows with a null id or vector
+    val odd = spark.createDataset((1L to 50L).map(c => (c, Seq(-0f, c.toFloat / 3,
+        Float.MinPositiveValue, if (c % 7 == 0) Float.NaN else -c.toFloat,
+        if (c % 5 == 0) Float.PositiveInfinity else 1e-40f)))).toDF("item_id", "cv")
+      .repartition(3)
+      .unionByName(Seq((51L, Option.empty[Seq[Float]])).toDF("item_id", "cv"))
+    for ((frame, cosine) <- Seq((catalog, false), (catalog, true), (odd, false), (odd, true))) {
+      val got = Retrieval.publishCatalog(frame, "item_id", "cv", cosine).get.value
+      val rows = boxedRows(frame, $"item_id".cast("long"), $"cv".cast("array<float>"))
+      val want = graft.sql.TopKDotF32.flatten(rows.map(_.getLong(0)),
+        rows.map(_.getSeq[Float](1).toArray), cosine)
+      assert(got.ids.toSeq == want.ids.toSeq && got.dim == want.dim)
+      assert(floatBits(got.flat) == floatBits(want.flat), s"flat floats (cosine=$cosine)")
+      assert(doubleBits(got.norms) == doubleBits(want.norms), s"norms (cosine=$cosine)")
+    }
+    for ((frame, cents) <- Seq((catalog, centroidsFor(4)),
+        (odd, Array.tabulate(3, 5)((i, j) => (i + j).toFloat)))) {
+      val index = Retrieval.annIndex(frame, "item_id", "cv", cents)
+      val got = Retrieval.publishCellCatalog(index, "item_id", "cv", cents).get.value
+      val want = boxedGroup(boxedRows(index, $"item_id".cast("long"), $"cid".cast("int"),
+          $"cv".cast("array<float>")).map(r => (r.getLong(0), r.getInt(1),
+          r.getSeq[Float](2).toArray)), cents)
+      assert(got.ids.toSeq == want.ids.toSeq && got.offsets.toSeq == want.offsets.toSeq)
+      assert(floatBits(got.flat) == floatBits(want.flat) && got.dim == want.dim)
+      assert(floatBits(got.centFlat) == floatBits(want.centFlat))
+      assert(doubleBits(got.centNorm2) == doubleBits(want.centNorm2))
+    }
   }
 }

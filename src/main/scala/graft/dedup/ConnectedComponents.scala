@@ -107,19 +107,15 @@ object ConnectedComponents {
       case Some(t) if maxEdges > 0L => t
       case _ => return None
     }
-    // checkpointed so the probe and the collect read one stable copy
     val pairs = edges
       .select(col("a").cast("long").as("x"), col("b").cast("long").as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull && col("x") =!= col("y"))
-      .localCheckpoint()
     // 16 B/edge of task results; ~32 B/edge of driver heap for the
     // transfer and the id image, ~20 B per node for the dictionary, the
     // parents and the labels, and ~17 B per node for the output
     // (`PackedGraph.frame`'s primitive slices, measured), about one node
     // per edge on a pair graph
-    val got = PackedGraph.collect(pairs, maxEdges, 16L, 96L)()
-    graft.operators.Checkpoints.free(pairs)
-    val chunks = got match {
+    val chunks = PackedGraph.collect(pairs, maxEdges, 16L, 96L)() match {
       case Some((cs, _)) => cs
       case None => return None
     }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 import org.apache.spark.storage.StorageLevel
 import scala.reflect.ClassTag
-import graft.operators.{Budgets, Checkpoints}
+import graft.operators.Budgets
 
 /** The packed graph format the fused and broadcast graph kernels share:
   * how an edge list reaches the driver, how node ids become dense ints,
@@ -22,25 +22,29 @@ import graft.operators.{Budgets, Checkpoints}
   * (`Retrieval.publishCellCatalog`) and a streaming serve's user vectors
   * (`RecsTable.ServedState`); [[unpack]] decodes their chunks.
   *
-  *  - Transfer: each partition sends ONE long[] of its rows through the
-  *    InternalRow RDD (a long column writes its value, an array<long>
-  *    column its length and then its elements, an array<float> column its
-  *    length and then its elements' raw bits, two per long). Not the
-  *    Dataset encoder
-  *    (round 14): a Dataset collect of big primitive-array rows
-  *    deserializes on the DRIVER through SafeProjection → generic
+  *  - Transfer: each partition packs its rows into long[] chunks, split
+  *    at record boundaries, through the InternalRow RDD (a long column
+  *    writes its value, an array<long> column its length and then its
+  *    elements, an array<float> column its length and then its elements'
+  *    raw bits, two per long). Not the Dataset encoder (round 14): a
+  *    Dataset collect of big primitive-array rows deserializes on the
+  *    DRIVER through SafeProjection → generic
   *    ArrayData.toLongArray, a per-element walk over a boxed array
   *    (measured at 120M edges: minutes of single-threaded driver CPU and
   *    GBs of Long garbage, dwarfing the sweep); the raw RDD path moves
   *    each chunk as a primitive array end to end. No shuffle either (the
-  *    round-12 grouped form paid an exchange).
-  *  - Guard: one pass ([[probe]]: one job, no exchange) counts the rows
-  *    and the rows with a null column, and folds the caller's extra
-  *    columns (a vector collect's min and max length), BEFORE anything is
+  *    round-12 grouped form paid an exchange). Chunks of at most
+  *    [[PackChunk]] longs keep the driver heap at the longs' size.
+  *  - Guard: the packing pass reads the input ONCE ([[scanned]]): in the
+  *    same scan each partition folds its header (rows, rows with a null
+  *    column, the caller's extra columns, such as a vector collect's min
+  *    and max length), and the packed chunks are persisted DISK_ONLY. The
+  *    driver sums the headers (one `fold` job, no exchange) and applies
+  *    the caller's gate, what the session holds ([[Budgets.driverRows]] at
+  *    the caller's bytes per row) and [[IntCap]] BEFORE anything is
   *    collected, so an over-budget, null-bearing or otherwise refused
-  *    input is refused while it is still distributed; the cap is the
-  *    caller's gate and what the session holds ([[Budgets.driverRows]] at
-  *    the caller's bytes per row).
+  *    input never reaches the driver. One read needs no stable copy: the
+  *    header and the chunks come from the same scan.
   *  - Node dictionary: sorted distinct ids; position = dense id.
   *  - CSR: in-edges grouped by dense dst (see [[Csr]]).
   */
@@ -59,6 +63,14 @@ private[graft] object PackedGraph {
     * set flat at any partition size. */
   private val SubChunk = 1 << 20
 
+  /** Longs per packed transfer chunk (32K, 256 KB): below half of G1's
+    * smallest region (1 MB), so no chunk is a humongous object, which the
+    * heap rounds up to whole regions. On a 5 GB driver (2 MB regions)
+    * whole-partition arrays of 10–35 MB measured +26 % per d = 16 vector
+    * row, and 1M-long chunks of 11-long cell rows +53 % (each array a few
+    * bytes past four regions). */
+  private val PackChunk = 1 << 15
+
   /** `srcCol`'s and `dstCol`'s shared id type when it is integral: a
     * fused kernel keys ids by long ([[Budgets.integral]]). */
   def idType(edges: DataFrame, srcCol: String, dstCol: String): Option[DataType] = {
@@ -66,7 +78,7 @@ private[graft] object PackedGraph {
     if (Budgets.integral(t) && edges.schema(dstCol).dataType == t) Some(t) else None
   }
 
-  /** A probe column: `c`, a long per row, summed over the rows
+  /** A header column: `c`, a long per row, summed over the rows
     * ([[Fold.sum]]), or its least or greatest value ([[Fold.min]],
     * [[Fold.max]]: Long.MaxValue and Long.MinValue over none); null values
     * are skipped. */
@@ -82,71 +94,98 @@ private[graft] object PackedGraph {
   private def fold(op: Int, a: Long, b: Long): Long =
     if (op == 0) a + b else if (op == 1) math.min(a, b) else math.max(a, b)
 
-  /** One pass over `e` — one job and no exchange, where an aggregate pays
-    * an exchange and, under adaptive execution, a second job: `rows`, the
-    * count of rows with a null in any column, then `extra`, as longs. */
-  private def probe(e: DataFrame, rows: Fold, extra: Seq[Fold]): Row = {
+  /** `use` of one scan of `e` and its header. With `pack`, the scan is
+    * each partition's rows as packed chunks of at most [[PackChunk]] longs
+    * (see the object doc; a longer record is a chunk alone), split between
+    * records, then, last, the partition's header; without, the header
+    * alone. The header folds `rows`, the count of rows with a null in any
+    * column (a null array packs as length 0), then `extra`, over the
+    * partition's rows; the driver folds the partitions' headers (one job,
+    * no exchange, where an aggregate pays an exchange and, under adaptive
+    * execution, a second job) into a Row of longs. Packed chunks are
+    * persisted DISK_ONLY for `use` and unpersisted after it, however it
+    * ends. */
+  private def scanned[T](e: DataFrame, pack: Boolean, rows: Fold, extra: Seq[Fold])(
+      use: (RDD[AnyRef], Row) => T): T = {
     val folds = rows +: Fold.sum(e.columns.map(col(_).isNull).reduce(_ || _).cast("long")) +: extra
     val (ops, zeros) = (folds.map(_.op).toArray, folds.map(_.zero).toArray)
-    Row.fromSeq(e.select(folds.map(_.c.cast("long")): _*).queryExecution.toRdd.mapPartitions { it =>
-      val v = zeros.clone()
-      it.foreach { r =>
-        var i = 0
-        while (i < v.length) { if (!r.isNullAt(i)) v(i) = fold(ops(i), v(i), r.getLong(i)); i += 1 }
-      }
-      Iterator.single(v)
-    }.fold(zeros)((a, b) => Array.tabulate(a.length)(i => fold(ops(i), a(i), b(i)))).toSeq)
-  }
-
-  /** The guarded packed collect: probes `e` ([[probe]]) and collects its
-    * packed chunks only when it has no null, passes `admit`, and its
-    * `rows` fit `gate` and the session's driver at `resultBytes` of task
-    * results and `heapBytes` of driver heap per row (a caller whose cost
-    * grows with an array's length counts its rows in elements). Returns
-    * the chunks with the probe row. `e` stays as it is; the caller frees
-    * it. */
-  def collect(e: DataFrame, gate: Long, resultBytes: Long, heapBytes: Long,
-      rows: Fold = Fold.sum(lit(1L)), extra: Seq[Fold] = Nil)(
-      admit: Row => Boolean = _ => true): Option[(Array[Array[Long]], Row)] = {
-    val p = probe(e, rows, extra)
-    val m = p.getLong(0)
-    val cap = math.min(gate, Budgets.driverRows(
-      e.sparkSession.sparkContext.getConf, resultBytes, heapBytes))
-    if (m > cap || p.getLong(1) != 0L || !admit(p)) None
-    else Some((chunks(e), p))
-  }
-
-  /** Each partition's rows as one long[] (see the object doc). */
-  private def chunks(e: DataFrame): Array[Array[Long]] = {
-    // per column: 0 = a long, 1 = an array<long>, 2 = an array<float>
-    val kinds = e.schema.fields.map(_.dataType match {
+    // per packed column: 0 = a long, 1 = an array<long>, 2 = an array<float>
+    val kinds = if (!pack) Array.emptyIntArray else e.schema.fields.map(_.dataType match {
       case ArrayType(FloatType, _) => 2
       case _: ArrayType => 1
       case _ => 0
     })
-    e.queryExecution.toRdd.mapPartitions { it =>
-      val b = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r =>
-        var c = 0
-        while (c < kinds.length) {
-          if (kinds(c) == 0) b += r.getLong(c)
-          else {
-            val a = r.getArray(c)
-            def bits(i: Int): Long =
-              if (i < a.numElements()) java.lang.Float.floatToRawIntBits(a.getFloat(i)) else 0
-            b += a.numElements().toLong
-            var i = 0
-            if (kinds(c) == 1) while (i < a.numElements()) { b += a.getLong(i); i += 1 }
-            else while (i < a.numElements()) { b += bits(i + 1) << 32 | bits(i) & 0xffffffffL; i += 2 }
+    val (w, sub) = (kinds.length, PackChunk)
+    // each long[] travels as an AnyRef: the block manager writes the
+    // blocks of an RDD of primitive arrays with Kryo, whose first use in a
+    // JVM measured ~160 ms and ~0.7 MB of pooled heap; the default
+    // serializer is already in use
+    val scan = e.select(e.columns.take(w).map(col) ++ folds.map(_.c.cast("long")): _*)
+      .queryExecution.toRdd.mapPartitions[AnyRef] { it =>
+        val v = zeros.clone()
+        val b = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.flatMap { r =>
+          var i = 0
+          while (i < v.length) {
+            if (!r.isNullAt(w + i)) v(i) = fold(ops(i), v(i), r.getLong(w + i))
+            i += 1
           }
-          c += 1
-        }
+          val start = b.length
+          var c = 0
+          while (c < w) {
+            if (kinds(c) == 0) b += r.getLong(c)
+            else if (r.isNullAt(c)) b += 0L
+            else {
+              val a = r.getArray(c)
+              def bits(i: Int): Long =
+                if (i < a.numElements()) java.lang.Float.floatToRawIntBits(a.getFloat(i)) else 0
+              b += a.numElements().toLong
+              var j = 0
+              if (kinds(c) == 1) while (j < a.numElements()) { b += a.getLong(j); j += 1 }
+              else while (j < a.numElements()) { b += bits(j + 1) << 32 | bits(j) & 0xffffffffL; j += 2 }
+            }
+            c += 1
+          }
+          // past the bound: the chunk ends before this record
+          if (start == 0 || b.length <= sub) Iterator.empty
+          else {
+            val x = b.result()
+            b.clear()
+            b.addAll(x, start, x.length - start)
+            Iterator.single(java.util.Arrays.copyOf(x, start))
+          }
+        } ++ Iterator(b.result(), v).filter(_.length > 0)
       }
-      Iterator.single(b.result())
-    }.collect()
+    if (pack) scan.persist(StorageLevel.DISK_ONLY)
+    try use(scan, Row.fromSeq(scan.mapPartitions(it =>
+        Iterator.single(it.reduce((_, h) => h).asInstanceOf[Array[Long]]))
+      .fold(zeros)((a, h) => Array.tabulate(a.length)(i => fold(ops(i), a(i), h(i)))).toSeq))
+    finally if (pack) scan.unpersist(blocking = false)
   }
 
-  /** Packed records of `keys` longs and one array<float> ([[chunks]]) as
+  /** The header of `e` alone ([[scanned]]): `rows`, the count of rows
+    * with a null in any column, then `extra`, as longs. */
+  def header(e: DataFrame, rows: Fold = Fold.sum(lit(1L)), extra: Seq[Fold] = Nil): Row =
+    scanned(e, pack = false, rows, extra)((_, h) => h)
+
+  /** The guarded packed collect: one scan of `e` ([[scanned]]) packs its
+    * chunks and folds its header, and the chunks are collected only when
+    * `e` has no null, passes `admit`, and its `rows` fit `gate`,
+    * [[IntCap]] and the session's driver at `resultBytes` of task results
+    * and `heapBytes` of driver heap per row (a caller whose cost grows
+    * with an array's length counts its rows in elements). Returns the
+    * chunks with the header row. `e` stays as it is. */
+  def collect(e: DataFrame, gate: Long, resultBytes: Long, heapBytes: Long,
+      rows: Fold = Fold.sum(lit(1L)), extra: Seq[Fold] = Nil)(
+      admit: Row => Boolean = _ => true): Option[(Array[Array[Long]], Row)] =
+    scanned(e, pack = true, rows, extra) { (packed, p) =>
+      val cap = math.min(math.min(gate, IntCap), Budgets.driverRows(
+        e.sparkSession.sparkContext.getConf, resultBytes, heapBytes))
+      if (p.getLong(0) > cap || p.getLong(1) != 0L || !admit(p)) None
+      else Some((packed.glom().collect().flatMap(_.init.map(_.asInstanceOf[Array[Long]])), p))
+    }
+
+  /** Packed records of `keys` longs and one array<float> ([[collect]]) as
     * `keys` arrays of their longs and one float array per record, in
     * transfer order. Each chunk is released once read. */
   private[graft] def unpack(chunks: Array[Array[Long]], keys: Int)
@@ -315,33 +354,29 @@ private[graft] object PackedGraph {
   }
 
   /** The driver-CSR tier: the guarded collect ([[collect]]) of `e`
-    * — (src, dst[, weight]) as long columns, checkpointed here so the
-    * probe and the collect read one stable copy — when it has rows and
-    * fits `gate` and [[IntCap]], then [[buildCsr]] with `extra` in the
-    * dictionary. */
+    * — (src, dst[, weight]) as long columns — when it has rows, then
+    * [[buildCsr]] with `extra` in the dictionary. */
   def driverCsr(e: DataFrame, gate: Long, resultBytes: Long, heapBytes: Long,
       extra: Option[Long] = None, extraProbe: Seq[Fold] = Nil)(
-      admit: Row => Boolean = _ => true): Option[Csr] = {
-    val ck = e.localCheckpoint()
-    val got = collect(ck, math.min(gate, IntCap), resultBytes, heapBytes,
-      extra = extraProbe)(p => p.getLong(0) > 0L && admit(p))
-    Checkpoints.free(ck)
-    got.map { case (cs, p) => buildCsr(cs, ck.schema.length, p.getLong(0).toInt, extra) }
-  }
+      admit: Row => Boolean = _ => true): Option[Csr] =
+    collect(e, gate, resultBytes, heapBytes, extra = extraProbe)(
+        p => p.getLong(0) > 0L && admit(p))
+      .map { case (cs, p) => buildCsr(cs, e.schema.length, p.getLong(0).toInt, extra) }
 
   /** The broadcast tiers' edge image: the edges never reach the driver.
     * `e` — (src, dst[, weight]) as long columns — is persisted DISK_ONLY,
-    * not checkpointed: it is scanned three times (probe, node dictionary,
-    * dense build) and must be STABLE across scans for any source, but at
-    * 120M edges the checkpoint's in-memory blocks (~5 GB) starved the
-    * execution pool on an 8g session (UNABLE_TO_ACQUIRE_MEMORY in the
-    * dictionary distinct — the first r15graph attempt). Disk-backed
-    * blocks give the same stability with no storage-pool pressure, the
-    * posture that scales: at 100 TB you re-read cheap columnar bytes.
+    * not checkpointed: it is scanned three times (header, node
+    * dictionary, dense build) and must be STABLE across scans for any
+    * source, but at 120M edges the checkpoint's in-memory blocks (~5 GB)
+    * starved the execution pool on an 8g session
+    * (UNABLE_TO_ACQUIRE_MEMORY in the dictionary distinct — the first
+    * r15graph attempt). Disk-backed blocks give the same stability with no
+    * storage-pool pressure, the posture that scales: at 100 TB you re-read
+    * cheap columnar bytes.
     *
-    * The edges must have rows, no null and pass `admit` on the probe row
-    * (rows, nulls, `extraProbe`...). Their distinct endpoints come to the
-    * driver by the guarded collect under `gate`, [[IntCap]] and the
+    * The edges must have rows, no null and pass `admit` on the header row
+    * ([[header]]: rows, nulls, `extraProbe`...). Their distinct endpoints
+    * come to the driver by the guarded collect under `gate` and the
     * session (~24 B/node of task results; driver arrays + a per-round
     * broadcast ~64 B/node of heap), and become the dictionary with
     * `extra`. The edges are then dense-indexed ONCE on the executors
@@ -352,22 +387,20 @@ private[graft] object PackedGraph {
       extraProbe: Seq[Fold] = Nil)(admit: Row => Boolean = _ => true):
       Option[(Array[Long], Broadcast[Array[Long]], RDD[Array[Long]])] = {
     val e = edges.persist(StorageLevel.DISK_ONLY)
-    val p = probe(e, Fold.sum(lit(1L)), extraProbe)
-    val nodesDf =
-      if (p.getLong(0) == 0L || p.getLong(1) != 0L || !admit(p)) None
-      else Some(e.select(col(e.columns(0)).as("node"))
-        .union(e.select(col(e.columns(1)).as("node"))).distinct().localCheckpoint())
-    val got = nodesDf.flatMap(collect(_, math.min(gate, IntCap), 24L, 64L)())
-    nodesDf.foreach(Checkpoints.free)
-    val image = got.map { case (cs, _) =>
-      val nodes = dictionary(cs, 1, extra)
-      val bc = e.sparkSession.sparkContext.broadcast(nodes)
-      val packed = denseChunks(e, bc).persist(StorageLevel.MEMORY_AND_DISK)
-      packed.count() // materialized, so e's blocks can go now
-      (nodes, bc, packed)
-    }
-    e.unpersist(blocking = false)
-    image
+    try {
+      val p = header(e, extra = extraProbe)
+      val got =
+        if (p.getLong(0) == 0L || p.getLong(1) != 0L || !admit(p)) None
+        else collect(e.select(col(e.columns(0)).as("node"))
+          .union(e.select(col(e.columns(1)).as("node"))).distinct(), gate, 24L, 64L)()
+      got.map { case (cs, _) =>
+        val nodes = dictionary(cs, 1, extra)
+        val bc = e.sparkSession.sparkContext.broadcast(nodes)
+        val packed = denseChunks(e, bc).persist(StorageLevel.MEMORY_AND_DISK)
+        packed.count() // materialized, so e's blocks can go now
+        (nodes, bc, packed)
+      }
+    } finally e.unpersist(blocking = false)
   }
 
   /** `e`'s rows dense-indexed on the executors in [[SubChunk]]-record

@@ -358,11 +358,12 @@ object PageRank {
       .getOrElse(run(edges, iters, dampNum, dampDen, scale))
 
   /** Budget-fused [[personalized]] — same seam, seed-concentrated
-    * teleport/dangling. The seed set rides the same budget (it is at most
+    * teleport/dangling. The distinct seeds come to the driver through the
+    * guarded packed collect under the same budget (they are at most
     * node-sized in any sane call) and the session's driver (~16 B/seed of
-    * task results; boxed rows and the boxed seed set ~128 B/seed of
-    * heap); a seed frame past either falls back. Seeds absent from the
-    * graph still count toward |S| (exactly [[personalized]]'s semantics). */
+    * task results; ~128 B/seed of heap); a seed frame past either falls
+    * back. Seeds absent from the graph still count toward |S| (exactly
+    * [[personalized]]'s semantics). */
   def personalizedFused(edges: DataFrame, seeds: DataFrame, iters: Int,
       dampNum: Long = 85L, dampDen: Long = 100L,
       scale: Long = Scale): Option[DataFrame] = {
@@ -370,28 +371,18 @@ object PageRank {
     val maxEdges = graft.operators.Budgets.get.pageRankEdges
     if (!integral(seeds.schema("node").dataType)) return None
     collectGraph(edges, maxEdges).flatMap { case (g, nodeT) =>
-      val sDistinct = seeds.select(col("node").cast("long").as("node")).distinct()
-      val cap = math.min(maxEdges, graft.operators.Budgets.driverRows(
-        edges.sparkSession.sparkContext.getConf, 16L, 128L))
-      val nS = sDistinct.limit((math.min(cap, (Int.MaxValue - 2).toLong)
-        .toInt) + 1).count()
-      if (nS == 0L || nS > cap) None
-      else {
-        // |S| counts every distinct seed row, including a null (which can
-        // never match a graph node) — exactly personalized()'s s.count()
-        val seedRows = sDistinct.collect()
-        val seedSet = new java.util.HashSet[Long]()
-        seedRows.foreach(r => if (!r.isNullAt(0)) seedSet.add(r.getLong(0)))
-        val teleport = scale / seedRows.length
+      // |S| counts every distinct seed row, including a null (which can
+      // never match a graph node) — exactly personalized()'s s.count() —
+      // so a null travels as a (1, 0) record, a seed s as (0, s)
+      val seedRecs = seeds.select(col("node").cast("long").as("s")).distinct()
+        .select(col("s").isNull.cast("long").as("isNull"), coalesce(col("s"), lit(0L)).as("s"))
+      PackedGraph.collect(seedRecs, maxEdges, 16L, 128L)(_.getLong(0) > 0L).map { case (cs, p) =>
+        val seedIds = PackedGraph.dictionary(cs.flatMap(_.grouped(2).filter(_(0) == 0L).map(_(1))))
+        val (nS, teleport) = (p.getLong(0), scale / p.getLong(0))
         // dense teleport image: one lookup per node per sweep, 0 = non-seed
-        val tel = new Array[Long](g.n)
-        var i = 0
-        while (i < g.n) {
-          if (seedSet.contains(g.nodes(i))) tel(i) = teleport
-          i += 1
-        }
-        Some(sweepCsr(edges, g, nodeT, tel, seedRows.length.toLong, iters,
-          dampNum, dampDen))
+        val tel = Array.tabulate(g.n)(i =>
+          if (java.util.Arrays.binarySearch(seedIds, g.nodes(i)) >= 0) teleport else 0L)
+        sweepCsr(edges, g, nodeT, tel, nS, iters, dampNum, dampDen)
       }
     }
   }

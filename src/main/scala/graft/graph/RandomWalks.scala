@@ -135,9 +135,9 @@ object RandomWalks {
     // map-side (partial aggregation), so the join plan's distinct-then-rank
     // double exchange collapses to a single groupBy keyed by the apex —
     // and its key set IS the start set, so no second distinct either.
-    // Materialized once: the budget probe, the driver collect, and the
-    // start frame all read it, and `edges` is often an expensive join
-    // (q165's lineitem self-join) that must not run 3×.
+    // Materialized once: the guarded collect and the start frame both read
+    // it, and `edges` is often an expensive join (q165's lineitem
+    // self-join) that must not run twice.
     // Null endpoints are PROBED, not filtered (round-12 advice): the join
     // plan keeps them (a null dst sorts first in the rank window and counts
     // in outdeg; a null src node is a start), so a silently-filtered fused
@@ -151,7 +151,7 @@ object RandomWalks {
         max(when(col("v").isNull, 1L).otherwise(0L)).as("__nullv"))
       .localCheckpoint()
     // the guarded packed collect over the checkpointed blocks: a group
-    // with a null dst collects a null src, so the probe's one null count
+    // with a null dst collects a null src, so the header's one null count
     // refuses both kinds of null endpoint while the graph is distributed.
     // ~24 B/edge of task results at worst (one group per edge); the
     // boxed-key map of ranked arrays and its broadcast copy ~128 B/edge

@@ -76,7 +76,6 @@ object Triangles {
         greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .groupBy(col("u")).agg(collect_set(col("v")).as("nbrs"))
-      .localCheckpoint()
     // PACKED PRIMITIVE transfer of [u, len, v1..vlen] records (round 15 —
     // the r14 PageRank lesson; [[PackedGraph.collect]]): the old boxed
     // Dataset collect deserialized every row through Row + Seq[Long] on
@@ -88,7 +87,6 @@ object Triangles {
     // past ~Int.MaxValue/3 refuses instead of overflowing.
     val got = PackedGraph.collect(grouped, math.min(maxEdges, (Int.MaxValue / 3 - 4).toLong),
       24L, 96L, rows = PackedGraph.Fold.sum(size(col("nbrs"))))(_.getLong(0) > 0L)
-    graft.operators.Checkpoints.free(grouped)
     val (chunks, m) = got match {
       case Some((cs, p)) => (cs, p.getLong(0).toInt)
       case None => return None

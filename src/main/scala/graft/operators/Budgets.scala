@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * | `walkEdges` | 16M | ranked adjacency `RandomWalks.walksFused` broadcasts | "Round-12 second half" (`r12graph`), `walksAuto` |
   * | `componentEdges` | 16M | pair-graph edges `ConnectedComponents.runFused` collects | "Round-12 second half" (`r12cc`), `runAuto` |
   * | `triangleEdges` | 8M | canonical edges `Triangles.perNodeFused` collects; the closing-join broadcast of `perNodeComposed` | "Round-16 Triangles gate-scale measurement" (`r16tri`) |
-  * | `catalogFloats` | 64M | catalog floats the dense kernel publishes (`Retrieval.topKDot`/`publishCatalog`/`CatalogCache`, `Knn.bruteForceTopK`, `TwoTower.recommend`), and user-vector floats a streaming dense/ANN serve flattens on the driver (`RecsTable`); both collects are refused at their probe, before any row is collected | "Round-11 fused serving kernel" (the hand-off to IVF) |
-  * | `cellCatalogFloats` | 64M | index floats the fused IVF kernel publishes (`Retrieval.topKAnn`/`publishCellCatalog`/`CellCatalogCache`, `RecsTable.streamAnnRefresh`), refused at its probe | "Round-12 broadcast-catalog kernel + the serving ladder" (`r12ladder`) |
+  * | `catalogFloats` | 64M | catalog floats the dense kernel publishes (`Retrieval.topKDot`/`publishCatalog`/`CatalogCache`, `Knn.bruteForceTopK`, `TwoTower.recommend`), and user-vector floats a streaming dense/ANN serve flattens on the driver (`RecsTable`); both collects are refused on the header of their one packing pass, before any row is collected | "Round-11 fused serving kernel" (the hand-off to IVF) |
+  * | `cellCatalogFloats` | 64M | index floats the fused IVF kernel publishes (`Retrieval.topKAnn`/`publishCellCatalog`/`CellCatalogCache`, `RecsTable.streamAnnRefresh`), refused on its collect's header | "Round-12 broadcast-catalog kernel + the serving ladder" (`r12ladder`) |
   * | `knnMinQueries` | 1024 | query rows below which `Knn.bruteForceTopK` keeps the broadcast join | same bullet, "Query-count regime gate on the exact-KNN dispatch" |
   * | `seenBroadcastRows` | 32M | seen pairs `TwoTower.recommend`'s unfused plan broadcasts before it shuffles the anti-join | none measured: ~30 B/row ≈ 1 GB of executor broadcast |
   * | `cooccurModelRows` | 4M | neighbor-model rows `Cooccur.recommendFused` collects into its driver CSR and broadcasts | "Round-12 second half" (`r12serve`), fused co-occurrence serve |

@@ -244,7 +244,7 @@ object Cooccur {
     // (graft.graph.PackedGraph): each item_a's in-edge group is its
     // neighbor list, `inW` its counts, and `nodes` the dense id dictionary
     // of both columns, so the executor kernel scores by direct array
-    // indexing with zero hashing and zero boxing. The one probe refuses an
+    // indexing with zero hashing and zero boxing. Its one pass refuses an
     // empty model, a null anywhere and a model past the gate or what the
     // session's driver holds (~24 B/row of task results, ~192 B/row of
     // heap: the weighted-CSR sizing of ShortestPaths.runFused).
@@ -267,10 +267,10 @@ object Cooccur {
     val seenG = t.groupBy(col("u"))
       .agg(collect_set(col("i")).as("__seen"), count(lit(1)).as("__cnt"))
       .localCheckpoint()
-    val sProbe = seenG.agg(
-      coalesce(sum(when(size(col("__seen")) =!= col("__cnt"), 1L)
-        .otherwise(0L)), lit(0L)),
-      coalesce(sum(when(col("u").isNull, 1L).otherwise(0L)), lit(0L))).head()
+    // one pass, no exchange: rows whose set lost a null item, then rows
+    // with a null (only `u` can be)
+    val sProbe = graft.graph.PackedGraph.header(seenG, graft.graph.PackedGraph.Fold.sum(
+      (size(col("__seen")) =!= col("__cnt")).cast("long")))
     if (sProbe.getLong(0) != 0L || sProbe.getLong(1) != 0L) {
       graft.operators.Checkpoints.free(seenG)
       return refuse()

@@ -963,8 +963,9 @@ object TwoTower {
     val integralId = integral(iType)
     // FUSED serving path (round 11): integral-id catalogs of one vector
     // length inside the float budget and the driver are collected once
-    // (Retrieval's guarded vector collect: one probe pass decides before
-    // one packed transfer) and scored through sql.TopKDotF32 —
+    // (Retrieval's guarded vector collect: one pass packs the catalog and
+    // reads its header, which decides before the transfer) and scored
+    // through sql.TopKDotF32 —
     // candidates never materialize as rows, the seen-set anti-join becomes
     // a row-local membership test, and the plan's only exchange is the
     // small per-user history aggregation. Row-identical to the unfused

@@ -160,11 +160,12 @@ object RecsTable {
     *    (`Budgets.driverRows` at a user row's cost, which grows with the
     *    vector length) and the vectors fit `Budgets.catalogFloats`, with
     *    non-null integral ids (`Budgets.integral`), distinct users and one
-    *    vector length. The query's start probes the vectors, then
-    *    collects the history ∪ log pairs through the guarded packed
-    *    collect (its probe first), then the vectors, so a refusal at
-    *    either probe has collected nothing; it has read the history once
-    *    more than the distributed route alone would.
+    *    vector length. The query's start packs the vectors and reads
+    *    their header, then collects the history ∪ log pairs through the
+    *    guarded packed collect (its header first), then transfers the
+    *    vectors, so a refusal at either header has collected nothing; it
+    *    has read the history once more than the distributed route alone
+    *    would.
     *  - Distributed route (refused at start, or for good from the first
     *    refused batch on, the driver state dropped): the query persists
     *    one served-users frame ([[servedUsers]]: at start from the
@@ -280,7 +281,7 @@ object RecsTable {
     private val seen = new scala.collection.mutable.LongMap[Array[Long]]()
     private var pairs = 0L
     /** The (user, item) pairs the first vector collect takes in between
-      * its probe and its transfer: the query's start only ([[seed]]). */
+      * its header and its transfer: the query's start only ([[seed]]). */
     private var startPairs: Option[DataFrame] = None
     private val vectors = new graft.sim.Retrieval.GenerationCache[
       Option[graft.sql.TopKDotF32.FlatCatalog]](userVecs, (frame, _) => collectVectors(frame),
@@ -299,7 +300,7 @@ object RecsTable {
       * inside `Budgets.catalogFloats`), when the ids are integral and
       * distinct and the users leave room beside the seen pairs for a
       * batch row (users + pairs < the cap); at start the pairs are
-      * collected after the vectors' probe and before their transfer. */
+      * collected after the vectors' header and before their transfer. */
     private def collectVectors(frame: DataFrame): Option[graft.sql.TopKDotF32.FlatCatalog] =
       if (!Budgets.integral(frame.schema("user_id").dataType)) None
       else graft.sim.Retrieval.flatCatalog(frame, "user_id", "vec", cosine = false)(

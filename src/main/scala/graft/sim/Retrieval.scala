@@ -19,11 +19,11 @@ import graft.operators.Budgets
   * IVF / IVFADC index instead of a full scan.
   *
   * Plan shape (see sql.TopKDotF32): the catalog is collected once under a
-  * float budget through `PackedGraph.collect` (one probe pass reads its
-  * rows and vector lengths, then each partition's rows come over as
-  * one packed long[]), flattened driver-side, and BROADCAST — executors
-  * hold one copy in their block
-  * manager, tasks share it (round-12 advice; the old reference-object
+  * float budget through `PackedGraph.collect` (one pass packs the rows
+  * and reads their count and vector lengths; the packed chunks come over
+  * only once those are admitted), flattened driver-side, and BROADCAST —
+  * executors hold one copy in their block manager, tasks share it
+  * (round-12 advice; the old reference-object
   * form deserialized a copy per task). Each query row scores the whole
   * catalog inside a primitive-array loop (DotF32-identical arithmetic —
   * or the cosineF32 composition bit-exactly when `cosine` is set —
@@ -35,7 +35,7 @@ import graft.operators.Budgets
   * serialize the scoring loop on one core (SCALE.md, round 11).
   *
   * Null hygiene (round-12 advice): catalog rows with a null id (or an id
-  * that casts to null) or a null vector are FILTERED before the probe —
+  * that casts to null) or a null vector are FILTERED before the collect —
   * the same rows the unfused crossJoin plan silently drops — so the fused
   * path succeeds wherever the fallback path does.
   *
@@ -73,13 +73,12 @@ object Retrieval {
   /** `frame`'s rows whose `keys` (as longs) and vector `vec` (as
     * array<float>) are non-null, as one array per key and one float array
     * per row ([[PackedGraph.unpack]]), through the guarded packed collect
-    * (`PackedGraph.collect`): its probe pass reads the rows and the
-    * vectors' min and max length, and the rows are collected only when
-    * every vector has one length d > 0, rows × d fits `maxFloats` and an
-    * Int-indexed array, the rows fit the session at [[rowResultBytes]] /
-    * [[rowHeapBytes]] each, and `admit(rows, d)` holds. None, too, when
-    * the collect saw another row count than the probe (`frame` must read
-    * the same rows twice, as a model frame does). */
+    * (`PackedGraph.collect`): its one pass reads the rows and the
+    * vectors' min and max length as it packs them, and the rows are
+    * collected only when every vector has one length d > 0, rows × d fits
+    * `maxFloats` and an Int-indexed array, the rows fit the session at
+    * [[rowResultBytes]] / [[rowHeapBytes]] each, and `admit(rows, d)`
+    * holds. */
   private[graft] def vectorRows(frame: DataFrame, keys: Seq[Column], vec: Column,
       maxFloats: Long)(admit: (Long, Int) => Boolean)
       : Option[(Array[Array[Long]], Array[Array[Float]])] = {
@@ -94,8 +93,7 @@ object Retrieval {
       val (m, lo, d) = (p.getLong(2), p.getLong(3), p.getLong(4))
       m > 0L && d > 0L && lo == d && m <= math.min(maxFloats, Int.MaxValue - 8L) / d &&
         admit(m, d.toInt)
-    }.map { case (chunks, p) => (PackedGraph.unpack(chunks, keys.size), p.getLong(2)) }
-      .collect { case (got, m) if got._2.length == m => got }
+    }.map { case (chunks, _) => PackedGraph.unpack(chunks, keys.size) }
   }
 
   /** A collected vector row of d floats — in either catalog, or a
@@ -105,8 +103,8 @@ object Retrieval {
     * the packed transfer (keys, length, the floats two per long), then
     * the decoded rows beside a chunk or beside the flattening's boxed sort
     * index and catalog. Measured with `graft.serve.DriverBytes` at d = 16,
-    * 32 and 64: at most 88.5 / 152.8 / 281.4 B of task results and 197.5 /
-    * 328.4 / 582.2 B of heap at peak (SCALE.md, "Regime gates"). */
+    * 32 and 64: at most 88.5 / 152.8 / 281.4 B of task results and 197.1 /
+    * 328.5 / 580.9 B of heap at peak (SCALE.md, "Regime gates"). */
   private val RowFloats = 12L
   private val FloatResultBytes = 4L
   private val FloatHeapBytes = 8L

@@ -10,7 +10,7 @@ import graft.sql.{TopKDotF32, TopKDotIvfF32}
 
 /** Driver bytes per row of the guarded vector collects and of a streaming
   * serve's seen pairs, measured: serialized task results summed by a
-  * listener over `Retrieval.vectorRows` (probe and collect, the path both
+  * listener over `Retrieval.vectorRows` (header and collect, the path both
   * catalogs and a streaming serve's user vectors take), and used heap
   * after repeated `System.gc()` with each piece held: the packed chunks
   * (the same rows through the same `PackedGraph.collect`), then, the

@@ -146,21 +146,21 @@ object RecsTable {
     *    the driver ([[ServedState]]): each user's vector and each user's
     *    seen ids over history ∪ the rows already in `streamLogDir`. Per
     *    micro-batch, one bounded collect reads the batch's rows — the only
-    *    read of the source —, one task appends them to the log beside the
-    *    ranking, the driver folds them into the seen sets, and one job
-    *    ranks the active users with a vector (a `(user_id, vec, __seen)`
-    *    frame of their rows, spread over `defaultParallelism` partitions)
-    *    through `serve` and puts their lists. Per batch: 3 jobs, O(batch
-    *    + active × their seen ids) driver work, no log scan and no
-    *    exchange; the state holds ~(4·dim + 28) B per user and ~13 B per
-    *    distinct seen pair on the driver (measured at dim 16, 20 pairs per
-    *    user), nothing persisted on the executors. It is
-    *    admitted while users + seen pairs + the batch's rows fit
-    *    `Budgets.servedStateRows` and what the driver holds
-    *    (`Budgets.driverRows` at a user row's cost, which grows with the
-    *    vector length) and the vectors fit `Budgets.catalogFloats`, with
-    *    non-null integral ids (`Budgets.integral`), distinct users and one
-    *    vector length. The query's start packs the vectors and reads
+    *    read of the source —, the driver writes them to the log as one
+    *    parquet file beside the ranking ([[ServedState.writeLog]]), folds
+    *    them into the seen sets, and one job ranks the active users with
+    *    a vector (a `(user_id, vec, __seen)` frame of their rows, spread
+    *    over `defaultParallelism` partitions) through `serve` and puts
+    *    their lists. Per batch: 2 jobs, O(batch + active × their seen
+    *    ids) driver work, no log scan and no exchange; the state holds
+    *    ~(4·dim + 28) B per user and ~13 B per distinct seen pair on the
+    *    driver (measured at dim 16, 20 pairs per user), nothing persisted
+    *    on the executors. It is admitted while users + seen pairs + the
+    *    batch's rows fit `Budgets.servedStateRows` and what the driver
+    *    holds (`Budgets.driverRows` at a user row's cost, which grows with
+    *    the vector length) and the vectors fit `Budgets.catalogFloats`,
+    *    with non-null integral ids (`Budgets.integral`), distinct users
+    *    and one vector length. The query's start packs the vectors and reads
     *    their header, then collects the history ∪ log pairs through the
     *    guarded packed collect (its header first), then transfers the
     *    vectors, so a refusal at either header has collected nothing; it
@@ -174,14 +174,17 @@ object RecsTable {
     *    driver keeps those slices as the frame's lineage, ~16 B per seen
     *    pair), and per micro-batch [[batchLists]] groups the
     *    batch's rows with the whole log's — the log scan and one exchange
-    *    of O(log + batch) rows — and joins them in place to the frame.
-    *    Per batch: 3 jobs plus the scan of a log that grows with every
-    *    batch; executor memory: the frame (users × (dim + their history)),
-    *    and on the driver nothing past the switch's seed.
+    *    of O(log + batch) rows — and joins them in place to the frame,
+    *    and a Spark job appends the batch's rows to the log (they are
+    *    never on the driver). Per batch: 3 jobs plus the scan of a log
+    *    that grows with every batch; executor memory: the frame (users ×
+    *    (dim + their history)), and on the driver nothing past the
+    *    switch's seed.
     *
     * On both routes the batch is APPENDED to `streamLogDir` (parquet, read
     * back with the batch's own schema — no per-batch schema-inference
-    * job) beside the ranking, and the batch ends once both have: an item
+    * job; a file is listed only once it is whole) beside the ranking, and
+    * the batch ends once both have, failing if the append fails: an item
     * seen in batch 1 stays excluded when the same user reappears in batch
     * 5, and a later query (or the distributed route) reads it. A retried
     * micro-batch appends duplicate rows, which is harmless: the seen sets
@@ -231,8 +234,7 @@ object RecsTable {
           val b = batch.select(col("user_id"), col("item_id"))
           state.flatMap(st => st.collect(b).map(st -> _)) match {
             case Some((st, (vectors, pairs))) =>
-              beside(ServedState.logRows(batch.sparkSession, pairs, b.schema)
-                  .write.mode("append").parquet(streamLogDir)) {
+              beside(ServedState.writeLog(batch.sparkSession, streamLogDir, b.schema, pairs)) {
                 kvSink(serve(st.fold(vectors, pairs)).filter(size(col("recs")) > 0), put)
               }
             case None =>
@@ -389,16 +391,54 @@ object RecsTable {
   private[serve] object ServedState {
     private def rows(n: Long): Int = math.min(n, (Int.MaxValue - 1).toLong).toInt
 
-    /** Interleaved (user, item) longs as rows of `schema`'s two integral
-      * columns, in ONE partition: the log append is one task and one
-      * file. */
-    def logRows(spark: org.apache.spark.sql.SparkSession, packed: Array[Long],
-        schema: org.apache.spark.sql.types.StructType): DataFrame = {
-      import spark.implicits._
-      spark.createDataset(spark.sparkContext.parallelize(Seq(packed), 1).flatMap(p =>
-          Iterator.range(0, p.length, 2).map(i => (p(i), p(i + 1)))))
-        .select(schema.fields.zipWithIndex.map { case (f, i) =>
-          col(s"_${i + 1}").cast(f.dataType).as(f.name) }: _*)
+    /** Writes interleaved (user, item) longs into `dir` as ONE parquet file
+      * of `schema`'s two integral columns, from the driver: the file Spark's
+      * writer would make (the session's schema conversion, so each column's
+      * physical type and repetition follow its field, and the session's
+      * compression codec), written under a hidden `.`-prefixed name, which
+      * a listing skips, then renamed to a unique `part-` name, so a reader
+      * sees it only whole. A failed write deletes its file and throws. */
+    def writeLog(spark: org.apache.spark.sql.SparkSession, dir: String,
+        schema: org.apache.spark.sql.types.StructType, packed: Array[Long]): Unit = {
+      import org.apache.hadoop.fs.Path
+      import org.apache.parquet.hadoop.metadata.CompressionCodecName
+      import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport,
+        SparkToParquetSchemaConverter}
+      val sqlConf = spark.sessionState.conf
+      val conf = spark.sessionState.newHadoopConf()
+      val codec = CompressionCodecName.valueOf(
+        new ParquetOptions(Map.empty[String, String], sqlConf).compressionCodecClassName)
+      val fileSchema = new SparkToParquetSchemaConverter(sqlConf).convert(schema)
+      // INT64, or INT32 for the narrower integral types
+      val int64 = schema.fields.map(_.dataType == org.apache.spark.sql.types.LongType)
+      val name = s"part-00000-${java.util.UUID.randomUUID()}-c000${codec.getExtension}.parquet"
+      val tmp = new Path(dir, s".$name.tmp")
+      val fs = tmp.getFileSystem(conf)
+      try {
+        val out = org.apache.parquet.hadoop.example.ExampleParquetWriter
+          .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
+          .withType(fileSchema)
+          .withExtraMetaData(java.util.Map.of(ParquetReadSupport.SPARK_METADATA_KEY, schema.json,
+            "org.apache.spark.version", org.apache.spark.SPARK_VERSION_SHORT))
+          .withConf(conf).withCompressionCodec(codec).build()
+        try {
+          val rows = new org.apache.parquet.example.data.simple.SimpleGroupFactory(fileSchema)
+          var i = 0
+          while (i < packed.length) {
+            val row = rows.newGroup()
+            for (c <- 0 until 2)
+              if (int64(c)) row.add(c, packed(i + c)) else row.add(c, packed(i + c).toInt)
+            out.write(row)
+            i += 2
+          }
+        } finally out.close()
+        if (!fs.rename(tmp, new Path(dir, name)))
+          throw new java.io.IOException(s"could not rename $tmp into $dir")
+      } catch {
+        case e: Throwable =>
+          try fs.delete(tmp, false) catch { case d: Throwable => e.addSuppressed(d) }
+          throw e
+      }
     }
 
     /** The driver route's state when the query may start on it. The user
@@ -536,11 +576,11 @@ object RecsTable {
     * |active| × catalog fused dots per batch, with zero candidate
     * materialization and no regrouping (query shape, routes and
     * lifecycle: [[streamSeenServe]]).
-    *  - Driver route: a batch costs one bounded collect of its rows, a
-    *    one-task log append beside one ranking-and-put job over the
-    *    active users' rows, and O(batch + active × their seen ids)
-    *    driver work — no log scan, no exchange, whatever the log's
-    *    length. Memory: ~(4·dim + 28) B per user and ~13 B per distinct
+    *  - Driver route: a batch costs 2 jobs — one bounded collect of its
+    *    rows, then one ranking-and-put job over the active users' rows
+    *    beside a log file the driver writes — and O(batch + active ×
+    *    their seen ids) driver work: no log scan, no exchange, whatever
+    *    the log's length. Memory: ~(4·dim + 28) B per user and ~13 B per distinct
     *    seen pair on the driver, held for the query's life.
     *  - Distributed route: a batch costs the log scan, one in-memory scan
     *    of the query's cached served-users frame and one exchange of the
@@ -592,9 +632,9 @@ object RecsTable {
     * per-batch scoring is O(active × nprobe/nlist × catalog) candidate
     * rows, never the full catalog per user. The seen ids and the user
     * vectors follow [[streamSeenServe]]'s two routes at the costs
-    * [[streamDenseRefresh]] states: on the driver route a batch is one
-    * bounded collect, a one-task append and one ranking-and-put job (the
-    * cid-join plan adds its own exchanges), with ~(4·dim + 28) B per user
+    * [[streamDenseRefresh]] states: on the driver route a batch is 2 jobs,
+    * one bounded collect and one ranking-and-put job, beside a
+    * driver-written log file (the cid-join plan adds its own exchanges), with ~(4·dim + 28) B per user
     * and ~13 B per seen pair held on the driver; on the distributed route a
     * batch scans and exchanges the log, and the served-users frame sits
     * in executor storage. For an INNER-PRODUCT catalog

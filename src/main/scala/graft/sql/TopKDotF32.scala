@@ -215,7 +215,7 @@ object TopKDotF32 {
     require(ids.nonEmpty, "empty catalog")
     val n = ids.length
     val dim = vecs(0).length
-    val order = ids.indices.sortBy(ids(_)).toArray
+    val order = idOrder(ids)
     val sorted = new Array[Long](n)
     val flat = new Array[Float](n * dim)
     val norms = if (cosine) new Array[Double](n) else null
@@ -235,6 +235,14 @@ object TopKDotF32 {
       i += 1
     }
     new FlatCatalog(sorted, flat, norms, dim)
+  }
+
+  /** The permutation that visits `ids` ascending; equal ids keep their
+    * order (a merge sort over a primitive `Int` array). */
+  private[graft] def idOrder(ids: Array[Long]): Array[Int] = {
+    val order = Array.range(0, ids.length)
+    scala.util.Sorting.stableSort(order, (a: Int, b: Int) => ids(a) < ids(b))
+    order
   }
 
   /** Column builder over a published (broadcast) catalog — the form every

@@ -185,6 +185,15 @@ object TopKDotIvfF32 {
       val flat: Array[Float], val centFlat: Array[Float],
       val centNorm2: Array[Double], val dim: Int) extends Serializable
 
+  /** The rows whose cell is in [0, nlist), sorted (cell, id); equal keys
+    * keep their order (a merge sort over a primitive `Int` array). */
+  private[graft] def cellOrder(ids: Array[Long], cells: Array[Long], nlist: Int): Array[Int] = {
+    val order = Array.range(0, ids.length).filter(r => cells(r) >= 0 && cells(r) < nlist)
+    scala.util.Sorting.stableSort(order, (a: Int, b: Int) =>
+      cells(a) < cells(b) || (cells(a) == cells(b) && ids(a) < ids(b)))
+    order
+  }
+
   /** Group rows — parallel `ids`, cell ids and vectors — into the cell
     * layout. Rows are sorted (cid, id) so within-cell visit order is
     * id-ascending (ties admit the smaller id first; the heap comparator
@@ -196,8 +205,7 @@ object TopKDotIvfF32 {
     require(centroids.nonEmpty, "empty quantizer")
     val nlist = centroids.length
     val dim = centroids(0).length
-    val valid = ids.indices.filter(r => cells(r) >= 0 && cells(r) < nlist)
-      .sortBy(r => (cells(r), ids(r)))
+    val valid = cellOrder(ids, cells, nlist)
     val n = valid.length
     require(n > 0, "no catalog row carries a probe-able cell id")
     val offsets = new Array[Int](nlist + 1)

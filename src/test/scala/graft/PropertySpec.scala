@@ -328,4 +328,15 @@ class PropertySpec extends SparkSpecBase {
         got == prReference(es, iters)
     }, cases = 8)
   }
+
+  test("the vector kernels' primitive sorts keep ties in order, as the boxed stable sorts") {
+    val row = for { id <- Gen.choose(-3L, 3L); cell <- Gen.choose(-1L, 3L) } yield (id, cell)
+    check(Prop.forAll(Gen.listOf(row)) { rows =>
+      val ids = rows.map(_._1).toArray
+      val cells = rows.map(_._2).toArray
+      graft.sql.TopKDotF32.idOrder(ids).toSeq == ids.indices.sortBy(ids(_)) &&
+        graft.sql.TopKDotIvfF32.cellOrder(ids, cells, 3).toSeq ==
+          ids.indices.filter(r => cells(r) >= 0 && cells(r) < 3).sortBy(r => (cells(r), ids(r)))
+    }, cases = 300)
+  }
 }

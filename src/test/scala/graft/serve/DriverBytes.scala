@@ -78,11 +78,11 @@ object DriverBytes {
     val kinds = Seq[(String, Int, (Array[Array[Long]], Array[Array[Float]]) => AnyRef,
         (Array[Array[Long]]) => AnyRef)](
       ("dense catalog", 1, (k, v) => TopKDotF32.flatten(k(0), v, cosine = true),
-        k => k(0).indices.sortBy(k(0)(_))),
+        k => TopKDotF32.idOrder(k(0))),
       ("user vectors", 1, (k, v) => TopKDotF32.flatten(k(0), v, cosine = false),
-        k => k(0).indices.sortBy(k(0)(_))),
+        k => TopKDotF32.idOrder(k(0))),
       ("cell catalog", 2, (k, v) => TopKDotIvfF32.group(k(0), k(1), v, centroids),
-        k => k(0).indices.filter(r => k(1)(r) >= 0).sortBy(r => (k(1)(r), k(0)(r)))))
+        k => TopKDotIvfF32.cellOrder(k(0), k(1), centroids.length)))
     kinds.foreach { case (name, keys, build, sortIndex) =>
       val keyCols = Seq(col("id"), col("cid").cast("int")).take(keys)
       def decode() = Retrieval.vectorRows(vecs, keyCols, col("vec"), Long.MaxValue)((_, _) => true)

@@ -552,6 +552,150 @@ class RecsTableSpec extends SparkSpecBase {
     lifecycle(q => q, frames = 0)
   }
 
+  /** The driver route's log fixture: items 1..6 one-hot, user 1 prefers
+    * 1>2>…>6 and user 2 the reverse; user 1 has seen item 1. */
+  private object LogFixture {
+    val itemVecs = (1 to 6).map(i => (i.toLong, Seq.tabulate(6)(d => if (d == i - 1) 1f else 0f)))
+      .toDF("item_id", "vec")
+    val userVecs = Seq(
+      (1L, Seq(0.9f, 0.8f, 0.7f, 0.6f, 0.5f, 0.4f)),
+      (2L, Seq(0.4f, 0.5f, 0.6f, 0.7f, 0.8f, 0.9f))).toDF("user_id", "vec")
+    val history = Seq((1L, 1L)).toDF("user_id", "item_id")
+    /** Two batches, one with a repeated pair: the log is a multiset. */
+    val batches = Seq(Seq((1L, 4L), (2L, 5L), (1L, 4L)), Seq((2L, 3L), (1L, 2L)))
+    def serve(stream: DataFrame, logDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+      RecsTable.streamDenseRefresh(stream, history, userVecs, itemVecs, 2, InMemoryKv.putBatch,
+        logDir)
+    def listing(dir: String): Seq[String] =
+      Option(new java.io.File(dir).list()).fold(Seq.empty[String])(_.toSeq.sorted)
+    /** (parquet schema, codecs, Spark's row metadata) of `dir`'s part files. */
+    def footers(dir: String): Seq[(org.apache.parquet.schema.MessageType, Set[String], String)] =
+      listing(dir).filter(_.startsWith("part-")).map { n =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(s"$dir/$n"), spark.sparkContext.hadoopConfiguration))
+        try {
+          val meta = r.getFooter
+          (meta.getFileMetaData.getSchema,
+            meta.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet,
+            meta.getFileMetaData.getKeyValueMetaData.get(
+              "org.apache.spark.sql.parquet.row.metadata"))
+        } finally r.close()
+      }
+  }
+
+  /** Driver-route batches over ids of `T`'s column types leave a log that
+    * reads back as exactly their rows, in files shaped as Spark's writer
+    * shapes them under `codec`, with no temp file listed after any batch;
+    * a second query over the log treats its items as seen. */
+  private def driverLogReadBack[T <: Product : org.apache.spark.sql.Encoder](
+      name: String, codec: String)(mk: (Long, Long) => T): Unit = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import LogFixture._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_driverlog").toString
+    val logDir = s"$dir/log"
+    val was = spark.conf.getOption("spark.sql.parquet.compression.codec")
+    spark.conf.set("spark.sql.parquet.compression.codec", codec)
+    try {
+      val in = MemoryStream[T]
+      val stream = in.toDF().toDF("user_id", "item_id")
+      val schema = stream.schema
+      val q = serve(stream, logDir)
+      try {
+        for ((events, n) <- batches.zipWithIndex) {
+          in.addData(events.map(mk.tupled))
+          q.processAllAvailable()
+          val names = listing(logDir)
+          assert(names.count(_.startsWith("part-")) == n + 1 && names.forall(f =>
+            f.matches("part-.*\\.parquet") || f.matches("\\.part-.*\\.parquet\\.crc")),
+            s"$name batch $n: $names")
+        }
+      } finally q.stop()
+      def ids(rows: Array[Row]) = rows.toSeq.map(r =>
+        (r.get(0).asInstanceOf[Number].longValue, r.get(1).asInstanceOf[Number].longValue)).sorted
+      val back = spark.read.schema(schema).parquet(logDir)
+      assert(back.schema.map(_.dataType) == schema.map(_.dataType), s"$name: ${back.schema}")
+      assert(ids(back.collect()) == batches.flatten.sorted, s"$name: the log's rows")
+      // the same rows through Spark's writer: the same parquet schema
+      // (physical types, annotations, repetition), codec and row metadata
+      batches.flatten.map(mk.tupled).toDF("user_id", "item_id").write.parquet(s"$dir/spark")
+      val expected = footers(s"$dir/spark").head
+      val got = footers(logDir)
+      assert(got.size == 2 && got.forall(_ == expected), s"$name: $got vs Spark's $expected")
+      assert(expected._2 == Set(codec.toUpperCase), s"$name: ${expected._2}")
+      assert(spark.read.parquet(logDir).schema.map(_.dataType) == schema.map(_.dataType),
+        s"$name: the inferred schema")
+    } finally was.fold(spark.conf.unset("spark.sql.parquet.compression.codec"))(
+      spark.conf.set("spark.sql.parquet.compression.codec", _))
+    // a later query reads the log when it starts: user 1 has seen
+    // {1, 2, 4} and now 3, user 2 {3, 5} and now 6
+    InMemoryKv.store.clear()
+    val in2 = MemoryStream[T]
+    val q2 = serve(in2.toDF().toDF("user_id", "item_id"), logDir)
+    try {
+      in2.addData(mk(1L, 3L), mk(2L, 6L))
+      q2.processAllAvailable()
+      assert(InMemoryKv.store.asScala == Map("1" -> "[\"5\",\"6\"]", "2" -> "[\"4\",\"2\"]"),
+        s"$name: ${InMemoryKv.store}")
+    } finally q2.stop()
+  }
+
+  test("the driver route writes its log as Spark's writer would, for every integral id type") {
+    driverLogReadBack[(Byte, Byte)]("byte", "snappy")((u, i) => (u.toByte, i.toByte))
+    driverLogReadBack[(Option[Byte], Option[Byte])]("nullable byte", "gzip")((u, i) =>
+      (Some(u.toByte), Some(i.toByte)))
+    driverLogReadBack[(Short, Short)]("short", "zstd")((u, i) => (u.toShort, i.toShort))
+    driverLogReadBack[(Option[Short], Option[Short])]("nullable short", "snappy")((u, i) =>
+      (Some(u.toShort), Some(i.toShort)))
+    driverLogReadBack[(Int, Int)]("int", "uncompressed")((u, i) => (u.toInt, i.toInt))
+    driverLogReadBack[(Option[Int], Option[Int])]("nullable int", "snappy")((u, i) =>
+      (Some(u.toInt), Some(i.toInt)))
+    driverLogReadBack[(Long, Long)]("long", "snappy")((u, i) => (u, i))
+    driverLogReadBack[(Option[Long], Option[Long])]("nullable long", "zstd")((u, i) =>
+      (Some(u), Some(i)))
+  }
+
+  test("a failed driver log write fails the batch, releases the state, shows no file") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    import LogFixture._
+    implicit val sqlCtx = spark.sqlContext
+    def releases = spark.streams.listListeners()
+      .count(_.isInstanceOf[RecsTable.ReleaseOnTermination])
+    eventually(timeout(Span(30, Seconds))) { assert(releases == 0) }
+    // a write that fails once its file is open (an odd number of longs)
+    // deletes the file: the directory lists what it did before
+    val dir = java.nio.file.Files.createTempDirectory("graft_logfail").toString
+    val schema = Seq((1L, 1L)).toDF("user_id", "item_id").schema
+    RecsTable.ServedState.writeLog(spark, dir, schema, Array(1L, 2L))
+    val before = listing(dir)
+    intercept[ArrayIndexOutOfBoundsException](
+      RecsTable.ServedState.writeLog(spark, dir, schema, Array(1L, 2L, 3L)))
+    assert(listing(dir) == before, s"a failed write left ${listing(dir)}")
+    // the log directory replaced by a plain file after the query started
+    val in = MemoryStream[(Long, Long)]
+    val logDir = s"$dir/log"
+    val q = serve(in.toDF().toDF("user_id", "item_id"), logDir)
+    try {
+      assert(releases == 1)
+      in.addData((1L, 4L)); q.processAllAvailable()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(logDir))
+      java.nio.file.Files.write(java.nio.file.Paths.get(logDir), Array[Byte](1))
+      in.addData((2L, 5L))
+      val e = intercept[StreamingQueryException](q.processAllAvailable())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.io.IOException]), s"not the write's I/O error: $e")
+    } finally q.stop()
+    assert(listing(dir).filterNot(before.contains) == Seq("log") &&
+      new java.io.File(logDir).isFile, s"a file became visible: ${listing(dir)}")
+    eventually(timeout(Span(30, Seconds))) {
+      assert(releases == 0, "released after the failed batch")
+    }
+  }
+
   /** A user-vector hot-swap takes effect on the next batch and keeps the
     * seen ids; on the distributed route it rebuilds the served-users frame
     * and frees the old one, on the driver route nothing is persisted. */

@@ -8,16 +8,17 @@ jobs carry, and printed with its start offset from the application start,
 its wall, its job count and its tasks run.
 
 With `--batches`, the groups that are streaming micro-batches (a root
-execution holding two or more child executions: `foreachBatch` runs the log
-write and the query, and on the driver route first the batch's collect) are
-printed one line each, then the medians over the batches after the first
-`--skip`. The write is the child whose plan inserts into files (else the
-first child); the query is the last other child to start (the ranking and
-its puts):
+execution holding two or more child executions) are printed one line each,
+then the medians over the batches after the first `--skip`. On the
+distributed route `foreachBatch` runs a Spark log append and the query; on
+the driver route it runs the batch's collect and the query, and the driver
+writes the log file itself, outside any execution. The write is the child
+whose plan inserts into files, if one does; the query is the last other
+child to start (the ranking and its puts):
 
-  write_s  wall of the write
+  write_s  wall of the write (`-` when no child writes files)
   gap_s    from the end of the write to the start of the query (negative
-           when the two overlap)
+           when the two overlap; `-` when no child writes files)
   query_s  wall of the query execution
   pre_s    from the query's start to its first job's submission
   busy_s   time in the query with at least one job running
@@ -220,11 +221,11 @@ def batch_rows(execs, jobs, progress=()):
                           key=lambda x: execs[x]["start"])
         if isinstance(key, tuple) or len(children) < 2:
             continue
-        # the append is the child that writes files (else the first); the
+        # the append is the child that writes files, if one does; the
         # query, the last other child to start
-        wid = next((x for x in children if execs[x]["write"]), children[0])
+        wid = next((x for x in children if execs[x]["write"]), None)
         qid = [x for x in children if x != wid][-1]
-        write, query = execs[wid], execs[qid]
+        write, query = execs.get(wid), execs[qid]
         qjobs = [jobs[j] for j in js if jobs[j]["exec"] == qid]
         n_waves, busy = waves([(j["submit"], j["end"]) for j in qjobs])
         first = min((j["submit"] for j in qjobs), default=query["end"])
@@ -234,8 +235,8 @@ def batch_rows(execs, jobs, progress=()):
         batch_jobs = [jobs[j] for j in js if jobs[j]["exec"] != wid]
         rows.append(dict(
             root=key,
-            write_s=(write["end"] - write["start"]) / 1000.0,
-            gap_s=(query["start"] - write["end"]) / 1000.0,
+            write_s=(write["end"] - write["start"]) / 1000.0 if write else None,
+            gap_s=(query["start"] - write["end"]) / 1000.0 if write else None,
             query_s=(query["end"] - query["start"]) / 1000.0,
             pre_s=(first - query["start"]) / 1000.0,
             busy_s=busy / 1000.0,

@@ -74,9 +74,9 @@ def progress(batch, t0, trigger, wal, add, commit, rows):
 
 
 def driver_batch(root, t0, first_job_id, first_stage_id):
-    """A driver-route micro-batch: root execution, the batch's collect
-    (one job), then the log append and the ranking-and-put query side by
-    side; the append's execution starts after the query's, and its job
+    """A micro-batch with a Spark log append: root execution, the batch's
+    collect (one job), then the append and the ranking-and-put query side
+    by side; the append's execution starts after the query's, and its job
     ends last."""
     ev = [exec_start(root, root, t0), exec_start(root + 1, root, t0 + 10)]
     ev += job(first_job_id, root, root + 1, t0 + 20, t0 + 40, [(first_stage_id, 1)])
@@ -85,6 +85,18 @@ def driver_batch(root, t0, first_job_id, first_stage_id):
     ev += job(first_job_id + 1, root, root + 3, t0 + 90, t0 + 150, [(first_stage_id + 1, 4)])
     ev += job(first_job_id + 2, root, root + 2, t0 + 95, t0 + 180, [(first_stage_id + 2, 1)])
     ev += [exec_end(root + 3, t0 + 155), exec_end(root + 2, t0 + 190), exec_end(root, t0 + 200)]
+    return ev
+
+
+def collect_batch(root, t0, first_job_id, first_stage_id):
+    """A driver-route micro-batch whose log file the driver writes: root
+    execution, the batch's collect (one job), then the ranking-and-put
+    query; no execution writes files."""
+    ev = [exec_start(root, root, t0), exec_start(root + 1, root, t0 + 10)]
+    ev += job(first_job_id, root, root + 1, t0 + 20, t0 + 40, [(first_stage_id, 1)])
+    ev += [exec_end(root + 1, t0 + 45), exec_start(root + 2, root, t0 + 60)]
+    ev += job(first_job_id + 1, root, root + 2, t0 + 90, t0 + 150, [(first_stage_id + 1, 4)])
+    ev += [exec_end(root + 2, t0 + 155), exec_end(root, t0 + 190)]
     return ev
 
 
@@ -152,9 +164,12 @@ class EventLogJobs(unittest.TestCase):
         cls.dir.cleanup()
 
     def run_tool(self, *args):
+        return self.run_tool_on(self.logdir, *args)
+
+    def run_tool_on(self, path, *args):
         out = io.StringIO()
         with contextlib.redirect_stdout(out):
-            code = ej.main([self.logdir, *args])
+            code = ej.main([path, *args])
         return code, out.getvalue().splitlines()
 
     def test_groups_by_root_execution_with_name_and_tag(self):
@@ -269,6 +284,32 @@ class EventLogJobs(unittest.TestCase):
         self.assertAlmostEqual(r["put_s"], 0.2)
         self.assertAlmostEqual(rows[1]["put_s"], 0.2)
         self.assertAlmostEqual(rows[1]["add_s"], 0.21)
+
+    def test_collect_and_query_batch_has_no_write(self):
+        ev = [{"Event": "SparkListenerApplicationStart", "App Name": "t", "Timestamp": 0}]
+        ev += [progress(0, 950, 250, 40, 180, 30, 1000)] + collect_batch(1, 1000, 0, 0)
+        ev += [progress(1, 1950, 240, 35, 170, 35, 1000)] + collect_batch(4, 2000, 2, 2)
+        path = os.path.join(self.dir.name, "collect.log")
+        with open(path, "w") as f:
+            f.write("\n".join(json.dumps(e) for e in ev) + "\n")
+        progress_events = []
+        _, execs, jobs = ej.load(path, progress_events)
+        rows = ej.batch_rows(execs, jobs, progress_events)
+        self.assertEqual([r["root"] for r in rows], [1, 4])
+        r = rows[0]
+        # the collect is not taken for the write: there is none
+        self.assertIsNone(r["write_s"])
+        self.assertIsNone(r["gap_s"])
+        self.assertAlmostEqual(r["query_s"], 0.095)
+        self.assertAlmostEqual(r["pre_s"], 0.03)
+        self.assertEqual((r["jobs"], r["waves"], r["tasks"], r["scans"]), (2, 1, 4, 0))
+        # trigger start 950 -> the put job ends at 1150
+        self.assertAlmostEqual(r["put_s"], 0.2)
+        code, lines = self.run_tool_on(path, "--batches")
+        self.assertEqual(code, 0)
+        self.assertEqual(lines[1].split()[2:5], ["-", "-", "0.095"])
+        self.assertIn("write_s=- gap_s=- query_s=0.095", lines[-3])
+        self.assertIn("jobs=2 ", lines[-3])
 
     def test_overlapping_jobs_are_one_wave(self):
         self.assertEqual(ej.waves([(0, 10), (5, 20), (30, 40)]), (2, 30))

@@ -103,13 +103,15 @@ object RandomWalks {
     *
     * Scale shape: ONE shuffle total (the collect_set groupBy — map-side
     * deduped, vs the join plan's distinct + rank-window double exchange),
-    * one distributed budget aggregate BEFORE anything lands on the driver,
-    * one grouped collect of (node, ranked neighbors), one broadcast; walks
-    * are embarrassingly parallel over an explicit row-count repartition (walk
-    * rows are ~16 bytes but `length` md5s of WORK — AQE's size-based
-    * coalescing would serialize them onto one core, the SCALE.md round-11
-    * trap). mapPartitions, not a codegen Expression: the per-step cost is
-    * the md5 itself (a library call), so codegen buys nothing here.
+    * one guarded collect of (node, ranked neighbors) whose header is
+    * judged BEFORE anything lands on the driver, one broadcast; walks are
+    * embarrassingly parallel over `defaultParallelism` slices of the start
+    * nodes, which are the collected keys, emitted from the driver
+    * (`PackedGraph.sliced`: no second read of the adjacency, and no
+    * size-based AQE coalescing — walk rows are ~16 bytes but `length` md5s
+    * of WORK, which coalescing would serialize onto one core, the SCALE.md
+    * round-11 trap). A JVM loop, not a codegen Expression: the per-step
+    * cost is the md5 itself (a library call), so codegen buys nothing here.
     *
     * Returns None — callers fall back to [[walks]] — when the edge count
     * exceeds `Budgets.walkEdges`, or when the id columns
@@ -135,9 +137,9 @@ object RandomWalks {
     // map-side (partial aggregation), so the join plan's distinct-then-rank
     // double exchange collapses to a single groupBy keyed by the apex —
     // and its key set IS the start set, so no second distinct either.
-    // Materialized once: the guarded collect and the start frame both read
-    // it, and `edges` is often an expensive join (q165's lineitem
-    // self-join) that must not run twice.
+    // The guarded collect reads it once (`edges` is often an expensive
+    // join, q165's lineitem self-join, that must not run twice), and the
+    // starts are emitted from the collected keys.
     // Null endpoints are PROBED, not filtered (round-12 advice): the join
     // plan keeps them (a null dst sorts first in the rank window and counts
     // in outdeg; a null src node is a start), so a silently-filtered fused
@@ -149,59 +151,53 @@ object RandomWalks {
       .groupBy(col("u"))
       .agg(sort_array(collect_set(col("v"))).as("nbrs"),
         max(when(col("v").isNull, 1L).otherwise(0L)).as("__nullv"))
-      .localCheckpoint()
-    // the guarded packed collect over the checkpointed blocks: a group
-    // with a null dst collects a null src, so the header's one null count
-    // refuses both kinds of null endpoint while the graph is distributed.
-    // ~24 B/edge of task results at worst (one group per edge); the
-    // boxed-key map of ranked arrays and its broadcast copy ~128 B/edge
-    // of driver heap
-    val got = PackedGraph.collect(
+    // the guarded packed collect: a group with a null dst collects a null
+    // src, so the header's one null count refuses both kinds of null
+    // endpoint while the graph is distributed. ~24 B/edge of task results
+    // at worst (one group per edge); the boxed-key map of ranked arrays
+    // and its broadcast copy ~128 B/edge of driver heap
+    val chunks = PackedGraph.collect(
       grouped.select(when(col("__nullv") === 0L, col("u")).as("u"), col("nbrs")),
       maxEdges, 24L, 128L, rows = PackedGraph.Fold.sum(size(col("nbrs"))))(
-      _.getLong(0) > 0L)
-    val chunks = got match {
+      _.getLong(0) > 0L) match {
       case Some((cs, _)) => cs
-      case None =>
-        graft.operators.Checkpoints.free(grouped)
-        return None
+      case None => return None
     }
     val adj = new java.util.HashMap[Long, Array[Long]]()
+    val starts = new scala.collection.mutable.ArrayBuilder.ofLong
     chunks.foreach { c =>
       var i = 0
       while (i < c.length) {
         val len = c(i + 1).toInt
         adj.put(c(i), java.util.Arrays.copyOfRange(c, i + 2, i + 2 + len))
+        starts += c(i)
         i += 2 + len
       }
     }
     val bc = spark.sparkContext.broadcast(adj)
-    val slices = spark.sparkContext.defaultParallelism
-    val starts = grouped.select(col("u"))
-      .select(col("u"), explode(sequence(lit(0), lit(numWalks - 1))).as("w"))
-      .select((col("u") * numWalks + col("w")).as("walk_id"), col("u").as("cur"))
-      .repartition(slices)
-      .as[(Long, Long)]
-    val traces = starts.mapPartitions { it =>
+    val us = starts.result()
+    val traces = PackedGraph.sliced(spark, us.length)((from, until) =>
+        java.util.Arrays.copyOfRange(us, from, until)) { slice =>
       val md = java.security.MessageDigest.getInstance("MD5")
       val a = bc.value
-      it.flatMap { case (wid, start) =>
-        val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Long)]()
-        out += ((wid, 0, start))
-        var cur = start
-        var t = 1
-        var alive = true
-        while (alive && t <= length) {
-          val nbrs = a.get(cur)
-          if (nbrs == null) alive = false // dead end: the join plan's inner join
-          else {
-            cur = nbrs((hex48Jvm(md, salt, wid, t) % nbrs.length).toInt)
-            out += ((wid, t, cur))
-            t += 1
+      slice.iterator.flatMap(u => Iterator.range(0, numWalks).map(u * numWalks + _ -> u))
+        .flatMap { case (wid, start) =>
+          val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Long)]()
+          out += ((wid, 0, start))
+          var cur = start
+          var t = 1
+          var alive = true
+          while (alive && t <= length) {
+            val nbrs = a.get(cur)
+            if (nbrs == null) alive = false // dead end: the join plan's inner join
+            else {
+              cur = nbrs((hex48Jvm(md, salt, wid, t) % nbrs.length).toInt)
+              out += ((wid, t, cur))
+              t += 1
+            }
           }
+          out
         }
-        out
-      }
     }.toDF("walk_id", "step", "node")
     Some(traces.select(col("walk_id"), col("step"),
       col("node").cast(dstT).as("node")))

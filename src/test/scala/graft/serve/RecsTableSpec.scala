@@ -379,6 +379,31 @@ class RecsTableSpec extends SparkSpecBase {
     }
   }
 
+  test("every streaming refresh, on both routes, tracks its progress asynchronously") {
+    import org.apache.spark.sql.execution.streaming.runtime.{
+      AsyncProgressTrackingMicroBatchExecution, MemoryStream, StreamingQueryWrapper}
+    implicit val sqlCtx = spark.sqlContext
+    val neighbors = graft.rank.Cooccur.itemNeighbors(Equiv.history, maxNeighbors = 5)
+    val cooccur: Serve = (s, hist, dir) =>
+      RecsTable.streamRefresh(s, hist, neighbors, Equiv.k, InMemoryKv.putBatch, dir)
+    val serves = ("cooccur", cooccur) +: (for ((route, start) <- routes;
+      (form, serve, _) <- Equiv.forms) yield (s"$form ($route)",
+        ((s, hist, dir) => start(serve(s, hist, dir))): Serve))
+    for ((name, serve) <- serves) {
+      val in = MemoryStream[(Long, Long)]
+      val dir = java.nio.file.Files.createTempDirectory("graft_asynclog").toString
+      val q = serve(in.toDF().toDF("user_id", "item_id"), Equiv.history, s"$dir/log")
+      try {
+        // a batch runs: Spark validates async tracking when the query runs
+        in.addData(Equiv.batches.head)
+        q.processAllAvailable()
+        val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        assert(exec.isInstanceOf[AsyncProgressTrackingMicroBatchExecution], s"$name: ${exec.getClass}")
+        assert(q.isActive && q.exception.isEmpty, s"$name: ${q.exception}")
+      } finally q.stop()
+    }
+  }
+
   test("rows already in the stream log stay seen from the first batch on") {
     for ((route, start) <- routes; (form, serve, batchForm) <- Equiv.forms) {
       val name = s"$form ($route)"
@@ -535,9 +560,10 @@ class RecsTableSpec extends SparkSpecBase {
       assert(persisted -- before2 == added2, "the started query holds its frames")
       in2.addData((1L, 2L))
       intercept[StreamingQueryException](q2.processAllAvailable())
-      // the failed query's release runs on the listener bus and may already
-      // have freed the start's frames here; a frame beyond them fails it
-      assert((persisted -- before2).subsetOf(added2), "a failed batch adds no persisted frame")
+      // the failed query's release runs on the listener bus; once it has,
+      // the start's frames are freed, and any frame left is the batch's
+      eventually(timeout(Span(30, Seconds))) { assert(releases == 0) }
+      assert(persisted -- before2 == Set.empty[Int], "a failed batch adds no persisted frame")
     } finally q2.stop()
     eventually(timeout(Span(30, Seconds))) {
       assert((persisted & added2).isEmpty && releases == 0, "released after the query failed")

@@ -37,6 +37,9 @@ whose trigger holds the batch's root execution; `-` when none does):
   wal_s     durationMs.walCommit: the offset log write before the batch
   add_s     durationMs.addBatch: the sink's run of the batch (foreachBatch)
   commit_s  durationMs.commitOffsets: the commit log write after it
+            (wal_s and commit_s read about 0 under Spark's async progress
+            tracking, which the streaming refreshes run: the batch only
+            queues the two log writes, and another thread does them)
   rows      numInputRows over the sources (the rows the batch's jobs read
             from the source, counted once per read)
   put_s     from the trigger's start to the end of the batch's last job
